@@ -74,7 +74,7 @@ import org.apache.spark.sql.functions._
   *
   * The guard's censuses are aggregates over each input relation — and
   * the incremental probes (q345/q349/q353/q354 and their streaming
-  * twins) call this operator once per arriving batch against a
+  * counterparts) call this operator once per arriving batch against a
   * PERSISTED corpus value index whose contents did not change since
   * the last probe. Re-aggregating the corpus per probe is pure waste,
   * so the guard inputs decompose per side: [[guardStats]] computes
@@ -89,7 +89,7 @@ import org.apache.spark.sql.functions._
   * the occupancy census counts DISTINCT values per bucket, which is
   * not additive across arriving batches — a streaming maintainer
   * derives stats from the drained (summed) census, not from partial
-  * sums (see `Streams.drainValueCensus`).
+  * sums (see `Streams.CensusTier.summed`).
   *
   * 100 TB: the exchange carries (band index, band value, fingerprint)
   * rows — bytes per row, rows = |input|·|bands| (·C(b,2)/b under

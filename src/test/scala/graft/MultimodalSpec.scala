@@ -68,7 +68,8 @@ class MultimodalSpec extends SparkSpecBase {
   test("streaming featurize reuses pooled decoders ACROSS micro-batches") {
     import org.apache.spark.sql.functions.col
     // stage the documents as 3 parquet files + maxFilesPerTrigger=1 →
-    // 3 micro-batches through the SAME foreachBatch decode stage
+    // 3 micro-batches through the document drain's decode stage (a
+    // fresh dir, so the memoized drain genuinely runs under the counter)
     val src = java.nio.file.Files.createTempDirectory("graft_mb_docs").toString
     graft.sources.Tables.documents(spark, sf001).repartition(3)
       .write.mode("overwrite").parquet(src)
@@ -76,8 +77,9 @@ class MultimodalSpec extends SparkSpecBase {
       .count(f => f.getName.endsWith(".parquet"))
     assert(nFiles >= 3, s"fixture must span ≥3 files, got $nFiles")
     Multimodal.PngDecoder.inits.set(0L)
-    val out = graft.streaming.Streams.streamImageFeatures(
+    val out = graft.streaming.Streams.streamMultiIndexes(
       spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+      .imageFeatures
     assert(out.count() === graft.sources.Tables.documents(spark, sf001).count())
     val inits = Multimodal.PngDecoder.inits.get()
     // each micro-batch runs 1 task (one input file); tasks execute

@@ -2,9 +2,89 @@ package graft
 
 import graft.sources.Tables
 import graft.streaming.Streams
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class StreamsSpec extends SparkSpecBase {
+
+  /** `df` staged as `nFiles` parquet arrival files in a fresh dir —
+    * with maxFilesPerTrigger=1 each file is one micro-batch. */
+  private def staged(prefix: String, df: DataFrame, nFiles: Int = 3): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    df.repartition(nFiles).write.mode("overwrite").parquet(dir)
+    dir
+  }
+
+  /** The events staged as 4 TIME-ORDERED arrival files (global (ts,
+    * event_id) rank quartiles) with increasing mtimes, so
+    * maxFilesPerTrigger=1 delivers micro-batches that respect the
+    * per-user event-time contract the stateful behavioral drain
+    * relies on. */
+  private def stageTimeOrderedEvents(): String = {
+    import org.apache.spark.sql.expressions.Window
+    val dir = java.nio.file.Files.createTempDirectory("graft_mb_ordered").toString
+    val sliced = Tables.events(spark, sf001)
+      .withColumn("slice", ntile(4).over(Window.orderBy(col("ts"), col("event_id"))))
+    (1 to 4).foreach(i =>
+      Streams.writeArrivalFile(sliced.where(col("slice") === i).drop("slice"), dir, i))
+    dir
+  }
+
+  /** Runs `f` under a StreamingQueryListener; returns its result and
+    * the number of streaming queries it started. */
+  private def countingStreams[A](f: => A): (A, Int) = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new StreamingQueryListener {
+      override def onQueryStarted(
+          e: StreamingQueryListener.QueryStartedEvent): Unit = {
+        started.incrementAndGet(); ()
+      }
+      override def onQueryProgress(
+          e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(
+          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(l)
+    val out =
+      try f
+      finally {
+        // the streaming-listener bus is async: give the started event
+        // a bounded window to land before detaching
+        val deadline = System.nanoTime() + 5000000000L
+        while (started.get() < 1 && System.nanoTime() < deadline)
+          Thread.sleep(50)
+        spark.streams.removeListener(l)
+      }
+    (out, started.get())
+  }
+
+  // Shared multi-file arrival fixtures: specs that stage a table the
+  // same way read one staged dir, so each memoized production drain
+  // over it is built once for all of them (fresh dirs, so the first
+  // use genuinely drains under maxFilesPerTrigger=1).
+  private lazy val docs3 = staged("graft_mb_docs", Tables.documents(spark, sf001))
+  private lazy val emb3 = staged("graft_mb_emb", Tables.embeddings(spark, sf001))
+  private lazy val events3 = staged("graft_mb_events", Tables.events(spark, sf001))
+  private lazy val lineitem3 = staged("graft_mb_lineitem", Tables.lineitem(spark, sf001))
+  private lazy val orderedEvents = stageTimeOrderedEvents()
+
+  /** The document multi-drain over [[docs3]] and the number of
+    * streaming queries its build started. */
+  private lazy val docDrain: (Streams.DocIndexes, Int) = countingStreams(
+    Streams.streamMultiIndexes(spark, sf001, Some(docs3), Some(1)))
+
+  /** The behavioral drain over [[orderedEvents]] and the number of
+    * streaming queries its build started. */
+  private lazy val behaviorDrain: (DataFrame, Int) = countingStreams(
+    Streams.streamBehavior(spark, sf001, Some(orderedEvents), Some(1)))
+
+  private def embDrain = Streams.streamEmbPartials(spark, sf001, Some(emb3), Some(1))
+  private def eventsDrain = Streams.streamEventsPartials(spark, sf001, Some(events3), Some(1))
+  private def lineitemDrain =
+    Streams.streamLineitemPartials(spark, sf001, Some(lineitem3), Some(1))
+
+  private def rows(df: DataFrame): Seq[Seq[Any]] = df.collect().map(_.toSeq).toSeq
 
   test("watermark drops late data: a row older than the watermark cannot reopen an emitted window") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -260,15 +340,10 @@ class StreamsSpec extends SparkSpecBase {
   }
 
   test("q145: streamed curation equals q130 batch decisions; corpus indexes build once") {
-    import org.apache.spark.sql.functions.{col, pmod, lit}
     // multi-file staging + maxFilesPerTrigger=1 → several micro-batches
-    // through the SAME foreachBatch gate stage
-    val src = java.nio.file.Files.createTempDirectory("graft_mb_curate").toString
-    graft.sources.Tables.documents(spark, sf001).repartition(3)
-      .write.mode("overwrite").parquet(src)
+    // through the document drain's curation gate stage
     graft.operators.CurationFunnel.corpusStatsBuilds.set(0)
-    val out = graft.streaming.Streams.streamIncrementalCuration(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1)).cache()
+    val out = docDrain._1.curated
     val nBatches = out.select("batch_id").distinct().count()
     assert(nBatches >= 2, s"fixture must span >=2 micro-batches, got $nBatches")
     // the persisted corpus statistics were built ONCE for the whole
@@ -298,25 +373,18 @@ class StreamsSpec extends SparkSpecBase {
 
     // single-trigger staging: decisions are byte-identical to q130's
     // batch output (q145's oracle contract)
-    val single = graft.streaming.Streams.streamIncrementalCuration(spark, sf001)
-      .select("doc_id", "lang", "n_tok", "keep_exact", "keep_span", "keep_fluency")
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    val q130 = SparkEntry.queries("q130_incremental_funnel")(spark, sf001)
-      .collect().map(_.toSeq).toSeq
+    val single = rows(SparkEntry.queries("q145_stream_incremental_funnel")(spark, sf001))
+    val q130 = rows(SparkEntry.queries("q130_incremental_funnel")(spark, sf001))
     assert(single === q130)
-    out.unpersist()
   }
 
   test("q147: streamed ANN ingest equals batch append; centroid set builds once") {
     // multi-file staging + maxFilesPerTrigger=1 → the batch vectors
     // arrive across several micro-batches, each appended through the
     // SAME foreachBatch encode stage
-    val src = java.nio.file.Files.createTempDirectory("graft_mb_ann").toString
-    graft.sources.Tables.embeddings(spark, sf001).repartition(3)
-      .write.mode("overwrite").parquet(src)
     graft.operators.IvfPq.centroidBuilds.set(0)
     val multi = graft.streaming.Streams.streamAnnIngest(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+      spark, sf001, srcDir = Some(emb3), maxFilesPerTrigger = Some(1))
       .collect().map(_.toSeq).toSeq
     // the collected centroid set is session state, built at most once
     // across all micro-batches (0 if an earlier test already built it)
@@ -333,11 +401,8 @@ class StreamsSpec extends SparkSpecBase {
     // 3 staged files + maxFilesPerTrigger=1 → the query log arrives
     // across several micro-batches, each served at the SAME planned
     // nProbe (policy read once at service start)
-    val src = java.nio.file.Files.createTempDirectory("graft_mb_planned").toString
-    graft.sources.Tables.embeddings(spark, sf001).repartition(3)
-      .write.mode("overwrite").parquet(src)
     val streamed = graft.streaming.Streams.streamPlannedServe(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+      spark, sf001, srcDir = Some(emb3), maxFilesPerTrigger = Some(1))
       .collect().map(_.toSeq).toSeq
     val batch = SparkEntry.queries("q328_planned_batch_serve")(spark, sf001)
       .collect().map(_.toSeq).toSeq
@@ -350,11 +415,8 @@ class StreamsSpec extends SparkSpecBase {
     // arrives across several triggers, each appending one bounded
     // partial census; the summed census must make the SAME fold/keep
     // decision as the batch policy over the persisted segments
-    val src = java.nio.file.Files.createTempDirectory("graft_mb_compact").toString
-    graft.sources.Tables.embeddings(spark, sf001).repartition(3)
-      .write.mode("overwrite").parquet(src)
     val streamed = graft.streaming.Streams.streamCompactionPolicy(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+      spark, sf001, srcDir = Some(emb3), maxFilesPerTrigger = Some(1))
       .collect().map(_.toSeq).toSeq
     val batch = SparkEntry.queries("q342_compaction_policy")(spark, sf001)
       .collect().map(_.toSeq).toSeq
@@ -363,47 +425,32 @@ class StreamsSpec extends SparkSpecBase {
   }
 
   test("q350/q351: multi-trigger simhash census drains to the batch corpus index and serves the q345 probe") {
-    import org.apache.spark.sql.functions._
     // 3 staged files + maxFilesPerTrigger=1 → the corpus arrives
     // across several triggers, each overwriting one batchId-keyed
     // partial census; the re-summed census must equal the batch-built
     // corpus index value for value
-    val src = java.nio.file.Files.createTempDirectory("graft_mb_simhash").toString
-    graft.sources.Tables.documents(spark, sf001).repartition(3)
-      .write.mode("overwrite").parquet(src)
-    val streamed = graft.streaming.Streams.streamSimhashCensus(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
-    val streamedRows = streamed.rows.orderBy("simhash")
-      .collect().map(_.toSeq).toSeq
-    val batch = graft.sources.Tables.documents(spark, sf001)
+    val streamed = docDrain._1.simhash
+    val streamedRows = rows(streamed.rows.orderBy("simhash"))
+    val batch = rows(graft.sources.Tables.documents(spark, sf001)
       .where(pmod(col("doc_id"), lit(5)) =!= 4)
       .select(org.apache.spark.sql.graftshim.SimHashMd5(
         graft.functions.TextFunctions.distinctTokens(
           lower(col("text")))).as("simhash"))
       .groupBy("simhash").agg(count(lit(1)).as("n_docs"))
-      .orderBy("simhash").collect().map(_.toSeq).toSeq
+      .orderBy("simhash"))
     assert(streamedRows === batch,
       "drained census must equal the batch corpus index")
     // and the maintained index is an interchangeable probe target:
     // q345's probe against it equals q345 against the batch index
-    val probed = graft.operators.Dedup
-      .simhashBatchProbe(spark, sf001, streamed)
-      .collect().map(_.toSeq).toSeq
-    val q345 = SparkEntry.queries("q345_simhash_neardup_batch")(spark, sf001)
-      .collect().map(_.toSeq).toSeq
+    val probed = rows(graft.operators.Dedup.simhashBatchProbe(spark, sf001, streamed))
+    val q345 = rows(SparkEntry.queries("q345_simhash_neardup_batch")(spark, sf001))
     assert(probed === q345,
       "probe against the maintained index must equal the batch probe")
   }
 
   test("q355/q356: multi-trigger image census drains to the batch corpus index and serves the q349 probe") {
-    import org.apache.spark.sql.functions._
-    val src = java.nio.file.Files.createTempDirectory("graft_mb_imgcensus").toString
-    graft.sources.Tables.documents(spark, sf001).repartition(3)
-      .write.mode("overwrite").parquet(src)
-    val streamed = graft.streaming.Streams.streamImageCensus(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
-    val streamedRows = streamed.rows.orderBy("ahash_hi", "ahash_lo")
-      .collect().map(_.toSeq).toSeq
+    val streamed = docDrain._1.image
+    val streamedRows = rows(streamed.rows.orderBy("ahash_hi", "ahash_lo"))
     val batchImages = {
       import spark.implicits._
       graft.sources.Tables.documents(spark, sf001)
@@ -413,61 +460,45 @@ class StreamsSpec extends SparkSpecBase {
           graft.operators.Multimodal.ImageRow(
             id, graft.operators.Multimodal.synthPng(id))))
     }
-    val batch = graft.operators.Multimodal.decodeAHashes(batchImages).toDF()
+    val batch = rows(graft.operators.Multimodal.decodeAHashes(batchImages).toDF()
       .groupBy("ahash_hi", "ahash_lo").agg(count(lit(1)).as("n_docs"))
-      .orderBy("ahash_hi", "ahash_lo").collect().map(_.toSeq).toSeq
+      .orderBy("ahash_hi", "ahash_lo"))
     assert(streamedRows === batch,
       "drained image census must equal the batch corpus index")
-    val probed = graft.operators.Multimodal
-      .imageBatchProbe(spark, sf001, streamed)
-      .collect().map(_.toSeq).toSeq
-    val q349 = SparkEntry.queries("q349_image_neardup_batch")(spark, sf001)
-      .collect().map(_.toSeq).toSeq
+    val probed = rows(graft.operators.Multimodal.imageBatchProbe(spark, sf001, streamed))
+    val q349 = rows(SparkEntry.queries("q349_image_neardup_batch")(spark, sf001))
     assert(probed === q349,
       "probe against the maintained image index must equal the batch probe")
   }
 
   test("q358-q361: multi-trigger audio and wide-video censuses drain to their batch indexes and serve the batch probes") {
-    import org.apache.spark.sql.functions._
-    val src = java.nio.file.Files.createTempDirectory("graft_mb_avcensus").toString
-    graft.sources.Tables.documents(spark, sf001).repartition(3)
-      .write.mode("overwrite").parquet(src)
     val corpusDocs = graft.sources.Tables.documents(spark, sf001)
       .where(pmod(col("doc_id"), lit(5)) =!= 4)
     // audio
-    val audioStreamed = graft.streaming.Streams.streamAudioCensus(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+    val audioStreamed = docDrain._1.audio
     val audioBatch = graft.operators.Multimodal
       .audioFingerprintsFromDocs(corpusDocs)
       .groupBy("fingerprint").agg(count(lit(1)).as("n_docs"))
-    assert(audioStreamed.rows.orderBy("fingerprint").collect().map(_.toSeq).toSeq ===
-      audioBatch.orderBy("fingerprint").collect().map(_.toSeq).toSeq)
-    assert(graft.operators.Multimodal
-      .audioBatchProbe(spark, sf001, audioStreamed)
-      .collect().map(_.toSeq).toSeq ===
-      SparkEntry.queries("q353_audio_neardup_batch")(spark, sf001)
-        .collect().map(_.toSeq).toSeq)
+    assert(rows(audioStreamed.rows.orderBy("fingerprint")) ===
+      rows(audioBatch.orderBy("fingerprint")))
+    assert(rows(graft.operators.Multimodal
+      .audioBatchProbe(spark, sf001, audioStreamed)) ===
+      rows(SparkEntry.queries("q353_audio_neardup_batch")(spark, sf001)))
     // wide video
     val cols = graft.operators.Multimodal.videoWideCensusCols
-    val videoStreamed = graft.streaming.Streams.streamVideoWideCensus(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+    val videoStreamed = docDrain._1.videoWide
     val videoBatch = graft.operators.Multimodal.videoWideFromDocs(corpusDocs)
       .groupBy(cols.map(col): _*).agg(count(lit(1)).as("n_docs"))
-    assert(videoStreamed.rows.orderBy(cols.map(col): _*).collect().map(_.toSeq).toSeq ===
-      videoBatch.orderBy(cols.map(col): _*).collect().map(_.toSeq).toSeq)
-    assert(graft.operators.Multimodal
-      .videoWideBatchProbe(spark, sf001, videoStreamed)
-      .collect().map(_.toSeq).toSeq ===
-      SparkEntry.queries("q354_video_neardup_wide_batch")(spark, sf001)
-        .collect().map(_.toSeq).toSeq)
+    assert(rows(videoStreamed.rows.orderBy(cols.map(col): _*)) ===
+      rows(videoBatch.orderBy(cols.map(col): _*)))
+    assert(rows(graft.operators.Multimodal
+      .videoWideBatchProbe(spark, sf001, videoStreamed)) ===
+      rows(SparkEntry.queries("q354_video_neardup_wide_batch")(spark, sf001)))
   }
 
   test("q357: multi-trigger drift census drains to q352's batch refresh decision") {
-    val src = java.nio.file.Files.createTempDirectory("graft_mb_refresh").toString
-    graft.sources.Tables.embeddings(spark, sf001).repartition(3)
-      .write.mode("overwrite").parquet(src)
     val streamed = graft.streaming.Streams.streamRefreshPolicy(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+      spark, sf001, srcDir = Some(emb3), maxFilesPerTrigger = Some(1))
       .collect().map(_.toSeq).toSeq
     val batch = SparkEntry.queries("q352_centroid_refresh_policy")(spark, sf001)
       .collect().map(_.toSeq).toSeq
@@ -510,26 +541,14 @@ class StreamsSpec extends SparkSpecBase {
     // multi-file staging + maxFilesPerTrigger=1 → the corpus arrives
     // as several partial sketches; counter addition must reconstruct
     // the exact whole-corpus estimates
-    val src = java.nio.file.Files.createTempDirectory("graft_mb_cms").toString
-    graft.sources.Tables.documents(spark, sf001).repartition(3)
-      .write.mode("overwrite").parquet(src)
-    val streamed = graft.streaming.Streams.streamCountMin(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
-      .collect().map(_.toSeq).toSeq
-    val batch = SparkEntry.queries("q151_countmin_tokens")(spark, sf001)
-      .collect().map(_.toSeq).toSeq
+    val streamed = rows(Streams.cmsServe(spark, sf001, docDrain._1.cmsPartials))
+    val batch = rows(SparkEntry.queries("q151_countmin_tokens")(spark, sf001))
     assert(streamed === batch, "streamed sketch must equal batch sketch")
   }
 
   test("q165: drift report over micro-batch partials equals the batch report") {
-    val src = java.nio.file.Files.createTempDirectory("graft_mb_drift").toString
-    graft.sources.Tables.documents(spark, sf001).repartition(3)
-      .write.mode("overwrite").parquet(src)
-    val streamed = graft.streaming.Streams.streamDrift(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
-      .collect().map(_.toSeq).toSeq
-    val batch = SparkEntry.queries("q160_sketch_drift")(spark, sf001)
-      .collect().map(_.toSeq).toSeq
+    val streamed = rows(Streams.driftServe(docDrain._1.driftPartials))
+    val batch = rows(SparkEntry.queries("q160_sketch_drift")(spark, sf001))
     assert(streamed === batch, "streamed drift must equal batch drift")
   }
 
@@ -551,14 +570,8 @@ class StreamsSpec extends SparkSpecBase {
   }
 
   test("q188: multi-trigger decayed counts equal the batch rollup") {
-    val src = java.nio.file.Files.createTempDirectory("graft_mb_decay").toString
-    graft.sources.Tables.events(spark, sf001).repartition(3)
-      .write.mode("overwrite").parquet(src)
-    val streamed = graft.streaming.Streams.streamDecayedCounts(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
-      .collect().map(_.toSeq).toSeq
-    val batch = SparkEntry.queries("q186_decayed_counts")(spark, sf001)
-      .collect().map(_.toSeq).toSeq
+    val streamed = rows(Streams.decayedServe(eventsDrain._1))
+    val batch = rows(SparkEntry.queries("q186_decayed_counts")(spark, sf001))
     assert(streamed === batch,
       "partial-merge decayed counts must equal the batch rollup")
   }
@@ -566,20 +579,14 @@ class StreamsSpec extends SparkSpecBase {
   test("q233: multi-trigger MV maintenance equals the full recompute") {
     // 3 staged files + maxFilesPerTrigger=1 → the fact table arrives
     // across several triggers, each appending its own partial rows
-    val src = java.nio.file.Files.createTempDirectory("graft_mb_mv").toString
-    graft.sources.Tables.lineitem(spark, sf001).repartition(3)
-      .write.mode("overwrite").parquet(src)
-    val streamed = graft.streaming.Streams.streamMvMaintain(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
-      .collect().map(_.toSeq).toSeq
-    val batch = SparkEntry.queries("q226_mv_increment")(spark, sf001)
-      .collect().map(_.toSeq).toSeq
+    val streamed = rows(graft.plans.MvRewrite.mvServe(lineitemDrain._1))
+    val batch = rows(SparkEntry.queries("q226_mv_increment")(spark, sf001))
     assert(streamed === batch,
       "streamed partial-merge MV must equal the batch recompute")
     // the partial store really holds one generation per trigger — more
     // partial rows than final grain rows proves >1 micro-batch folded
     val partials = spark.read.parquet(
-      graft.operators.Formats.scratchDir("graft_stream_mv", src)).count()
+      graft.operators.Formats.scratchDir("graft_stream_mv_multi", lineitem3)).count()
     assert(partials > streamed.size,
       s"expected multiple per-trigger partials, got $partials rows")
   }
@@ -657,30 +664,9 @@ class StreamsSpec extends SparkSpecBase {
   }
 
   test("q224: multi-batch streamed transitions equal the batch census") {
-    import org.apache.spark.sql.expressions.Window
-    // stage events as 4 TIME-ORDERED arrival files (global (ts,
-    // event_id) rank quartiles) with increasing mtimes, so
-    // maxFilesPerTrigger=1 delivers micro-batches that respect the
-    // per-user event-time contract — boundary transitions MUST then
-    // come from the carried state, not intra-batch leads
-    val dir = java.nio.file.Files.createTempDirectory("graft_mb_trans").toString
-    val sliced = Tables.events(spark, sf001)
-      .withColumn("slice", ntile(4).over(Window.orderBy(col("ts"), col("event_id"))))
-    (1 to 4).foreach { i =>
-      val tmp = new java.io.File(dir, s"_tmp$i")
-      sliced.where(col("slice") === i).drop("slice")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = tmp.listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file staged in $tmp"))
-      val dst = new java.io.File(dir, f"arr$i%03d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      assert(dst.setLastModified(1700000000000L + i * 60000L))
-      graft.operators.Formats.wipe(tmp.toString)
-    }
-    val streamed = Streams.streamTransitions(
-        spark, sf001, srcDir = Some(dir), maxFilesPerTrigger = Some(1))
+    // time-ordered arrivals: boundary transitions MUST come from the
+    // carried state, not intra-batch leads
+    val streamed = Streams.transitionsServe(behaviorDrain._1)
       .collect().map(_.toString).toSeq
     val batch = SparkEntry.queries("q221_event_transitions")(spark, sf001)
       .collect().map(_.toString).toSeq
@@ -689,91 +675,21 @@ class StreamsSpec extends SparkSpecBase {
   }
 
   test("combined behavioral drain: one stream serves q224/q261/q271/q291 identical to the single-drain twins") {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    // the q224 time-ordered staging (the ingestion contract all four
-    // stateful twins share), fresh dir so the memo genuinely drains
-    val dir = java.nio.file.Files.createTempDirectory("graft_mb_behavior").toString
-    val sliced = Tables.events(spark, sf001)
-      .withColumn("slice", ntile(4).over(Window.orderBy(col("ts"), col("event_id"))))
-    (1 to 4).foreach { i =>
-      val tmp = new java.io.File(dir, s"_tmp$i")
-      sliced.where(col("slice") === i).drop("slice")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = tmp.listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file staged in $tmp"))
-      val dst = new java.io.File(dir, f"arr$i%03d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      assert(dst.setLastModified(1700000000000L + i * 60000L))
-      graft.operators.Formats.wipe(tmp.toString)
-    }
-    val started = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new StreamingQueryListener {
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = {
-        started.incrementAndGet(); ()
-      }
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    }
-    spark.streams.addListener(l)
-    val beh =
-      try Streams.streamBehavior(
-        spark, sf001, srcDir = Some(dir), maxFilesPerTrigger = Some(1))
-      finally {
-        val deadline = System.nanoTime() + 5000000000L
-        while (started.get() < 1 && System.nanoTime() < deadline)
-          Thread.sleep(50)
-        spark.streams.removeListener(l)
-      }
-    assert(started.get() === 1,
-      s"behavioral drain must open exactly ONE stream, opened ${started.get()}")
-    // tag-1 transitions == the single transition drain's census
-    val transCombined = beh.where(col("tag") === 1)
-      .groupBy(col("s1").as("from_type"), col("s2").as("to_type"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy("from_type", "to_type").collect().map(_.toSeq).toSeq
-    val transSingle = Streams.streamTransitions(
-        spark, sf001, srcDir = Some(dir), maxFilesPerTrigger = Some(1))
-      .select("from_type", "to_type", "n")
-      .orderBy("from_type", "to_type").collect().map(_.toSeq).toSeq
-    assert(transCombined === transSingle,
-      "combined transitions must equal the single-drain census")
-    // tag-2 funnel markers == the single funnel drain's step counts
-    val funnelCombined = beh.where(col("tag") === 2)
-      .groupBy(col("l1").cast("int").as("step"))
-      .agg(count(lit(1)).as("n_users"))
-      .orderBy("step").collect().map(_.toSeq).toSeq
-    val funnelSingle = Streams.streamFunnel(
-        spark, sf001, srcDir = Some(dir), maxFilesPerTrigger = Some(1))
-      .where(col("n_users") > 0).select("step", "n_users")
-      .orderBy("step").collect().map(_.toSeq).toSeq
-    assert(funnelCombined === funnelSingle,
-      "combined funnel steps must equal the single-drain census")
-    // tag-3 session upserts fold to the same session set both twins use
-    val sessCombined = beh.where(col("tag") === 3)
-      .groupBy(col("user_id"), col("l1").as("start_us"))
-      .agg(max("l2").as("end_us"), max("l3").as("n_events"))
-      .orderBy("user_id", "start_us").collect().map(_.toSeq).toSeq
-    val sessSingle = Streams.streamSessionKpisSessions(
-        spark, sf001, srcDir = Some(dir), maxFilesPerTrigger = Some(1))
-      .orderBy("user_id", "start_us").collect().map(_.toSeq).toSeq
-    assert(sessCombined === sessSingle,
-      "combined session upserts must fold to the single-drain session set")
+    // the drain over the time-ordered staging opened exactly one stream
+    // for all four projections; each projection's serve is pinned
+    // against its batch query by the q224/q261/q271/q291 specs
+    val (beh, started) = behaviorDrain
+    assert(started === 1,
+      s"behavioral drain must open exactly ONE stream, opened $started")
+    val tags = beh.select("tag").distinct().collect().map(_.getInt(0)).toSet
+    assert(tags === Set(1, 2, 3),
+      s"every projection must emit from the one stream, got tags $tags")
   }
 
   test("q265: census partials across micro-batches re-sum to the batch OLS") {
     // counts are additive, so ANY arrival slicing works — repartition(3)
     // staging deliberately breaks time order (contrast q261)
-    val src = java.nio.file.Files.createTempDirectory("graft_mb_ols").toString
-    Tables.events(spark, sf001).repartition(3)
-      .write.mode("overwrite").parquet(src)
-    val streamed = Streams.streamOlsTrend(
-        spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+    val streamed = Streams.olsServe(eventsDrain._2)
       .collect().map(_.toString).toSeq
     val batch = SparkEntry.queries("q257_ols_trend")(spark, sf001)
       .collect().map(_.toString).toSeq
@@ -782,25 +698,7 @@ class StreamsSpec extends SparkSpecBase {
   }
 
   test("q291: sessions with counts reconstructed across micro-batches equal batch q264") {
-    import org.apache.spark.sql.expressions.Window
-    val dir = java.nio.file.Files.createTempDirectory("graft_mb_skpi").toString
-    val sliced = Tables.events(spark, sf001)
-      .withColumn("slice", ntile(4).over(Window.orderBy(col("ts"), col("event_id"))))
-    (1 to 4).foreach { i =>
-      val tmp = new java.io.File(dir, s"_tmp$i")
-      sliced.where(col("slice") === i).drop("slice")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = tmp.listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file staged in $tmp"))
-      val dst = new java.io.File(dir, f"arr$i%03d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      assert(dst.setLastModified(1700000000000L + i * 60000L))
-      graft.operators.Formats.wipe(tmp.toString)
-    }
-    val streamed = Streams.streamSessionKpis(
-        spark, sf001, srcDir = Some(dir), maxFilesPerTrigger = Some(1))
+    val streamed = Streams.sessionKpisServe(behaviorDrain._1)
       .collect().map(_.toString).toSeq
     val batch = SparkEntry.queries("q264_session_kpis")(spark, sf001)
       .collect().map(_.toString).toSeq
@@ -808,11 +706,7 @@ class StreamsSpec extends SparkSpecBase {
   }
 
   test("q301: zone-map partials fold to the batch manifest and pruning report") {
-    val src = java.nio.file.Files.createTempDirectory("graft_mb_zones").toString
-    Tables.lineitem(spark, sf001).repartition(3)
-      .write.mode("overwrite").parquet(src)
-    val streamed = Streams.streamZoneMaps(
-        spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+    val streamed = Streams.zoneMapServe(lineitemDrain._2)
       .collect().map(_.toString).toSeq
     val batch = SparkEntry.queries("q267_zonemap_audit")(spark, sf001)
       .collect().map(_.toString).toSeq
@@ -834,11 +728,7 @@ class StreamsSpec extends SparkSpecBase {
   test("q298: moment partials across micro-batches solve to the batch eigenvector") {
     // the eigensolver is non-linear, but its INPUTS are a monoid —
     // any arrival slicing must fold to the identical component
-    val src = java.nio.file.Files.createTempDirectory("graft_mb_pca").toString
-    Tables.embeddings(spark, sf001).repartition(3)
-      .write.mode("overwrite").parquet(src)
-    val streamed = Streams.streamPca(
-        spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+    val streamed = Streams.pcaServe(spark, embDrain.gramPartials)
       .collect().map(_.toString).toSeq
     val batch = SparkEntry.queries("q275_pca_top_component")(spark, sf001)
       .collect().map(_.toString).toSeq
@@ -846,17 +736,37 @@ class StreamsSpec extends SparkSpecBase {
       "folded-moment PCA must equal batch PCA bit-for-bit")
   }
 
+  test("q325: per-batch argmax partials across micro-batches fold to batch q199") {
+    // argmax under (cos desc, id asc) is a monoid — the fold of the
+    // per-trigger winners must pick the batch winner for every anchor
+    val streamed = rows(Streams.hardnegServe(spark, sf001, embDrain.hardnegPartials))
+    val batch = rows(SparkEntry.queries("q199_hard_negatives")(spark, sf001))
+    assert(streamed.nonEmpty && streamed === batch,
+      "folded per-batch winners must equal the batch hard negatives")
+  }
+
   test("q282: per-batch arg_max partials re-fold to the batch MERGE state") {
     // arg_max is a monoid on the version order — any arrival slicing
     // (repartition(3) deliberately breaks doc order) folds to q281
-    val src = java.nio.file.Files.createTempDirectory("graft_mb_cdc").toString
-    Tables.documents(spark, sf001).repartition(3)
-      .write.mode("overwrite").parquet(src)
-    val streamed = Streams.streamCdcApply(
-        spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+    val streamed = Streams.cdcApplyServe(docDrain._1.cdcPartials)
       .collect().map(_.toString).toSeq
     val batch = SparkEntry.queries("q281_cdc_merge")(spark, sf001)
       .collect().map(_.toString).toSeq
+    assert(streamed.nonEmpty && streamed === batch)
+  }
+
+  test("q312: per-batch chunk-census partials fold to the batch q308 census") {
+    // all four partial columns are monoid components (the file stream
+    // partitions docs across batches, so per-batch distinct-doc counts
+    // sum exactly)
+    val streamed = rows(Streams.chunkCensusServe(docDrain._1.chunkPartials))
+    val batch = rows(SparkEntry.queries("q308_cdc_dedup")(spark, sf001))
+    assert(streamed.nonEmpty && streamed === batch)
+  }
+
+  test("q288: bucket-fingerprint partials re-sum to the batch q266 Merkle diff") {
+    val streamed = rows(Streams.merkleServe(spark, sf001, docDrain._1.merklePartials))
+    val batch = rows(SparkEntry.queries("q266_merkle_diff")(spark, sf001))
     assert(streamed.nonEmpty && streamed === batch)
   }
 
@@ -864,11 +774,7 @@ class StreamsSpec extends SparkSpecBase {
     // arrival slicing must not freeze early-batch decile boundaries —
     // the census is additive, the bins are not, so bins recompute at
     // serve and the report equals batch q269 under any slicing
-    val src = java.nio.file.Files.createTempDirectory("graft_mb_psi").toString
-    Tables.documents(spark, sf001).repartition(3)
-      .write.mode("overwrite").parquet(src)
-    val streamed = Streams.streamPsi(
-        spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+    val streamed = graft.operators.TrendStats.psiFromCensus(docDrain._1.psiPartials)
       .collect().map(_.toString).toSeq
     val batch = SparkEntry.queries("q269_psi_drift")(spark, sf001)
       .collect().map(_.toString).toSeq
@@ -876,28 +782,10 @@ class StreamsSpec extends SparkSpecBase {
   }
 
   test("q261: multi-batch streamed funnel equals batch q255; boundary steps carried") {
-    import org.apache.spark.sql.expressions.Window
-    // same time-ordered 4-file staging as q224 — a step whose
-    // qualifying event lands in a LATER micro-batch than its
-    // predecessor must complete from the carried (v, c, p) state
-    val dir = java.nio.file.Files.createTempDirectory("graft_mb_funnel").toString
-    val sliced = Tables.events(spark, sf001)
-      .withColumn("slice", ntile(4).over(Window.orderBy(col("ts"), col("event_id"))))
-    (1 to 4).foreach { i =>
-      val tmp = new java.io.File(dir, s"_tmp$i")
-      sliced.where(col("slice") === i).drop("slice")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = tmp.listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file staged in $tmp"))
-      val dst = new java.io.File(dir, f"arr$i%03d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      assert(dst.setLastModified(1700000000000L + i * 60000L))
-      graft.operators.Formats.wipe(tmp.toString)
-    }
-    val streamed = Streams.streamFunnel(
-        spark, sf001, srcDir = Some(dir), maxFilesPerTrigger = Some(1))
+    // time-ordered arrivals — a step whose qualifying event lands in a
+    // LATER micro-batch than its predecessor must complete from the
+    // carried (v, c, p) state
+    val streamed = Streams.funnelServe(behaviorDrain._1)
       .collect().map(_.toString).toSeq
     val batch = SparkEntry.queries("q255_funnel_steps")(spark, sf001)
       .collect().map(_.toString).toSeq
@@ -906,28 +794,10 @@ class StreamsSpec extends SparkSpecBase {
   }
 
   test("q271: sessions reconstructed across micro-batches; sweep equals batch q256") {
-    import org.apache.spark.sql.expressions.Window
-    // time-ordered 4-file staging (q224's): sessions SPANNING a file
-    // boundary must be stitched by the carried open-session state and
-    // upsert-deduped to their final extent
-    val dir = java.nio.file.Files.createTempDirectory("graft_mb_conc").toString
-    val sliced = Tables.events(spark, sf001)
-      .withColumn("slice", ntile(4).over(Window.orderBy(col("ts"), col("event_id"))))
-    (1 to 4).foreach { i =>
-      val tmp = new java.io.File(dir, s"_tmp$i")
-      sliced.where(col("slice") === i).drop("slice")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = tmp.listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file staged in $tmp"))
-      val dst = new java.io.File(dir, f"arr$i%03d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      assert(dst.setLastModified(1700000000000L + i * 60000L))
-      graft.operators.Formats.wipe(tmp.toString)
-    }
-    val streamed = Streams.streamConcurrency(
-        spark, sf001, srcDir = Some(dir), maxFilesPerTrigger = Some(1))
+    // time-ordered arrivals: sessions SPANNING a file boundary must be
+    // stitched by the carried open-session state and upsert-deduped to
+    // their final extent
+    val streamed = Streams.concurrencyServe(behaviorDrain._1)
       .collect().map(_.toString).toSeq
     val batch = SparkEntry.queries("q256_peak_concurrency")(spark, sf001)
       .collect().map(_.toString).toSeq
@@ -944,8 +814,8 @@ class StreamsSpec extends SparkSpecBase {
       docs.where(pmod(col("doc_id"), lit(3)) === i)
         .coalesce(1).write.mode("append").parquet(src)
     }
-    val streamed = Streams.streamKmvSketch(
-        spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+    val streamed = Streams.kmvServe(Streams.streamMultiIndexes(
+        spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1)).kmvPartials)
       .collect().map(_.toString).toSeq
     val batch = graft.operators.KmvSketch.summarize(
         graft.operators.KmvSketch.sketches(spark, sf001))
@@ -955,120 +825,47 @@ class StreamsSpec extends SparkSpecBase {
   }
 
   test("q363/q364: multi-trigger minhash band index drains to the batch index and serves the q94 probe") {
-    import org.apache.spark.sql.functions._
     // 3 staged files + maxFilesPerTrigger=1 → the corpus arrives
     // across several triggers, each appending its own docs' band rows
     // (batchId-keyed overwrite); the drained union must equal the
     // batch-built even-id band index row for row
-    val src = java.nio.file.Files.createTempDirectory("graft_mb_minhash").toString
-    Tables.documents(spark, sf001).repartition(3)
-      .write.mode("overwrite").parquet(src)
-    val streamed = graft.streaming.Streams.streamMinhashBandIndex(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
-    val streamedRows = streamed.rows.orderBy("doc_id", "band_id")
-      .collect().map(_.toSeq).toSeq
-    val batch = graft.operators.Dedup
+    val streamed = docDrain._1.bands
+    val streamedRows = rows(streamed.rows.orderBy("doc_id", "band_id"))
+    val batch = rows(graft.operators.Dedup
       .docBands(Tables.documents(spark, sf001)
         .where(pmod(col("doc_id"), lit(2)) === 0))
-      .orderBy("doc_id", "band_id").collect().map(_.toSeq).toSeq
+      .orderBy("doc_id", "band_id"))
     assert(streamedRows === batch,
       "drained band index must equal the batch-built corpus band index")
     // the maintained per-bucket census (summed monoid partials) must
     // equal a census computed fresh over the drained rows — the
     // invariant the probe's flood guard trusts
-    val maintainedCounts = streamed.bucketCounts
-      .orderBy("band_id", "band_hash").collect().map(_.toSeq).toSeq
-    val freshCounts = graft.operators.Dedup.bandBucketCounts(streamed.rows)
-      .orderBy("band_id", "band_hash").collect().map(_.toSeq).toSeq
+    val maintainedCounts = rows(streamed.bucketCounts.orderBy("band_id", "band_hash"))
+    val freshCounts = rows(graft.operators.Dedup.bandBucketCounts(streamed.rows)
+      .orderBy("band_id", "band_hash"))
     assert(maintainedCounts === freshCounts,
       "summed count partials must equal a fresh census of the drained rows")
     // and the maintained index is an interchangeable probe target
-    val probed = graft.operators.Dedup
-      .minhashBatchProbe(spark, sf001, streamed)
-      .collect().map(_.toSeq).toSeq
-    val q94 = SparkEntry.queries("q94_dedup_batch_vs_corpus")(spark, sf001)
-      .collect().map(_.toSeq).toSeq
+    val probed = rows(graft.operators.Dedup.minhashBatchProbe(spark, sf001, streamed))
+    val q94 = rows(SparkEntry.queries("q94_dedup_batch_vs_corpus")(spark, sf001))
     assert(probed === q94,
       "probe against the maintained band index must equal the batch probe")
   }
 
   test("q366: one multi-index drain pass equals the single-drain twins, with one stream") {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    // fresh staging dir → the memo must genuinely drain here, under
-    // the listener's watch
-    val src = java.nio.file.Files.createTempDirectory("graft_mb_multi").toString
-    Tables.documents(spark, sf001).repartition(3)
-      .write.mode("overwrite").parquet(src)
-    val started = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new StreamingQueryListener {
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = {
-        started.incrementAndGet(); ()
-      }
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    }
-    spark.streams.addListener(l)
-    val multi =
-      try graft.streaming.Streams.streamMultiIndexes(
-        spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
-      finally {
-        // the streaming-listener bus is async: give the started event
-        // a bounded window to land before detaching
-        val deadline = System.nanoTime() + 5000000000L
-        while (started.get() < 1 && System.nanoTime() < deadline)
-          Thread.sleep(50)
-        spark.streams.removeListener(l)
-      }
-    assert(started.get() === 1,
-      s"multi-index drain must open exactly ONE stream, opened ${started.get()}")
-    def rowsOf(df: org.apache.spark.sql.DataFrame, cols: String*) =
-      df.orderBy(cols.map(col): _*).collect().map(_.toSeq).toSeq
-    // each maintained index equals its single-drain twin
-    val simSingle = graft.streaming.Streams.streamSimhashCensus(spark, sf001)
-    assert(rowsOf(multi.simhash.rows, "simhash") ===
-      rowsOf(simSingle.rows, "simhash"))
-    val imgSingle = graft.streaming.Streams.streamImageCensus(spark, sf001)
-    assert(rowsOf(multi.image.rows, "ahash_hi", "ahash_lo") ===
-      rowsOf(imgSingle.rows, "ahash_hi", "ahash_lo"))
-    val audSingle = graft.streaming.Streams.streamAudioCensus(spark, sf001)
-    assert(rowsOf(multi.audio.rows, "fingerprint") ===
-      rowsOf(audSingle.rows, "fingerprint"))
-    val vidSingle = graft.streaming.Streams.streamVideoWideCensus(spark, sf001)
-    val vidCols = graft.operators.Multimodal.videoWideCensusCols
-    assert(rowsOf(multi.videoWide.rows, vidCols: _*) ===
-      rowsOf(vidSingle.rows, vidCols: _*))
-    val bandsSingle = graft.streaming.Streams
-      .streamMinhashBandIndex(spark, sf001)
-    assert(rowsOf(multi.bands.rows, "doc_id", "band_id") ===
-      rowsOf(bandsSingle.rows, "doc_id", "band_id"))
-    assert(rowsOf(multi.bands.bucketCounts, "band_id", "band_hash") ===
-      rowsOf(bandsSingle.bucketCounts, "band_id", "band_hash"))
-    // the widened family: every partial-log serve from the one-pass
-    // drain equals its single-drain twin (folds over the memoized
-    // relations vs the twins' own fresh drains)
-    def served(q: String) =
-      SparkEntry.queries(q)(spark, sf001).collect().map(_.toSeq).toSeq
-    assert(served("q153_stream_countmin") ===
-      graft.streaming.Streams.streamCountMin(spark, sf001)
-        .collect().map(_.toSeq).toSeq)
-    assert(served("q229_stream_kmv_sketch") ===
-      graft.streaming.Streams.streamKmvSketch(spark, sf001)
-        .collect().map(_.toSeq).toSeq)
-    assert(served("q282_stream_cdc") ===
-      graft.streaming.Streams.streamCdcApply(spark, sf001)
-        .collect().map(_.toSeq).toSeq)
-    assert(served("q312_stream_cdc_census") ===
-      graft.streaming.Streams.streamCdcCensus(spark, sf001)
-        .collect().map(_.toSeq).toSeq)
-    assert(served("q145_stream_incremental_funnel") ===
-      graft.streaming.Streams.streamIncrementalCuration(spark, sf001)
-        .select("doc_id", "lang", "n_tok",
-          "keep_exact", "keep_span", "keep_fluency")
-        .orderBy("doc_id").collect().map(_.toSeq).toSeq)
+    // one stream maintained every document-fed artifact; each artifact
+    // is pinned against its batch definition by its own spec above
+    // (q131 in MultimodalSpec)
+    val (multi, started) = docDrain
+    assert(started === 1,
+      s"multi-index drain must open exactly ONE stream, opened $started")
+    val artifacts = Seq(multi.simhash.rows, multi.image.rows, multi.audio.rows,
+      multi.videoWide.rows, multi.bands.rows, multi.bands.bucketCounts,
+      multi.cmsPartials, multi.driftPartials, multi.kmvPartials,
+      multi.psiPartials, multi.cdcPartials, multi.merklePartials,
+      multi.chunkPartials, multi.curated, multi.imageFeatures)
+    assert(artifacts.forall(!_.isEmpty),
+      "every artifact must be maintained by the one pass")
   }
 
   test("q365: size-tiered fold of the band partial log is exact and bounds the log") {
@@ -1106,42 +903,49 @@ class StreamsSpec extends SparkSpecBase {
   /** At EVERY trigger boundary — not just after the full drain — the
     * partially-maintained census must be a serveable probe target:
     * probing it equals the batch probe over exactly the documents that
-    * have arrived so far. Drives [[Streams.drainValueCensus]]'s
-    * onPrefix hook; the reference census is built from scratch over
-    * the prefix doc ids through the SAME tier featurize. */
+    * have arrived so far. The spec's own stream writes each trigger's
+    * partial through [[Streams.CensusTier.partial]] (the document
+    * drain's per-trigger write) and probes [[Streams.CensusTier.summed]]
+    * after every trigger; the reference census is built from scratch
+    * over the prefix doc ids through the SAME tier featurize. */
   private def assertPrefixProbeConsistency(
       tier: Streams.CensusTier, nFiles: Int,
       probe: (org.apache.spark.sql.SparkSession, String,
-        graft.operators.BandedHamming.StatedIndex) =>
-        org.apache.spark.sql.DataFrame): Unit = {
-    val src = java.nio.file.Files.createTempDirectory(
-      s"graft_prefix_${nFiles}_").toString
-    Tables.documents(spark, sf001).repartition(nFiles)
-      .write.mode("overwrite").parquet(src)
+        graft.operators.BandedHamming.StatedIndex) => DataFrame): Unit = {
+    val src = staged(s"graft_prefix_${nFiles}_", Tables.documents(spark, sf001), nFiles)
+    val partials = java.nio.file.Files.createTempDirectory("graft_prefix_census").toString
     val results = scala.collection.mutable.ArrayBuffer
       .empty[(Int, Seq[Seq[Any]], Seq[Seq[Any]])]
     var prefixIds = Seq.empty[Long]
-    Streams.drainValueCensus(spark, tier, sf001, Some(src), Some(1),
-      Streams.fixtureCorpusFilter,
-      Some { (ids: Seq[Long], prefixCensus: org.apache.spark.sql.DataFrame) =>
-        prefixIds = prefixIds ++ ids
-        // the mid-stream serve: probe the partially-maintained census
-        val maintained = tier.scheme.indexed(prefixCensus.localCheckpoint())
-        val got = probe(spark, sf001, maintained)
-          .collect().map(_.toSeq).toSeq
-        // the batch reference over exactly the arrived documents
-        val reference = tier.scheme.indexed(
-          tier.featurize(Tables.documents(spark, sf001)
-            .where(col("doc_id").isin(prefixIds: _*)))
-            .groupBy(tier.groupCols.map(col): _*)
-            .agg(count(lit(1)).as("n_docs"))
-            .localCheckpoint())
-        val want = probe(spark, sf001, reference)
-          .collect().map(_.toSeq).toSeq
-        results += ((ids.size, got, want))
-        org.apache.spark.sql.graftshim.Checkpoints.release(maintained.rows)
-        org.apache.spark.sql.graftshim.Checkpoints.release(reference.rows)
-      })
+    val q = Streams.readDocsStream(spark, sf001, Some(src), Some(1))
+      .where(Streams.fixtureCorpusFilter)
+      .writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
+        if (!batch.isEmpty) {
+          tier.partial(batch.toDF())
+            .write.mode("overwrite").parquet(s"$partials/batch=$bid")
+          val ids = batch.select("doc_id").collect().map(_.getLong(0)).toSeq
+          prefixIds = prefixIds ++ ids
+          // the mid-stream serve: probe the partially-maintained census
+          val maintained = tier.scheme.indexed(
+            tier.summed(spark, partials).localCheckpoint())
+          val got = rows(probe(spark, sf001, maintained))
+          // the batch reference over exactly the arrived documents
+          val reference = tier.scheme.indexed(
+            tier.featurize(Tables.documents(spark, sf001)
+              .where(col("doc_id").isin(prefixIds: _*)))
+              .groupBy(tier.groupCols.map(col): _*)
+              .agg(count(lit(1)).as("n_docs"))
+              .localCheckpoint())
+          val want = rows(probe(spark, sf001, reference))
+          results += ((ids.size, got, want))
+          org.apache.spark.sql.graftshim.Checkpoints.release(maintained.rows)
+          org.apache.spark.sql.graftshim.Checkpoints.release(reference.rows)
+        }
+        ()
+      }
+      .start()
+    try q.processAllAvailable() finally q.stop()
     assert(results.size >= 2,
       s"staging into $nFiles files must produce several triggers, " +
         s"got ${results.size}")
