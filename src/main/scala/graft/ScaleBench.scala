@@ -2,9 +2,9 @@ package graft
 
 import graft.operators.{Bpe, Dedup, IvfAnn, MinHashScheme, Similarity, StarComponents}
 import graft.sources.Tables
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ListenerSync.countJobs
 
 /** Asymptotics probe for the LLM-pipeline operators at a corpus size
   * where they matter: the sf0.1 documents/embeddings tables are only
@@ -82,24 +82,6 @@ object ScaleBench {
     val t0 = System.nanoTime()
     val r = f
     (r, (System.nanoTime() - t0) / 1e9)
-  }
-
-  /** Spark jobs launched while `f` runs. The listener bus is async, so
-    * the count is only exact once every queued event has been
-    * DELIVERED — waitUntilEmpty is the precise barrier (a fixed sleep
-    * could under-count on a loaded box). */
-  private def countJobs(spark: SparkSession)(f: => Unit): Int = {
-    val c = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = c.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      f
-      org.apache.spark.sql.graftshim.ListenerSync
-        .waitUntilEmpty(spark.sparkContext, 30000L)
-    } finally spark.sparkContext.removeSparkListener(l)
-    c.get()
   }
 
   /** Synthetic Zipf word-frequency table — the BPE trainer's input
@@ -723,10 +705,9 @@ object ScaleBench {
     val bpeWf = zipfWordTable(spark, 20000).persist()
     bpeWf.count()
     val seqMerges = 60
-    var seqRes: Bpe.TrainResult = null
-    val seqJobs = countJobs(spark) {
+    val (seqRes, seqJobs) = countJobs(spark.sparkContext) {
       // topB=1 + ckptEvery=1 IS the rounds-1..5 sequential loop
-      seqRes = Bpe.learnBatched(bpeWf, seqMerges, minFreq = 1L, topB = 1,
+      Bpe.learnBatched(bpeWf, seqMerges, minFreq = 1L, topB = 1,
         ckptEvery = 1)
     }
     val seqPerMerge = seqJobs.toDouble / math.max(1, seqRes.merges.size)
@@ -738,9 +719,8 @@ object ScaleBench {
     // with depth as merged symbols diversify; 200 keeps bench wall
     // time bounded)
     for (batchMerges <- Seq(200)) {
-      var batRes: Bpe.TrainResult = null
-      val batJobs = countJobs(spark) {
-        batRes = Bpe.learnBatched(bpeWf, batchMerges, minFreq = 1L,
+      val (batRes, batJobs) = countJobs(spark.sparkContext) {
+        Bpe.learnBatched(bpeWf, batchMerges, minFreq = 1L,
           ckptEvery = 24)
       }
       val batPerMerge = batJobs.toDouble / math.max(1, batRes.merges.size)
@@ -758,9 +738,8 @@ object ScaleBench {
     // jobs/merge collapses to ~0.01 (the industrial single-node-train
     // shape; the certified batcher above remains the beyond-budget
     // fallback and keeps its own A/B)
-    var inMemMerges = 0
-    val inMemJobs = countJobs(spark) {
-      inMemMerges = Bpe.learnFromWords(bpeWf, 200, minFreq = 1L).size
+    val (inMemMerges, inMemJobs) = countJobs(spark.sparkContext) {
+      Bpe.learnFromWords(bpeWf, 200, minFreq = 1L).size
     }
     out ++= Seq(
       "bpe_inmem200_merges" -> inMemMerges.toDouble,
@@ -1017,9 +996,8 @@ object ScaleBench {
       val wfBig = wfFull
         .orderBy(col("freq").desc, col("w")).limit(1 << 18)
         .localCheckpoint()
-      var res: graft.operators.Bpe.TrainResult = null
-      val jobs = countJobs(spark) {
-        res = graft.operators.Bpe.learnBatched(wfBig, 200, minFreq = 1L,
+      val (res, jobs) = countJobs(spark.sparkContext) {
+        graft.operators.Bpe.learnBatched(wfBig, 200, minFreq = 1L,
           ckptEvery = 24)
       }
       val nM = math.max(1, res.merges.size)

@@ -1,6 +1,7 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Ingest job: reference parity for ETL/ETL.py (operators S1/S2).
   *
@@ -37,15 +38,19 @@ object Ingest {
     * (graft.spark.FsOps) keeps the previous load recoverable until the
     * new one is fully in place; readers see at most a two-rename gap —
     * vs the reference's TRUNCATE, which exposes an empty table for the
-    * whole chunk-append loop. */
+    * whole chunk-append loop. Returns the rows loaded, counted by an
+    * observation on the staged write itself: the count comes with the
+    * write's own jobs instead of a re-read of the target. */
   def load(spark: SparkSession, csvPath: String, targetDir: String,
       rowCap: Int = referenceRowCap): Long = {
     val staging = s"$targetDir.__staging"
+    val rows = Observation()
     readCsv(spark, csvPath)
       .limit(rowCap)
       .repartition(spark.sparkContext.defaultParallelism)
+      .observe(rows, count(lit(1)).as("rows"))
       .write.mode(SaveMode.Overwrite).parquet(staging)
     graft.spark.FsOps.swapInto(spark, staging, targetDir)
-    spark.read.parquet(targetDir).count()
+    rows.get("rows").asInstanceOf[Long]
   }
 }

@@ -1,6 +1,7 @@
 package graft.model
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 import scala.collection.mutable
 
 /** dbt-style model framework: named models, `ref()` dependencies,
@@ -105,7 +106,12 @@ final class ModelRegistry(sources: Map[String, DataFrame]) {
 
   /** Materialize every model in topo order (dbt run). Each model reads
     * its deps' *materialized* output, matching dbt's node-at-a-time
-    * execution; returns the written DataFrames. */
+    * execution; returns the written DataFrames. An unpartitioned model
+    * is read back with the schema it was just written with, so no
+    * parquet schema-inference job runs (the read-back schema equals the
+    * inferred one, spec-pinned). A partitioned model keeps the inferred
+    * read: its partition columns move to the end and their types come
+    * from the directory names. */
   def run(spark: SparkSession, outDir: String): Map[String, DataFrame] = {
     val done = mutable.Map.empty[String, DataFrame] ++ sources
     topoOrder.map { n =>
@@ -123,7 +129,7 @@ final class ModelRegistry(sources: Map[String, DataFrame]) {
         existing.map("this" -> _)
       val built = m.build(depMap)
 
-      (m.materialization, existing) match {
+      val written = (m.materialization, existing) match {
         case (Materialization.Incremental(key), Some(cur)) if m.partitionBy.nonEmpty =>
           Upsert.partitionPruned(spark, built, cur, path, key, m.partitionBy)
         case (Materialization.Incremental(key), Some(cur)) =>
@@ -131,15 +137,18 @@ final class ModelRegistry(sources: Map[String, DataFrame]) {
         case _ =>
           write(built, m, path)
       }
-      val back = spark.read.parquet(path)
+      val back =
+        if (m.partitionBy.isEmpty) spark.read.schema(written).parquet(path)
+        else spark.read.parquet(path)
       done += (n -> back)
       n -> back
     }.toMap
   }
 
-  private def write(df: DataFrame, m: Model, path: String): Unit = {
+  private def write(df: DataFrame, m: Model, path: String): StructType = {
     val w = df.write.mode(SaveMode.Overwrite)
     (if (m.partitionBy.nonEmpty) w.partitionBy(m.partitionBy: _*) else w)
       .parquet(path)
+    df.schema
   }
 }

@@ -2,6 +2,7 @@ package graft.model
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.types.StructType
 
 /** The upsert-by-key merge primitives behind incremental
   * materialization, shared by the batch model framework
@@ -18,9 +19,10 @@ object Upsert {
     * touched set is broadcast, bounded by the batch's partition count —
     * and physically replace just those partition directories. Untouched
     * partitions stay byte-identical. Requires a stable key→partition
-    * mapping (a key that MOVES partitions leaves its old copy behind). */
+    * mapping (a key that MOVES partitions leaves its old copy behind).
+    * Returns the schema written. */
   def partitionPruned(spark: SparkSession, batch: DataFrame, cur: DataFrame,
-      path: String, key: String, partitionBy: Seq[String]): Unit = {
+      path: String, key: String, partitionBy: Seq[String]): StructType = {
     val touched = batch.select(
       partitionBy.map(c => col(c).as(s"__t_$c")): _*).distinct()
     // NULL-SAFE semi-join: a plain column-list semi-join never matches a
@@ -34,18 +36,21 @@ object Upsert {
     val tmp = s"$path.__staging"
     merged.write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*).parquet(tmp)
     graft.spark.FsOps.swapPartitions(spark, tmp, path, partitionBy.size)
+    merged.schema
   }
 
   /** Whole-table upsert: keep current rows whose key is absent from the
     * batch, add every batch row. Staged to a temp dir first — the plan
-    * reads `path` lazily and cannot overwrite it in place. */
+    * reads `path` lazily and cannot overwrite it in place. Returns the
+    * schema written. */
   def fullRewrite(spark: SparkSession, batch: DataFrame, cur: DataFrame,
-      path: String, key: String): Unit = {
+      path: String, key: String): StructType = {
     val merged = cur.join(batch.select(key).distinct(),
       Seq(key), "left_anti").unionByName(batch)
     val tmp = s"$path.__staging"
     merged.write.mode(SaveMode.Overwrite).parquet(tmp)
     graft.spark.FsOps.swapInto(spark, tmp, path)
+    merged.schema
   }
 
   /** One micro-batch into a partitioned incremental table — the

@@ -292,8 +292,8 @@ object Relational {
   }
 
   /** Fused data-quality pass (A2/A3 at scale): ALL violation counts in
-    * one scan via conditional aggregation, instead of one job per test
-    * (DataQuality.runAllFused). */
+    * one scan via conditional aggregation — the row-test half of
+    * DataQuality.runAll's one-action suite, in SQL. */
   val q10DqFusedCounts: GraftQuery = GraftQuery(
     "q10_dq_fused_counts",
     """SELECT

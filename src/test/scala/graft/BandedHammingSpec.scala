@@ -327,39 +327,13 @@ class BandedHammingSpec extends SparkSpecBase {
     val corpusStats = scheme8x8.stats(corpus)
     val batchStats = scheme8x8.stats(batch)
     // probe time: with BOTH sides' stats supplied, construction is
-    // fully lazy — zero Spark jobs until the pair relation is acted
-    // on. Count only jobs tagged with THIS construction's job group:
-    // the listener bus is session-global and async, so a straggler
-    // job from an earlier suite landing in the settle window must not
-    // flake the assertion
-    val group = "bh_stats_probe_construction"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (j.properties != null &&
-            group == j.properties.getProperty("spark.jobGroup.id")) {
-          jobs.incrementAndGet(); ()
-        }
+    // fully lazy — zero Spark jobs until the pair relation is acted on
+    val (probe, jobs) = org.apache.spark.sql.graftshim.ListenerSync
+      .countJobs(spark.sparkContext) {
+        scheme8x8.pairs(batch, hMin = 0, rowsB = Some(corpus),
+          rowsStats = Some(batchStats), rowsBStats = Some(corpusStats))
       }
-    }
-    spark.sparkContext.addSparkListener(l)
-    val probe =
-      try {
-        spark.sparkContext.setJobGroup(group, "stats-probe construction")
-        val p =
-          try scheme8x8.pairs(batch, hMin = 0, rowsB = Some(corpus),
-            rowsStats = Some(batchStats), rowsBStats = Some(corpusStats))
-          finally spark.sparkContext.clearJobGroup()
-        // listener bus is async — drain it DETERMINISTICALLY: a fixed
-        // sleep could let a late job-start event slip past the
-        // assertion on a loaded box (false PASS)
-        org.apache.spark.sql.graftshim.ListenerSync
-          .waitUntilEmpty(spark.sparkContext, 30000L)
-        p
-      } finally spark.sparkContext.removeSparkListener(l)
-    assert(jobs.get() == 0,
-      s"probe construction with persisted stats ran ${jobs.get()} jobs")
+    assert(jobs == 0, s"probe construction with persisted stats ran $jobs jobs")
     // and the probe answer equals the fresh-census cross-corpus run
     val want = (for {
       a <- batchVals; b <- corpusVals

@@ -27,6 +27,15 @@ class IngestSpec extends SparkSpecBase {
     assert(n === 42)
   }
 
+  test("S2: the returned row count equals a re-read of the loaded table") {
+    val csv = writeCsv(100)
+    for ((cap, want) <- Seq(0 -> 0L, 42 -> 42L, 1000 -> 100L)) {
+      val t = s"$dir/out_observed_$cap"
+      val n = Ingest.load(spark, csv, t, rowCap = cap)
+      assert(n === want && n === spark.read.parquet(t).count(), s"cap $cap")
+    }
+  }
+
   test("S2: reload is idempotent full refresh (truncate-then-append parity)") {
     val csv = writeCsv(50)
     val t = s"$dir/out_reload"

@@ -1,12 +1,20 @@
 package graft
 
 import graft.model.{Model, ModelRegistry}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class ModelRegistrySpec extends SparkSpecBase {
   import spark.implicits._
 
   private def sources = Map("src" -> Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v"))
+
+  /** Every DataFrame `run` returned has the schema a fresh inferred
+    * read of its directory has — the known-schema read-back is exact. */
+  private def assertInferredSchemas(out: Map[String, DataFrame], dir: String): Unit =
+    out.foreach { case (n, df) =>
+      assert(df.schema === spark.read.parquet(s"$dir/$n").schema, n)
+    }
 
   test("topo order respects ref() edges") {
     val reg = new ModelRegistry(sources)
@@ -42,7 +50,7 @@ class ModelRegistrySpec extends SparkSpecBase {
     val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
     val reg = new ModelRegistry(sources)
     reg.register(Model("bykey", Seq("src"), partitionBy = Seq("v"))(m => m("src")))
-    reg.run(spark, dir)
+    assertInferredSchemas(reg.run(spark, dir), dir)
     val parts = new java.io.File(s"$dir/bykey").list().filter(_.startsWith("v="))
     assert(parts.toSet === Set("v=a", "v=b", "v=c"))
     // partition filter prunes to a single directory scan
@@ -63,8 +71,10 @@ class ModelRegistrySpec extends SparkSpecBase {
     // first run: full build
     val r1 = regFor(Seq((1, "a"), (2, "b"))).run(spark, dir)
     assert(r1("inc").count() === 2)
+    assertInferredSchemas(r1, dir)
     // second run: id=2 updated, id=3 new, id=1 untouched → preserved
     val r2 = regFor(Seq((2, "B!"), (3, "c"))).run(spark, dir)
+    assertInferredSchemas(r2, dir)
     val got = r2("inc").collect().map(r => r.getInt(0) -> r.getString(1)).toMap
     assert(got === Map(1 -> "a", 2 -> "B!", 3 -> "c"))
   }
@@ -111,6 +121,7 @@ class ModelRegistrySpec extends SparkSpecBase {
     assert(d2Before.nonEmpty)
     // run 2 touches only d1: id=2 updated in place, id=4 new
     val r2 = regFor(Seq((2, "B!", "d1"), (4, "e", "d1"))).run(spark, dir)
+    assertInferredSchemas(r2, dir)
     val got = r2("inc").collect()
       .map(r => r.getInt(0) -> (r.getString(1), r.getString(2))).toMap
     assert(got === Map(1 -> ("a", "d1"), 2 -> ("B!", "d1"),
@@ -178,9 +189,30 @@ class ModelRegistrySpec extends SparkSpecBase {
     reg.register(Model("core", Seq("staging"))(m => m("staging").where(col("id") =!= 2)))
     val out1 = reg.run(spark, dir)
     assert(out1("core").count() === 2)
+    assertInferredSchemas(out1, dir)
     // second run = full refresh, not append (materialized='table' parity)
     val out2 = reg.run(spark, dir)
     assert(out2("core").count() === 2)
     assert(spark.read.parquet(s"$dir/staging").count() === 3)
+  }
+
+  test("table read-back schema equals the inferred one across column types") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_types").toString
+    val reg = new ModelRegistry(sources)
+    reg.register(Model("typed", Seq("src"))(m => m("src").select(
+      col("id"), // non-nullable int
+      col("v").as("v", new org.apache.spark.sql.types.MetadataBuilder()
+        .putString("comment", "kept in the footer").build()),
+      lit(null).cast("string").as("nul"),
+      to_date(lit("2026-01-01")).as("d"),
+      to_timestamp(lit("2026-01-01 10:00:00")).as("ts"),
+      lit(1.5).cast("decimal(12,3)").as("dec"),
+      array(col("id"), lit(null).cast("int")).as("arr"),
+      map(col("v"), col("id")).as("mp"),
+      struct(col("id").as("i"), col("v").as("s")).as("st"),
+      (col("id") > 1).as("flag"))))
+    val out = reg.run(spark, dir)
+    assertInferredSchemas(out, dir)
+    assert(out("typed").orderBy("id").collect().map(_.getInt(0)).toSeq === Seq(1, 2, 3))
   }
 }
