@@ -10,7 +10,6 @@ Dev-only tool; the output is committed so reviewers can navigate the
 catalog without running anything.
 """
 import re
-import subprocess
 import sys
 from pathlib import Path
 
@@ -21,31 +20,25 @@ def definition_sites():
     """name -> (file, line) of the query DEFINITION (not call sites).
 
     Definitions live where GraftQuery("name", ...) / noOracle("name")
-    is constructed; the same string literals also appear at call sites
-    (ExplainAudit, probes), and grep -r traversal order is
-    filesystem-dependent — so matches are filtered to constructor
-    lines and sorted for determinism before first-match-wins."""
-    out = subprocess.run(
-        ["grep", "-rn", '"q[0-9]', "src/main/scala/graft", "--include=*.scala"],
-        cwd=ROOT, capture_output=True, text=True).stdout
-    matches = []
-    for line in sorted(out.splitlines()):
-        m = re.match(r'([^:]+):(\d+):(.*)', line)
-        if not m:
-            continue
-        f, ln, body = m.group(1), int(m.group(2)), m.group(3)
-        n = re.search(r'"(q\d+_[a-z0-9_]+)"', body)
-        if not n:
-            continue
-        # a definition line is the name literal alone (first arg on its
-        # own line) or directly inside a GraftQuery(/noOracle( call
-        is_def = bool(re.search(r'(GraftQuery\(|noOracle\(")', body)) or \
-            body.strip().rstrip(",") == f'"{n.group(1)}"'
-        matches.append((not is_def, f, ln, n.group(1)))
+    is constructed: the name literal sits on the constructor's line or
+    opens the line right after it. The same string literals also
+    appear at call sites (ExplainAudit, probes, dev tools), so only
+    constructor sites count; a catalog name with no constructor site
+    maps to "?" and fails the run. Files are walked in sorted order."""
+    constructor = re.compile(r'(GraftQuery|noOracle)\(\s*$')
     sites = {}
-    for _, f, ln, name in sorted(matches):
-        if name not in sites:
-            sites[name] = (f, ln)
+    for f in sorted((ROOT / "src/main/scala/graft").rglob("*.scala")):
+        prev = ""
+        for ln, body in enumerate(f.read_text().splitlines(), start=1):
+            n = re.search(r'"(q\d+_[a-z0-9_]+)"', body)
+            if n:
+                before = body[:n.start()]
+                on_line = re.search(r'(GraftQuery|noOracle)\($', before)
+                after_open = constructor.search(prev) and not before.strip()
+                if (on_line or after_open) and n.group(1) not in sites:
+                    sites[n.group(1)] = (str(f.relative_to(ROOT)), ln)
+            if body.strip():
+                prev = body
     return sites
 
 
@@ -68,8 +61,11 @@ def main():
         "| Query | Check | Bench | Defined at |",
         "|---|---|---|---|",
     ]
+    missing = [r[0] for r in rows if r[0] not in sites]
+    if missing:
+        sys.exit(f"no GraftQuery/noOracle constructor site for: {missing}")
     for name, oracle, headline in sorted(rows, key=key):
-        f, ln = sites.get(name, ("?", 0))
+        f, ln = sites[name]
         lines.append(f"| {name} | {oracle} | {headline or ''} | `{f}:{ln}` |")
     out = ROOT / "docs" / "CATALOG.md"
     out.write_text("\n".join(lines) + "\n")

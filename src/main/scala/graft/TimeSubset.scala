@@ -1,11 +1,13 @@
 package graft
 /** Dev tool: warm per-query timing of a SPARK_GRAFT_ONLY subset (same
-  * contract as Verify's filter); falls back to the full catalog. */
+  * contract as Verify's filter); falls back to the full catalog. The
+  * session takes its core count from SPARK_GRAFT_CPUS, as Verify's
+  * does. */
 object TimeSubset {
   def main(args: Array[String]): Unit = {
     val d = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val spark = graft.spark.Sessions.local("timing", 16)
+    val spark = graft.spark.Sessions.local("timing")
     SparkEntry.catalog.filter(q => only.forall(_.contains(q.name))).foreach { q =>
       try {
         q.fn(spark, d).count() // warm

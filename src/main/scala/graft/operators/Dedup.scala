@@ -606,7 +606,7 @@ object Dedup {
   /** The q94 probe against a caller-supplied corpus BAND index —
     * factored so the STREAMING-maintained band index (q364) serves
     * the same probe plan as the batch-built one, with q94's oracle
-    * proving both (the simhashBatchProbe discipline on the Jaccard
+    * proving both (the q345/q351 discipline on the Jaccard
     * tier). The batch side signs fresh from the shared per-corpus
     * signature index; verification joins the shingle-set index, never
     * the corpus. The index's persisted bucket census feeds the flood
@@ -722,43 +722,21 @@ object Dedup {
        |  WHERE bit_count(xor(a.simhash, b.simhash))
        |    BETWEEN 1 AND $simhashHammingMax)""".stripMargin
 
-  /** The ONE simhash banding layout (four disjoint 15-bit sub-bands of
-    * the 60-bit hash) shared by q337's pairs, q343's cluster edges,
-    * the q345/q351 probes, and every index build's guard statistics —
-    * the band geometry cannot silently diverge between them. */
-  private[graft] val simhashScheme = BandedHamming.BandScheme(
-    idCols = Seq("simhash"), fpCols = Seq("simhash"),
-    bandExprs = BandedHamming.fixedBands(col("simhash"), 4, 15),
-    hMax = simhashHammingMax)
-
-  /** The q337/q343 simhash value census, hashed once per (session,
-    * corpus) — the value relation IS the index (bundled with its
-    * build-time guard statistics so re-invocations schedule no guard
-    * aggregates), and it is localCheckpoint-backed (a plan barrier
-    * with no CacheManager plan-identity entry), so eviction must go
-    * through [[org.apache.spark.sql.graftshim.Checkpoints.release]]:
-    * plain unpersist on a checkpointed frame is a silent no-op and
-    * repeated invocations in one session would otherwise accumulate
-    * unreleasable checkpoint blocks. */
-  private val simhashValsIndex =
-    new graft.spark.SessionMemo[String, BandedHamming.StatedIndex](
-      "dedup.simhashValueCensus")(i =>
-      org.apache.spark.sql.graftshim.Checkpoints.release(i.rows))
-
-  /** The q337 value census + banded near-miss pairs, factored for the
-    * q343 clustering composer. */
-  private def simhashValueCensus(s: org.apache.spark.sql.SparkSession,
-      d: String): BandedHamming.StatedIndex =
-    simhashValsIndex.getOrElseUpdate(s, d)(
-      simhashScheme.indexed(
-        Tables.documents(s, d).select(
-          org.apache.spark.sql.graftshim.SimHashMd5(
-            TextFunctions.distinctTokens(lower(col("text")))).as("simhash"))
-          .groupBy("simhash").agg(count(lit(1)).as("n_docs"))
-          .localCheckpoint()))
-
-  private def simhashValuePairs(vals: BandedHamming.StatedIndex): DataFrame =
-    simhashScheme.pairsIndexed(vals, carry = Seq("n_docs"))
+  /** The simhash value tier: four disjoint 15-bit sub-bands of the
+    * 60-bit hash, shared by q337's pairs, q343's cluster edges, the
+    * q345/q351 probes and every index build's guard statistics. The
+    * hash is one BIGINT, so it is its own cluster node key. */
+  private[graft] val simhashTier = ValueTier(
+    name = "simhash",
+    scheme = BandedHamming.BandScheme(
+      idCols = Seq("simhash"), fpCols = Seq("simhash"),
+      bandExprs = BandedHamming.fixedBands(col("simhash"), 4, 15),
+      hMax = simhashHammingMax),
+    groupCols = Seq("simhash"),
+    partialSchema = "simhash BIGINT, n_partial BIGINT",
+    featurize = _.select(org.apache.spark.sql.graftshim.SimHashMd5(
+      TextFunctions.distinctTokens(lower(col("text")))).as("simhash")),
+    nodeKey = min("simhash"))
 
   val qSimhashNearDup: GraftQuery = GraftQuery(
     "q337_simhash_neardup_values",
@@ -771,7 +749,7 @@ object Dedup {
     // no value-grain query, so round-over-round tracking skipped the
     // tier the project ships; q337 is the canonical banded value probe
     headline = true) { (s, d) =>
-    simhashValuePairs(simhashValueCensus(s, d))
+    simhashTier.pairs(s, d)
       .select(col("simhash_a").as("fp_a"), col("simhash_b").as("fp_b"),
         col("hamming"), col("n_docs_a"), col("n_docs_b"))
       .orderBy("fp_a", "fp_b")
@@ -787,31 +765,14 @@ object Dedup {
        |GROUP BY simhash
        |ORDER BY simhash""".stripMargin
 
-  /** Per-split simhash value census (the q337 census restricted to a
-    * document predicate) — the batch/corpus halves of q345. */
-  private def simhashValueCensusWhere(s: org.apache.spark.sql.SparkSession,
-      d: String, cond: Column): DataFrame =
-    Tables.documents(s, d).where(cond).select(
-      org.apache.spark.sql.graftshim.SimHashMd5(
-        TextFunctions.distinctTokens(lower(col("text")))).as("simhash"))
-      .groupBy("simhash").agg(count(lit(1)).as("n_docs"))
-
-  /** The CORPUS simhash value index, persisted once per (session,
-    * corpus) with its build-time guard statistics — what a production
-    * tier keeps next to the corpus so arriving batches never re-hash
-    * OR re-aggregate it (the q94 posture). */
-  private val simhashCorpusIndex =
-    new graft.spark.SessionMemo[String, BandedHamming.StatedIndex](
-      "dedup.simhashCorpusVals")(_.rows.unpersist(): Unit)
-
-  /** The arriving batch's checkpointed value census (see q345's
-    * builder note) with ITS build-time stats too — so a repeated probe
-    * schedules no guard aggregates on either side; released through
-    * Checkpoints (unpersist is a no-op on checkpointed frames). */
-  private val simhashBatchIndex =
-    new graft.spark.SessionMemo[String, BandedHamming.StatedIndex](
-      "dedup.simhashBatchVals")(i =>
-      org.apache.spark.sql.graftshim.Checkpoints.release(i.rows))
+  /** q345's output contract over a simhash batch probe — shared with
+    * q351, which probes the stream-maintained index instead. */
+  private[graft] def simhashProbeOut(probe: DataFrame): DataFrame =
+    probe.select(col("simhash_a").as("fp_batch"),
+        col("simhash_b").as("fp_corpus"), col("hamming"),
+        col("n_docs_a").as("n_docs_batch"),
+        col("n_docs_b").as("n_docs_corpus"))
+      .orderBy("fp_batch", "fp_corpus")
 
   /** INCREMENTAL SIMHASH NEAR-MISS — the q94 batch-vs-corpus shape on
     * the value grain: an arriving batch's distinct simhash values are
@@ -841,40 +802,9 @@ object Dedup {
        |FROM bvals b JOIN cvals c
        |  ON bit_count(xor(b.simhash, c.simhash)) <= $simhashHammingMax
        |ORDER BY fp_batch, fp_corpus""".stripMargin) { (s, d) =>
-    val corpusVals = simhashCorpusIndex.getOrElseUpdate(s, d)(
-      simhashScheme.indexed(
-        simhashValueCensusWhere(s, d, pmod(col("doc_id"), lit(5)) =!= 4)
-          .persist()))
-    simhashBatchProbe(s, d, corpusVals)
+    simhashProbeOut(
+      simhashTier.batchProbe(s, d, simhashTier.corpusIndex(s, d)))
   }
-
-  /** The q345 probe against a caller-supplied corpus value index —
-    * factored so the STREAMING-maintained census (q351) serves the
-    * same probe plan as the batch-built index, with q345's oracle
-    * proving both. The batch census memoizes per corpus (the
-    * fixture's "arriving batch" is deterministic per corpus — a
-    * production caller keys by batch id and evicts per batch);
-    * checkpoint blocks are released on eviction, not leaked. */
-  private[graft] def simhashBatchProbe(s: org.apache.spark.sql.SparkSession,
-      d: String, corpusVals: BandedHamming.StatedIndex): DataFrame = {
-    val batchVals = simhashBatchIndex.getOrElseUpdate(s, d)(
-      simhashScheme.indexed(
-        simhashValueCensusWhere(s, d, pmod(col("doc_id"), lit(5)) === 4)
-          .localCheckpoint()))
-    simhashScheme.pairsIndexed(batchVals, carry = Seq("n_docs"),
-      hMin = 0, rowsB = Some(corpusVals))
-      .select(col("simhash_a").as("fp_batch"),
-        col("simhash_b").as("fp_corpus"), col("hamming"),
-        col("n_docs_a").as("n_docs_batch"),
-        col("n_docs_b").as("n_docs_corpus"))
-      .orderBy("fp_batch", "fp_corpus")
-  }
-
-  /** Value-node component labels for q343, built once per (session,
-    * corpus); the persisted label relation is released on eviction. */
-  private val simhashClusterIndex =
-    new graft.spark.SessionMemo[String, DataFrame](
-      "dedup.simhashValueCC")(_.unpersist(): Unit)
 
   /** NEAR-MISS CLUSTERS AT THE VALUE GRAIN — the q77 composition on
     * q337's output: near-miss is transitive in effect (A≈B and B≈C
@@ -920,32 +850,7 @@ object Dedup {
        |  CAST(SUM(n_docs) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_docs
        |FROM full_lbl
        |ORDER BY simhash""".stripMargin) { (s, d) =>
-    import org.apache.spark.sql.expressions.Window
-    val vals = simhashValueCensus(s, d)
-    // the pair relation is checkpointed so the CC loop's lineage roots
-    // HERE: the loop's generation-release (Checkpoints.release) frees
-    // every LogicalRDD leaf under the label lineage, and without the
-    // barrier that includes the census checkpoint the final join
-    // still needs (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND otherwise)
-    val labels = simhashClusterIndex.getOrElseUpdate(s, d) {
-      val edges = simhashValuePairs(vals)
-        .select(col("simhash_a").as("doc_a"), col("simhash_b").as("doc_b"))
-        .localCheckpoint()
-      val l = connectedComponents(edges)
-      // the boundary barrier has served its purpose once the labels
-      // are persisted and materialized (inside connectedComponents) —
-      // release its blocks instead of leaking them per invocation
-      org.apache.spark.sql.graftshim.Checkpoints.release(edges)
-      l
-    }
-    val w = Window.partitionBy("cluster_id")
-    vals.rows
-      .join(labels.withColumnRenamed("node", "simhash"), Seq("simhash"), "left")
-      .select(col("simhash"),
-        coalesce(col("label"), col("simhash")).as("cluster_id"),
-        col("n_docs"))
-      .withColumn("n_values", count(lit(1)).over(w).cast("int"))
-      .withColumn("cluster_docs", sum(col("n_docs")).over(w).cast("long"))
+    simhashTier.clusters(s, d)
       .select("simhash", "cluster_id", "n_values", "cluster_docs")
       .orderBy("simhash")
   }

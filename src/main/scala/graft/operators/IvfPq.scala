@@ -1222,8 +1222,8 @@ object IvfPq {
   /** The collected q327 policy table per (session, corpus) — the
     * planner's SCALAR surface. The curves were already memoized, but a
     * policy LOOKUP still re-ran the small selection job per call
-    * (~0.35 s of pure stage latency inside every warm q328 pass —
-    * measured r13, ServeProfile); the ≤|targets|-row table is index
+    * (~0.35 s of pure stage latency inside every warm q328 pass, in a
+    * per-step timing of the warm serve); the ≤|targets|-row table is index
     * metadata, so collect it once and serve lookups driver-side. */
   private val plannerChoice =
     new graft.spark.SessionMemo[String, Map[Int, Int]](

@@ -335,7 +335,7 @@ object Multimodal {
     * The round-robin exchange moves ids, never payloads (payloads are
     * born inside their task), and the width is derived from the
     * cluster (4×cores, capped), not a local constant. */
-  private def spreadIds(ids: Dataset[Long]): Dataset[Long] =
+  private[operators] def spreadIds[T](ids: Dataset[T]): Dataset[T] =
     ids.repartition(math.min(4096,
       ids.sparkSession.sparkContext.defaultParallelism * 4))
 
@@ -1476,37 +1476,23 @@ object Multimodal {
     * half) — pigeonhole makes h ≤ 3 lossless with room to spare; the
     * oracle is the plain all-pairs value join, so the hash match
     * proves candidate completeness (the q28/q331 discipline). */
-  /** The q334/q346 image aHash value census — decoded once per
-    * (session, corpus) and shared by the value-grain pair and cluster
-    * queries; carries both the census count and the census-stable
-    * MIN(doc_id) node key (q346's vid). localCheckpoint-backed, so
-    * eviction releases the checkpoint blocks through Checkpoints
-    * (plain unpersist is a no-op on checkpointed frames — repeated
-    * invocations would otherwise leak blocks per call). */
-  private val imageValsIndex =
-    new graft.spark.SessionMemo[String, BandedHamming.StatedIndex](
-      "multimodal.imageValueCensus")(i =>
-      org.apache.spark.sql.graftshim.Checkpoints.release(i.rows))
-
-  /** The ONE image-aHash banding layout (eight 8-bit sub-bands, four
-    * per packed 32-bit half) shared by q334's pairs, q346's cluster
-    * edges, the q349/q356 probes, and every index build's guard
-    * statistics. */
-  private[graft] val imageScheme = BandedHamming.BandScheme(
-    idCols = Seq("ahash_hi", "ahash_lo"),
-    fpCols = Seq("ahash_hi", "ahash_lo"),
-    bandExprs = BandedHamming.fixedBands(col("ahash_lo"), 4, 8) ++
-      BandedHamming.fixedBands(col("ahash_hi"), 4, 8),
-    hMax = videoHammingMax)
-
-  private def imageValueCensus(
-      s: SparkSession, d: String): BandedHamming.StatedIndex =
-    imageValsIndex.getOrElseUpdate(s, d)(
-      imageScheme.indexed(
-        decodeAHashes(imageTable(s, d)).toDF()
-          .groupBy("ahash_hi", "ahash_lo")
-          .agg(count(lit(1)).as("n_docs"), min("doc_id").as("vid"))
-          .localCheckpoint()))
+  /** The image-aHash value tier: eight 8-bit sub-bands (four per packed
+    * 32-bit half) shared by q334's pairs, q346's cluster edges, the
+    * q349/q356 probes and every index build's guard statistics. Two
+    * hash words cannot pack into one oracle-expressible BIGINT, so the
+    * node key is MIN(doc_id). */
+  private[graft] val imageTier = ValueTier(
+    name = "image",
+    scheme = BandedHamming.BandScheme(
+      idCols = Seq("ahash_hi", "ahash_lo"),
+      fpCols = Seq("ahash_hi", "ahash_lo"),
+      bandExprs = BandedHamming.fixedBands(col("ahash_lo"), 4, 8) ++
+        BandedHamming.fixedBands(col("ahash_hi"), 4, 8),
+      hMax = videoHammingMax),
+    groupCols = Seq("ahash_hi", "ahash_lo"),
+    partialSchema = "ahash_hi BIGINT, ahash_lo BIGINT, n_partial BIGINT",
+    featurize = imageAHashesFromDocs,
+    nodeKey = min("doc_id"))
 
   val qImageNearDup: GraftQuery = GraftQuery(
     "q334_image_neardup_values",
@@ -1526,28 +1512,12 @@ object Multimodal {
        |      bit_count(xor(a.ahash_lo, b.ahash_lo))
        |  BETWEEN 1 AND $videoHammingMax
        |ORDER BY hi_a, lo_a, hi_b, lo_b""".stripMargin) { (s, d) =>
-    imageScheme.pairsIndexed(imageValueCensus(s, d), carry = Seq("n_docs"))
+    imageTier.pairs(s, d)
       .select(col("ahash_hi_a").as("hi_a"), col("ahash_lo_a").as("lo_a"),
         col("ahash_hi_b").as("hi_b"), col("ahash_lo_b").as("lo_b"),
         col("hamming"), col("n_docs_a"), col("n_docs_b"))
       .orderBy("hi_a", "lo_a", "hi_b", "lo_b")
   }
-
-  /** The q335 (and audio-cluster) fingerprint value census, decoded
-    * once per (session, corpus); checkpoint blocks released on
-    * eviction (see [[imageValsIndex]]). */
-  private val audioValsIndex =
-    new graft.spark.SessionMemo[String, BandedHamming.StatedIndex](
-      "multimodal.audioValueCensus")(i =>
-      org.apache.spark.sql.graftshim.Checkpoints.release(i.rows))
-
-  private def audioValueCensus(
-      s: SparkSession, d: String): BandedHamming.StatedIndex =
-    audioValsIndex.getOrElseUpdate(s, d)(
-      audioScheme.indexed(
-        audioFingerprints(audioTable(s, d)).toDF()
-          .groupBy("fingerprint").agg(count(lit(1)).as("n_docs"))
-          .localCheckpoint()))
 
   /** AUDIO NEAR-MISS PAIRS AT THE VALUE GRAIN — the q334 pattern on
     * q193's 32-bit energy fingerprint (this fixture's strongest case
@@ -1598,20 +1568,20 @@ object Multimodal {
        |  WHERE bit_count(xor(a.fingerprint, b.fingerprint))
        |    BETWEEN 1 AND $videoHammingMax)""".stripMargin
 
-  /** The ONE audio banding layout (four 8-bit sub-bands of the 32-bit
-    * energy fingerprint) shared by q335/q347's pairs, the q353/q359
-    * cross-corpus probes, and every index build's guard statistics, so
-    * the band layout cannot silently diverge between them. */
-  private[graft] val audioScheme = BandedHamming.BandScheme(
-    idCols = Seq("fingerprint"), fpCols = Seq("fingerprint"),
-    bandExprs = BandedHamming.fixedBands(col("fingerprint"), 4, 8),
-    hMax = videoHammingMax)
-
-  /** The q335/q347 banded value pairs, factored for the clustering
-    * composer. */
-  private def audioValuePairs(
-      s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    audioScheme.pairsIndexed(audioValueCensus(s, d), carry = Seq("n_docs"))
+  /** The audio value tier: four 8-bit sub-bands of the 32-bit energy
+    * fingerprint, shared by q335/q347's pairs, the q353/q359 probes and
+    * every index build's guard statistics. The fingerprint is one
+    * BIGINT, so it is its own cluster node key. */
+  private[graft] val audioTier = ValueTier(
+    name = "audio",
+    scheme = BandedHamming.BandScheme(
+      idCols = Seq("fingerprint"), fpCols = Seq("fingerprint"),
+      bandExprs = BandedHamming.fixedBands(col("fingerprint"), 4, 8),
+      hMax = videoHammingMax),
+    groupCols = Seq("fingerprint"),
+    partialSchema = "fingerprint BIGINT, n_partial BIGINT",
+    featurize = audioFingerprintsFromDocs,
+    nodeKey = min("fingerprint"))
 
   val qAudioNearDup: GraftQuery = GraftQuery(
     "q335_audio_neardup_values",
@@ -1620,35 +1590,11 @@ object Multimodal {
        |SELECT fp_a, fp_b, hamming, n_docs_a, n_docs_b
        |FROM apairs
        |ORDER BY fp_a, fp_b""".stripMargin) { (s, d) =>
-    audioValuePairs(s, d)
+    audioTier.pairs(s, d)
       .select(col("fingerprint_a").as("fp_a"), col("fingerprint_b").as("fp_b"),
         col("hamming"), col("n_docs_a"), col("n_docs_b"))
       .orderBy("fp_a", "fp_b")
   }
-
-  /** Per-split audio fingerprint value census (the q335 census
-    * restricted to a document predicate) — the batch/corpus halves of
-    * q353, delegating to the ONE featurize the streaming maintainer
-    * also uses (ids pruned BEFORE synthesis/decode). */
-  private def audioValueCensusWhere(s: SparkSession, d: String,
-      cond: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame =
-    audioFingerprintsFromDocs(Tables.documents(s, d).where(cond))
-      .groupBy("fingerprint").agg(count(lit(1)).as("n_docs"))
-
-  /** The CORPUS audio value index, persisted once per (session,
-    * corpus) — the q345/q349 posture on the audio tier. */
-  private val audioCorpusIndex =
-    new graft.spark.SessionMemo[String, BandedHamming.StatedIndex](
-      "multimodal.audioCorpusVals")(_.rows.unpersist(): Unit)
-
-  /** The arriving batch's checkpointed audio census (deterministic
-    * per corpus in this fixture — a production caller keys by batch
-    * id) with its build-time stats; checkpoint blocks released on
-    * eviction. */
-  private val audioBatchIndex =
-    new graft.spark.SessionMemo[String, BandedHamming.StatedIndex](
-      "multimodal.audioBatchVals")(i =>
-      org.apache.spark.sql.graftshim.Checkpoints.release(i.rows))
 
   /** INCREMENTAL AUDIO NEAR-MISS — the q345/q349 batch-vs-corpus
     * posture on the audio tier: an arriving batch's distinct 32-bit
@@ -1677,31 +1623,18 @@ object Multimodal {
        |  ON bit_count(xor(b.fingerprint, c.fingerprint))
        |     <= $videoHammingMax
        |ORDER BY fp_batch, fp_corpus""".stripMargin) { (s, d) =>
-    val corpusVals = audioCorpusIndex.getOrElseUpdate(s, d)(
-      audioScheme.indexed(
-        audioValueCensusWhere(s, d, pmod(col("doc_id"), lit(5)) =!= 4)
-          .persist()))
-    audioBatchProbe(s, d, corpusVals)
+    audioProbeOut(audioTier.batchProbe(s, d, audioTier.corpusIndex(s, d)))
   }
 
-  /** The q353 probe against a caller-supplied corpus value index —
-    * factored so the STREAMING-maintained census (q359) serves the
-    * same probe plan with q353's oracle proving both. */
-  private[graft] def audioBatchProbe(s: SparkSession, d: String,
-      corpusVals: BandedHamming.StatedIndex)
-      : org.apache.spark.sql.DataFrame = {
-    val batchVals = audioBatchIndex.getOrElseUpdate(s, d)(
-      audioScheme.indexed(
-        audioValueCensusWhere(s, d, pmod(col("doc_id"), lit(5)) === 4)
-          .localCheckpoint()))
-    audioScheme.pairsIndexed(batchVals, carry = Seq("n_docs"),
-      hMin = 0, rowsB = Some(corpusVals))
-      .select(col("fingerprint_a").as("fp_batch"),
+  /** q353's output contract over an audio batch probe — shared with
+    * q359, which probes the stream-maintained index instead. */
+  private[graft] def audioProbeOut(
+      probe: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    probe.select(col("fingerprint_a").as("fp_batch"),
         col("fingerprint_b").as("fp_corpus"), col("hamming"),
         col("n_docs_a").as("n_docs_batch"),
         col("n_docs_b").as("n_docs_corpus"))
       .orderBy("fp_batch", "fp_corpus")
-  }
 
   /** Oracle SQL for the corpus half of the q353 split — also the
     * oracle of the streaming census maintenance (q358). */
@@ -1727,12 +1660,6 @@ object Multimodal {
       }
       .toDF()
   }
-
-  /** Value-node component labels for q347, built once per (session,
-    * corpus); the persisted label relation is released on eviction. */
-  private val audioClusterIndex =
-    new graft.spark.SessionMemo[String, org.apache.spark.sql.DataFrame](
-      "multimodal.audioValueCC")(_.unpersist(): Unit)
 
   /** AUDIO NEAR-MISS CLUSTERS AT THE VALUE GRAIN — the q343
     * composition on q335's output, completing the audio progression
@@ -1772,40 +1699,9 @@ object Multimodal {
        |  CAST(SUM(n_docs) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_docs
        |FROM afull
        |ORDER BY fingerprint""".stripMargin) { (s, d) =>
-    import org.apache.spark.sql.expressions.Window
-    val vals = audioValueCensus(s, d)
-    val labels = audioClusterIndex.getOrElseUpdate(s, d) {
-      val edges = audioValuePairs(s, d)
-        .select(col("fingerprint_a").as("doc_a"),
-          col("fingerprint_b").as("doc_b"))
-        .localCheckpoint()
-      val l = Dedup.connectedComponents(edges)
-      org.apache.spark.sql.graftshim.Checkpoints.release(edges)
-      l
-    }
-    val w = Window.partitionBy("cluster_id")
-    vals.rows
-      .join(labels.withColumnRenamed("node", "fingerprint"),
-        Seq("fingerprint"), "left")
-      .select(col("fingerprint"),
-        coalesce(col("label"), col("fingerprint")).as("cluster_id"),
-        col("n_docs"))
-      .withColumn("n_values", count(lit(1)).over(w).cast("int"))
-      .withColumn("cluster_docs", sum(col("n_docs")).over(w).cast("long"))
+    audioTier.clusters(s, d)
       .select("fingerprint", "cluster_id", "n_values", "cluster_docs")
       .orderBy("fingerprint")
-  }
-
-  /** Distributed WIDE fingerprint featurize: one [[GifDecoder]] per
-    * partition; 48 fingerprint bytes plus two ints per clip leave the
-    * partition — payloads never shuffle. */
-  def videoFingerprintsWide(video: Dataset[VideoRow]): Dataset[VideoFpWideRow] = {
-    import video.sparkSession.implicits._
-    video.mapPartitions { rows =>
-      val dec = new GifDecoder
-      closeOnTaskEnd(() => dec.close())
-      rows.map(r => dec.decodeFingerprintWide(r.doc_id, r.gif))
-    }
   }
 
   /** The six wide-fingerprint words, lexicographic-identity order. */
@@ -1864,25 +1760,6 @@ object Multimodal {
       }.mkString(",\n")}
        |  FROM wfh GROUP BY doc_id)""".stripMargin
 
-  /** The q336 (and wide-video-cluster) fingerprint value census,
-    * decoded once per (session, corpus); carries the census count and
-    * the MIN(doc_id) node key (the q346 technique — six hash words
-    * cannot pack into one oracle-expressible BIGINT). Checkpoint
-    * blocks released on eviction (see [[imageValsIndex]]). */
-  private val videoWideValsIndex =
-    new graft.spark.SessionMemo[String, BandedHamming.StatedIndex](
-      "multimodal.videoWideValueCensus")(i =>
-      org.apache.spark.sql.graftshim.Checkpoints.release(i.rows))
-
-  private def videoWideValueCensus(
-      s: SparkSession, d: String): BandedHamming.StatedIndex =
-    videoWideValsIndex.getOrElseUpdate(s, d)(
-      videoWideScheme.indexed(
-        videoFingerprintsWide(videoTable(s, d)).toDF()
-          .groupBy(("n_sampled" +: wideFpCols).map(col): _*)
-          .agg(count(lit(1)).as("n_docs"), min("doc_id").as("vid"))
-          .localCheckpoint()))
-
   /** VIDEO NEAR-MISS AT THE WIDE WIDTH AND THE VALUE GRAIN — the
     * q331-successor that retires its low-entropy caveat, composing
     * both round-9 lessons through the ONE parameterized
@@ -1940,24 +1817,28 @@ object Multimodal {
        |  WHERE ${wideFpCols.map(c => s"CAST(bit_count(xor(a.$c, b.$c)) AS INTEGER)").mkString(" + ")}
        |    BETWEEN 1 AND $videoHammingMax)""".stripMargin
 
-  /** The ONE wide-video banding layout (slices, width eqKey,
-    * informative mask, tolerance) shared by q336's pairs, q348's
-    * cluster edges, q354's cross-corpus probe, and every index build's
-    * guard statistics, so the band layout cannot silently diverge
-    * between them. `carry` differs per caller; the cross form passes
-    * `rowsB` (the corpus index) and `hMin = 0`. */
-  private[graft] val videoWideScheme = BandedHamming.BandScheme(
-    idCols = wideFpCols, fpCols = wideFpCols,
-    bandExprs = (0 until fpFrames).flatMap(i =>
-      BandedHamming.fixedBands(col(s"f${i}_lo"), 2, 16) ++
-        BandedHamming.fixedBands(col(s"f${i}_hi"), 2, 16)),
-    eqKeys = Seq("n_sampled"),
-    informativeBand = Some(col("band_idx") < col("n_sampled") * 4),
-    hMax = videoHammingMax)
-
-  private def videoWideValuePairs(s: SparkSession, d: String,
-      carry: Seq[String]): org.apache.spark.sql.DataFrame =
-    videoWideScheme.pairsIndexed(videoWideValueCensus(s, d), carry)
+  /** The wide-video value tier: per present frame slice, four 16-bit
+    * sub-bands under the width eqKey and the informative-band mask,
+    * shared by q336's pairs, q348's cluster edges, the q354/q361
+    * probes and every index build's guard statistics. Six hash words
+    * cannot pack into one oracle-expressible BIGINT, so the node key
+    * is MIN(doc_id). n_sampled is pinned INTEGER in the partial schema
+    * so the drained census matches its oracle's types. */
+  private[graft] val videoWideTier = ValueTier(
+    name = "videoWide",
+    scheme = BandedHamming.BandScheme(
+      idCols = wideFpCols, fpCols = wideFpCols,
+      bandExprs = (0 until fpFrames).flatMap(i =>
+        BandedHamming.fixedBands(col(s"f${i}_lo"), 2, 16) ++
+          BandedHamming.fixedBands(col(s"f${i}_hi"), 2, 16)),
+      eqKeys = Seq("n_sampled"),
+      informativeBand = Some(col("band_idx") < col("n_sampled") * 4),
+      hMax = videoHammingMax),
+    groupCols = "n_sampled" +: wideFpCols,
+    partialSchema = ("n_sampled INT" +: wideFpCols.map(c => s"$c BIGINT"))
+      .mkString(", ") + ", n_partial BIGINT",
+    featurize = videoWideFromDocs,
+    nodeKey = min("doc_id"))
 
   val qVideoNearDupWide: GraftQuery = GraftQuery(
     "q336_video_neardup_wide",
@@ -1970,7 +1851,7 @@ object Multimodal {
        |FROM wpairs
        |ORDER BY n_sampled, ${wideFpCols.map(c => s"${c}_a").mkString(", ")},
        |  ${wideFpCols.map(c => s"${c}_b").mkString(", ")}""".stripMargin) { (s, d) =>
-    videoWideValuePairs(s, d, carry = Seq("n_docs"))
+    videoWideTier.pairs(s, d)
       .select((col("n_sampled") +:
         (wideFpCols.map(c => col(s"${c}_a")) ++
           wideFpCols.map(c => col(s"${c}_b")) ++
@@ -1978,12 +1859,6 @@ object Multimodal {
       .orderBy(("n_sampled" +: (wideFpCols.map(c => s"${c}_a") ++
         wideFpCols.map(c => s"${c}_b"))).map(col): _*)
   }
-
-  /** Value-node component labels for q348, built once per (session,
-    * corpus); the persisted label relation is released on eviction. */
-  private val videoWideClusterIndex =
-    new graft.spark.SessionMemo[String, org.apache.spark.sql.DataFrame](
-      "multimodal.videoWideValueCC")(_.unpersist(): Unit)
 
   /** WIDE-VIDEO NEAR-MISS CLUSTERS AT THE VALUE GRAIN — the q343
     * composition on q336's output, completing the video progression
@@ -2025,49 +1900,11 @@ object Multimodal {
        |  CAST(SUM(n_docs) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_docs
        |FROM wfull
        |ORDER BY vid""".stripMargin) { (s, d) =>
-    import org.apache.spark.sql.expressions.Window
-    val vals = videoWideValueCensus(s, d)
-    val labels = videoWideClusterIndex.getOrElseUpdate(s, d) {
-      val edges = videoWideValuePairs(s, d, carry = Seq("vid"))
-        .select(col("vid_a").as("doc_a"), col("vid_b").as("doc_b"))
-        .localCheckpoint()
-      val l = Dedup.connectedComponents(edges)
-      org.apache.spark.sql.graftshim.Checkpoints.release(edges)
-      l
-    }
-    val w = Window.partitionBy("cluster_id")
-    vals.rows
-      .join(labels.withColumnRenamed("node", "vid"), Seq("vid"), "left")
-      .select(col("vid"), col("n_sampled"),
-        coalesce(col("label"), col("vid")).as("cluster_id"),
-        col("n_docs"))
-      .withColumn("n_values", count(lit(1)).over(w).cast("int"))
-      .withColumn("cluster_docs", sum(col("n_docs")).over(w).cast("long"))
-      .select("vid", "n_sampled", "cluster_id", "n_values", "cluster_docs")
+    videoWideTier.clusters(s, d)
+      .select(col("node").as("vid"), col("n_sampled"), col("cluster_id"),
+        col("n_values"), col("cluster_docs"))
       .orderBy("vid")
   }
-
-  /** Per-split wide-video value census — the batch/corpus halves of
-    * q354, delegating to the ONE featurize the streaming maintainer
-    * also uses (ids pruned BEFORE synthesis/decode). */
-  private def videoWideValueCensusWhere(s: SparkSession, d: String,
-      cond: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame =
-    videoWideFromDocs(Tables.documents(s, d).where(cond))
-      .groupBy(("n_sampled" +: wideFpCols).map(col): _*)
-      .agg(count(lit(1)).as("n_docs"))
-
-  /** The CORPUS wide-video value index, persisted once per (session,
-    * corpus). */
-  private val videoWideCorpusIndex =
-    new graft.spark.SessionMemo[String, BandedHamming.StatedIndex](
-      "multimodal.videoWideCorpusVals")(_.rows.unpersist(): Unit)
-
-  /** The arriving batch's checkpointed wide-video census with its
-    * build-time stats; checkpoint blocks released on eviction. */
-  private val videoWideBatchIndex =
-    new graft.spark.SessionMemo[String, BandedHamming.StatedIndex](
-      "multimodal.videoWideBatchVals")(i =>
-      org.apache.spark.sql.graftshim.Checkpoints.release(i.rows))
 
   /** INCREMENTAL WIDE-VIDEO NEAR-MISS — the q345/q349/q353 posture on
     * the wide-video tier, completing the incremental matrix across
@@ -2107,33 +1944,21 @@ object Multimodal {
        |ORDER BY b.n_sampled, ${wideFpCols.map(c => s"${c}_batch").mkString(", ")},
        |  ${wideFpCols.map(c => s"${c}_corpus").mkString(", ")}""".stripMargin) {
     (s, d) =>
-    val corpusVals = videoWideCorpusIndex.getOrElseUpdate(s, d)(
-      videoWideScheme.indexed(
-        videoWideValueCensusWhere(s, d, pmod(col("doc_id"), lit(5)) =!= 4)
-          .persist()))
-    videoWideBatchProbe(s, d, corpusVals)
+    videoWideProbeOut(
+      videoWideTier.batchProbe(s, d, videoWideTier.corpusIndex(s, d)))
   }
 
-  /** The q354 probe against a caller-supplied corpus value index —
-    * factored so the STREAMING-maintained census (q361) serves the
-    * same probe plan with q354's oracle proving both. */
-  private[graft] def videoWideBatchProbe(s: SparkSession, d: String,
-      corpusVals: BandedHamming.StatedIndex)
-      : org.apache.spark.sql.DataFrame = {
-    val batchVals = videoWideBatchIndex.getOrElseUpdate(s, d)(
-      videoWideScheme.indexed(
-        videoWideValueCensusWhere(s, d, pmod(col("doc_id"), lit(5)) === 4)
-          .localCheckpoint()))
-    videoWideScheme.pairsIndexed(batchVals, carry = Seq("n_docs"),
-      hMin = 0, rowsB = Some(corpusVals))
-      .select((col("n_sampled") +:
+  /** q354's output contract over a wide-video batch probe — shared
+    * with q361, which probes the stream-maintained index instead. */
+  private[graft] def videoWideProbeOut(
+      probe: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    probe.select((col("n_sampled") +:
         (wideFpCols.map(c => col(s"${c}_a").as(s"${c}_batch")) ++
           wideFpCols.map(c => col(s"${c}_b").as(s"${c}_corpus")) ++
           Seq(col("hamming"), col("n_docs_a").as("n_docs_batch"),
             col("n_docs_b").as("n_docs_corpus")))): _*)
       .orderBy(("n_sampled" +: (wideFpCols.map(c => s"${c}_batch") ++
         wideFpCols.map(c => s"${c}_corpus"))).map(col): _*)
-  }
 
   /** Oracle SQL for the corpus half of the q354 split — also the
     * oracle of the streaming census maintenance (q360). */
@@ -2159,17 +1984,6 @@ object Multimodal {
       }
       .toDF()
   }
-
-  /** Wide-video census group key — the streaming maintainer's
-    * contract with [[videoWideCorpusCensusSql]]. */
-  private[graft] def videoWideCensusCols: Seq[String] =
-    "n_sampled" +: wideFpCols
-
-  /** Value-node component labels for q346, built once per (session,
-    * corpus); the persisted label relation is released on eviction. */
-  private val imageClusterIndex =
-    new graft.spark.SessionMemo[String, org.apache.spark.sql.DataFrame](
-      "multimodal.imageValueCC")(_.unpersist(): Unit)
 
   /** IMAGE NEAR-MISS CLUSTERS AT THE VALUE GRAIN — q343's composition
     * on q334's output, closing the perceptual progression for images
@@ -2224,54 +2038,11 @@ object Multimodal {
        |  CAST(SUM(n_docs) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_docs
        |FROM ifull
        |ORDER BY vid""".stripMargin) { (s, d) =>
-    import org.apache.spark.sql.expressions.Window
-    val vals = imageValueCensus(s, d)
-    val labels = imageClusterIndex.getOrElseUpdate(s, d) {
-      val edges = imageScheme.pairsIndexed(vals, carry = Seq("vid"))
-        .select(col("vid_a").as("doc_a"), col("vid_b").as("doc_b"))
-        .localCheckpoint()
-      val l = Dedup.connectedComponents(edges)
-      // the loop-boundary barrier is disposable once the labels are
-      // persisted and materialized — release instead of leaking
-      org.apache.spark.sql.graftshim.Checkpoints.release(edges)
-      l
-    }
-    val w = Window.partitionBy("cluster_id")
-    vals.rows
-      .join(labels.withColumnRenamed("node", "vid"), Seq("vid"), "left")
-      .select(col("vid"), col("ahash_hi"), col("ahash_lo"),
-        coalesce(col("label"), col("vid")).as("cluster_id"), col("n_docs"))
-      .withColumn("n_values", count(lit(1)).over(w).cast("int"))
-      .withColumn("cluster_docs", sum(col("n_docs")).over(w).cast("long"))
-      .select("vid", "ahash_hi", "ahash_lo", "cluster_id",
-        "n_values", "cluster_docs")
+    imageTier.clusters(s, d)
+      .select(col("node").as("vid"), col("ahash_hi"), col("ahash_lo"),
+        col("cluster_id"), col("n_values"), col("cluster_docs"))
       .orderBy("vid")
   }
-
-  /** Per-split image aHash value census (the q334 census restricted
-    * to a document predicate) — the batch/corpus halves of q349. The
-    * predicate prunes doc_ids BEFORE synthesis/decode, so the batch
-    * side never decodes corpus payloads. */
-  private def imageValueCensusWhere(s: SparkSession, d: String,
-      cond: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame =
-    imageAHashesFromDocs(Tables.documents(s, d).where(cond))
-      .groupBy("ahash_hi", "ahash_lo").agg(count(lit(1)).as("n_docs"))
-
-  /** The CORPUS image aHash value index, persisted once per (session,
-    * corpus) — what a production tier keeps next to the corpus so
-    * arriving batches never re-decode it (the q94/q345 posture). */
-  private val imageCorpusIndex =
-    new graft.spark.SessionMemo[String, BandedHamming.StatedIndex](
-      "multimodal.imageCorpusVals")(_.rows.unpersist(): Unit)
-
-  /** The arriving batch's checkpointed census (deterministic per
-    * corpus in this fixture — a production caller keys by batch id)
-    * with its build-time stats; checkpoint blocks released on
-    * eviction. */
-  private val imageBatchIndex =
-    new graft.spark.SessionMemo[String, BandedHamming.StatedIndex](
-      "multimodal.imageBatchVals")(i =>
-      org.apache.spark.sql.graftshim.Checkpoints.release(i.rows))
 
   /** INCREMENTAL IMAGE NEAR-MISS — q345's batch-vs-corpus posture on
     * the image tier: an arriving batch's distinct aHash values are
@@ -2307,34 +2078,20 @@ object Multimodal {
        |     <= $videoHammingMax
        |ORDER BY hi_batch, lo_batch, hi_corpus, lo_corpus""".stripMargin) {
     (s, d) =>
-    val corpusVals = imageCorpusIndex.getOrElseUpdate(s, d)(
-      imageScheme.indexed(
-        imageValueCensusWhere(s, d, pmod(col("doc_id"), lit(5)) =!= 4)
-          .persist()))
-    imageBatchProbe(s, d, corpusVals)
+    imageProbeOut(imageTier.batchProbe(s, d, imageTier.corpusIndex(s, d)))
   }
 
-  /** The q349 probe against a caller-supplied corpus value index —
-    * factored so the STREAMING-maintained census (q356) serves the
-    * same probe plan as the batch-built index, with q349's oracle
-    * proving both (the simhashBatchProbe discipline). */
-  private[graft] def imageBatchProbe(s: SparkSession, d: String,
-      corpusVals: BandedHamming.StatedIndex)
-      : org.apache.spark.sql.DataFrame = {
-    val batchVals = imageBatchIndex.getOrElseUpdate(s, d)(
-      imageScheme.indexed(
-        imageValueCensusWhere(s, d, pmod(col("doc_id"), lit(5)) === 4)
-          .localCheckpoint()))
-    imageScheme.pairsIndexed(batchVals, carry = Seq("n_docs"),
-      hMin = 0, rowsB = Some(corpusVals))
-      .select(col("ahash_hi_a").as("hi_batch"),
+  /** q349's output contract over an image batch probe — shared with
+    * q356, which probes the stream-maintained index instead. */
+  private[graft] def imageProbeOut(
+      probe: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    probe.select(col("ahash_hi_a").as("hi_batch"),
         col("ahash_lo_a").as("lo_batch"),
         col("ahash_hi_b").as("hi_corpus"),
         col("ahash_lo_b").as("lo_corpus"), col("hamming"),
         col("n_docs_a").as("n_docs_batch"),
         col("n_docs_b").as("n_docs_corpus"))
       .orderBy("hi_batch", "lo_batch", "hi_corpus", "lo_corpus")
-  }
 
   /** doc_id relation → aHash rows through the pooled decoder (the
     * streaming featurize half of the image census). */

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.GraftQuery
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -529,14 +529,23 @@ object Streams {
     * round-trips inside each batch. */
   def streamBatchServe(spark: SparkSession, sfDir: String,
       srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    drainServe(spark, sfDir, srcDir, maxFilesPerTrigger,
+      "graft_stream_serve", graft.operators.IvfPq.nProbe)
+
+  /** The one query-stream serve drain: each arriving micro-batch of
+    * query vectors is served at `probes` cells through the q303 plan
+    * and overwrites its batchId-keyed partial under `scratch`. */
+  private def drainServe(spark: SparkSession, sfDir: String,
+      srcDir: Option[String], maxFilesPerTrigger: Option[Int],
+      scratch: String, probes: Int): DataFrame = {
     import graft.operators.{IvfAnn, IvfPq}
     val emb = graft.sources.Tables.embeddings(spark, sfDir)
     val centroids = IvfAnn.fixedCentroids(emb, IvfAnn.fixedStride)
     val fullPath = IvfPq.codesSegment(spark, sfDir, "full",
       IvfAnn.assign(emb, centroids))
     val outDir = graft.operators.Formats.scratchDir(
-      "graft_stream_serve", srcDir.getOrElse(sfDir))
+      scratch, srcDir.getOrElse(sfDir))
     graft.operators.Formats.wipe(outDir)
     withStreamShufflePartitions(spark) {
       val stream = readEmbeddingsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
@@ -546,7 +555,8 @@ object Streams {
           if (!batch.isEmpty) {
             val queries = batch.toDF()
               .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-            IvfPq.batchServe(spark, Seq(fullPath), centroids, queries, emb)
+            IvfPq.batchServe(spark, Seq(fullPath), centroids, queries, emb,
+              probes = probes)
               .write.mode("overwrite").parquet(s"$outDir/batch=$bid")
           }
           ()
@@ -584,35 +594,10 @@ object Streams {
   def streamPlannedServe(spark: SparkSession, sfDir: String,
       srcDir: Option[String] = None,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    import graft.operators.{IvfAnn, IvfPq}
-    val p = IvfPq.nProbeForRecall(spark, sfDir, IvfPq.plannedTargetPct)
-    val emb = graft.sources.Tables.embeddings(spark, sfDir)
-    val centroids = IvfAnn.fixedCentroids(emb, IvfAnn.fixedStride)
-    val fullPath = IvfPq.codesSegment(spark, sfDir, "full",
-      IvfAnn.assign(emb, centroids))
-    val outDir = graft.operators.Formats.scratchDir(
-      "graft_stream_planned_serve", srcDir.getOrElse(sfDir))
-    graft.operators.Formats.wipe(outDir)
-    withStreamShufflePartitions(spark) {
-      val stream = readEmbeddingsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
-        .where(pmod(col("vec_id"), lit(IvfPq.batchQueryMod)) === 0)
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-          if (!batch.isEmpty) {
-            val queries = batch.toDF()
-              .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-            IvfPq.batchServe(spark, Seq(fullPath), centroids, queries, emb,
-              probes = p)
-              .write.mode("overwrite").parquet(s"$outDir/batch=$bid")
-          }
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.read.parquet(outDir)
-      .select("query_id", "rank", "vec_id", "exact_dist")
-      .orderBy("query_id", "rank")
+    import graft.operators.IvfPq
+    drainServe(spark, sfDir, srcDir, maxFilesPerTrigger,
+      "graft_stream_planned_serve",
+      IvfPq.nProbeForRecall(spark, sfDir, IvfPq.plannedTargetPct))
   }
 
   val qStreamPlannedServe: GraftQuery = GraftQuery(
@@ -773,65 +758,6 @@ object Streams {
     streamCompactionPolicy(s, d)
   }
 
-  /** THE value-census tier behind every corpus-index maintainer
-    * (simhash q350, image q355, audio q358, wide video q360): corpus
-    * documents arrive as micro-batches; `featurize` turns each batch's
-    * documents into fingerprint rows (synthesis + decode stay inside
-    * the partition — payloads never cross an exchange or land in the
-    * sink); [[CensusTier.partial]] groups them into the trigger's
-    * census partial, which OVERWRITES a batchId-keyed sink
-    * (replay-idempotent — a retried trigger rewrites, never
-    * double-counts); [[CensusTier.summed]] re-sums the partials. Counts
-    * add — every value census is a monoid — so the drained relation is
-    * the batch-built corpus index VERBATIM under any arrival slicing,
-    * proven per tier by the corpus-census oracle, and the sum at any
-    * trigger boundary is the census of the prefix corpus (StreamsSpec
-    * probes it after every trigger). `partialSchema` pins the read-back
-    * types so each tier's output schema matches its oracle exactly.
-    * Which arriving documents belong to the maintained corpus is the
-    * drain's concern (the [[fixtureCorpusFilter]] split), never a
-    * constant of the tier. */
-  private[graft] final case class CensusTier(
-      scratch: String,
-      groupCols: Seq[String],
-      partialSchema: String,
-      scheme: graft.operators.BandedHamming.BandScheme,
-      featurize: DataFrame => DataFrame) {
-
-    /** One trigger's census partial: featurize → group → n_partial. */
-    def partial(docs: DataFrame): DataFrame =
-      featurize(docs)
-        .groupBy(groupCols.map(col): _*)
-        .agg(count(lit(1)).as("n_partial"))
-
-    /** The census summed over every partial under `dir`. The explicit
-      * schema reads a drain that wrote no partial (every trigger
-      * filtered empty) as an empty census, not a missing path. */
-    def summed(spark: SparkSession, dir: String): DataFrame =
-      spark.read.schema(partialSchema).parquet(dir)
-        .groupBy(groupCols.map(col): _*)
-        .agg(sum("n_partial").as("n_docs"))
-  }
-
-  /** The incremental-dedup FIXTURES' batch/corpus split (q345/q349/
-    * q353/q354 and the streaming probes against their maintained
-    * indexes): doc_id % 5 == 4 is the arriving batch, everything else
-    * the maintained corpus. A fixture convention the document drain
-    * applies to every census tier — the tiers themselves are
-    * fixture-agnostic. */
-  private[graft] def fixtureCorpusFilter: Column =
-    pmod(col("doc_id"), lit(5)) =!= 4
-
-  /** The four census tiers, each pairing its featurize with the
-    * banding scheme its probes use. */
-  private[graft] val simhashCensusTier = CensusTier(
-    "graft_stream_simhash_census", Seq("simhash"),
-    "simhash BIGINT, n_partial BIGINT",
-    graft.operators.Dedup.simhashScheme,
-    b => b.select(org.apache.spark.sql.graftshim.SimHashMd5(
-      graft.functions.TextFunctions.distinctTokens(
-        lower(col("text")))).as("simhash")))
-
   /** STREAMING MAINTENANCE OF THE INCREMENTAL-DEDUP PROBE TARGET —
     * the q344 monoid discipline applied to q345's corpus simhash
     * value census: each arriving corpus micro-batch hashes only ITS
@@ -853,7 +779,7 @@ object Streams {
     * banded cross-corpus probe run against the census q350 keeps warm
     * under arrival, instead of the batch-built corpus index: the
     * arriving batch's values probe the drained partials through the
-    * SAME probe plan (graft.operators.Dedup.simhashBatchProbe), and
+    * SAME probe plan (the simhash tier's `batchProbe`), and
     * the oracle is q345's VERBATIM — the hash match proves the
     * maintained index and the batch index are interchangeable probe
     * targets. This is the full production posture: the corpus census
@@ -862,19 +788,10 @@ object Streams {
   val qStreamSimhashProbe: GraftQuery = GraftQuery(
     "q351_stream_simhash_probe",
     graft.operators.Dedup.qSimhashNearDupBatch.oracle.get) { (s, d) =>
-    graft.operators.Dedup.simhashBatchProbe(s, d,
-      streamMultiIndexes(s, d).simhash)
+    import graft.operators.Dedup.{simhashProbeOut, simhashTier}
+    simhashProbeOut(
+      simhashTier.batchProbe(s, d, streamMultiIndexes(s, d).simhash))
   }
-
-  /** The REAL-CODEC tier: each arriving corpus micro-batch synthesizes
-    * and decodes only ITS OWN PNG payloads through the executor-global
-    * decoder pool (constructions bounded by peak task concurrency, not
-    * trigger count). */
-  private[graft] val imageCensusTier = CensusTier(
-    "graft_stream_image_census", Seq("ahash_hi", "ahash_lo"),
-    "ahash_hi BIGINT, ahash_lo BIGINT, n_partial BIGINT",
-    graft.operators.Multimodal.imageScheme,
-    graft.operators.Multimodal.imageAHashesFromDocs)
 
   /** STREAMING MAINTENANCE OF THE IMAGE CORPUS INDEX — q350's monoid
     * discipline on the real-codec tier: the drained aHash census is
@@ -895,18 +812,9 @@ object Streams {
   val qStreamImageProbe: GraftQuery = GraftQuery(
     "q356_stream_image_probe",
     graft.operators.Multimodal.qImageNearDupBatch.oracle.get) { (s, d) =>
-    graft.operators.Multimodal.imageBatchProbe(s, d,
-      streamMultiIndexes(s, d).image)
+    import graft.operators.Multimodal.{imageProbeOut, imageTier}
+    imageProbeOut(imageTier.batchProbe(s, d, streamMultiIndexes(s, d).image))
   }
-
-  /** The audio tier behind q353's corpus index: WAV synthesis +
-    * real-codec decode per partition, one decoder per task disposed on
-    * completion. */
-  private[graft] val audioCensusTier = CensusTier(
-    "graft_stream_audio_census", Seq("fingerprint"),
-    "fingerprint BIGINT, n_partial BIGINT",
-    graft.operators.Multimodal.audioScheme,
-    graft.operators.Multimodal.audioFingerprintsFromDocs)
 
   val qStreamAudioCensus: GraftQuery = GraftQuery(
     "q358_stream_audio_census",
@@ -919,28 +827,15 @@ object Streams {
   val qStreamAudioProbe: GraftQuery = GraftQuery(
     "q359_stream_audio_probe",
     graft.operators.Multimodal.qAudioNearDupBatch.oracle.get) { (s, d) =>
-    graft.operators.Multimodal.audioBatchProbe(s, d,
-      streamMultiIndexes(s, d).audio)
+    import graft.operators.Multimodal.{audioProbeOut, audioTier}
+    audioProbeOut(audioTier.batchProbe(s, d, streamMultiIndexes(s, d).audio))
   }
-
-  /** The wide-video tier behind q354's corpus index; the census key
-    * carries the clip width (n_sampled pinned INTEGER so the drained
-    * schema matches the oracle's). */
-  private[graft] val videoWideCensusTier = CensusTier(
-    "graft_stream_videow_census",
-    graft.operators.Multimodal.videoWideCensusCols,
-    graft.operators.Multimodal.videoWideCensusCols.map {
-      case "n_sampled" => "n_sampled INT"
-      case c => s"$c BIGINT"
-    }.mkString(", ") + ", n_partial BIGINT",
-    graft.operators.Multimodal.videoWideScheme,
-    graft.operators.Multimodal.videoWideFromDocs)
 
   val qStreamVideoWideCensus: GraftQuery = GraftQuery(
     "q360_stream_videow_census",
     graft.operators.Multimodal.videoWideCorpusCensusSql) { (s, d) =>
     streamMultiIndexes(s, d).videoWide.rows
-      .orderBy(graft.operators.Multimodal.videoWideCensusCols.map(col): _*)
+      .orderBy(graft.operators.Multimodal.videoWideTier.groupCols.map(col): _*)
   }
 
   /** q354's probe against the stream-maintained wide-video index
@@ -948,8 +843,9 @@ object Streams {
   val qStreamVideoWideProbe: GraftQuery = GraftQuery(
     "q361_stream_videow_probe",
     graft.operators.Multimodal.qVideoNearDupWideBatch.oracle.get) { (s, d) =>
-    graft.operators.Multimodal.videoWideBatchProbe(
-      s, d, streamMultiIndexes(s, d).videoWide)
+    import graft.operators.Multimodal.{videoWideProbeOut, videoWideTier}
+    videoWideProbeOut(
+      videoWideTier.batchProbe(s, d, streamMultiIndexes(s, d).videoWide))
   }
 
   /** Runs a band-index drain over q94's corpus split; returns the lazy
@@ -1196,14 +1092,11 @@ object Streams {
       srcDir: Option[String],
       maxFilesPerTrigger: Option[Int]): DocIndexes = {
     val key = srcDir.getOrElse(sfDir)
-    val simDir = graft.operators.Formats.scratchDir(
-      simhashCensusTier.scratch + "_multi", key)
-    val imgDir = graft.operators.Formats.scratchDir(
-      imageCensusTier.scratch + "_multi", key)
-    val audDir = graft.operators.Formats.scratchDir(
-      audioCensusTier.scratch + "_multi", key)
-    val vidDir = graft.operators.Formats.scratchDir(
-      videoWideCensusTier.scratch + "_multi", key)
+    val tiers = Seq(graft.operators.Dedup.simhashTier,
+      graft.operators.Multimodal.imageTier, graft.operators.Multimodal.audioTier,
+      graft.operators.Multimodal.videoWideTier)
+    val tierDirs = tiers.map(t => graft.operators.Formats.scratchDir(
+      s"graft_stream_${t.name}_census_multi", key))
     val bandDir = graft.operators.Formats.scratchDir(
       "graft_stream_minhash_bands_multi", key)
     val bandCntDir = graft.operators.Formats.scratchDir(
@@ -1226,7 +1119,7 @@ object Streams {
       "graft_stream_curate_multi", key)
     val imgFeatDir = graft.operators.Formats.scratchDir(
       "graft_stream_imgfeat_multi", key)
-    val all = Seq(simDir, imgDir, audDir, vidDir, bandDir, bandCntDir,
+    val all = tierDirs ++ Seq(bandDir, bandCntDir,
       cmsDir, driftDir, kmvDir, psiDir, cdcDir, merkleDir, chunkDir,
       curateDir, imgFeatDir)
     all.foreach(graft.operators.Formats.wipe)
@@ -1241,11 +1134,8 @@ object Streams {
           val b = batch.toDF().persist()
           try {
             if (!b.isEmpty) {
-              val census = b.where(fixtureCorpusFilter)
-              Seq(simhashCensusTier -> simDir,
-                  imageCensusTier -> imgDir,
-                  audioCensusTier -> audDir,
-                  videoWideCensusTier -> vidDir).foreach { case (t, dir) =>
+              val census = b.where(graft.operators.ValueTier.fixtureCorpusFilter)
+              tiers.zip(tierDirs).foreach { case (t, dir) =>
                 t.partial(census)
                   .write.mode("overwrite").parquet(s"$dir/batch=$bid")
               }
@@ -1298,15 +1188,15 @@ object Streams {
         .start()
       try q.processAllAvailable() finally q.stop()
     }
-    def statedOf(dir: String, tier: CensusTier)
-        : graft.operators.BandedHamming.StatedIndex =
-      tier.scheme.indexed(tier.summed(spark, dir).localCheckpoint())
+    val Seq(simhash, image, audio, videoWide) = tiers.zip(tierDirs).map {
+      case (t, dir) => t.scheme.indexed(t.summed(spark, dir).localCheckpoint())
+    }
     val bandLog = readBandLog(spark, bandDir, bandCntDir)
     DocIndexes(
-      simhash = statedOf(simDir, simhashCensusTier),
-      image = statedOf(imgDir, imageCensusTier),
-      audio = statedOf(audDir, audioCensusTier),
-      videoWide = statedOf(vidDir, videoWideCensusTier),
+      simhash = simhash,
+      image = image,
+      audio = audio,
+      videoWide = videoWide,
       bands = graft.operators.Dedup.BandIndex(
         bandLog.rows.localCheckpoint(),
         bandLog.bucketCounts.localCheckpoint()),

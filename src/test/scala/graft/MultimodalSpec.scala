@@ -356,8 +356,10 @@ class MultimodalSpec extends SparkSpecBase {
 
   test("q336: WIDE banded candidates are complete, and the width fixes the one-sample entropy caveat") {
     // brute-force reference over the collected WIDE fingerprints
-    val fps = Multimodal.videoFingerprintsWide(
-      Multimodal.videoTable(spark, sf001)).collect()
+    import spark.implicits._
+    val fps = Multimodal.videoWideFromDocs(
+      graft.sources.Tables.documents(spark, sf001))
+      .as[Multimodal.VideoFpWideRow].collect()
     val vals = fps.groupBy(r => (r.n_sampled,
       List(r.f0_hi, r.f0_lo, r.f1_hi, r.f1_lo, r.f2_hi, r.f2_lo)))
       .map { case (k, v) => (k._1, k._2, v.size.toLong) }.toSeq

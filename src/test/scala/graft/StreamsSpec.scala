@@ -400,14 +400,20 @@ class StreamsSpec extends SparkSpecBase {
   test("q341: multi-trigger planner-driven serve equals q328's batch answer") {
     // 3 staged files + maxFilesPerTrigger=1 → the query log arrives
     // across several micro-batches, each served at the SAME planned
-    // nProbe (policy read once at service start)
-    val streamed = graft.streaming.Streams.streamPlannedServe(
-      spark, sf001, srcDir = Some(emb3), maxFilesPerTrigger = Some(1))
-      .collect().map(_.toSeq).toSeq
-    val batch = SparkEntry.queries("q328_planned_batch_serve")(spark, sf001)
-      .collect().map(_.toSeq).toSeq
-    assert(streamed === batch,
-      "per-trigger planned serving must equal the batch planned serve")
+    // nProbe (policy read once at service start); q314 serves the same
+    // arrivals through the same drain at the fixed nProbe and must
+    // equal q303
+    for ((drain, batchQuery) <- Seq(
+        (graft.streaming.Streams.streamPlannedServe _, "q328_planned_batch_serve"),
+        (graft.streaming.Streams.streamBatchServe _, "q303_ivfpq_batch_serve"))) {
+      val streamed = drain(spark, sf001, Some(emb3), Some(1))
+        .collect().map(_.toSeq).toSeq
+      val batch = SparkEntry.queries(batchQuery)(spark, sf001)
+        .collect().map(_.toSeq).toSeq
+      assert(streamed.nonEmpty, s"$batchQuery: the staged query log serves no query")
+      assert(streamed === batch,
+        s"per-trigger serving must equal the batch serve $batchQuery")
+    }
   }
 
   test("q344: multi-trigger census partials drain to q342's batch decision") {
@@ -442,7 +448,8 @@ class StreamsSpec extends SparkSpecBase {
       "drained census must equal the batch corpus index")
     // and the maintained index is an interchangeable probe target:
     // q345's probe against it equals q345 against the batch index
-    val probed = rows(graft.operators.Dedup.simhashBatchProbe(spark, sf001, streamed))
+    val probed = rows(graft.operators.Dedup.simhashProbeOut(
+      graft.operators.Dedup.simhashTier.batchProbe(spark, sf001, streamed)))
     val q345 = rows(SparkEntry.queries("q345_simhash_neardup_batch")(spark, sf001))
     assert(probed === q345,
       "probe against the maintained index must equal the batch probe")
@@ -465,7 +472,8 @@ class StreamsSpec extends SparkSpecBase {
       .orderBy("ahash_hi", "ahash_lo"))
     assert(streamedRows === batch,
       "drained image census must equal the batch corpus index")
-    val probed = rows(graft.operators.Multimodal.imageBatchProbe(spark, sf001, streamed))
+    val probed = rows(graft.operators.Multimodal.imageProbeOut(
+      graft.operators.Multimodal.imageTier.batchProbe(spark, sf001, streamed)))
     val q349 = rows(SparkEntry.queries("q349_image_neardup_batch")(spark, sf001))
     assert(probed === q349,
       "probe against the maintained image index must equal the batch probe")
@@ -481,18 +489,18 @@ class StreamsSpec extends SparkSpecBase {
       .groupBy("fingerprint").agg(count(lit(1)).as("n_docs"))
     assert(rows(audioStreamed.rows.orderBy("fingerprint")) ===
       rows(audioBatch.orderBy("fingerprint")))
-    assert(rows(graft.operators.Multimodal
-      .audioBatchProbe(spark, sf001, audioStreamed)) ===
+    assert(rows(graft.operators.Multimodal.audioProbeOut(graft.operators
+      .Multimodal.audioTier.batchProbe(spark, sf001, audioStreamed))) ===
       rows(SparkEntry.queries("q353_audio_neardup_batch")(spark, sf001)))
     // wide video
-    val cols = graft.operators.Multimodal.videoWideCensusCols
+    val cols = graft.operators.Multimodal.videoWideTier.groupCols
     val videoStreamed = docDrain._1.videoWide
     val videoBatch = graft.operators.Multimodal.videoWideFromDocs(corpusDocs)
       .groupBy(cols.map(col): _*).agg(count(lit(1)).as("n_docs"))
     assert(rows(videoStreamed.rows.orderBy(cols.map(col): _*)) ===
       rows(videoBatch.orderBy(cols.map(col): _*)))
-    assert(rows(graft.operators.Multimodal
-      .videoWideBatchProbe(spark, sf001, videoStreamed)) ===
+    assert(rows(graft.operators.Multimodal.videoWideProbeOut(graft.operators
+      .Multimodal.videoWideTier.batchProbe(spark, sf001, videoStreamed))) ===
       rows(SparkEntry.queries("q354_video_neardup_wide_batch")(spark, sf001)))
   }
 
@@ -904,21 +912,24 @@ class StreamsSpec extends SparkSpecBase {
     * partially-maintained census must be a serveable probe target:
     * probing it equals the batch probe over exactly the documents that
     * have arrived so far. The spec's own stream writes each trigger's
-    * partial through [[Streams.CensusTier.partial]] (the document
-    * drain's per-trigger write) and probes [[Streams.CensusTier.summed]]
-    * after every trigger; the reference census is built from scratch
-    * over the prefix doc ids through the SAME tier featurize. */
+    * partial through [[graft.operators.ValueTier.partial]] (the
+    * document drain's per-trigger write) and probes
+    * [[graft.operators.ValueTier.summed]] after every trigger through
+    * the tier's `batchProbe` and the family's output contract
+    * (`probeOut`); the reference census is built from scratch over the
+    * prefix doc ids through the SAME tier featurize. */
   private def assertPrefixProbeConsistency(
-      tier: Streams.CensusTier, nFiles: Int,
-      probe: (org.apache.spark.sql.SparkSession, String,
-        graft.operators.BandedHamming.StatedIndex) => DataFrame): Unit = {
+      tier: graft.operators.ValueTier, nFiles: Int,
+      probeOut: DataFrame => DataFrame): Unit = {
+    def probe(index: graft.operators.BandedHamming.StatedIndex): DataFrame =
+      probeOut(tier.batchProbe(spark, sf001, index))
     val src = staged(s"graft_prefix_${nFiles}_", Tables.documents(spark, sf001), nFiles)
     val partials = java.nio.file.Files.createTempDirectory("graft_prefix_census").toString
     val results = scala.collection.mutable.ArrayBuffer
       .empty[(Int, Seq[Seq[Any]], Seq[Seq[Any]])]
     var prefixIds = Seq.empty[Long]
     val q = Streams.readDocsStream(spark, sf001, Some(src), Some(1))
-      .where(Streams.fixtureCorpusFilter)
+      .where(graft.operators.ValueTier.fixtureCorpusFilter)
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
         if (!batch.isEmpty) {
@@ -929,7 +940,7 @@ class StreamsSpec extends SparkSpecBase {
           // the mid-stream serve: probe the partially-maintained census
           val maintained = tier.scheme.indexed(
             tier.summed(spark, partials).localCheckpoint())
-          val got = rows(probe(spark, sf001, maintained))
+          val got = rows(probe(maintained))
           // the batch reference over exactly the arrived documents
           val reference = tier.scheme.indexed(
             tier.featurize(Tables.documents(spark, sf001)
@@ -937,7 +948,7 @@ class StreamsSpec extends SparkSpecBase {
               .groupBy(tier.groupCols.map(col): _*)
               .agg(count(lit(1)).as("n_docs"))
               .localCheckpoint())
-          val want = rows(probe(spark, sf001, reference))
+          val want = rows(probe(reference))
           results += ((ids.size, got, want))
           org.apache.spark.sql.graftshim.Checkpoints.release(maintained.rows)
           org.apache.spark.sql.graftshim.Checkpoints.release(reference.rows)
@@ -957,16 +968,14 @@ class StreamsSpec extends SparkSpecBase {
 
   test("q351 prefix-serveability: the partially-maintained simhash census serves the probe at every trigger (3 slicings)") {
     for (nFiles <- Seq(2, 3, 5))
-      assertPrefixProbeConsistency(Streams.simhashCensusTier, nFiles,
-        graft.operators.Dedup.simhashBatchProbe)
+      assertPrefixProbeConsistency(graft.operators.Dedup.simhashTier, nFiles,
+        graft.operators.Dedup.simhashProbeOut)
   }
 
   test("q356/q359/q361 prefix-serveability: image, audio, and wide-video probes serve every prefix of their maintained censuses") {
-    assertPrefixProbeConsistency(Streams.imageCensusTier, 3,
-      graft.operators.Multimodal.imageBatchProbe)
-    assertPrefixProbeConsistency(Streams.audioCensusTier, 3,
-      graft.operators.Multimodal.audioBatchProbe)
-    assertPrefixProbeConsistency(Streams.videoWideCensusTier, 2,
-      graft.operators.Multimodal.videoWideBatchProbe)
+    import graft.operators.Multimodal._
+    assertPrefixProbeConsistency(imageTier, 3, imageProbeOut)
+    assertPrefixProbeConsistency(audioTier, 3, audioProbeOut)
+    assertPrefixProbeConsistency(videoWideTier, 2, videoWideProbeOut)
   }
 }
