@@ -72,7 +72,7 @@ object Compaction {
       d: String): Seq[String] = {
     val cents = IvfPq.baseCentroids(s, d)
     val delta = Tables.embeddings(s, d)
-      .where(pmod(col("vec_id"), lit(5)) === 4)
+      .where(IvfPq.isDeltaVec)
       .withColumn("__seg", segIdExpr)
     (0 until nSegs).map { j =>
       IvfPq.codesSegment(s, d, s"szt$j",

@@ -36,8 +36,10 @@ import org.apache.spark.sql.functions._
   */
 object HardNegatives {
 
-  /** One anchor per `anchorStride` vectors. */
-  val anchorStride = 50
+  /** One anchor per `anchorStride` vectors: the persisted centroid
+    * stride, so the embeddings drain samples anchors and centroids in
+    * one pass. */
+  val anchorStride = IvfAnn.fixedStride
 
   private val dim = 64
 

@@ -291,11 +291,12 @@ object IvfAnn {
   val refreshDenom = 5
 
   /** The bounded centroid-literal collect (the assignKeeping
-    * discipline) — shared by the batch policy and its streaming
-    * monitor. */
+    * discipline), in ascending cell id whatever the scan order of the
+    * table's files. */
   private[graft] def collectCents(c: DataFrame): Seq[(Long, Array[Float])] =
     c.select(col("cell").cast("long"), col("centroid"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+      .sortBy(_._1).toSeq
 
   /** The per-cell drift census over a row set: both assignments are
     * fused scan-stage expressions against the two bounded centroid
@@ -341,10 +342,14 @@ object IvfAnn {
     * plus an equal-stride sample of the arrival population (ids ≡
     * stride−1 (mod stride) are all q140 delta ids). */
   private[graft] def refitSample(emb: DataFrame): DataFrame =
-    emb.where(
-      pmod(col("vec_id"), lit(fixedStride)) === 0 ||
-        pmod(col("vec_id"), lit(fixedStride)) === fixedStride - 1)
+    emb.where(refitFilter)
       .select(col("vec_id").as("cell"), col("embedding").as("centroid"))
+
+  /** [[refitSample]]'s rows: `vec_id % fixedStride ∈ {0, fixedStride −
+    * 1}`. Its residue-0 rows are the persisted centroids. */
+  private[graft] def refitFilter: Column =
+    pmod(col("vec_id"), lit(fixedStride)) === 0 ||
+      pmod(col("vec_id"), lit(fixedStride)) === fixedStride - 1
 
   /** CENTROID REFRESH POLICY — the q342 compaction-policy discipline
     * applied to the trained coarse quantizer: q140/q147 accrete delta

@@ -295,19 +295,26 @@ object IvfPq {
     rerankCollected(s, d, cand)
   }
 
-  /** The base corpus (vec_id % 5 != 4 — the q130 batch convention)
-    * and its centroid set; shared by q140/q146/q147. */
+  /** The vector fixtures' base/delta split (the q130 batch
+    * convention): vec_id % 5 == 4 is the arriving delta, everything
+    * else the persisted base. The segment builds, the compaction
+    * census and the embeddings drains all apply it; the oracles spell
+    * it in SQL. */
+  private[graft] def isDeltaVec: org.apache.spark.sql.Column =
+    pmod(col("vec_id"), lit(5)) === 4
+
+  /** The base corpus and its centroid set; shared by q140/q146/q147. */
   private[graft] def baseCentroids(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     IvfAnn.fixedCentroids(
-      Tables.embeddings(s, d).where(pmod(col("vec_id"), lit(5)) =!= 4),
+      Tables.embeddings(s, d).where(!isDeltaVec),
       IvfAnn.fixedStride)
 
   /** Build (or reuse) the persisted BASE index segment. */
   private[graft] def baseSegment(s: org.apache.spark.sql.SparkSession,
       d: String): String =
     codesSegment(s, d, "base", IvfAnn.assign(
-      Tables.embeddings(s, d).where(pmod(col("vec_id"), lit(5)) =!= 4),
+      Tables.embeddings(s, d).where(!isDeltaVec),
       baseCentroids(s, d)))
 
   /** Build (or reuse) the q140 base+delta segment pair for `d` —
@@ -316,7 +323,7 @@ object IvfPq {
   private[graft] def baseDeltaSegments(s: org.apache.spark.sql.SparkSession,
       d: String): (org.apache.spark.sql.DataFrame, String, String) = {
     val centroids = baseCentroids(s, d)
-    val batch = Tables.embeddings(s, d).where(pmod(col("vec_id"), lit(5)) === 4)
+    val batch = Tables.embeddings(s, d).where(isDeltaVec)
     val basePath = baseSegment(s, d)
     val deltaPath = codesSegment(s, d, "delta", IvfAnn.assign(batch, centroids))
     (centroids, basePath, deltaPath)

@@ -68,6 +68,11 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
+  /** The embeddings table's schema, for readers that must declare it up
+    * front (the file stream) or that skip the footer-inference job (the
+    * embeddings drain's corpus pass). */
+  val embeddingsSchema = "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
+
   /** Register every table as a temp view so spark.sql(...) works. */
   def registerAll(spark: SparkSession, sfDir: String): Unit =
     all.foreach { n =>

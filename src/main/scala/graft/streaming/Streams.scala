@@ -453,7 +453,7 @@ object Streams {
     val dir = srcDir.getOrElse(
       stageAsStreamDir("graft_stream_emb", sfDir, "embeddings.parquet"))
     val reader = spark.readStream
-      .schema("vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")
+      .schema(graft.sources.Tables.embeddingsSchema)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     reader.parquet(dir)
   }
@@ -491,7 +491,7 @@ object Streams {
       graft.operators.Formats.wipe(deltaDir)
       withStreamShufflePartitions(spark) {
         val stream = readEmbeddingsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
-          .where(pmod(col("vec_id"), lit(5)) === 4)
+          .where(graft.operators.IvfPq.isDeltaVec)
         val q = stream.writeStream
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
             graft.operators.IvfPq.appendBatch(spark, sfDir, batch, deltaDir, bid)
@@ -645,26 +645,59 @@ object Streams {
       maxFilesPerTrigger: Option[Int]): DataFrame =
     graft.operators.Compaction.policyFromCensus(
       streamEmbPartials(spark, sfDir, srcDir, maxFilesPerTrigger)
-        .compactCensus)
+        .compactCensus.coalesce(1))
 
   /** Everything the ONE-PASS embeddings-ingest drain maintains: the
     * Gram moment partials (q298's), the hard-negative argmax partials
     * (q325's), the compaction-policy segment census (q344's, summed),
-    * and the centroid drift census (q357's, summed). */
+    * the centroid drift census (q357's, summed), and the row count of
+    * the corpus the centroid and anchor literals came from. Both
+    * censuses sit on one partition. */
   private[graft] final case class EmbIndexes(
       gramPartials: DataFrame,
       hardnegPartials: DataFrame,
       compactCensus: DataFrame,
-      driftCensus: DataFrame)
+      driftCensus: DataFrame,
+      corpusRows: Long)
+
+  private val gramPartialSchema =
+    "i INT, j INT, g DECIMAL(38,0), n BIGINT, si DECIMAL(38,0)"
+  private val hardnegPartialSchema =
+    "a_id BIGINT, a_label INT, neg_id BIGINT, cos DOUBLE"
+  private val compactPartialSchema = "seg_id INT, n_partial BIGINT"
+  private val driftPartialSchema =
+    "cell_old BIGINT, n_rows BIGINT, n_moved BIGINT"
 
   /** ONE embeddings-ingest drain for the four vector-fed maintainers
-    * — the doc multi-drain discipline on the embeddings source: the
-    * trigger's vectors are persisted once and every maintainer
-    * featurizes from that cached batch (Gram cells, anchor argmax,
-    * segment census on the delta split, drift double-assign against
-    * the two bounded centroid literals). Every serving query keeps its
-    * batch oracle; StreamsSpec pins each artifact against its batch
-    * definition under multi-trigger arrivals. */
+    * — the doc multi-drain discipline on the embeddings source.
+    *
+    * Before the stream, one pass over the `sfDir` corpus (read with its
+    * known schema) collects the re-fit stride sample with labels and
+    * observes the corpus row count. That sample yields the persisted
+    * centroids (its residue-0 rows), the re-fit centroids (all of it)
+    * and the hard-negative anchors (the residue-0 rows again, as a
+    * local relation, so no trigger rescans the corpus to broadcast
+    * them).
+    *
+    * Each trigger persists its vectors once and submits the four
+    * maintainers' partial writes together: Gram cells, anchor argmax,
+    * segment census on the delta split, and drift double-assign
+    * against the two bounded centroid literals. A file-source trigger
+    * with no stateful operator never delivers an empty batch, and an
+    * empty delta census partial sums to nothing, so no trigger probes
+    * for emptiness.
+    *
+    * After the stream, the four partial logs are read back with their
+    * known schemas and checkpointed together. The two censuses are
+    * summed on one partition (at most |segments| and |cells| rows —
+    * the cell count is already collected to the driver). The
+    * checkpoint's plan does not carry that partitioning, so the
+    * compaction and refresh decisions restate it (`coalesce(1)`,
+    * which moves no data) and window and sort without an exchange.
+    *
+    * Every serving query keeps its batch oracle; StreamsSpec pins each
+    * artifact against its batch definition under multi-trigger
+    * arrivals and gates the refresh's job count. */
   private val embPartialsMemo =
     new graft.spark.SessionMemo[(String, Option[String], Option[Int]),
       EmbIndexes]("streams.embPartials")(m => {
@@ -678,7 +711,8 @@ object Streams {
       maxFilesPerTrigger: Option[Int] = None): EmbIndexes =
     embPartialsMemo.getOrElseUpdate(
       spark, (sfDir, srcDir, maxFilesPerTrigger)) {
-      import graft.operators.{Compaction, HardNegatives, IvfAnn, Similarity}
+      import graft.operators.{Compaction, IvfAnn, IvfPq, Similarity}
+      import graft.spark.Parallel
       import org.apache.spark.sql.graftshim.TopKByScore
       val key = srcDir.getOrElse(sfDir)
       val gramDir = graft.operators.Formats.scratchDir(
@@ -693,24 +727,34 @@ object Streams {
       all.foreach(graft.operators.Formats.wipe)
       all.foreach(p =>
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p)))
-      val emb = graft.sources.Tables.embeddings(spark, sfDir)
-      val anchors = emb
-        .where(pmod(col("vec_id"), lit(HardNegatives.anchorStride)) === 0)
-        .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"),
-          col("label").as("a_label"))
-      val pc = IvfAnn.collectCents(
-        IvfAnn.fixedCentroids(emb, IvfAnn.fixedStride))
-      val rc = IvfAnn.collectCents(IvfAnn.refitSample(emb))
+      val corpus = org.apache.spark.sql.Observation()
+      val sample = spark.read.schema(graft.sources.Tables.embeddingsSchema)
+        .parquet(s"$sfDir/embeddings.parquet")
+        .observe(corpus, count(lit(1)).as("rows"))
+        .where(IvfAnn.refitFilter)
+        .select("vec_id", "embedding", "label")
+        .collect().toSeq
+      val corpusRows = corpus.get("rows").asInstanceOf[Long]
+      val persisted = sample.filter(r =>
+        Math.floorMod(r.getLong(0), IvfAnn.fixedStride.toLong) == 0)
+      def cents(rows: Seq[org.apache.spark.sql.Row]) =
+        rows.map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+      val pc = cents(persisted)
+      val rc = cents(sample)
+      val anchors = spark.createDataFrame(
+        java.util.Arrays.asList(persisted: _*),
+        org.apache.spark.sql.types.StructType.fromDDL(
+          "a_id BIGINT, a_emb ARRAY<FLOAT>, a_label INT"))
       withStreamShufflePartitions(spark) {
         val stream = readEmbeddingsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
         val q = stream.writeStream
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
             val b = batch.toDF().persist()
             try {
-              if (!b.isEmpty) {
-                graft.operators.Pca.gramPartial(b)
-                  .write.mode("append").parquet(gramDir)
-                b.join(broadcast(anchors), col("label") =!= col("a_label"))
+              Parallel.all(Seq(
+                () => graft.operators.Pca.gramPartial(b)
+                  .write.mode("append").parquet(gramDir),
+                () => b.join(broadcast(anchors), col("label") =!= col("a_label"))
                   .select(col("a_id"), col("a_label"),
                     col("vec_id").as("neg_id"),
                     Similarity.cosine(col("a_emb"), col("embedding")).as("cos"))
@@ -719,37 +763,32 @@ object Streams {
                   .select(col("a_id"), col("a_label"),
                     element_at(col("t"), 1).getField("id").as("neg_id"),
                     element_at(col("t"), 1).getField("score").as("cos"))
-                  .write.mode("append").parquet(hnDir)
-                val delta = b.where(pmod(col("vec_id"), lit(5)) === 4)
-                if (!delta.isEmpty) {
-                  delta
-                    .withColumn("seg_id", Compaction.segIdExpr)
-                    .groupBy("seg_id").agg(count(lit(1)).as("n_partial"))
-                    .write.mode("overwrite").parquet(s"$cmpDir/batch=$bid")
-                }
-                IvfAnn.driftCensusPartial(b, pc, rc)
-                  .write.mode("overwrite").parquet(s"$drfDir/batch=$bid")
-              }
+                  .write.mode("append").parquet(hnDir),
+                () => b.where(IvfPq.isDeltaVec)
+                  .withColumn("seg_id", Compaction.segIdExpr)
+                  .groupBy("seg_id").agg(count(lit(1)).as("n_partial"))
+                  .write.mode("overwrite").parquet(s"$cmpDir/batch=$bid"),
+                () => IvfAnn.driftCensusPartial(b, pc, rc)
+                  .write.mode("overwrite").parquet(s"$drfDir/batch=$bid")))
             } finally { b.unpersist(); () }
             ()
           }
           .start()
         try q.processAllAvailable() finally q.stop()
       }
-      EmbIndexes(
-        gramPartials = spark.read.parquet(gramDir).localCheckpoint(),
-        hardnegPartials = spark.read
-          .schema("a_id BIGINT, a_label INT, neg_id BIGINT, cos DOUBLE")
-          .parquet(hnDir).localCheckpoint(),
-        compactCensus = spark.read.parquet(cmpDir)
+      def partials(schema: String, dir: String) =
+        spark.read.schema(schema).parquet(dir)
+      val Seq(gram, hardneg, compact, drift) = Parallel.all(Seq(
+        () => partials(gramPartialSchema, gramDir).localCheckpoint(),
+        () => partials(hardnegPartialSchema, hnDir).localCheckpoint(),
+        () => partials(compactPartialSchema, cmpDir).coalesce(1)
           .groupBy("seg_id").agg(sum("n_partial").as("n_rows"))
           .localCheckpoint(),
-        driftCensus = spark.read
-          .schema("cell_old BIGINT, n_rows BIGINT, n_moved BIGINT")
-          .parquet(drfDir)
+        () => partials(driftPartialSchema, drfDir).coalesce(1)
           .groupBy("cell_old")
           .agg(sum("n_rows").as("n_rows"), sum("n_moved").as("n_moved"))
-          .localCheckpoint())
+          .localCheckpoint()))
+      EmbIndexes(gram, hardneg, compact, drift, corpusRows)
     }
 
   val qStreamCompactionPolicy: GraftQuery = GraftQuery(
@@ -1293,17 +1332,17 @@ object Streams {
   private def drainRefreshPolicy(spark: SparkSession, sfDir: String,
       srcDir: Option[String],
       maxFilesPerTrigger: Option[Int]): DataFrame = {
-    val census = streamEmbPartials(spark, sfDir, srcDir, maxFilesPerTrigger)
-      .driftCensus
+    val drained = streamEmbPartials(spark, sfDir, srcDir, maxFilesPerTrigger)
+    val census = drained.driftCensus.coalesce(1)
     // the centroid literals (persisted + re-fit) derive from the sfDir
     // embeddings; a srcDir that does not RE-STAGE that same corpus
     // would drift-census one population against another's centroids —
     // silently. Structural check: the drained census must cover
-    // exactly the corpus row count (one tiny aggregate over the
-    // partials, paid once per drain).
+    // exactly the corpus row count the drain observed while sampling
+    // those literals (one tiny aggregate over the summed census).
     val sRow = census.agg(sum("n_rows")).head
     val streamedRows = if (sRow.isNullAt(0)) 0L else sRow.getLong(0)
-    val corpusRows = graft.sources.Tables.embeddings(spark, sfDir).count()
+    val corpusRows = drained.corpusRows
     require(streamedRows == corpusRows,
       s"drift census covered $streamedRows vectors but the centroid " +
         s"corpus ($sfDir embeddings) has $corpusRows — srcDir must " +

@@ -20,7 +20,7 @@ class CompactionSpec extends SparkSpecBase {
       s"policy must mix fold and keep: ${policy.mkString(", ")}")
     // census conservation: segment rows re-sum to the delta population
     val deltaN = Tables.embeddings(spark, sf001)
-      .where(pmod(col("vec_id"), lit(5)) === 4).count()
+      .where(IvfPq.isDeltaVec).count()
     assert(policy.map(_.getLong(1)).sum == deltaN)
     // tier arithmetic: every tier with >= minThreshold segments folds,
     // every other keeps (the rule, re-checked against the output)

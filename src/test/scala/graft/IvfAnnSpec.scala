@@ -353,6 +353,17 @@ class IvfAnnSpec extends SparkSpecBase {
         "on the drifted corpus")
   }
 
+  test("q352: an embeddings table of several files decides as the one-file table does") {
+    // three files interleave the ids, so the centroid sample's scan
+    // order is not ascending
+    val dir = java.nio.file.Files.createTempDirectory("graft_sf_emb3").toString
+    graft.sources.Tables.embeddings(spark, sf001).repartition(3)
+      .write.parquet(s"$dir/embeddings.parquet")
+    val q352 = SparkEntry.queries("q352_centroid_refresh_policy")
+    def rows(d: String) = q352(spark, d).collect().map(_.toSeq).toSeq
+    assert(rows(dir) === rows(sf001))
+  }
+
   test("refresh probe smoke: planted drift trips the decision and the refresh pays in probed rows") {
     // small-target run of the bench A/B so a probe regression fails
     // here, not silently inside a 10-minute bench stage

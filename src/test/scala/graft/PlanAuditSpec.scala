@@ -68,7 +68,6 @@ class PlanAuditSpec extends SparkSpecBase {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import graft.operators.{IvfAnn, IvfPq}
     import graft.sources.Tables
-    import org.apache.spark.sql.functions.{col, lit, pmod}
     // materialize both index layouts (memoized across the suite), then
     // audit the CANDIDATE stage's plan — the stage the partitioned
     // layout exists to change. (The catalog queries collect the
@@ -77,8 +76,8 @@ class PlanAuditSpec extends SparkSpecBase {
     SparkEntry.queries("q139_ivfpq_partitioned")(spark, sf001).count()
     SparkEntry.queries("q140_ivfpq_incremental")(spark, sf001).count()
     val emb = Tables.embeddings(spark, sf001)
-    val base = emb.where(pmod(col("vec_id"), lit(5)) =!= 4)
-    val batch = emb.where(pmod(col("vec_id"), lit(5)) === 4)
+    val base = emb.where(!IvfPq.isDeltaVec)
+    val batch = emb.where(IvfPq.isDeltaVec)
     val centroids = IvfAnn.fixedCentroids(emb, IvfAnn.fixedStride)
     val probes = IvfPq.probeCells(centroids)
     val full = IvfPq.codesSegment(spark, sf001, "full", IvfAnn.assign(emb, centroids))

@@ -514,6 +514,32 @@ class StreamsSpec extends SparkSpecBase {
       "streamed drift maintenance must reach the batch refresh decision")
   }
 
+  test("embeddings refresh: both drained policies over a fresh one-file staging run in at most 24 Spark jobs") {
+    // the benchmark's refresh op: one arrival file, one trigger, then
+    // both decisions (one corpus pass before the stream, the four
+    // maintainers' writes per trigger, the read-backs and decisions
+    // after it)
+    val dir = staged("graft_emb1", Tables.embeddings(spark, sf001), nFiles = 1)
+    val (_, jobs) = org.apache.spark.sql.graftshim.ListenerSync
+      .countJobs(spark.sparkContext) {
+        Streams.streamCompactionPolicy(spark, sf001, Some(dir))
+        Streams.streamRefreshPolicy(spark, sf001, Some(dir))
+      }
+    info(s"refresh jobs: $jobs")
+    assert(jobs <= 24, s"the embeddings refresh launched $jobs Spark jobs")
+  }
+
+  test("q357: a srcDir that does not re-stage the centroid corpus fails the coverage guard, naming both counts") {
+    val emb = Tables.embeddings(spark, sf001)
+    val base = emb.where(!graft.operators.IvfPq.isDeltaVec)
+    val dir = staged("graft_emb_base", base, nFiles = 1)
+    val (streamed, corpus) = (base.count(), emb.count())
+    val e = intercept[IllegalArgumentException](
+      Streams.streamRefreshPolicy(spark, sf001, Some(dir)))
+    assert(e.getMessage.contains(s"covered $streamed vectors") &&
+      e.getMessage.contains(s"has $corpus"), e.getMessage)
+  }
+
   test("q147 replay: re-delivered micro-batch is idempotent (at-least-once recovery)") {
     // drain the single-staging ingest, then simulate the recovery path:
     // foreachBatch re-delivers the last checkpointed batch
