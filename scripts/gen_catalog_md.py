@@ -22,7 +22,7 @@ def definition_sites():
     Definitions live where GraftQuery("name", ...) / noOracle("name")
     is constructed: the name literal sits on the constructor's line or
     opens the line right after it. The same string literals also
-    appear at call sites (ExplainAudit, probes, dev tools), so only
+    appear at call sites (specs, probes, dev tools), so only
     constructor sites count; a catalog name with no constructor site
     maps to "?" and fails the run. Files are walked in sorted order."""
     constructor = re.compile(r'(GraftQuery|noOracle)\(\s*$')

@@ -142,7 +142,7 @@ object Apss {
       d: String): (DataFrame, DataFrame) =
     corpusPrefixIndex.getOrElseUpdate(spark, d)({
       val toksC = Dedup.indexedShingleSets(spark, d)
-        .where(pmod(col("doc_id"), lit(5)) =!= 4)
+        .where(ValueTier.fixtureCorpusFilter)
       val exC = toksC.select(col("doc_id"), size(col("toks")).as("m"),
         explode(col("toks")).as("sh"))
       val dfreq = exC.groupBy("sh").agg(count(lit(1)).as("df")).persist()
@@ -215,7 +215,7 @@ object Apss {
        |ORDER BY doc_batch, doc_corpus""".stripMargin) { (s, d) =>
     val toks = Dedup.indexedShingleSets(s, d)
     val (dfreq, preC) = corpusPrefix(s, d)
-    val exB = toks.where(pmod(col("doc_id"), lit(5)) === 4)
+    val exB = toks.where(!ValueTier.fixtureCorpusFilter)
       .select(col("doc_id"), size(col("toks")).as("m"),
         explode(col("toks")).as("sh"))
     val preB = exB.join(dfreq, Seq("sh"), "left")

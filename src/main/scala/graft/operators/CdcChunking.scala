@@ -161,7 +161,7 @@ object CdcChunking {
       d: String): DataFrame =
     corpusChunkIndex.getOrElseUpdate(s, d)(
       cdcChunks(Tables.documents(s, d)
-        .where(pmod(col("doc_id"), lit(5)) =!= 4))
+        .where(ValueTier.fixtureCorpusFilter))
         .select("chunk_md5").distinct().persist())
 
   /** CDC BATCH-vs-CORPUS — the ingest-time boilerplate detector: each
@@ -195,7 +195,7 @@ object CdcChunking {
        |GROUP BY doc_id
        |ORDER BY doc_id""".stripMargin) { (s, d) =>
     val batch = cdcChunks(Tables.documents(s, d)
-      .where(pmod(col("doc_id"), lit(5)) === 4))
+      .where(!ValueTier.fixtureCorpusFilter))
     batch
       .join(corpusChunkHashes(s, d).withColumn("hit", lit(1L)),
         Seq("chunk_md5"), "left")

@@ -689,6 +689,9 @@ object IvfPq {
     val nQ = queryCountHint.getOrElse(
       queries.limit(math.min(maxBroadcastQueries,
         Int.MaxValue.toLong - 1).toInt + 1).count())
+    // a batch with no query (a streamed trigger its query filter left
+    // empty) probes no cell and serves no row
+    if (nQ == 0) return (Seq.empty[(Long, Long)].toDF("query_id", "vec_id"), 0L)
     val useBroadcast = nQ <= maxBroadcastQueries
     val budget =
       if (useBroadcast) broadcastBudgetBytes(maxBroadcastQueries, probes)

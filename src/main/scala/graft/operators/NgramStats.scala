@@ -298,7 +298,7 @@ object NgramStats {
     firstSeenIdx.getOrElseUpdate(spark, sfDir) {
       firstSeenBuilds.incrementAndGet()
       gramStream(indexedDocToks(spark, sfDir)
-          .where(pmod(col("doc_id"), lit(5)) =!= 4))
+          .where(ValueTier.fixtureCorpusFilter))
         .groupBy("g").agg(min("doc_id").as("first_corpus"))
         .persist()
     }
@@ -332,7 +332,7 @@ object NgramStats {
        |GROUP BY doc_id
        |ORDER BY doc_id""".stripMargin) { (s, d) =>
     val bg = gramStream(indexedDocToks(s, d)
-      .where(pmod(col("doc_id"), lit(5)) === 4))
+      .where(!ValueTier.fixtureCorpusFilter))
     val batchFirst = bg.groupBy("g").agg(min("doc_id").as("first_batch"))
     // least() skips NULLs: a gram unseen by the corpus keeps its batch min
     val globalFirst = batchFirst

@@ -30,9 +30,10 @@ import org.apache.spark.sql.graftshim.Checkpoints
   *     0..hMax (an exact value hit is the strongest admission signal) —
   *     the corpus is never re-featurized or re-paired. The corpus index
   *     is a parameter, so the stream-maintained census (the document
-  *     multi-drain's `partial`/`summed`) and the batch-built
+  *     multi-drain's `partial`/`sumPartials`) and the batch-built
   *     `corpusIndex` serve the same probe plan;
-  *   - `partial`/`summed`: the streaming census. A drain writes each
+  *   - `partial`/`sumPartials`: the streaming census (`summed` reads a
+  *     partial directory into `sumPartials`). A drain writes each
   *     trigger's partial to a batchId-keyed sink it OVERWRITES (a
   *     retried trigger rewrites, never double-counts). Counts add —
   *     every value census is a monoid — so the summed partials are the
@@ -141,19 +142,24 @@ final case class ValueTier(
       .groupBy(groupCols.map(col): _*)
       .agg(count(lit(1)).as("n_partial"))
 
+  /** The census summed over `partials`, a relation of partial rows. */
+  def sumPartials(partials: DataFrame): DataFrame =
+    partials.groupBy(groupCols.map(col): _*)
+      .agg(sum("n_partial").as("n_docs"))
+
   /** The census summed over every partial under `dir`. The explicit
     * schema reads a drain that wrote no partial (every trigger filtered
     * empty) as an empty census, not a missing path. */
   def summed(spark: SparkSession, dir: String): DataFrame =
-    spark.read.schema(partialSchema).parquet(dir)
-      .groupBy(groupCols.map(col): _*)
-      .agg(sum("n_partial").as("n_docs"))
+    sumPartials(spark.read.schema(partialSchema).parquet(dir))
 }
 
 object ValueTier {
   /** The incremental-dedup fixtures' batch/corpus split: doc_id % 5 == 4
     * is the arriving batch, everything else the maintained corpus. The
-    * batch probes and the document drain both apply it. */
+    * batch probes, the document drain's curation gate and the
+    * batch-vs-corpus operators (APSS, n-gram first-seen, CDC chunk
+    * hits) all apply it; each oracle spells it in its SQL. */
   private[graft] def fixtureCorpusFilter: Column =
     pmod(col("doc_id"), lit(5)) =!= 4
 

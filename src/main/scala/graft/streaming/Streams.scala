@@ -20,7 +20,11 @@ import org.apache.spark.sql.types._
   */
 object Streams {
 
-  /** Stateful operators allocate one state store per shuffle partition
+  /** THE stream lifecycle, shared by every stream in this object: set
+    * the stream shuffle partitions, start the query, drain it with
+    * processAllAvailable() and stop it.
+    *
+    * Stateful operators allocate one state store per shuffle partition
     * per micro-batch; at this input volume 8 partitions carry the state
     * comfortably and cut per-batch fixed cost 4x vs the batch-tuned 32.
     * (At production volume this knob is sized to state bytes per
@@ -29,35 +33,129 @@ object Streams {
     * conf is session-global — a concurrent query on the same session
     * would see it; safe under the single-threaded driver harness, use
     * spark.newSession() per stream in a multi-tenant driver. */
-  private def withStreamShufflePartitions[T](spark: SparkSession)(f: => T): T = {
+  private def withStreamShufflePartitions(spark: SparkSession)(
+      start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     spark.conf.set(key, "8")
-    try f finally spark.conf.set(key, prev)
+    try {
+      val q = start
+      try q.processAllAvailable() finally q.stop()
+    } finally spark.conf.set(key, prev)
   }
+
+  /** Drains `stream` into the memory table `name` in output `mode` and
+    * returns the table. */
+  private def drainToMemory(spark: SparkSession, name: String, mode: String)(
+      stream: => DataFrame): DataFrame = {
+    withStreamShufflePartitions(spark)(stream.writeStream.outputMode(mode)
+      .format("memory").queryName(name).start())
+    spark.table(name)
+  }
+
+  /** Drains `stream`, handing each trigger's batch and batch id to `f`. */
+  private def drainEach(spark: SparkSession, stream: DataFrame)(
+      f: (DataFrame, Long) => Unit): Unit =
+    withStreamShufflePartitions(spark)(stream.writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
+        f(batch.toDF(), bid)
+      }
+      .start())
+
+  /** One partial log of a drain, declared as data: the scratch-directory
+    * stem (keyed by the staging dir), the schema the log is read back
+    * with, the partial each trigger writes from its persisted batch and
+    * batch id, and the fold that turns the read-back log into the
+    * maintained artifact. `derived` is a log computed from THIS log's
+    * just-written trigger partial (read back with this log's schema),
+    * so the two can never disagree. */
+  private final case class PartialLog(
+      scratch: String,
+      schema: String,
+      partial: (DataFrame, Long) => DataFrame,
+      fold: DataFrame => DataFrame = identity,
+      derived: Option[PartialLog] = None)
+
+  private def withDerived(logs: Seq[PartialLog]): Seq[PartialLog] =
+    logs.flatMap(l => l +: l.derived.toSeq)
+
+  /** `dir` read with `schema` (no schema-inference job) and projected to
+    * its declared columns, dropping the `batch` partition column. */
+  private def readLog(spark: SparkSession, schema: String, dir: String): DataFrame = {
+    val declared = StructType.fromDDL(schema)
+    spark.read.schema(declared).parquet(dir)
+      .select(declared.fieldNames.toSeq.map(col): _*)
+  }
+
+  /** THE partial-log drain, up to the read-back. Each log's scratch dir
+    * (a derived log right after its parent) is wiped and created, so a
+    * log no trigger wrote reads back empty, not as a missing path. Each
+    * trigger materializes its batch once (one local checkpoint) and
+    * submits every log's partial
+    * together ([[graft.spark.Parallel.all]]), each overwriting
+    * `<dir>/batch=<bid>`: a replayed trigger rewrites its partial,
+    * never duplicates it. A file-source trigger with no stateful
+    * operator never delivers an empty batch, and a partial over a batch
+    * that a filter leaves empty writes an empty partial, so no trigger
+    * probes for emptiness. Returns the dirs in [[withDerived]] order. */
+  private def drainLogs(spark: SparkSession, key: String, stream: DataFrame,
+      logs: Seq[PartialLog]): Seq[String] = {
+    def dir(l: PartialLog) = graft.operators.Formats.scratchDir(l.scratch, key)
+    val dirs = withDerived(logs).map(dir)
+    dirs.foreach { d =>
+      graft.operators.Formats.wipe(d)
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
+    }
+    def write(l: PartialLog, partial: DataFrame, bid: Long): Unit = {
+      val path = s"${dir(l)}/batch=$bid"
+      partial.write.mode("overwrite").parquet(path)
+      l.derived.foreach(d =>
+        write(d, d.partial(readLog(spark, l.schema, path), bid), bid))
+    }
+    drainEach(spark, stream) { (batch, bid) =>
+      // materialized by one job before the partials are submitted: a
+      // persisted batch that no job had materialized yet would cost
+      // every concurrent adaptive partial its own cache-stage job
+      val b = batch.localCheckpoint()
+      try graft.spark.Parallel.all(
+        logs.map(l => () => write(l, l.partial(b, bid), bid)))
+      finally org.apache.spark.sql.graftshim.Checkpoints.release(b)
+      ()
+    }
+    dirs
+  }
+
+  /** Every log under `dirs` read back with its declared schema, folded
+    * and checkpointed, all together. The checkpoints decouple the
+    * artifacts from the scratch dirs, which a later drain of the same
+    * key wipes and rewrites. */
+  private def checkpointLogs(spark: SparkSession, logs: Seq[PartialLog],
+      dirs: Seq[String]): Seq[DataFrame] =
+    graft.spark.Parallel.all(withDerived(logs).zip(dirs).map { case (l, d) =>
+      () => l.fold(readLog(spark, l.schema, d)).localCheckpoint()
+    })
+
+  /** [[drainLogs]] then [[checkpointLogs]]: one artifact per log, in
+    * [[withDerived]] order. */
+  private def drainPartialLogs(spark: SparkSession, key: String,
+      stream: DataFrame, logs: Seq[PartialLog]): Seq[DataFrame] =
+    checkpointLogs(spark, logs, drainLogs(spark, key, stream, logs))
 
   // ts arrives as nanos-as-long (legacy read) OR µs TIMESTAMP_NTZ
   // depending on the testdata generation; the streaming source must
-  // declare a schema up front, so readEventsStream probes the file's
+  // declare a schema up front, so readEventArrivals probes the file's
   // batch-read schema and normalizes via Tables.normalizeEventsTs.
 
   /** Hourly tumbling-window counts per event type, executed as a real
     * streaming query over the events parquet and returned as a batch
     * DataFrame once all available input is processed. */
   def hourlyCounts(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "graft_stream_hourly"
-    withStreamShufflePartitions(spark) {
-      val stream = readEventsStream(spark, sfDir)
-      val agg = stream
+    drainToMemory(spark, "graft_stream_hourly", "complete")(
+      readEventsStream(spark, sfDir)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour").as("win"), col("event_type"))
         .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(14,2)")).cast("double").as("sum_value"))
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name)
+          sum(col("value").cast("decimal(14,2)")).cast("double").as("sum_value")))
       .select(col("win.start").as("hour_start"), col("event_type"),
         col("n"), col("sum_value"))
       .orderBy("hour_start", "event_type")
@@ -81,18 +179,12 @@ object Streams {
     * one entry per distinct key (bounded by watermark in production
     * via dropDuplicatesWithinWatermark). Key set is deterministic even
     * though WHICH row survives isn't — so the query emits keys only. */
-  def streamDedupKeys(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "graft_stream_dedup"
-    withStreamShufflePartitions(spark) {
-      val stream = readEventsStream(spark, sfDir)
-      val q = stream
+  def streamDedupKeys(spark: SparkSession, sfDir: String): DataFrame =
+    drainToMemory(spark, "graft_stream_dedup", "append")(
+      readEventsStream(spark, sfDir)
         .select(col("user_id"), col("event_type"))
-        .dropDuplicates("user_id", "event_type")
-        .writeStream.outputMode("append").format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name).orderBy("user_id", "event_type")
-  }
+        .dropDuplicates("user_id", "event_type"))
+      .orderBy("user_id", "event_type")
 
   /** BOUNDED-STATE streaming dedup — the production form: duplicates
     * arriving within the watermark delay are dropped and state older
@@ -105,19 +197,14 @@ object Streams {
     * delivers one micro-batch) and the contract a production deployer
     * sizes the delay for; the multi-batch eviction/re-emission
     * semantics are pinned by StreamsSpec. */
-  def streamDedupWithinWatermarkKeys(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "graft_stream_wm_dedup"
-    withStreamShufflePartitions(spark) {
-      val q = readEventsStream(spark, sfDir)
+  def streamDedupWithinWatermarkKeys(spark: SparkSession, sfDir: String): DataFrame =
+    drainToMemory(spark, "graft_stream_wm_dedup", "append")(
+      readEventsStream(spark, sfDir)
         .select(col("user_id"), col("event_type"), col("ts"))
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
-        .select("user_id", "event_type")
-        .writeStream.outputMode("append").format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name).orderBy("user_id", "event_type")
-  }
+        .select("user_id", "event_type"))
+      .orderBy("user_id", "event_type")
 
   /** Stateful sessionization with flatMapGroupsWithState: per-user
     * event-time gap > 1h starts a new session (the streaming form of
@@ -126,7 +213,6 @@ object Streams {
   def sessionCounts(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val name = "graft_stream_sessions"
     val stream = readEventsStream(spark, sfDir)
       .select(col("user_id"), unix_timestamp(col("ts")).as("ts_sec"))
       .as[(Long, Long)]
@@ -143,17 +229,14 @@ object Streams {
       state.update((last, sessions, events))
       Iterator.single((userId, sessions, events))
     }
-    withStreamShufflePartitions(spark) {
-      val q = stream.groupByKey(_._1)
+    val sessions = drainToMemory(spark, "graft_stream_sessions", "update")(
+      stream.groupByKey(_._1)
         .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(update)
-        .toDF("user_id", "n_sessions", "n_events")
-        .writeStream.outputMode("update").format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
+        .toDF("user_id", "n_sessions", "n_events"))
     // keep the last update per user (multi-batch safety), sorted
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("n_events").desc)
-    spark.table(name)
+    sessions
       .withColumn("rn", org.apache.spark.sql.functions.row_number().over(w))
       .where(col("rn") === 1).drop("rn")
       .orderBy("user_id")
@@ -182,46 +265,46 @@ object Streams {
     streamDir.toString
   }
 
-  private def readEventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val streamDir = stageAsStreamDir("graft_stream", sfDir, "events.parquet")
-    // footer-only probe (no data read) for the generation's ts type
-    val fileSchema = spark.read.parquet(streamDir).schema
-    graft.sources.Tables.normalizeEventsTs(
-      spark.readStream.schema(fileSchema).parquet(streamDir))
+  /** `table`'s arrivals as a file stream: the staged copy `srcDir`
+    * (possibly re-chunked for multi-trigger runs) or else the table's
+    * symlink-staged file, read `maxFilesPerTrigger` files at a time with
+    * the declared `schema`, or else with the files' own (a footer-only
+    * probe, no data read). */
+  private def readArrivals(spark: SparkSession, sfDir: String, table: String,
+      prefix: String, srcDir: Option[String], maxFilesPerTrigger: Option[Int],
+      schema: Option[String] = None): DataFrame = {
+    val dir = srcDir.getOrElse(stageAsStreamDir(prefix, sfDir, s"$table.parquet"))
+    val reader = spark.readStream.schema(
+      schema.fold(spark.read.parquet(dir).schema)(StructType.fromDDL))
+    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
+    reader.parquet(dir)
   }
 
-  /** The events arrivals: the symlink-staged table, or a staged copy
-    * (`srcDir`, already µs ts, possibly re-chunked for multi-trigger
-    * runs) read `maxFilesPerTrigger` files at a time. */
+  private def readEventsStream(spark: SparkSession, sfDir: String): DataFrame =
+    readEventArrivals(spark, sfDir, None, None)
+
+  /** The events arrivals with ts normalized to µs TimestampType (the
+    * probed file schema carries the generation's ts type). */
   private def readEventArrivals(spark: SparkSession, sfDir: String,
-      srcDir: Option[String], maxFilesPerTrigger: Option[Int]): DataFrame =
-    srcDir match {
-      case Some(dir) =>
-        val fileSchema = spark.read.parquet(dir).schema
-        val reader = spark.readStream.schema(fileSchema)
-        maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-        graft.sources.Tables.normalizeEventsTs(reader.parquet(dir))
-      case None => readEventsStream(spark, sfDir)
-    }
+      srcDir: Option[String], maxFilesPerTrigger: Option[Int]): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.sources.Tables.normalizeEventsTs(readArrivals(spark, sfDir, "events",
+      "graft_stream", srcDir, maxFilesPerTrigger))
+  }
 
   /** Stream-static join: the event stream enriched against a static
     * dimension (customer) — the dim is effectively broadcast to every
     * micro-batch; no stream-side state. Aggregated per segment. */
   def streamStaticJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "graft_stream_static"
     val cust = graft.sources.Tables.customer(spark, sfDir)
       .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
-    withStreamShufflePartitions(spark) {
-      val q = readEventsStream(spark, sfDir)
+    drainToMemory(spark, "graft_stream_static", "complete")(
+      readEventsStream(spark, sfDir)
         .join(cust, "user_id")
         .groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(14,2)")).cast("double").as("sum_value"))
-        .writeStream.outputMode("complete").format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name).orderBy("c_mktsegment")
+          sum(col("value").cast("decimal(14,2)")).cast("double").as("sum_value")))
+      .orderBy("c_mktsegment")
   }
 
   /** Stream-stream inner join with watermarks on both sides: views
@@ -230,7 +313,6 @@ object Streams {
     * outer joins), while the watermark + time-range condition bounds
     * the join state to one hour of events per side. */
   def streamStreamJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "graft_stream_stream"
     val views = readEventsStream(spark, sfDir)
       .where(col("event_type") === "view")
       .select(col("user_id"), col("event_id").as("view_id"), col("ts").as("view_ts"))
@@ -240,16 +322,13 @@ object Streams {
       .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
         col("ts").as("click_ts"))
       .withWatermark("click_ts", "1 hour")
-    withStreamShufflePartitions(spark) {
-      val q = views.join(clicks,
+    drainToMemory(spark, "graft_stream_stream", "append")(
+      views.join(clicks,
           col("user_id") === col("c_user") &&
           col("click_ts") >= col("view_ts") &&
           col("click_ts") <= col("view_ts") + expr("INTERVAL 1 HOUR"))
-        .select("user_id", "view_id", "click_id")
-        .writeStream.outputMode("append").format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name).orderBy("user_id", "view_id", "click_id")
+        .select("user_id", "view_id", "click_id"))
+      .orderBy("user_id", "view_id", "click_id")
   }
 
   /** Stream-stream join, oracle = the equivalent batch interval join. */
@@ -318,14 +397,10 @@ object Streams {
     * spec stages a MULTI-FILE copy to force multiple micro-batches. */
   private[graft] def readDocsStream(spark: SparkSession, sfDir: String,
       srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val dir = srcDir.getOrElse(
-      stageAsStreamDir("graft_stream_docs", sfDir, "documents.parquet"))
-    val reader = spark.readStream
-      .schema("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(dir)
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    readArrivals(spark, sfDir, "documents", "graft_stream_docs", srcDir,
+      maxFilesPerTrigger,
+      Some("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"))
 
   /** Streaming multimodal featurize: the q101 decode pipeline run as a
     * micro-batch stream — the document drain's foreachBatch
@@ -373,21 +448,15 @@ object Streams {
     * query deployed in append mode is where the attached watermark
     * earns its keep — closed sessions age out of the store, the
     * production posture for an unbounded user domain. */
-  def sessionWindows(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "graft_stream_session_win"
-    withStreamShufflePartitions(spark) {
-      val q = readEventsStream(spark, sfDir)
+  def sessionWindows(spark: SparkSession, sfDir: String): DataFrame =
+    drainToMemory(spark, "graft_stream_session_win", "complete")(
+      readEventsStream(spark, sfDir)
         .withWatermark("ts", "1 hour")
         .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
-        .agg(count(lit(1)).as("n_events"))
-        .writeStream.outputMode("complete").format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name)
+        .agg(count(lit(1)).as("n_events")))
       .select(col("user_id"), col("sw.start").as("session_start"),
         col("sw.end").as("session_end"), col("n_events"))
       .orderBy("user_id", "session_start")
-  }
 
   val qStreamSessionWindow: GraftQuery = GraftQuery(
     "q136_stream_session_window",
@@ -449,14 +518,15 @@ object Streams {
     * multi-file copy to force several micro-batches. */
   private[graft] def readEmbeddingsStream(spark: SparkSession, sfDir: String,
       srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val dir = srcDir.getOrElse(
-      stageAsStreamDir("graft_stream_emb", sfDir, "embeddings.parquet"))
-    val reader = spark.readStream
-      .schema(graft.sources.Tables.embeddingsSchema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(dir)
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    readArrivals(spark, sfDir, "embeddings", "graft_stream_emb", srcDir,
+      maxFilesPerTrigger, Some(graft.sources.Tables.embeddingsSchema))
+
+  /** The `sfDir` embeddings corpus read with its known schema (no
+    * schema-inference job). */
+  private def readEmbeddings(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.schema(graft.sources.Tables.embeddingsSchema)
+      .parquet(s"$sfDir/embeddings.parquet")
 
   /** STREAMING ANN index ingest: q140's append path run inside
     * foreachBatch — the live counterpart of batch index maintenance,
@@ -489,16 +559,10 @@ object Streams {
       val deltaDir = graft.operators.Formats.scratchDir(
         "graft_ivfpq_streamdelta", srcDir.getOrElse(sfDir))
       graft.operators.Formats.wipe(deltaDir)
-      withStreamShufflePartitions(spark) {
-        val stream = readEmbeddingsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
-          .where(graft.operators.IvfPq.isDeltaVec)
-        val q = stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-            graft.operators.IvfPq.appendBatch(spark, sfDir, batch, deltaDir, bid)
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+      drainEach(spark, readEmbeddingsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
+          .where(graft.operators.IvfPq.isDeltaVec)) { (batch, bid) =>
+        graft.operators.IvfPq.appendBatch(spark, sfDir, batch, deltaDir, bid)
+        ()
       }
       basePath +: graft.operators.IvfPq.batchSegments(spark, deltaDir)
     }
@@ -533,40 +597,27 @@ object Streams {
     drainServe(spark, sfDir, srcDir, maxFilesPerTrigger,
       "graft_stream_serve", graft.operators.IvfPq.nProbe)
 
-  /** The one query-stream serve drain: each arriving micro-batch of
-    * query vectors is served at `probes` cells through the q303 plan
-    * and overwrites its batchId-keyed partial under `scratch`. */
+  /** The one query-stream serve drain: one partial log, each arriving
+    * micro-batch of query vectors served at `probes` cells through the
+    * q303 plan. A trigger whose arrivals hold no query serves no row
+    * (`IvfPq.batchServe` over an empty query batch). */
   private def drainServe(spark: SparkSession, sfDir: String,
       srcDir: Option[String], maxFilesPerTrigger: Option[Int],
       scratch: String, probes: Int): DataFrame = {
     import graft.operators.{IvfAnn, IvfPq}
-    val emb = graft.sources.Tables.embeddings(spark, sfDir)
+    val emb = readEmbeddings(spark, sfDir)
     val centroids = IvfAnn.fixedCentroids(emb, IvfAnn.fixedStride)
     val fullPath = IvfPq.codesSegment(spark, sfDir, "full",
       IvfAnn.assign(emb, centroids))
-    val outDir = graft.operators.Formats.scratchDir(
-      scratch, srcDir.getOrElse(sfDir))
-    graft.operators.Formats.wipe(outDir)
-    withStreamShufflePartitions(spark) {
-      val stream = readEmbeddingsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
-        .where(pmod(col("vec_id"), lit(IvfPq.batchQueryMod)) === 0)
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-          if (!batch.isEmpty) {
-            val queries = batch.toDF()
-              .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-            IvfPq.batchServe(spark, Seq(fullPath), centroids, queries, emb,
-              probes = probes)
-              .write.mode("overwrite").parquet(s"$outDir/batch=$bid")
-          }
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.read.parquet(outDir)
-      .select("query_id", "rank", "vec_id", "exact_dist")
-      .orderBy("query_id", "rank")
+    val queries = readEmbeddingsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
+      .where(pmod(col("vec_id"), lit(IvfPq.batchQueryMod)) === 0)
+    val Seq(served) = drainPartialLogs(spark, srcDir.getOrElse(sfDir), queries,
+      Seq(PartialLog(scratch,
+        "query_id BIGINT, rank INT, vec_id BIGINT, exact_dist DOUBLE",
+        (b, _) => IvfPq.batchServe(spark, Seq(fullPath), centroids,
+          b.select(col("vec_id").as("query_id"), col("embedding").as("q_emb")),
+          emb, probes = probes))))
+    served.orderBy("query_id", "rank")
   }
 
   val qStreamBatchServe: GraftQuery = GraftQuery(
@@ -650,15 +701,17 @@ object Streams {
   /** Everything the ONE-PASS embeddings-ingest drain maintains: the
     * Gram moment partials (q298's), the hard-negative argmax partials
     * (q325's), the compaction-policy segment census (q344's, summed),
-    * the centroid drift census (q357's, summed), and the row count of
-    * the corpus the centroid and anchor literals came from. Both
-    * censuses sit on one partition. */
+    * the centroid drift census (q357's, summed), the row count of the
+    * corpus the centroid and anchor literals came from, and the number
+    * of vectors the drift census covers. Both censuses sit on one
+    * partition. */
   private[graft] final case class EmbIndexes(
       gramPartials: DataFrame,
       hardnegPartials: DataFrame,
       compactCensus: DataFrame,
       driftCensus: DataFrame,
-      corpusRows: Long)
+      corpusRows: Long,
+      censusRows: Long)
 
   private val gramPartialSchema =
     "i INT, j INT, g DECIMAL(38,0), n BIGINT, si DECIMAL(38,0)"
@@ -679,21 +732,16 @@ object Streams {
     * local relation, so no trigger rescans the corpus to broadcast
     * them).
     *
-    * Each trigger persists its vectors once and submits the four
-    * maintainers' partial writes together: Gram cells, anchor argmax,
-    * segment census on the delta split, and drift double-assign
-    * against the two bounded centroid literals. A file-source trigger
-    * with no stateful operator never delivers an empty batch, and an
-    * empty delta census partial sums to nothing, so no trigger probes
-    * for emptiness.
-    *
-    * After the stream, the four partial logs are read back with their
-    * known schemas and checkpointed together. The two censuses are
-    * summed on one partition (at most |segments| and |cells| rows —
-    * the cell count is already collected to the driver). The
-    * checkpoint's plan does not carry that partitioning, so the
-    * compaction and refresh decisions restate it (`coalesce(1)`,
-    * which moves no data) and window and sort without an exchange.
+    * The four maintainers are partial logs of the one drain
+    * ([[drainPartialLogs]]): Gram cells, anchor argmax, segment census
+    * on the delta split, and drift double-assign against the two
+    * bounded centroid literals. Both censuses are summed on one
+    * partition (at most |segments| and |cells| rows — the cell count is
+    * already collected to the driver), and the drift census's
+    * checkpoint observes the vectors it covers. The checkpoint's plan
+    * does not carry that partitioning, so the compaction and refresh
+    * decisions restate it (`coalesce(1)`, which moves no data) and
+    * window and sort without an exchange.
     *
     * Every serving query keeps its batch oracle; StreamsSpec pins each
     * artifact against its batch definition under multi-trigger
@@ -712,24 +760,9 @@ object Streams {
     embPartialsMemo.getOrElseUpdate(
       spark, (sfDir, srcDir, maxFilesPerTrigger)) {
       import graft.operators.{Compaction, IvfAnn, IvfPq, Similarity}
-      import graft.spark.Parallel
       import org.apache.spark.sql.graftshim.TopKByScore
-      val key = srcDir.getOrElse(sfDir)
-      val gramDir = graft.operators.Formats.scratchDir(
-        "graft_stream_pca_multi", key)
-      val hnDir = graft.operators.Formats.scratchDir(
-        "graft_stream_hardneg_multi", key)
-      val cmpDir = graft.operators.Formats.scratchDir(
-        "graft_stream_compact_census_multi", key)
-      val drfDir = graft.operators.Formats.scratchDir(
-        "graft_stream_refresh_census_multi", key)
-      val all = Seq(gramDir, hnDir, cmpDir, drfDir)
-      all.foreach(graft.operators.Formats.wipe)
-      all.foreach(p =>
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p)))
       val corpus = org.apache.spark.sql.Observation()
-      val sample = spark.read.schema(graft.sources.Tables.embeddingsSchema)
-        .parquet(s"$sfDir/embeddings.parquet")
+      val sample = readEmbeddings(spark, sfDir)
         .observe(corpus, count(lit(1)).as("rows"))
         .where(IvfAnn.refitFilter)
         .select("vec_id", "embedding", "label")
@@ -743,52 +776,36 @@ object Streams {
       val rc = cents(sample)
       val anchors = spark.createDataFrame(
         java.util.Arrays.asList(persisted: _*),
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "a_id BIGINT, a_emb ARRAY<FLOAT>, a_label INT"))
-      withStreamShufflePartitions(spark) {
-        val stream = readEmbeddingsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
-        val q = stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-            val b = batch.toDF().persist()
-            try {
-              Parallel.all(Seq(
-                () => graft.operators.Pca.gramPartial(b)
-                  .write.mode("append").parquet(gramDir),
-                () => b.join(broadcast(anchors), col("label") =!= col("a_label"))
-                  .select(col("a_id"), col("a_label"),
-                    col("vec_id").as("neg_id"),
-                    Similarity.cosine(col("a_emb"), col("embedding")).as("cos"))
-                  .groupBy("a_id", "a_label")
-                  .agg(TopKByScore(col("cos"), col("neg_id"), 1).as("t"))
-                  .select(col("a_id"), col("a_label"),
-                    element_at(col("t"), 1).getField("id").as("neg_id"),
-                    element_at(col("t"), 1).getField("score").as("cos"))
-                  .write.mode("append").parquet(hnDir),
-                () => b.where(IvfPq.isDeltaVec)
-                  .withColumn("seg_id", Compaction.segIdExpr)
-                  .groupBy("seg_id").agg(count(lit(1)).as("n_partial"))
-                  .write.mode("overwrite").parquet(s"$cmpDir/batch=$bid"),
-                () => IvfAnn.driftCensusPartial(b, pc, rc)
-                  .write.mode("overwrite").parquet(s"$drfDir/batch=$bid")))
-            } finally { b.unpersist(); () }
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      def partials(schema: String, dir: String) =
-        spark.read.schema(schema).parquet(dir)
-      val Seq(gram, hardneg, compact, drift) = Parallel.all(Seq(
-        () => partials(gramPartialSchema, gramDir).localCheckpoint(),
-        () => partials(hardnegPartialSchema, hnDir).localCheckpoint(),
-        () => partials(compactPartialSchema, cmpDir).coalesce(1)
-          .groupBy("seg_id").agg(sum("n_partial").as("n_rows"))
-          .localCheckpoint(),
-        () => partials(driftPartialSchema, drfDir).coalesce(1)
-          .groupBy("cell_old")
-          .agg(sum("n_rows").as("n_rows"), sum("n_moved").as("n_moved"))
-          .localCheckpoint()))
-      EmbIndexes(gram, hardneg, compact, drift, corpusRows)
+        StructType.fromDDL("a_id BIGINT, a_emb ARRAY<FLOAT>, a_label INT"))
+      val census = org.apache.spark.sql.Observation()
+      val Seq(gram, hardneg, compact, drift) = drainPartialLogs(spark,
+        srcDir.getOrElse(sfDir),
+        readEmbeddingsStream(spark, sfDir, srcDir, maxFilesPerTrigger), Seq(
+          PartialLog("graft_stream_pca_multi", gramPartialSchema,
+            (b, _) => graft.operators.Pca.gramPartial(b)),
+          PartialLog("graft_stream_hardneg_multi", hardnegPartialSchema,
+            (b, _) => b.join(broadcast(anchors), col("label") =!= col("a_label"))
+              .select(col("a_id"), col("a_label"),
+                col("vec_id").as("neg_id"),
+                Similarity.cosine(col("a_emb"), col("embedding")).as("cos"))
+              .groupBy("a_id", "a_label")
+              .agg(TopKByScore(col("cos"), col("neg_id"), 1).as("t"))
+              .select(col("a_id"), col("a_label"),
+                element_at(col("t"), 1).getField("id").as("neg_id"),
+                element_at(col("t"), 1).getField("score").as("cos"))),
+          PartialLog("graft_stream_compact_census_multi", compactPartialSchema,
+            (b, _) => b.where(IvfPq.isDeltaVec)
+              .withColumn("seg_id", Compaction.segIdExpr)
+              .groupBy("seg_id").agg(count(lit(1)).as("n_partial")),
+            _.coalesce(1).groupBy("seg_id").agg(sum("n_partial").as("n_rows"))),
+          PartialLog("graft_stream_refresh_census_multi", driftPartialSchema,
+            (b, _) => IvfAnn.driftCensusPartial(b, pc, rc),
+            _.coalesce(1).groupBy("cell_old")
+              .agg(sum("n_rows").as("n_rows"), sum("n_moved").as("n_moved"))
+              .observe(census, sum("n_rows").as("rows")))))
+      // a census with no row sums to null: it covers 0 vectors
+      val censusRows = Option(census.get("rows")).fold(0L)(_.asInstanceOf[Long])
+      EmbIndexes(gram, hardneg, compact, drift, corpusRows, censusRows)
     }
 
   val qStreamCompactionPolicy: GraftQuery = GraftQuery(
@@ -887,73 +904,26 @@ object Streams {
       videoWideTier.batchProbe(s, d, streamMultiIndexes(s, d).videoWide))
   }
 
-  /** Runs a band-index drain over q94's corpus split; returns the lazy
-    * drained index plus the two partial-log directories (so
-    * [[compactBandPartials]] can fold them before the serve
-    * checkpoint). */
-  private def drainMinhashBands(spark: SparkSession, sfDir: String,
-      srcDir: Option[String],
-      maxFilesPerTrigger: Option[Int])
-      : (graft.operators.Dedup.BandIndex, String, String) = {
-    val outDir = graft.operators.Formats.scratchDir(
-      "graft_stream_minhash_bands", srcDir.getOrElse(sfDir))
-    val cntDir = graft.operators.Formats.scratchDir(
-      "graft_stream_minhash_band_counts", srcDir.getOrElse(sfDir))
-    graft.operators.Formats.wipe(outDir)
-    graft.operators.Formats.wipe(cntDir)
-    // an all-empty drain must read back as an empty band index, not a
-    // missing path
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(cntDir))
-    withStreamShufflePartitions(spark) {
-      val stream = readDocsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
-        .where(pmod(col("doc_id"), lit(2)) === 0) // q94's corpus split
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-          if (!batch.isEmpty)
-            writeBandPartial(spark, batch.toDF(), outDir, cntDir, bid)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    (readBandLog(spark, outDir, cntDir), outDir, cntDir)
-  }
+  private val bandRowSchema = "doc_id BIGINT, band_id INT, band_hash STRING"
+  private val bandCountSchema = "band_id INT, band_hash STRING, n_partial BIGINT"
 
-  /** One trigger's band-index partials. The band index is per-doc
-    * APPEND, not a count census: the trigger signs only ITS OWN corpus
-    * documents (the fused MinHashBandHashes expression — shingles/
-    * digests never materialize) and overwrites one batchId-keyed
-    * partial of (doc_id, band_id, band_hash) rows, so a retried
-    * trigger rewrites, never duplicates. The bucket-count partial
-    * derives from THOSE written rows (a read-back of the just-written
-    * partial, not a second signing) so rows and counts can never
-    * disagree — counts are a monoid, summed at drain. */
-  private def writeBandPartial(spark: SparkSession, docs: DataFrame,
-      outDir: String, cntDir: String, bid: Long): Unit = {
-    graft.operators.Dedup.docBands(docs)
-      .write.mode("overwrite").parquet(s"$outDir/batch=$bid")
-    spark.read
-      .schema("doc_id BIGINT, band_id INT, band_hash STRING")
-      .parquet(s"$outDir/batch=$bid")
-      .groupBy("band_id", "band_hash")
-      .agg(count(lit(1)).as("n_partial"))
-      .write.mode("overwrite").parquet(s"$cntDir/batch=$bid")
-  }
-
-  /** Serve the partial log as a [[graft.operators.Dedup.BandIndex]].
-    * The parquet file listing resolves at READ construction, so this
-    * must be called (again) after any fold rewrites the log. */
-  private def readBandLog(spark: SparkSession, outDir: String,
-      cntDir: String): graft.operators.Dedup.BandIndex =
-    graft.operators.Dedup.BandIndex(
-      spark.read.schema("doc_id BIGINT, band_id INT, band_hash STRING")
-        .parquet(outDir)
-        .select("doc_id", "band_id", "band_hash"),
-      spark.read.schema("band_id INT, band_hash STRING, n_partial BIGINT")
-        .parquet(cntDir)
-        .groupBy("band_id", "band_hash")
-        .agg(sum("n_partial").as("n_corpus")))
+  /** The MinHash band index as a partial log over q94's corpus split.
+    * The band index is per-doc APPEND, not a count census: each trigger
+    * signs only ITS OWN corpus documents (the fused MinHashBandHashes
+    * expression — shingles/digests never materialize) into (doc_id,
+    * band_id, band_hash) rows. The bucket-count partial is the derived
+    * log: it counts THOSE written rows (a read-back of the just-written
+    * partial, not a second signing), so rows and counts can never
+    * disagree — counts are a monoid, summed at read-back into the
+    * [[graft.operators.Dedup.BandIndex]] census. */
+  private def bandLog(rowsScratch: String, countsScratch: String): PartialLog =
+    PartialLog(rowsScratch, bandRowSchema,
+      (b, _) => graft.operators.Dedup.docBands(
+        b.where(pmod(col("doc_id"), lit(2)) === 0)), // q94's corpus split
+      derived = Some(PartialLog(countsScratch, bandCountSchema,
+        (rows, _) => rows.groupBy("band_id", "band_hash")
+          .agg(count(lit(1)).as("n_partial")),
+        _.groupBy("band_id", "band_hash").agg(sum("n_partial").as("n_corpus")))))
 
   /** SIZE-TIERED COMPACTION OF THE MAINTAINED BAND-INDEX PARTIAL LOG
     * (r12 verdict: the q363 index accumulated one parquet directory
@@ -973,14 +943,12 @@ object Streams {
     * folded. */
   private[graft] def compactBandPartials(spark: SparkSession,
       outDir: String, cntDir: String): Int = {
-    val rowSchema = "doc_id BIGINT, band_id INT, band_hash STRING"
-    val cntSchema = "band_id INT, band_hash STRING, n_partial BIGINT"
     val dirs = Option(new java.io.File(outDir).listFiles())
       .map(_.toSeq).getOrElse(Nil)
       .filter(f => f.isDirectory && f.getName.startsWith("batch="))
       .map(_.getName.stripPrefix("batch=")).sorted
     if (dirs.size < graft.operators.Compaction.minThreshold) return 0
-    val sizes = spark.read.parquet(cntDir)
+    val sizes = spark.read.schema(bandCountSchema).parquet(cntDir)
       .groupBy(col("batch").cast("string").as("b"))
       .agg(sum("n_partial").as("n_rows"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -996,10 +964,10 @@ object Streams {
         if (members.size >= graft.operators.Compaction.minThreshold) {
           val name = s"batch=g${tier}n$gen"
           gen += 1
-          spark.read.schema(rowSchema)
+          spark.read.schema(bandRowSchema)
             .parquet(members.map(m => s"$outDir/batch=$m"): _*)
             .write.mode("overwrite").parquet(s"$outDir/$name")
-          spark.read.schema(cntSchema)
+          spark.read.schema(bandCountSchema)
             .parquet(members.map(m => s"$cntDir/batch=$m"): _*)
             .groupBy("band_id", "band_hash")
             .agg(sum("n_partial").as("n_partial"))
@@ -1036,16 +1004,18 @@ object Streams {
       graft.operators.Formats.wipe(stage)
       graft.sources.Tables.documents(spark, sfDir).repartition(8)
         .write.mode("overwrite").parquet(stage)
-      val (_, outDir, cntDir) =
-        drainMinhashBands(spark, sfDir, Some(stage), Some(1))
+      val logs = Seq(bandLog(
+        "graft_stream_minhash_bands", "graft_stream_minhash_band_counts"))
+      val dirs = drainLogs(spark, stage,
+        readDocsStream(spark, sfDir, Some(stage), Some(1)), logs)
+      val Seq(outDir, cntDir) = dirs
       val folds = compactBandPartials(spark, outDir, cntDir)
       require(folds >= 1,
         s"compaction fixture staged 8 same-tier partials but folded $folds tiers")
-      // re-read: the fold rewrote the log, and parquet file listings
-      // resolve at read construction
-      val i = readBandLog(spark, outDir, cntDir)
-      graft.operators.Dedup.BandIndex(
-        i.rows.localCheckpoint(), i.bucketCounts.localCheckpoint())
+      // read back only now: the fold rewrote the log, and parquet file
+      // listings resolve at read construction
+      val Seq(rows, counts) = checkpointLogs(spark, logs, dirs)
+      graft.operators.Dedup.BandIndex(rows, counts)
     }
 
   /** q365: q94's probe against the maintained-then-compacted band
@@ -1108,20 +1078,18 @@ object Streams {
     * document-fed maintained artifact per trigger — the four value
     * censuses, the stated MinHash band index, and the monoid partial
     * logs / featurized sinks of the other document maintainers — so
-    * the ingest bytes are read once: the trigger's documents are
-    * persisted, every index featurizes from that cached batch, and
-    * each keeps its OWN per-batch partial contract in a tier-owned
-    * `_multi` scratch dir. Per-index corpus filters apply inside the
-    * trigger — filters are an index concern, not a stream concern.
+    * the ingest bytes are read once: each maintainer is one declared
+    * partial log of [[drainPartialLogs]], featurizing from the
+    * trigger's persisted documents into its own `_multi` scratch dir.
+    * Per-index corpus filters apply inside the partial — filters are
+    * an index concern, not a stream concern.
     * Every serving query is oracle-paired with its batch SQL;
     * StreamsSpec pins each maintained artifact against its batch
     * definition under multi-trigger arrivals and asserts the whole
     * drain started exactly one streaming query.
     *
     * The artifacts are checkpointed once per (session, corpus, staging
-    * dir, trigger config): the barriers decouple them from the scratch
-    * directories, which a later re-drain wipes and rewrites (that
-    * would invalidate a lazily returned relation's file listing). Each
+    * dir, trigger config), memoized by [[streamMultiIndexes]]. Each
     * census's guard statistics are computed ONCE over the drained,
     * checkpointed census — band-bucket occupancy is a DISTINCT-value
     * count, not additive across arriving batches, so it derives from
@@ -1130,125 +1098,77 @@ object Streams {
   private def drainMultiIndexes(spark: SparkSession, sfDir: String,
       srcDir: Option[String],
       maxFilesPerTrigger: Option[Int]): DocIndexes = {
-    val key = srcDir.getOrElse(sfDir)
-    val tiers = Seq(graft.operators.Dedup.simhashTier,
-      graft.operators.Multimodal.imageTier, graft.operators.Multimodal.audioTier,
-      graft.operators.Multimodal.videoWideTier)
-    val tierDirs = tiers.map(t => graft.operators.Formats.scratchDir(
-      s"graft_stream_${t.name}_census_multi", key))
-    val bandDir = graft.operators.Formats.scratchDir(
-      "graft_stream_minhash_bands_multi", key)
-    val bandCntDir = graft.operators.Formats.scratchDir(
-      "graft_stream_minhash_band_counts_multi", key)
-    val cmsDir = graft.operators.Formats.scratchDir(
-      "graft_stream_cms_multi", key)
-    val driftDir = graft.operators.Formats.scratchDir(
-      "graft_stream_drift_multi", key)
-    val kmvDir = graft.operators.Formats.scratchDir(
-      "graft_stream_kmv_multi", key)
-    val psiDir = graft.operators.Formats.scratchDir(
-      "graft_stream_psi_multi", key)
-    val cdcDir = graft.operators.Formats.scratchDir(
-      "graft_stream_cdc_multi", key)
-    val merkleDir = graft.operators.Formats.scratchDir(
-      "graft_stream_merkle_multi", key)
-    val chunkDir = graft.operators.Formats.scratchDir(
-      "graft_stream_cdc_census_multi", key)
-    val curateDir = graft.operators.Formats.scratchDir(
-      "graft_stream_curate_multi", key)
-    val imgFeatDir = graft.operators.Formats.scratchDir(
-      "graft_stream_imgfeat_multi", key)
-    val all = tierDirs ++ Seq(bandDir, bandCntDir,
-      cmsDir, driftDir, kmvDir, psiDir, cdcDir, merkleDir, chunkDir,
-      curateDir, imgFeatDir)
-    all.foreach(graft.operators.Formats.wipe)
-    all.foreach(p =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p)))
-    withStreamShufflePartitions(spark) {
-      val stream = readDocsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-          // one read of the trigger's bytes: every index works off
-          // the cached batch
-          val b = batch.toDF().persist()
-          try {
-            if (!b.isEmpty) {
-              val census = b.where(graft.operators.ValueTier.fixtureCorpusFilter)
-              tiers.zip(tierDirs).foreach { case (t, dir) =>
-                t.partial(census)
-                  .write.mode("overwrite").parquet(s"$dir/batch=$bid")
-              }
-              writeBandPartial(spark,
-                b.where(pmod(col("doc_id"), lit(2)) === 0), // q94's split
-                bandDir, bandCntDir, bid)
-              // the append-contract monoid partials
-              graft.operators.Selection
-                .cmPartialSketch(graft.operators.Selection.docTokens(b))
-                .write.mode("append").parquet(cmsDir)
-              graft.operators.Selection.driftPartial(b)
-                .write.mode("append").parquet(driftDir)
-              graft.operators.KmvSketch.partialSketch(b)
-                .write.mode("append").parquet(kmvDir)
-              graft.operators.TrendStats.lengthCensus(b)
-                .write.mode("append").parquet(psiDir)
-              graft.operators.ModelQueries.cdcLatest(
-                graft.operators.ModelQueries.cdcLog(b))
-                .write.mode("append").parquet(cdcDir)
-              graft.operators.ModelQueries.merkleLeaf(
-                b.select(col("doc_id"), md5(col("text")).as("fp")),
-                "n_a", "f_a")
-                .write.mode("append").parquet(merkleDir)
-              graft.operators.CdcChunking.cdcChunks(b)
-                .groupBy("chunk_md5")
-                .agg(count(lit(1)).as("n_occurrences"),
-                  countDistinct(col("doc_id")).as("n_docs"),
-                  min(col("doc_id")).as("min_doc"),
-                  max(col("chunk_len")).as("chunk_len"))
-                .write.mode("append").parquet(chunkDir)
-              // featurize/gate stages: the sink IS the product a
-              // downstream trainer reads mid-stream
-              graft.operators.CurationFunnel.curateBatch(spark, sfDir,
-                b.where(pmod(col("doc_id"), lit(5)) === 4))
-                .withColumn("batch_id", lit(bid))
-                .write.mode("append").parquet(curateDir)
-              val imgs = b.select(col("doc_id"))
-                .as[Long](org.apache.spark.sql.Encoders.scalaLong)
-                .mapPartitions(ids => ids.map(id =>
-                  graft.operators.Multimodal.ImageRow(id,
-                    graft.operators.Multimodal.synthPng(id))))(
-                  org.apache.spark.sql.Encoders
-                    .product[graft.operators.Multimodal.ImageRow])
-              graft.operators.Multimodal.decodeImagesPooled(imgs)
-                .write.mode("append").parquet(imgFeatDir)
-            }
-          } finally { b.unpersist(); () }
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val Seq(simhash, image, audio, videoWide) = tiers.zip(tierDirs).map {
-      case (t, dir) => t.scheme.indexed(t.summed(spark, dir).localCheckpoint())
-    }
-    val bandLog = readBandLog(spark, bandDir, bandCntDir)
+    import graft.operators.{CdcChunking, CurationFunnel, Dedup, KmvSketch,
+      ModelQueries, Multimodal, Selection, TrendStats, ValueTier}
+    val tiers = Seq(Dedup.simhashTier, Multimodal.imageTier,
+      Multimodal.audioTier, Multimodal.videoWideTier)
+    val Seq(simhash, image, audio, videoWide, bandRows, bandCounts, cms, drift,
+        kmv, psi, cdc, merkle, chunks, curated, imageFeatures) =
+      drainPartialLogs(spark, srcDir.getOrElse(sfDir),
+        readDocsStream(spark, sfDir, srcDir, maxFilesPerTrigger),
+        tiers.map(t => PartialLog(s"graft_stream_${t.name}_census_multi",
+          t.partialSchema,
+          (b, _) => t.partial(b.where(ValueTier.fixtureCorpusFilter)),
+          t.sumPartials)) ++ Seq(
+          bandLog("graft_stream_minhash_bands_multi",
+            "graft_stream_minhash_band_counts_multi"),
+          PartialLog("graft_stream_cms_multi", "j INT, bucket INT, cnt BIGINT",
+            (b, _) => Selection.cmPartialSketch(Selection.docTokens(b))),
+          PartialLog("graft_stream_drift_multi", "bucket INT, n_a BIGINT, n_b BIGINT",
+            (b, _) => Selection.driftPartial(b)),
+          PartialLog("graft_stream_kmv_multi", "source STRING, h BIGINT",
+            (b, _) => KmvSketch.partialSketch(b)),
+          PartialLog("graft_stream_psi_multi", "n_chars BIGINT, is_a BOOLEAN, c BIGINT",
+            (b, _) => TrendStats.lengthCensus(b)),
+          PartialLog("graft_stream_cdc_multi",
+            "k BIGINT, final_version INT, op STRING, payload STRING",
+            (b, _) => ModelQueries.cdcLatest(ModelQueries.cdcLog(b))),
+          PartialLog("graft_stream_merkle_multi",
+            "bucket BIGINT, n_a BIGINT, f_a DECIMAL(38,0)",
+            (b, _) => ModelQueries.merkleLeaf(
+              b.select(col("doc_id"), md5(col("text")).as("fp")), "n_a", "f_a")),
+          PartialLog("graft_stream_cdc_census_multi", "chunk_md5 STRING, " +
+            "n_occurrences BIGINT, n_docs BIGINT, min_doc BIGINT, chunk_len INT",
+            (b, _) => CdcChunking.cdcChunks(b)
+              .groupBy("chunk_md5")
+              .agg(count(lit(1)).as("n_occurrences"),
+                countDistinct(col("doc_id")).as("n_docs"),
+                min(col("doc_id")).as("min_doc"),
+                max(col("chunk_len")).as("chunk_len"))),
+          // featurize/gate stages: the sink IS the product a downstream
+          // trainer reads mid-stream
+          PartialLog("graft_stream_curate_multi", "doc_id BIGINT, lang STRING, " +
+            "n_tok INT, keep_exact INT, keep_span INT, keep_fluency INT, " +
+            "batch_id BIGINT",
+            (b, bid) => CurationFunnel.curateBatch(spark, sfDir,
+              b.where(!ValueTier.fixtureCorpusFilter))
+              .withColumn("batch_id", lit(bid))),
+          PartialLog("graft_stream_imgfeat_multi", "doc_id BIGINT, width INT, " +
+            "height INT, n_channels INT, sum_r BIGINT, sum_g BIGINT, sum_b BIGINT",
+            (b, _) => Multimodal.decodeImagesPooled(b.select(col("doc_id"))
+              .as[Long](org.apache.spark.sql.Encoders.scalaLong)
+              .mapPartitions(ids => ids.map(id =>
+                Multimodal.ImageRow(id, Multimodal.synthPng(id))))(
+                org.apache.spark.sql.Encoders.product[Multimodal.ImageRow]))
+              .toDF())))
+    val Seq(simhashIdx, imageIdx, audioIdx, videoWideIdx) =
+      tiers.zip(Seq(simhash, image, audio, videoWide))
+        .map { case (t, census) => t.scheme.indexed(census) }
     DocIndexes(
-      simhash = simhash,
-      image = image,
-      audio = audio,
-      videoWide = videoWide,
-      bands = graft.operators.Dedup.BandIndex(
-        bandLog.rows.localCheckpoint(),
-        bandLog.bucketCounts.localCheckpoint()),
-      cmsPartials = spark.read.parquet(cmsDir).localCheckpoint(),
-      driftPartials = spark.read.parquet(driftDir).localCheckpoint(),
-      kmvPartials = spark.read.schema("source STRING, h BIGINT")
-        .parquet(kmvDir).localCheckpoint(),
-      psiPartials = spark.read.parquet(psiDir).localCheckpoint(),
-      cdcPartials = spark.read.parquet(cdcDir).localCheckpoint(),
-      merklePartials = spark.read.parquet(merkleDir).localCheckpoint(),
-      chunkPartials = spark.read.parquet(chunkDir).localCheckpoint(),
-      curated = spark.read.parquet(curateDir).localCheckpoint(),
-      imageFeatures = spark.read.parquet(imgFeatDir).localCheckpoint())
+      simhash = simhashIdx,
+      image = imageIdx,
+      audio = audioIdx,
+      videoWide = videoWideIdx,
+      bands = Dedup.BandIndex(bandRows, bandCounts),
+      cmsPartials = cms,
+      driftPartials = drift,
+      kmvPartials = kmv,
+      psiPartials = psi,
+      cdcPartials = cdc,
+      merklePartials = merkle,
+      chunkPartials = chunks,
+      curated = curated,
+      imageFeatures = imageFeatures)
   }
 
   /** q366: the simhash corpus census maintained by the SINGLE-PASS
@@ -1263,7 +1183,7 @@ object Streams {
 
   /** STREAMING MAINTENANCE OF THE MINHASH BAND INDEX — the q350
     * discipline on the JACCARD tier (q94's probe target): the document
-    * drain writes each trigger's band partial ([[writeBandPartial]])
+    * drain writes each trigger's band partial ([[bandLog]])
     * and the drained UNION is the batch-built band index VERBATIM under
     * any arrival slicing — each document contributes its band rows
     * exactly once, and the corpus is never re-shingled (per trigger the
@@ -1333,22 +1253,20 @@ object Streams {
       srcDir: Option[String],
       maxFilesPerTrigger: Option[Int]): DataFrame = {
     val drained = streamEmbPartials(spark, sfDir, srcDir, maxFilesPerTrigger)
-    val census = drained.driftCensus.coalesce(1)
     // the centroid literals (persisted + re-fit) derive from the sfDir
     // embeddings; a srcDir that does not RE-STAGE that same corpus
     // would drift-census one population against another's centroids —
     // silently. Structural check: the drained census must cover
     // exactly the corpus row count the drain observed while sampling
-    // those literals (one tiny aggregate over the summed census).
-    val sRow = census.agg(sum("n_rows")).head
-    val streamedRows = if (sRow.isNullAt(0)) 0L else sRow.getLong(0)
+    // those literals (both counts observed by the drain, no job here).
+    val streamedRows = drained.censusRows
     val corpusRows = drained.corpusRows
     require(streamedRows == corpusRows,
       s"drift census covered $streamedRows vectors but the centroid " +
         s"corpus ($sfDir embeddings) has $corpusRows — srcDir must " +
         "re-stage the same embeddings corpus the centroid literals " +
         "derive from")
-    graft.operators.IvfAnn.refreshDecision(census)
+    graft.operators.IvfAnn.refreshDecision(drained.driftCensus.coalesce(1))
   }
 
   val qStreamRefreshPolicy: GraftQuery = GraftQuery(
@@ -1496,17 +1414,10 @@ object Streams {
     val corpus = ZOrder.eventCells(graft.sources.Tables.events(spark, sfDir))
       .where(pmod(col("event_id"), lit(5L)) =!= 4L)
     ZOrder.writeLayout(corpus, basePath)
-    withStreamShufflePartitions(spark) {
-      val stream = readEventArrivals(spark, sfDir, srcDir, maxFilesPerTrigger)
-        .where(pmod(col("event_id"), lit(5L)) === 4L)
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          ZOrder.incrementalMaintain(spark, basePath,
-            ZOrder.eventCells(batch.toDF()))
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    drainEach(spark, readEventArrivals(spark, sfDir, srcDir, maxFilesPerTrigger)
+        .where(pmod(col("event_id"), lit(5L)) === 4L)) { (batch, _) =>
+      ZOrder.incrementalMaintain(spark, basePath, ZOrder.eventCells(batch))
+      ()
     }
     basePath
   }
@@ -1550,32 +1461,15 @@ object Streams {
       maxFilesPerTrigger: Option[Int] = None): (DataFrame, DataFrame) =
     eventsPartialsMemo.getOrElseUpdate(
       spark, (sfDir, srcDir, maxFilesPerTrigger)) {
-      val key = srcDir.getOrElse(sfDir)
-      val decayDir = graft.operators.Formats.scratchDir(
-        "graft_stream_decay_multi", key)
-      val olsDir = graft.operators.Formats.scratchDir(
-        "graft_stream_ols_multi", key)
-      Seq(decayDir, olsDir).foreach(graft.operators.Formats.wipe)
-      withStreamShufflePartitions(spark) {
-        val stream = readEventArrivals(spark, sfDir, srcDir, maxFilesPerTrigger)
-        val q = stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            val b = batch.toDF().persist()
-            try {
-              b.groupBy(col("event_type"), to_date(col("ts")).as("day"))
-                .agg(count(lit(1)).as("n"))
-                .write.mode("append").parquet(decayDir)
-              graft.operators.TrendStats.dailyCensus(b)
-                .write.mode("append").parquet(olsDir)
-            } finally { b.unpersist(); () }
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      (spark.read.schema("event_type STRING, day DATE, n BIGINT")
-        .parquet(decayDir).localCheckpoint(),
-        spark.read.parquet(olsDir).localCheckpoint())
+      val Seq(decay, ols) = drainPartialLogs(spark, srcDir.getOrElse(sfDir),
+        readEventArrivals(spark, sfDir, srcDir, maxFilesPerTrigger), Seq(
+          PartialLog("graft_stream_decay_multi",
+            "event_type STRING, day DATE, n BIGINT",
+            (b, _) => b.groupBy(col("event_type"), to_date(col("ts")).as("day"))
+              .agg(count(lit(1)).as("n"))),
+          PartialLog("graft_stream_ols_multi", "event_type STRING, d BIGINT, n BIGINT",
+            (b, _) => graft.operators.TrendStats.dailyCensus(b))))
+      (decay, ols)
     }
 
   /** q188's serve: merge the daily partials and apply the Q30
@@ -1675,26 +1569,20 @@ object Streams {
     val sink = graft.operators.Formats.scratchDir("graft_late_sink", sfDir)
     graft.operators.Formats.wipe(sink)
     val runningMax = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    withStreamShufflePartitions(spark) {
-      val stream = spark.readStream.schema("event_id BIGINT, ts TIMESTAMP")
-        .option("maxFilesPerTrigger", 1).parquet(dir)
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-          val priorMax = runningMax.get()
-          val isLate =
-            if (priorMax == Long.MinValue) lit(false)
-            else unix_micros(col("ts")) < lit(priorMax - lateDelayMicros)
-          batch.select(col("ts"), isLate.as("is_late"))
-            .write.mode("overwrite").parquet(s"$sink/batch=$bid")
-          val mx = batch.agg(max(unix_micros(col("ts")))).first()
-          if (!mx.isNullAt(0))
-            runningMax.getAndUpdate(m => math.max(m, mx.getLong(0)))
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    drainEach(spark, spark.readStream.schema("event_id BIGINT, ts TIMESTAMP")
+        .option("maxFilesPerTrigger", 1).parquet(dir)) { (batch, bid) =>
+      val priorMax = runningMax.get()
+      val isLate =
+        if (priorMax == Long.MinValue) lit(false)
+        else unix_micros(col("ts")) < lit(priorMax - lateDelayMicros)
+      batch.select(col("ts"), isLate.as("is_late"))
+        .write.mode("overwrite").parquet(s"$sink/batch=$bid")
+      val mx = batch.agg(max(unix_micros(col("ts")))).first()
+      if (!mx.isNullAt(0))
+        runningMax.getAndUpdate(m => math.max(m, mx.getLong(0)))
+      ()
     }
-    spark.read.parquet(sink).select("ts", "is_late")
+    readLog(spark, "ts TIMESTAMP, is_late BOOLEAN", sink)
       .groupBy(date_trunc("hour", col("ts")).as("win"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("is_late").cast("long")).as("n_late"))
@@ -1739,18 +1627,13 @@ object Streams {
     * (someone started logging unbounded values). */
   def streamQuantileSketch(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val name = "graft_stream_qsketch"
-    withStreamShufflePartitions(spark) {
-      val bins = readEventsStream(spark, sfDir)
+    val bins = drainToMemory(spark, "graft_stream_qsketch", "complete")(
+      readEventsStream(spark, sfDir)
         .groupBy(col("event_type"), floor(col("value")).cast("long").as("bin"))
-        .agg(count(lit(1)).as("n"))
-      val q = bins.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
+        .agg(count(lit(1)).as("n")))
     val wCum = Window.partitionBy("event_type").orderBy("bin")
     val wTot = Window.partitionBy("event_type")
-    spark.table(name)
+    bins
       .withColumn("cum", sum("n").over(wCum))
       .withColumn("total", sum("n").over(wTot))
       .groupBy("event_type")
@@ -1969,7 +1852,6 @@ object Streams {
       maxFilesPerTrigger: Option[Int]): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val name = "graft_stream_behavior"
     val unset = Long.MinValue
     val gapUs = 1800000000L
     val stream = readEventArrivals(spark, sfDir, srcDir, maxFilesPerTrigger)
@@ -2015,14 +1897,10 @@ object Streams {
       state.update((lt, le, ltype, fv, fc, fp, sSt, sLa, sN))
       out.result().iterator
     }
-    withStreamShufflePartitions(spark) {
-      val q = stream.groupByKey(_._1)
+    drainToMemory(spark, "graft_stream_behavior", "update")(
+      stream.groupByKey(_._1)
         .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(update)
-        .toDF("tag", "user_id", "s1", "s2", "l1", "l2", "l3")
-        .writeStream.outputMode("update").format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name)
+        .toDF("tag", "user_id", "s1", "s2", "l1", "l2", "l3"))
   }
 
   // ---- q265: streaming OLS trend monitor ----
@@ -2133,37 +2011,20 @@ object Streams {
       srcDir: Option[String] = None,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val partials = rfmPartialsMemo.getOrElseUpdate(
-      spark, (sfDir, srcDir, maxFilesPerTrigger))(
-      drainRfm(spark, sfDir, srcDir, maxFilesPerTrigger).localCheckpoint())
+      spark, (sfDir, srcDir, maxFilesPerTrigger)) {
+      val Seq(metrics) = drainPartialLogs(spark, srcDir.getOrElse(sfDir),
+        readArrivals(spark, sfDir, "orders", "graft_stream_orders", srcDir,
+          maxFilesPerTrigger),
+        Seq(PartialLog("graft_stream_rfm",
+          "o_custkey BIGINT, last_d DATE, f BIGINT, m BIGINT",
+          (b, _) => graft.operators.Behavior.rfmMetrics(b))))
+      metrics
+    }
     val folded = partials
       .groupBy("o_custkey")
       .agg(max("last_d").as("last_d"), sum("f").cast("long").as("f"),
         sum("m").cast("long").as("m"))
     graft.operators.Behavior.rfmSegmentsFrom(folded)
-  }
-
-  private def drainRfm(spark: SparkSession, sfDir: String,
-      srcDir: Option[String],
-      maxFilesPerTrigger: Option[Int]): DataFrame = {
-    val outDir = graft.operators.Formats.scratchDir(
-      "graft_stream_rfm", srcDir.getOrElse(sfDir))
-    graft.operators.Formats.wipe(outDir)
-    val dir = srcDir.getOrElse(
-      stageAsStreamDir("graft_stream_orders", sfDir, "orders.parquet"))
-    withStreamShufflePartitions(spark) {
-      val fileSchema = spark.read.parquet(dir).schema
-      val reader = spark.readStream.schema(fileSchema)
-      maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-      val q = reader.parquet(dir).writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          graft.operators.Behavior.rfmMetrics(batch.toDF())
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.read.parquet(outDir)
   }
 
   val qStreamRfm: GraftQuery = GraftQuery(
@@ -2217,34 +2078,20 @@ object Streams {
       maxFilesPerTrigger: Option[Int] = None): (DataFrame, DataFrame) =
     lineitemPartialsMemo.getOrElseUpdate(
       spark, (sfDir, srcDir, maxFilesPerTrigger)) {
-      val key = srcDir.getOrElse(sfDir)
-      val mvDir = graft.operators.Formats.scratchDir(
-        "graft_stream_mv_multi", key)
-      val zoneDir = graft.operators.Formats.scratchDir(
-        "graft_stream_zones_multi", key)
-      Seq(mvDir, zoneDir).foreach(graft.operators.Formats.wipe)
-      val dir = srcDir.getOrElse(
-        stageAsStreamDir("graft_stream_li", sfDir, "lineitem.parquet"))
-      withStreamShufflePartitions(spark) {
-        val fileSchema = spark.read.parquet(dir).schema
-        val reader = spark.readStream.schema(fileSchema)
-        maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-        val q = reader.parquet(dir).writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            val b = batch.toDF().persist()
-            try {
-              graft.plans.MvRewrite.mvPartial(b)
-                .write.mode("append").parquet(mvDir)
-              graft.operators.ZOrder.zoneMaps(b)
-                .write.mode("append").parquet(zoneDir)
-            } finally { b.unpersist(); () }
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      (spark.read.parquet(mvDir).localCheckpoint(),
-        spark.read.parquet(zoneDir).localCheckpoint())
+      val arrivals = readArrivals(spark, sfDir, "lineitem", "graft_stream_li",
+        srcDir, maxFilesPerTrigger)
+      // the ship-date extremes keep the arrivals' timestamp type
+      val ship = arrivals.schema("l_shipdate").dataType.sql
+      val Seq(mv, zones) = drainPartialLogs(spark, srcDir.getOrElse(sfDir),
+        arrivals, Seq(
+          PartialLog("graft_stream_mv_multi", "l_returnflag STRING, " +
+            "l_linestatus STRING, n BIGINT, s_qty DECIMAL(22,1), " +
+            s"s_price DECIMAL(22,2), mn_ship $ship, mx_ship $ship",
+            (b, _) => graft.plans.MvRewrite.mvPartial(b)),
+          PartialLog("graft_stream_zones_multi",
+            "layout STRING, bucket BIGINT, zmin DATE, zmax DATE, n BIGINT",
+            (b, _) => graft.operators.ZOrder.zoneMaps(b))))
+      (mv, zones)
     }
 
   // ---- q298: streaming PCA maintenance ----
@@ -2386,8 +2233,9 @@ object Streams {
     * continuous pipeline: each arriving micro-batch of fact rows is
     * folded to DISTRIBUTIVE partials at the MV grain (count, exact
     * DECIMAL sums, min/max — the [[graft.plans.MvRewrite]] partial
-    * set) inside the lineitem drain's `foreachBatch` and APPENDED to
-    * the summary store; the serving read merges partials with one
+    * set) by the lineitem drain and written to its batch-keyed partial
+    * log (a replayed trigger overwrites its own partial, never
+    * duplicates it); the serving read merges partials with one
     * bounded re-aggregate (count=Σn, sum=Σs — decimal addition is
     * associative, so any micro-batch slicing reconstructs the exact
     * batch answer; min=min(mn), max=max(mx)). The q229 monoid-fold pattern applied
@@ -2471,29 +2319,25 @@ object Streams {
     * it is the eviction path itself. */
   def streamStreamLeftJoin(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = stageEventsWithSentinels(spark, sfDir)
-    val name = "graft_stream_louter"
-    withStreamShufflePartitions(spark) {
-      def src(): DataFrame = spark.readStream
-        .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING")
-        .option("maxFilesPerTrigger", 1).parquet(dir)
-      val views = src().where(col("event_type") === "view")
-        .select(col("user_id"), col("event_id").as("view_id"),
-          col("ts").as("view_ts"))
-        .withWatermark("view_ts", "1 hour")
-      val clicks = src().where(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-          col("ts").as("click_ts"))
-        .withWatermark("click_ts", "1 hour")
-      val q = views.join(clicks,
+    def src(): DataFrame = spark.readStream
+      .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING")
+      .option("maxFilesPerTrigger", 1).parquet(dir)
+    val views = src().where(col("event_type") === "view")
+      .select(col("user_id"), col("event_id").as("view_id"),
+        col("ts").as("view_ts"))
+      .withWatermark("view_ts", "1 hour")
+    val clicks = src().where(col("event_type") === "click")
+      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
+        col("ts").as("click_ts"))
+      .withWatermark("click_ts", "1 hour")
+    drainToMemory(spark, "graft_stream_louter", "append")(
+      views.join(clicks,
           col("user_id") === col("c_user") &&
           col("click_ts") >= col("view_ts") &&
           col("click_ts") <= col("view_ts") + expr("INTERVAL 1 HOUR"),
           "leftOuter")
-        .select("user_id", "view_id", "click_id")
-        .writeStream.outputMode("append").format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name).where(col("user_id") >= 0)
+        .select("user_id", "view_id", "click_id"))
+      .where(col("user_id") >= 0)
       .orderBy(col("user_id"), col("view_id"), col("click_id").asc_nulls_first)
   }
 

@@ -29,8 +29,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Why: the composed form materializes the shingle array, a distinct
   * pass, a digest array, and 4 sliced arrays per band per doc — this
   * allocates none of them. Signature building is the dominant cost of
-  * corpus dedup; at 100k docs (ExplainAudit) the fused form measures
-  * 2.3 s vs 15.3 s composed.
+  * corpus dedup; at 100k docs (sf0.1 text, 16 local cores) the fused form
+  * measured 2.3 s vs 15.3 s composed.
   */
 case class MinHashBandHashes(child: Expression, numHashes: Int, bands: Int,
     shingleWidth: Int)

@@ -514,7 +514,7 @@ class StreamsSpec extends SparkSpecBase {
       "streamed drift maintenance must reach the batch refresh decision")
   }
 
-  test("embeddings refresh: both drained policies over a fresh one-file staging run in at most 24 Spark jobs") {
+  test("embeddings refresh: both drained policies over a fresh one-file staging run in at most 23 Spark jobs") {
     // the benchmark's refresh op: one arrival file, one trigger, then
     // both decisions (one corpus pass before the stream, the four
     // maintainers' writes per trigger, the read-backs and decisions
@@ -526,7 +526,43 @@ class StreamsSpec extends SparkSpecBase {
         Streams.streamRefreshPolicy(spark, sf001, Some(dir))
       }
     info(s"refresh jobs: $jobs")
-    assert(jobs <= 24, s"the embeddings refresh launched $jobs Spark jobs")
+    assert(jobs <= 23, s"the embeddings refresh launched $jobs Spark jobs")
+  }
+
+  test("document multi-drain: one drain over a fresh 3-file staging runs in at most 236 Spark jobs") {
+    // the shared fixture's drain builds the session's corpus statistics
+    // first, so the count below is the drain's own: three triggers, each
+    // writing its partials from one checkpointed batch, then the read-backs,
+    // checkpoints and guard statistics
+    docDrain
+    val dir = staged("graft_mb_docs_jobs", Tables.documents(spark, sf001))
+    val (_, jobs) = org.apache.spark.sql.graftshim.ListenerSync
+      .countJobs(spark.sparkContext) {
+        Streams.streamMultiIndexes(spark, sf001, Some(dir), Some(1))
+      }
+    info(s"multi-drain jobs: $jobs")
+    assert(jobs <= 236, s"the document multi-drain launched $jobs Spark jobs")
+  }
+
+  test("q314: an arrival file holding no query row serves nothing; the drain still equals batch q303") {
+    val emb = Tables.embeddings(spark, sf001)
+    val noQuery = pmod(col("vec_id"), lit(graft.operators.IvfPq.batchQueryMod)) =!= 0 &&
+      pmod(col("vec_id"), lit(2)) === 0
+    val dir = java.nio.file.Files.createTempDirectory("graft_serve_noquery").toString
+    emb.where(noQuery).coalesce(1).write.mode("append").parquet(dir)
+    emb.where(!noQuery).coalesce(1).write.mode("append").parquet(dir)
+    val streamed = rows(Streams.streamBatchServe(spark, sf001, Some(dir), Some(1)))
+    val batch = rows(SparkEntry.queries("q303_ivfpq_batch_serve")(spark, sf001))
+    assert(streamed.nonEmpty && streamed === batch,
+      "a trigger with no query must not break the per-trigger serve")
+    // both triggers wrote their partial; the query-free one is empty
+    val served = Option(new java.io.File(graft.operators.Formats.scratchDir(
+        "graft_stream_serve", dir)).listFiles()).toSeq.flatten
+      .filter(_.getName.startsWith("batch="))
+      .map(f => spark.read.schema("query_id BIGINT, rank INT, vec_id BIGINT, exact_dist DOUBLE")
+        .parquet(f.toString).count())
+    assert(served.sorted.headOption.contains(0L) && served.size === 2,
+      s"expected an empty and a served trigger partial, got row counts $served")
   }
 
   test("q357: a srcDir that does not re-stage the centroid corpus fails the coverage guard, naming both counts") {
