@@ -41,7 +41,10 @@ object Predictor {
     val Array(train, test) = data.randomSplit(Array(0.8, 0.2), seed = 42)
       .map(_.persist())
     try {
-      val assembler = new VectorAssembler()
+      // a fixed uid: the assembler names its cast columns `<col>_double_<uid>`
+      // and that name is spelled into the generated code of every plan over
+      // its output, so a random uid made each fit compile new classes
+      val assembler = new VectorAssembler("graft_vecAssembler")
         .setInputCols(features).setOutputCol("features")
       val rf = new RandomForestRegressor()
         .setNumTrees(numTrees).setSeed(42)

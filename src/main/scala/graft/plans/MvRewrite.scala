@@ -102,7 +102,7 @@ object MvRewrite {
           max(col("l_shipdate")).as("mx_ship"))
         .coalesce(1)
         .write.mode("overwrite").parquet(path)
-      (path, spark.read.parquet(path))
+      (path, Tables.parquet(spark, path))
     }
 
   /** Install the rewrite rule for `spark`, run `body`, restore the

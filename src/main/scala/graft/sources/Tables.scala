@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ParquetFooterSchema
 
 /** Parquet table loaders for the driver testdata star schema
   * (TESTDATA.md / FIXTURES.md §C). One parquet file per table under
@@ -19,7 +20,13 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** Read with the schema of the table's footer, read on the driver
+    * (`graftshim.ParquetFooterSchema`): the schema `spark.read.parquet`
+    * would infer, without its inference job. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(ParquetFooterSchema.read(spark, path)).parquet(path)
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
@@ -68,9 +75,8 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
-  /** The embeddings table's schema, for readers that must declare it up
-    * front (the file stream) or that skip the footer-inference job (the
-    * embeddings drain's corpus pass). */
+  /** The embeddings table's schema, for the file stream, which must
+    * declare it up front. */
   val embeddingsSchema = "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
 
   /** Register every table as a temp view so spark.sql(...) works. */

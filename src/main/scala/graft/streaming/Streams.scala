@@ -522,12 +522,6 @@ object Streams {
     readArrivals(spark, sfDir, "embeddings", "graft_stream_emb", srcDir,
       maxFilesPerTrigger, Some(graft.sources.Tables.embeddingsSchema))
 
-  /** The `sfDir` embeddings corpus read with its known schema (no
-    * schema-inference job). */
-  private def readEmbeddings(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.schema(graft.sources.Tables.embeddingsSchema)
-      .parquet(s"$sfDir/embeddings.parquet")
-
   /** STREAMING ANN index ingest: q140's append path run inside
     * foreachBatch — the live counterpart of batch index maintenance,
     * completing the index lifecycle (build q139 → append q140 →
@@ -605,7 +599,7 @@ object Streams {
       srcDir: Option[String], maxFilesPerTrigger: Option[Int],
       scratch: String, probes: Int): DataFrame = {
     import graft.operators.{IvfAnn, IvfPq}
-    val emb = readEmbeddings(spark, sfDir)
+    val emb = graft.sources.Tables.embeddings(spark, sfDir)
     val centroids = IvfAnn.fixedCentroids(emb, IvfAnn.fixedStride)
     val fullPath = IvfPq.codesSegment(spark, sfDir, "full",
       IvfAnn.assign(emb, centroids))
@@ -762,7 +756,7 @@ object Streams {
       import graft.operators.{Compaction, IvfAnn, IvfPq, Similarity}
       import org.apache.spark.sql.graftshim.TopKByScore
       val corpus = org.apache.spark.sql.Observation()
-      val sample = readEmbeddings(spark, sfDir)
+      val sample = graft.sources.Tables.embeddings(spark, sfDir)
         .observe(corpus, count(lit(1)).as("rows"))
         .where(IvfAnn.refitFilter)
         .select("vec_id", "embedding", "label")

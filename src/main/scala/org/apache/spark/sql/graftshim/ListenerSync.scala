@@ -3,6 +3,7 @@ package org.apache.spark.sql.graftshim
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Deterministic listener-bus drain for job-count assertions.
@@ -45,5 +46,18 @@ object ListenerSync {
       waitUntilEmpty(sc, 30000L)
       (r, jobs.get())
     } finally sc.removeSparkListener(l)
+  }
+
+  /** `f`'s result and the number of classes Spark's code generator
+    * compiled while it ran: a lookup that hits the generated-class cache
+    * compiles nothing. The count is JVM-wide (every compile, driver or
+    * task thread, bumps one histogram), so run `f` with no other work in
+    * the JVM. Compiles happen inside the jobs `f` waits on; no drain is
+    * needed. */
+  def countCompiles[T](f: => T): (T, Long) = {
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    val r = f
+    (r, compiles.getCount - before)
   }
 }
