@@ -318,39 +318,30 @@ object ScaleBench {
     docs.unpersist()
     if (budgetCut("connected-components")) return out.toSeq
 
-    // ---- connected-components physics (q77 vs q133) ----
+    // ---- connected components (star contraction) ----
     // cluster-shaped graph (the near-dup regime: 25k size-4 stars,
-    // diameter 2): both algorithms converge in a handful of rounds.
+    // diameter 2): converges in a handful of rounds.
     val clusterEdges = spark.range(100000)
       .select(col("id").as("doc_a"), (col("id") - pmod(col("id"), lit(4))).as("doc_b"))
       .where(pmod(col("id"), lit(4)) =!= 0)
     val ((starLabels, starRounds), tStarCluster) =
       time(StarComponents.connectedComponentsStar(clusterEdges))
     starLabels.unpersist()
-    val (propLabels, tPropCluster) = time {
-      val l = Dedup.connectedComponents(clusterEdges); l.count(); l
-    }
-    propLabels.unpersist()
-    // adversarial chain (20k-node path, diameter 2*10^4): star stays
-    // logarithmic; propagation under a 30-round cap must give up —
-    // the measured separation behind shipping BOTH forms.
+    // adversarial chain (20k-node path, diameter 2*10^4): contraction
+    // stays logarithmic in rounds, where a diameter-bound algorithm
+    // would need 2*10^4
     val pathEdges = spark.range(19999)
       .select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
     val ((starPathLabels, starPathRounds), tStarPath) =
       time(StarComponents.connectedComponentsStar(pathEdges))
     starPathLabels.unpersist()
-    val propPathConverged =
-      try { Dedup.connectedComponents(pathEdges, maxIters = 30).unpersist(); 1.0 }
-      catch { case _: IllegalStateException => 0.0 }
     out ++= Seq(
       "cc_cluster_nodes" -> 100000.0,
       "cc_star_rounds_cluster" -> starRounds.toDouble,
       "cc_star_sec_cluster" -> tStarCluster,
-      "cc_prop_sec_cluster" -> tPropCluster,
       "cc_path_nodes" -> 20000.0,
       "cc_star_rounds_path" -> starPathRounds.toDouble,
-      "cc_star_sec_path" -> tStarPath,
-      "cc_prop_path_converged_at30" -> propPathConverged)
+      "cc_star_sec_path" -> tStarPath)
 
     if (budgetCut("ann-asymptotics")) return out.toSeq
     // ---- ANN asymptotics ----

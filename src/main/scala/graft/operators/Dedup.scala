@@ -855,110 +855,12 @@ object Dedup {
       .orderBy("simhash")
   }
 
-  /** Connected components over an undirected edge list by iterative
-    * min-label propagation: each node adopts the smallest label among
-    * itself and its neighbors until fixpoint. The driver loop only
-    * controls ITERATION COUNT (bounded by component diameter); the data
-    * never leaves the cluster — the standard Spark shape for iterative
-    * graph algorithms. Edges here are the Jaccard-verified near-dup
-    * pairs, which are tiny relative to the corpus by construction. */
-  /** NOTE: the returned label relation is persisted (its lineage is
-    * the whole iterative chain); the caller owns releasing it with
-    * `.unpersist()` — q77 memoizes one per (session, corpus). */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
-    val spark = pairs.sparkSession
-    // the fixpoint loop runs many tiny jobs over the (small) pair set:
-    // size its shuffle parallelism to the data, not the CPU count —
-    // per-iteration scheduling overhead dominates otherwise. Restored
-    // after the loop; batch queries keep their tuning. NOTE: the conf
-    // is session-global, so a query running CONCURRENTLY on the same
-    // SparkSession would be re-tuned mid-flight — safe under the
-    // single-threaded driver harness; a multi-tenant driver should run
-    // this on spark.newSession() (session-scoped conf, shared catalog).
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevPartitions = spark.conf.get(partKey)
-    spark.conf.set(partKey, "8")
-    // the edge list is read 2x per iteration — persist it for the
-    // duration of the fixpoint loop (released before returning; every
-    // iteration's label relation is materialized by its convergence
-    // check, so the final labels survive the unpersist)
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .persist()
-    // each generation is localCheckpoint-ed (not persist-ed): the next
-    // label plan references the previous one ~2.5x (union + join + the
-    // convergence check), so an un-truncated lineage grows
-    // EXPONENTIALLY in iterations — by ~18 rounds the logical tree
-    // alone renders to gigabytes and Catalyst analysis dwarfs
-    // execution. Caching bounds the RUNTIME; only checkpointing
-    // bounds the PLAN (same pattern as Bpe and StarComponents).
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-    var converged = false
-    var i = 0
-    try while (!converged && i < maxIters) {
-      // each node pulls the min label over {self} ∪ neighbors
-      val viaNeighbors = edges
-        .join(labels.withColumnRenamed("node", "dst2"), col("dst") === col("dst2"))
-        .select(col("src").as("node"), col("label"))
-      val next = labels.select(col("node"), col("label"))
-        .union(viaNeighbors)
-        .groupBy("node").agg(min(col("label")).as("label"))
-        .localCheckpoint()
-      val changed = next.join(labels.withColumnRenamed("label", "old"), "node")
-        .where(col("label") =!= col("old")).limit(1).count()
-      // Checkpoints.release, not unpersist: a checkpointed frame's
-      // unpersist() is a CacheManager no-op, its blocks would wait on GC
-      org.apache.spark.sql.graftshim.Checkpoints.release(labels)
-      labels = next
-      converged = changed == 0
-      i += 1
-    } finally spark.conf.set(partKey, prevPartitions)
-    // min-label propagation needs O(component diameter) rounds: a
-    // silent partial result would surface only as wrong cluster ids,
-    // so a non-converged exit is an error, never a return value —
-    // with its cached relations released first (nobody owns them
-    // after a throw)
-    if (!converged) {
-      edges.unpersist()
-      org.apache.spark.sql.graftshim.Checkpoints.release(labels)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIters iterations " +
-          "(component diameter exceeds maxIters)")
-    }
-    // the final generation is checkpoint-backed, so the caller's
-    // contractual unpersist() wouldn't free it — re-expose it as a
-    // CacheManager-persisted relation (built once from the checkpoint
-    // blocks, which are then dropped).
-    // Cluster-mode tradeoff: localCheckpoint truncated the lineage, so
-    // once the underlying blocks are released the persisted labels
-    // relation is UNRECOMPUTABLE — an executor loss after this point
-    // fails the job instead of recomputing. Acceptable in local mode
-    // (no executor churn); a multi-executor deployment should either
-    // keep the checkpoint blocks (skip releaseUnderlying) or use
-    // reliable checkpoint() to HDFS so recompute reads storage.
-    // Same pattern/tradeoff in StarComponents.connectedComponentsStar.
-    labels.persist()
-    labels.count()
-    org.apache.spark.sql.graftshim.Checkpoints.releaseUnderlying(labels)
-    edges.unpersist()
-    labels
-  }
-
   /** Component labels per (session, corpus) — bounded like the other
     * indexes, so repeated q77 runs don't accumulate persisted loops. */
   private val componentIndex =
     new graft.spark.SessionMemo[String, DataFrame](
       "dedup.components")(_.unpersist(): Unit)
 
-  /** Near-dup CLUSTERS: transitive closure of the verified pair set.
-    * The drop-doc_b rule (q72) keeps per-pair minima; this yields the
-    * canonical cluster id (= min doc_id in the component) and size —
-    * the "keep one representative per cluster" contract a curation
-    * pipeline actually wants. Oracle: DuckDB recursive CTE reachability. */
-  /** The q77 label-derivation CTE chain (band join → jaccard verify →
-    * recursive reachability → min-label), shared verbatim by q77 and
-    * the representative-selection query (q161). */
   /** Jaccard-verified pair CTE chain (bands → candidates → verify) —
     * the SQL twin of [[verifiedPairs]], shared by the component and
     * PageRank oracles. */
@@ -987,6 +889,9 @@ object Dedup {
       .where(col("jaccard") >= 0.9)
       .select("doc_a", "doc_b")
 
+  /** The q77 label-derivation CTE chain (band join → jaccard verify →
+    * recursive reachability → min-label), shared verbatim by q77 and
+    * the representative-selection query (q161). */
   private val componentLblCte: String =
     s"""$pairsCte,
        |edges AS (
@@ -1005,17 +910,19 @@ object Dedup {
   private[operators] def componentLblCteShared: String = componentLblCte
 
   /** Verified-pair connected-component labels (node, label), built
-    * once per (session, corpus). */
+    * once per (session, corpus) by [[StarComponents.connectedComponentsStar]]
+    * and persisted; the memo owns them, and every consumer of the
+    * near-dup clusters reads this one copy. */
   private[graft] def indexedComponents(
       s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    componentIndex.getOrElseUpdate(s, d)({
-      val pairs = withJaccardToks(
-          candidatePairsFromBands(indexedBands(s, d)), indexedShingleSets(s, d))
-        .where(col("jaccard") >= 0.9)
-        .select("doc_a", "doc_b")
-      connectedComponents(pairs)
-    })
+    componentIndex.getOrElseUpdate(s, d)(
+      StarComponents.connectedComponentsStar(verifiedPairs(s, d))._1)
 
+  /** Near-dup CLUSTERS: transitive closure of the verified pair set.
+    * The drop-doc_b rule (q72) keeps per-pair minima; this yields the
+    * canonical cluster id (= min doc_id in the component) and size —
+    * the "keep one representative per cluster" contract a curation
+    * pipeline actually wants. Oracle: DuckDB recursive CTE reachability. */
   val qDedupComponents: GraftQuery = GraftQuery(
     "q77_dedup_components",
     s"""WITH RECURSIVE $componentLblCte

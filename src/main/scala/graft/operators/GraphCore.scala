@@ -57,7 +57,9 @@ object GraphCore {
     * past it). */
   val maxHops = 8
 
-  private def sym(pairs: DataFrame): DataFrame =
+  /** The symmetric edge view (u, v) of an undirected (doc_a, doc_b)
+    * pair relation: both directions of every pair. */
+  private[operators] def sym(pairs: DataFrame): DataFrame =
     pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
       .unionByName(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
 
@@ -233,8 +235,9 @@ object GraphCore {
        |FROM lbl l JOIN hops h ON h.node = l.doc_id
        |ORDER BY doc_id""".stripMargin) { (s, d) =>
     val labels = Dedup.indexedComponents(s, d)
+    // bfsHops counts the edges to size its loop; that count
+    // materializes the persist
     val e0 = sym(Dedup.verifiedPairs(s, d).localCheckpoint()).persist()
-    e0.count()
     try {
       val seeds = labels.select(col("label").as("node")).distinct()
       bfsHops(e0, seeds)
@@ -249,7 +252,7 @@ object GraphCore {
     * every node adopts the most frequent label among its NEIGHBORS
     * (count desc, then smallest label — fully deterministic, no
     * engine-arbitrary tie). */
-  private[graft] def lpaRound(edges: DataFrame, labels: DataFrame): DataFrame = {
+  private def lpaRound(edges: DataFrame, labels: DataFrame): DataFrame = {
     val counts = edges
       .join(labels.withColumnRenamed("node", "v2"), col("v") === col("v2"))
       .groupBy(col("u").as("node"), col("lbl"))
@@ -261,6 +264,29 @@ object GraphCore {
   }
 
   private val lpaRounds = 4
+
+  /** `rounds` synchronous [[lpaRound]]s over symmetric `edges`, every
+    * node starting with its own id. Returns (node, lbl). Each round
+    * references its predecessor exactly once (one join), so lineage
+    * grows linearly: a barrier every SECOND round (and after the last)
+    * is enough, and each barrier releases the one it supersedes — the
+    * last stays under the returned plan. */
+  private[graft] def lpa(edges: DataFrame, rounds: Int): DataFrame =
+    graft.spark.Sessions.withLoopPartitions(edges.sparkSession, edges.count()) {
+      val release = org.apache.spark.sql.graftshim.Checkpoints.release _
+      var labels = edges.select(col("u").as("node")).distinct()
+        .select(col("node"), col("node").as("lbl"))
+      var lastCkpt: Option[DataFrame] = None
+      for (r <- 1 to rounds) {
+        labels = lpaRound(edges, labels)
+        if (r % 2 == 0 || r == rounds) {
+          labels = labels.localCheckpoint()
+          lastCkpt.foreach(release)
+          lastCkpt = Some(labels)
+        }
+      }
+      labels
+    }
 
   private def lpaRoundSql(prev: String, cur: String): String =
     s"""${cur}_cnt AS MATERIALIZED (
@@ -286,9 +312,9 @@ object GraphCore {
     *
     * Scale (100 TB): each round is one edge-keyed join + one
     * (node, label) aggregate + one per-node top-1 window over the
-    * NEIGHBOR-LABEL census (bounded by degree, not corpus);
-    * localCheckpoint truncates the per-round lineage (the q248/q133
-    * iterative discipline). R is a constant — cost is R·O(edges),
+    * NEIGHBOR-LABEL census (bounded by degree, not corpus); [[lpa]]
+    * truncates the lineage every second round and releases each
+    * superseded barrier. R is a constant — cost is R·O(edges),
     * diameter-independent by construction. */
   val qLabelPropagation: GraftQuery = GraftQuery(
     "q268_label_propagation",
@@ -304,24 +330,12 @@ object GraphCore {
        |SELECT l.node AS doc_id, l.lbl AS community, s.community_size
        |FROM lp$lpaRounds l JOIN sizes s ON s.lbl = l.lbl
        |ORDER BY doc_id""".stripMargin) { (s, d) =>
-    val e0 = sym(Dedup.verifiedPairs(s, d).localCheckpoint())
-    // loop discipline (the q180 pattern): shuffles sized to the graph,
-    // and a barrier every SECOND round — each round references its
-    // predecessor exactly once (one join), so lineage grows linearly
-    // and a per-round eager materialization just pays job launches
-    graft.spark.Sessions.withLoopPartitions(s, e0.count()) {
-      var labels = e0.select(col("u").as("node")).distinct()
-        .select(col("node"), col("node").as("lbl"))
-      for (r <- 1 to lpaRounds) {
-        labels = lpaRound(e0, labels)
-        if (r % 2 == 0) labels = labels.localCheckpoint()
-      }
-      val sizes = labels.groupBy("lbl").agg(count(lit(1)).as("community_size"))
-      labels.join(sizes, "lbl")
-        .select(col("node").as("doc_id"), col("lbl").as("community"),
-          col("community_size"))
-        .orderBy("doc_id")
-    }
+    val labels = lpa(sym(Dedup.verifiedPairs(s, d).localCheckpoint()), lpaRounds)
+    val sizes = labels.groupBy("lbl").agg(count(lit(1)).as("community_size"))
+    labels.join(sizes, "lbl")
+      .select(col("node").as("doc_id"), col("lbl").as("community"),
+        col("community_size"))
+      .orderBy("doc_id")
   }
 
   def all: Seq[GraftQuery] = Seq(qKcore, qBfsDepth, qLabelPropagation)

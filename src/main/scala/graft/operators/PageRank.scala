@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.GraftQuery
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** PageRank over the Jaccard-verified near-dup graph
@@ -19,21 +18,13 @@ import org.apache.spark.sql.functions._
   * partitioning, or summation order. Fixed ROUNDS iterations, unrolled
   * in the oracle as a CTE chain (the q180/q219 convention).
   *
-  * Scale (100 TB):
-  *  - Each round is ONE hash aggregate over the edge relation (group
-  *    by destination) plus a node-keyed left join — the standard
-  *    synchronous-PageRank shape; nothing is quadratic and no state
-  *    ever leaves the cluster.
-  *  - The rank state is node-keyed and co-partitioned with the degree
-  *    relation (carried inside the same row), so the per-round join
-  *    is rank-state x edges only.
-  *  - Per-round lineage is localCheckpoint-truncated with deterministic
-  *    block release (the q133 discipline) — plan depth stays O(1) in
-  *    rounds, not O(rounds).
-  *  - The symmetric near-dup graph has no dangling nodes (every node
-  *    has deg >= 1 by construction), so no dangling-mass redistribution
-  *    term is needed; a general web-graph deployment would add the
-  *    standard dangling-sum broadcast.
+  * The loop is [[StarComponents.pageRankInt]], q180's integer power
+  * iteration, run at this query's scale (10^12) and round count (5):
+  * one engine loop for both, two oracles that unroll their own rounds.
+  * The symmetric near-dup graph has no dangling nodes (every node has
+  * deg >= 1 by construction), so every node receives mass each round
+  * and the oracle's LEFT JOIN/COALESCE never fires; a general
+  * web-graph deployment would add the standard dangling-sum broadcast.
   */
 object PageRank {
 
@@ -44,10 +35,6 @@ object PageRank {
   val initR = 1000000000000L
 
   private val teleport = initR * 15 / 100
-
-  private def sym(pairs: DataFrame): DataFrame =
-    pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .unionByName(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
 
   /** One unrolled oracle round: shares = prev rank div degree, summed
     * per destination; damped integer update. DuckDB SUM(BIGINT) is
@@ -82,51 +69,12 @@ object PageRank {
        |SELECT d.node AS doc_id, CAST(d.deg AS BIGINT) AS deg, p.r AS pagerank
        |FROM deg d JOIN pr$rounds p ON p.node = d.node
        |ORDER BY doc_id""".stripMargin) { (s, d) =>
-    val release = org.apache.spark.sql.graftshim.Checkpoints.release _
-    // checkpoint the pairs BEFORE the symmetric union: sym() puts two
-    // copies of the candidate-join + Jaccard-verify pipeline in the
-    // plan, so the persist's materialization job ran the verify twice
-    val e0 = sym(Dedup.verifiedPairs(s, d).localCheckpoint()).persist()
-    val nEdges = e0.count()
-    try {
-      // loop discipline (the q180 pattern): shuffles sized to the
-      // graph, and a barrier every FOURTH generation — each rank
-      // generation references its predecessor exactly once, so lineage
-      // grows linearly and per-round eager checkpoints just pay job
-      // launches on a 10^2-node relation
-      graft.spark.Sessions.withLoopPartitions(s, nEdges) {
-        val ckptEvery = 4
-        val deg = e0.groupBy("u").agg(count(lit(1)).as("deg"))
-          .select(col("u").as("node"), col("deg"))
-        // state carries the static degree with the rank so each round is
-        // a single edges-x-state join plus one destination aggregate
-        var state = deg.select(col("node"), lit(initR).as("r"), col("deg"))
-          .localCheckpoint()
-        var lastCkpt = state
-        for (i <- 1 to rounds) {
-          val shares = e0
-            .join(state, e0("u") === state("node"))
-            .select(col("v"), expr("r div deg").as("share"))
-          val contrib = shares.groupBy("v").agg(sum(col("share")).as("contrib"))
-          var next = state
-            .join(contrib, state("node") === contrib("v"), "left")
-            .select(
-              col("node"),
-              (lit(teleport) + expr("85 * coalesce(contrib, 0L) div 100")).as("r"),
-              col("deg"))
-          if (i % ckptEvery == 0 || i == rounds) {
-            next = next.localCheckpoint()
-            release(lastCkpt)
-            lastCkpt = next
-          }
-          state = next
-        }
-        state
-          .select(col("node").as("doc_id"), col("deg").cast("bigint").as("deg"),
-            col("r").as("pagerank"))
-          .orderBy("doc_id")
-      }
-    } finally e0.unpersist(): Unit
+    // checkpoint the pairs BEFORE the symmetric union: it puts two
+    // copies of the candidate-join + Jaccard-verify pipeline in the plan
+    StarComponents.pageRankInt(
+        Dedup.verifiedPairs(s, d).localCheckpoint(), rounds, initR)
+      .select(col("node").as("doc_id"), col("deg"), col("r").as("pagerank"))
+      .orderBy("doc_id")
   }
 
   val all: Seq[GraftQuery] = Seq(qPageRank)

@@ -6,76 +6,64 @@ import org.apache.spark.sql.functions._
 
 /** Connected components by alternating large-star / small-star
   * contraction (Kiveris et al., "Connected Components in MapReduce and
-  * Beyond", SoCC'14) — the diameter-INDEPENDENT scale path next to
-  * [[Dedup.connectedComponents]]'s min-label propagation.
+  * Beyond", SoCC'14) — the engine's one connected-components loop,
+  * behind q77/q133 ([[Dedup.indexedComponents]]) and the value-grain
+  * tiers' clusters ([[ValueTier.clusters]]).
   *
-  * Why a second algorithm: min-label propagation needs O(component
-  * diameter) rounds — fine for near-dup clusters (tiny, dense), fatal
-  * for chain-shaped components (a 1M-node path needs 1M rounds). The
-  * star algorithm rewires every node toward its neighborhood minimum
-  * each round, provably converging in O(log² n) rounds regardless of
-  * topology (in practice < 10 for any input we can generate) to a
-  * forest of stars centered at each component's minimum id.
-  * StarComponentsSpec plants a 200-node path: this converges in ≤ 8
-  * rounds where the propagation form provably cannot within 15.
+  * Why contraction and not min-label propagation: propagation needs
+  * O(component diameter) rounds — fine for near-dup clusters (tiny,
+  * dense), fatal for chain-shaped components (a 1M-node path needs 1M
+  * rounds). The star algorithm rewires every node toward its
+  * neighborhood minimum each round, provably converging in O(log² n)
+  * rounds regardless of topology (in practice < 10 for any input we
+  * can generate) to a forest of stars centered at each component's
+  * minimum id. It was measured no slower on the near-dup shape either
+  * (docs/SCALE.md), so propagation was retired.
   *
   * One round = two grouped aggregations + two shuffle joins, all keyed
   * by node id; edge-set cardinality never grows above the input edge
   * count + node count (each node contributes its min edge), so the
   * per-round shuffle is bounded by the input — the 100 TB shape.
   * Convergence is detected by set equality (count + empty except) on
-  * the canonicalized edge list, and non-convergence THROWS like the
-  * propagation form — a silent partial result would surface only as
-  * wrong cluster ids downstream.
+  * the canonicalized edge list, and non-convergence THROWS — a silent
+  * partial result would surface only as wrong cluster ids downstream.
   */
 object StarComponents {
 
-  /** Undirected edges (a, b) → symmetric (u, v) view. */
-  private def sym(e: DataFrame): DataFrame =
-    e.select(col("a").as("u"), col("b").as("v"))
-      .union(e.select(col("b").as("u"), col("a").as("v")))
-
-  /** Canonical undirected form: a < b, self-loops dropped, distinct. */
+  /** Canonical undirected form: doc_a < doc_b, self-loops dropped,
+    * distinct. */
   private def canon(e: DataFrame): DataFrame =
-    e.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
+    e.select(least(col("doc_a"), col("doc_b")).as("doc_a"),
+        greatest(col("doc_a"), col("doc_b")).as("doc_b"))
+      .where(col("doc_a") =!= col("doc_b")).distinct()
 
   /** Large-star: every node connects its STRICTLY LARGER neighbors to
     * the minimum of its closed neighborhood — long tails collapse
     * toward small ids without ever disconnecting a component. */
   private def largeStar(e: DataFrame): DataFrame = {
-    val s = sym(e)
+    val s = GraphCore.sym(e)
     val mins = s.groupBy("u").agg(min("v").as("mn"))
       .select(col("u"), least(col("mn"), col("u")).as("m"))
     s.join(mins, "u").where(col("v") > col("u"))
-      .select(col("v").as("a"), col("m").as("b"))
+      .select(col("v").as("doc_a"), col("m").as("doc_b"))
   }
 
   /** Small-star: each node rewires its smaller-or-equal neighbors (and
     * itself) to its smallest neighbor. */
   private def smallStar(e: DataFrame): DataFrame = {
-    val o = e.select(greatest(col("a"), col("b")).as("u"),
-        least(col("a"), col("b")).as("v"))
+    val o = e.select(greatest(col("doc_a"), col("doc_b")).as("u"),
+        least(col("doc_a"), col("doc_b")).as("v"))
       .where(col("u") =!= col("v"))
     val mins = o.groupBy("u").agg(min("v").as("m"))
-    o.join(mins, "u").select(col("v").as("a"), col("m").as("b"))
-      .union(mins.select(col("u").as("a"), col("m").as("b")))
+    o.join(mins, "u").select(col("v").as("doc_a"), col("m").as("doc_b"))
+      .union(mins.select(col("u").as("doc_a"), col("m").as("doc_b")))
   }
 
   /** Labels every node of `pairs` (cols doc_a, doc_b) with its
     * component's minimum id. Returns (labels(node, label), rounds);
     * the labels relation is persisted and OWNED BY THE CALLER
-    * (unpersist when done) — same contract as
-    * [[Dedup.connectedComponents]]. */
+    * (unpersist when done). */
   def connectedComponentsStar(pairs: DataFrame, maxIters: Int = 25): (DataFrame, Int) = {
-    val spark = pairs.sparkSession
-    // tiny iterative relation: size the loop's shuffles to the data,
-    // not the CPU count (same session-global caveat as the propagation
-    // form — single-threaded driver harness, newSession() if shared)
-    val partKey = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(partKey)
-    spark.conf.set(partKey, "8")
     // localCheckpoint (not persist): each round's plan embeds ~10
     // copies of the previous round's (sym unions + two joins + the
     // except), so lineage grows EXPONENTIALLY in rounds — truncate it
@@ -84,86 +72,67 @@ object StarComponents {
     // release via Checkpoints (a checkpointed frame's unpersist() is a
     // CacheManager no-op; blocks would otherwise wait on GC timing)
     val release = org.apache.spark.sql.graftshim.Checkpoints.release _
-    var cur = canon(pairs.select(col("doc_a").as("a"), col("doc_b").as("b")))
-      .localCheckpoint()
+    var cur = canon(pairs).localCheckpoint()
     var n = cur.count()
-    var rounds = 0
-    var converged = false
-    try {
-      while (!converged && rounds < maxIters) {
-        val next = canon(smallStar(largeStar(cur))).localCheckpoint()
-        try {
-          val n2 = next.count()
-          // set equality: same cardinality + empty difference (both
-          // sides canonical-distinct, so one-sided except suffices)
-          converged = n2 == n && next.except(cur).limit(1).count() == 0
-          n = n2
-        } catch {
-          case t: Throwable => release(next); throw t
+    graft.spark.Sessions.withLoopPartitions(pairs.sparkSession, n) {
+      var rounds = 0
+      var converged = false
+      try {
+        while (!converged && rounds < maxIters) {
+          val next = canon(smallStar(largeStar(cur))).localCheckpoint()
+          try {
+            val n2 = next.count()
+            // set equality: same cardinality + empty difference (both
+            // sides canonical-distinct, so one-sided except suffices)
+            converged = n2 == n && next.except(cur).limit(1).count() == 0
+            n = n2
+          } catch {
+            case t: Throwable => release(next); throw t
+          }
+          release(cur)
+          cur = next
+          rounds += 1
         }
-        release(cur)
-        cur = next
-        rounds += 1
+      } catch {
+        case t: Throwable => release(cur); throw t
       }
-    } catch {
-      case t: Throwable => release(cur); throw t
-    } finally spark.conf.set(partKey, prev)
-    if (!converged) {
+      if (!converged) {
+        release(cur)
+        throw new IllegalStateException(
+          s"star contraction did not converge in $maxIters rounds")
+      }
+      // fixpoint is a star forest: every node's closed-neighborhood min
+      // IS its component min. Checkpoint before persisting: adaptive
+      // execution coalesces the checkpointed aggregate to a data-sized
+      // partition count, where a persisted plan keeps the loop width
+      // (8 tiny partitions made every warm read of the labels slower)
+      val labels = GraphCore.sym(cur).groupBy("u").agg(min("v").as("mn"))
+        .select(col("u").as("node"), least(col("mn"), col("u")).as("label"))
+        .localCheckpoint()
+        .persist()
+      labels.count() // pin before releasing the blocks it was built from
+      // Cluster-mode tradeoff: the released checkpoint blocks were
+      // labels' only recompute source — an executor loss now fails the
+      // job instead of recomputing. Local mode: fine. Multi-executor:
+      // keep the blocks or checkpoint() to reliable storage.
       release(cur)
-      throw new IllegalStateException(
-        s"star contraction did not converge in $maxIters rounds")
+      org.apache.spark.sql.graftshim.Checkpoints.releaseUnderlying(labels)
+      (labels, rounds)
     }
-    // fixpoint is a star forest: every node's closed-neighborhood min
-    // IS its component min
-    val labels = sym(cur).groupBy("u").agg(min("v").as("mn"))
-      .select(col("u").as("node"), least(col("mn"), col("u")).as("label"))
-      .persist()
-    labels.count() // pin before releasing the edges it derives from
-    // Cluster-mode tradeoff (same as Dedup.connectedComponents): the
-    // released checkpoint blocks were labels' only recompute source —
-    // an executor loss now fails the job instead of recomputing. Local
-    // mode: fine. Multi-executor: keep the blocks or checkpoint() to
-    // reliable storage.
-    release(cur)
-    (labels, rounds)
   }
 
-  /** Component labels per (session, corpus), bounded like q77's. */
-  private val index =
-    new graft.spark.SessionMemo[String, DataFrame](
-      "starcomponents.labels")(_.unpersist(): Unit)
-
-  /** Near-dup clusters via star contraction — SAME contract and SAME
-    * oracle as q77 (transitive closure of the Jaccard-verified pair
-    * set), different physics: q77's propagation pays O(diameter)
-    * rounds, this pays O(log² n). A hash match against the identical
-    * recursive-CTE oracle proves the two algorithms agree cluster-for-
-    * cluster on real pairs; StarComponentsSpec separates them on the
-    * planted topologies where diameter bites. */
+  /** q77's near-dup clusters under the star-contraction catalog name:
+    * the same labels ([[Dedup.indexedComponents]], one memo per
+    * session and corpus) and the same recursive-CTE oracle.
+    * StarComponentsSpec plants a 200-node path, which the loop closes
+    * in ≤ 10 rounds where a diameter-bound algorithm would need 199. */
   val qComponentsStar: GraftQuery = GraftQuery(
     "q133_components_star",
-    Dedup.qDedupComponents.oracle.get) { (s, d) =>
-    val labels = index.getOrElseUpdate(s, d)({
-        val pairs = Dedup.withJaccardToks(
-            Dedup.candidatePairsFromBands(Dedup.indexedBands(s, d)),
-            Dedup.indexedShingleSets(s, d))
-          .where(col("jaccard") >= 0.9)
-          .select("doc_a", "doc_b")
-        connectedComponentsStar(pairs)._1
-      })
-    labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
-      .withColumn("cluster_size",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window
-          .partitionBy("cluster_id")).cast("int"))
-      .orderBy("doc_id")
-  }
+    Dedup.qDedupComponents.oracle.get)(Dedup.qDedupComponents.fn)
 
   /** Fixed iteration count and 2^20 rank scale for q180. */
   val prIters = 8
   val prScale = 1048576L
-  /** base = ⌊0.15·2^20⌋; the damping split is 15/100, 85/100 in
-    * integer floor arithmetic. */
-  val prBase: Long = 15L * prScale / 100L
 
   /** INTEGER-ARITHMETIC PAGERANK over the Jaccard-verified near-dup
     * graph (Brin-Page damping 0.85, [[prIters]] power iterations) —
@@ -184,10 +153,10 @@ object StarComponents {
     * standard-SQL spelling of a fixed-depth loop).
     *
     * 100 TB: per-iteration cost is one edges⋈ranks hash join + one
-    * groupBy, both keyed and bounded by |E|; lineage is truncated per
-    * round (localCheckpoint, the q133 discipline); iteration count is
-    * FIXED — an ordering-stability convergence test would add a
-    * per-round driver sync for no semantic gain at 8 rounds. */
+    * groupBy, both keyed and bounded by |E|; lineage is truncated
+    * every fourth round; iteration count is FIXED — an
+    * ordering-stability convergence test would add a per-round driver
+    * sync for no semantic gain at 8 rounds. */
   val qPageRank: GraftQuery = GraftQuery(
     "q180_pagerank", {
       val base = s"""edges AS (
@@ -196,6 +165,7 @@ object StarComponents {
          |deg AS (SELECT a AS node, CAST(COUNT(*) AS BIGINT) AS deg
          |        FROM edges GROUP BY a),
          |it0 AS (SELECT node, CAST($prScale AS BIGINT) AS r FROM deg)""".stripMargin
+      val prBase = 15L * prScale / 100L
       val its = (1 to prIters).map { k =>
         s"""it$k AS (
            |  SELECT e.b AS node,
@@ -214,59 +184,41 @@ object StarComponents {
     }) { (s, d) =>
     // checkpoint before pageRankInt's symmetric union doubles the
     // verify pipeline in the persisted edge plan
-    pageRankInt(Dedup.verifiedPairs(s, d).localCheckpoint(), prIters)
+    pageRankInt(Dedup.verifiedPairs(s, d).localCheckpoint(), prIters, prScale)
       .select(col("node").as("doc_id"), col("deg"), col("r").as("rank_q20"))
       .orderBy("doc_id")
   }
 
-  /** The integer power iteration behind q180, reusable on any
-    * (doc_a, doc_b) pair relation. Returns (node, deg, r). */
-  def pageRankInt(pairs: DataFrame, iters: Int = prIters): DataFrame = {
-    val spark = pairs.sparkSession
-    // tiny iterative relation (the near-dup pair graph is Zipf-compact,
-    // ~10^2..10^3 nodes at the tested SFs): size the loop's shuffles
-    // PER ROUND to the data, not the CPU count — the star-contraction
-    // discipline (before: each round paid cores-many near-empty
-    // shuffle tasks per stage). The partition count DERIVES from the
-    // edge count (r13 verdict #6: a constant 8 funnels a 100 TB pair
-    // graph through 8 partitions): ~64k edge rows per loop partition,
-    // floor 8 (the measured sweet spot for the tested graphs), capped
-    // at 16× the session's parallelism.
-    val partKey = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(partKey)
+  /** The integer power iteration behind q180 and q248, on any
+    * (doc_a, doc_b) pair relation: every node starts at `scale`, and a
+    * round maps r to 15·scale div 100 + (85·Σ r_u div deg_u) div 100
+    * over its neighbors u. All values stay non-negative, so Spark's
+    * truncating `div` and DuckDB's floor `//` agree. Returns
+    * (node, r, deg). */
+  def pageRankInt(pairs: DataFrame, iters: Int, scale: Long): DataFrame = {
+    val base = 15L * scale / 100L
+    val edges = GraphCore.sym(pairs)
+    val deg = edges.groupBy("u").agg(count(lit(1)).as("deg"))
+    val edgesDeg = edges.join(deg, "u").persist()
     try {
-      val edges = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
-        .unionByName(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
-      val deg = edges.groupBy("a").agg(count(lit(1)).as("deg"))
-      val edgesDeg = edges.join(deg, "a").persist()
-      val nEdges = edgesDeg.count()
-      val loopParts = math.min(
-        math.max(8L, nEdges / 65536L),
-        16L * spark.sparkContext.defaultParallelism)
-      spark.conf.set(partKey, loopParts.toString)
-      val release = org.apache.spark.sql.graftshim.Checkpoints.release _
-      // Checkpoint every FOURTH generation, not every one: unlike star
-      // contraction (whose round plan embeds ~10 copies of the previous
-      // round — exponential lineage), each rank generation references
-      // its predecessor exactly ONCE (one join), so lineage grows
-      // linearly and an eager materialization barrier per round just
-      // pays 8 job launches for a 10^2-node relation. Four chained
-      // (join ⋈ groupBy) rounds per plan keeps the tree small while
-      // cutting the barrier count to iters/4. q180 isolated at sf0.1:
-      // 6.2 s (r12, per-round ckpt + cores-wide shuffles) → 5.0 s
-      // (tiny shuffles) → measured again after this change below.
-      val ckptEvery = 4
-      var ranks = deg.select(col("a").as("node"), lit(prScale).as("r"))
-        .localCheckpoint()
-      var lastCkpt = ranks
-      try {
+      graft.spark.Sessions.withLoopPartitions(pairs.sparkSession, edgesDeg.count()) {
+        val release = org.apache.spark.sql.graftshim.Checkpoints.release _
+        // Checkpoint every FOURTH generation, not every one: unlike star
+        // contraction (whose round plan embeds ~10 copies of the previous
+        // round — exponential lineage), each rank generation references
+        // its predecessor exactly ONCE (one join), so lineage grows
+        // linearly and an eager materialization barrier per round just
+        // pays a job launch for a 10^2-node relation.
+        val ckptEvery = 4
+        var ranks = deg.select(col("u").as("node"), lit(scale).as("r"))
+          .localCheckpoint()
+        var lastCkpt = ranks
         (1 to iters).foreach { i =>
-          var next = edgesDeg.join(ranks, col("a") === col("node"))
-            .select(col("b"), expr("r div deg").as("contrib"))
-            .groupBy("b")
+          var next = edgesDeg.join(ranks, col("u") === col("node"))
+            .select(col("v"), expr("r div deg").as("contrib"))
+            .groupBy("v")
             .agg(sum("contrib").as("s"))
-            .select(col("b").as("node"),
-              (lit(prBase) + expr("85 * s div 100")).as("r"))
+            .select(col("v").as("node"), (lit(base) + expr("85 * s div 100")).as("r"))
           if (i % ckptEvery == 0 || i == iters) {
             next = next.localCheckpoint()
             release(lastCkpt)
@@ -277,9 +229,9 @@ object StarComponents {
         // the final checkpointed generation rides into the caller's plan
         // (blocks bounded by the node set, freed with the session); the
         // intermediate generations were released eagerly above
-        ranks.join(deg.select(col("a").as("node"), col("deg")), "node")
-      } finally edgesDeg.unpersist(): Unit
-    } finally spark.conf.set(partKey, prev)
+        ranks.join(deg.select(col("u").as("node"), col("deg")), "node")
+      }
+    } finally edgesDeg.unpersist(): Unit
   }
 
   /** GRAPH MOTIF CENSUS over the verified near-dup graph: per node,

@@ -21,8 +21,8 @@ import org.apache.spark.sql.graftshim.Checkpoints
   *     schedule no guard aggregates;
   *   - `pairs`: banded value pairs at hamming 1..hMax, each side
   *     carrying its census count;
-  *   - `clusters`: value-node components over those pairs (the q77
-  *     min-label propagation, over near-miss VALUES only), with each
+  *   - `clusters`: value-node components over those pairs (q77's star
+  *     contraction, over near-miss VALUES only), with each
   *     cluster's value count and doc mass; singleton values are their
   *     own clusters, so `cluster_docs` re-sums to the corpus;
   *   - `batchProbe`: an arriving batch's value census probed against a
@@ -44,8 +44,8 @@ import org.apache.spark.sql.graftshim.Checkpoints
   *     summed census, never from partials.
   *
   * Release rule, one per storage kind: the corpus index and the cluster
-  * labels are persisted (`unpersist`); the census, the batch index and
-  * the cluster edge barrier are localCheckpoint-backed plan barriers
+  * labels are persisted (`unpersist`); the census and the batch index
+  * are localCheckpoint-backed plan barriers
   * with no CacheManager entry, so they go through
   * [[Checkpoints.release]] — plain unpersist is a silent no-op there
   * and repeated builds would strand checkpoint blocks.
@@ -96,18 +96,10 @@ final case class ValueTier(
     * node key in its component), `n_values`, `cluster_docs`. */
   def clusters(s: SparkSession, d: String): DataFrame = {
     val vals = census(s, d)
-    val labels = labelsMemo.getOrElseUpdate(s, (name, d)) {
-      // the edge barrier roots the loop's lineage HERE: the loop's
-      // generation release frees every LogicalRDD under the label
-      // lineage, which would otherwise include the census checkpoint
-      // the join below still reads
-      val edges = scheme.pairsIndexed(vals, carry = Seq("node"))
-        .select(col("node_a").as("doc_a"), col("node_b").as("doc_b"))
-        .localCheckpoint()
-      val l = Dedup.connectedComponents(edges)
-      Checkpoints.release(edges)
-      l
-    }
+    val labels = labelsMemo.getOrElseUpdate(s, (name, d))(
+      StarComponents.connectedComponentsStar(
+        scheme.pairsIndexed(vals, carry = Seq("node"))
+          .select(col("node_a").as("doc_a"), col("node_b").as("doc_b")))._1)
     val w = Window.partitionBy("cluster_id")
     vals.rows.join(labels, Seq("node"), "left")
       .withColumn("cluster_id", coalesce(col("label"), col("node")))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, MinHashScheme}
+import graft.operators.{Dedup, MinHashScheme, StarComponents}
 import graft.functions.TextFunctions
 import graft.models.TaxiModels
 import org.apache.spark.sql.functions._
@@ -115,7 +115,7 @@ class DedupSpec extends SparkSpecBase {
   test("connected components: chains collapse to min label, disjoint clusters stay apart") {
     // chain 1-2-3-4 (via consecutive pairs) + separate pair 10-11
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("doc_a", "doc_b")
-    val labels = Dedup.connectedComponents(pairs)
+    val (labels, _) = StarComponents.connectedComponentsStar(pairs)
     val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     labels.unpersist()
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
@@ -138,7 +138,7 @@ class DedupSpec extends SparkSpecBase {
         val root = find(n)
         n -> nodes.filter(m => find(m) == root).min
       }.toMap
-      val labels = Dedup.connectedComponents(edges.toDF("doc_a", "doc_b"))
+      val (labels, _) = StarComponents.connectedComponentsStar(edges.toDF("doc_a", "doc_b"))
       val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       labels.unpersist()
       assert(got === expected)

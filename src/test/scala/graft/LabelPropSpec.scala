@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.GraphCore
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** LPA on planted topology: two 4-cliques joined by ONE bridge edge
   * must keep distinct labels (where connected components would merge
@@ -14,12 +13,9 @@ class LabelPropSpec extends SparkSpecBase {
   private def sym(ps: Seq[(Long, Long)]): DataFrame =
     ps.toDF("u", "v").unionByName(ps.map(_.swap).toDF("u", "v"))
 
-  private def lpa(edges: DataFrame, rounds: Int): Map[Long, Long] = {
-    var labels = edges.select(col("u").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl"))
-    for (_ <- 1 to rounds) labels = GraphCore.lpaRound(edges, labels)
-    labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-  }
+  private def lpa(edges: DataFrame, rounds: Int): Map[Long, Long] =
+    GraphCore.lpa(edges, rounds).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("two bridged 4-cliques keep separate labels; CC would merge them") {
     val cliqueA = for (a <- 1L to 4L; b <- (a + 1) to 4L) yield (a, b)
@@ -41,5 +37,19 @@ class LabelPropSpec extends SparkSpecBase {
     // exact fixed alternation rather than accidental convergence.
     assert(lpa(e, 2) == Map(7L -> 7L, 9L -> 9L))
     assert(lpa(e, 1) == Map(7L -> 9L, 9L -> 7L))
+  }
+
+  test("the LPA loop releases every superseded checkpoint generation") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val clique = for (a <- 1L to 6L; b <- (a + 1) to 6L) yield (a, b)
+    val labels = GraphCore.lpa(sym(clique :+ ((6L, 20L))), 4)
+    labels.count()
+    org.apache.spark.sql.graftshim.Checkpoints.release(labels)
+    // the returned generation was just released; every barrier the
+    // loop superseded must already be gone
+    val leaked = sc.getPersistentRDDs.keySet.diff(before)
+    assert(leaked.isEmpty,
+      s"loop leaked persisted RDDs: ${leaked.mkString(", ")}")
   }
 }

@@ -1,12 +1,14 @@
 package graft
 
-import graft.operators.{Dedup, StarComponents}
+import graft.operators.{PageRank, StarComponents}
 import org.apache.spark.sql.functions._
 
-/** Large-star/small-star connected components: equivalence with the
-  * min-label propagation form on arbitrary graphs, and the round-count
-  * separation that motivates it — contraction is diameter-independent,
-  * propagation is not. */
+/** Large-star/small-star connected components, the engine's one
+  * connected-components loop: the round count stays logarithmic on a
+  * long path, components merge and separate as planted, and the loop
+  * releases its checkpoints. Equality with a brute-force union-find on
+  * random graphs is DedupSpec's property; also the integer PageRank
+  * and the motif census over the same pair graphs. */
 class StarComponentsSpec extends SparkSpecBase {
 
   private def pairsDf(edges: Seq[(Long, Long)]) = {
@@ -17,8 +19,8 @@ class StarComponentsSpec extends SparkSpecBase {
   private def labelMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-  test("200-node path: star contraction converges in O(log n) rounds " +
-      "where propagation provably cannot") {
+  test("200-node path: star contraction converges in O(log n) rounds, " +
+      "far below the path's diameter") {
     val path = pairsDf((0L until 199L).map(i => (i, i + 1)))
     val (labels, rounds) = StarComponents.connectedComponentsStar(path)
     try {
@@ -28,27 +30,6 @@ class StarComponentsSpec extends SparkSpecBase {
       assert(m.size === 200)
       assert(m.values.toSet === Set(0L), "every path node joins component 0")
     } finally labels.unpersist()
-    // the propagation form needs ~diameter rounds: 6 << 199 must throw
-    // (bounded low — unlike the star form it does NOT truncate lineage,
-    // so every extra round doubles its logical plan)
-    intercept[IllegalStateException] {
-      Dedup.connectedComponents(path, maxIters = 6).unpersist()
-    }
-  }
-
-  test("property: star labels equal propagation labels on random graphs") {
-    val rnd = new scala.util.Random(42)
-    for (trial <- 1 to 5) {
-      val n = 30 + trial * 10
-      val edges = Seq.fill(n)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter { case (a, b) => a != b }
-      val df = pairsDf(edges)
-      val (star, _) = StarComponents.connectedComponentsStar(df)
-      val prop = Dedup.connectedComponents(df)
-      try {
-        assert(labelMap(star) === labelMap(prop), s"trial $trial differs")
-      } finally { star.unpersist(); prop.unpersist() }
-    }
   }
 
   test("two cliques plus a bridge merge into one component; an isolated " +
@@ -92,30 +73,34 @@ class StarComponentsSpec extends SparkSpecBase {
   test("q180: integer PageRank matches a driver recomputation on a planted star") {
     // hub 0 with 6 leaves plus a detached pair (8, 9)
     val pairs = pairsDf((1L to 6L).map(l => (0L, l)) :+ (8L, 9L))
-    val got = StarComponents.pageRankInt(pairs, StarComponents.prIters)
-      .collect()
-      .map(r => r.getAs[Long]("node") -> (r.getAs[Long]("deg"), r.getAs[Long]("r")))
-      .toMap
-
-    // independent reference: the same integer recurrence, in Scala
     val edges = ((1L to 6L).flatMap(l => Seq((0L, l), (l, 0L))) ++
       Seq((8L, 9L), (9L, 8L)))
     val deg = edges.groupBy(_._1).view.mapValues(_.size.toLong).toMap
-    var r = deg.keys.map(_ -> StarComponents.prScale).toMap
-    (1 to StarComponents.prIters).foreach { _ =>
-      r = edges.groupBy(_._2).view.mapValues(_.map { case (u, _) =>
-        r(u) / deg(u)
-      }.sum).toMap.map { case (n, s) =>
-        n -> (StarComponents.prBase + 85L * s / 100L)
+    // q180's scale and rounds, then q248's: one loop serves both
+    Seq((StarComponents.prIters, StarComponents.prScale),
+        (PageRank.rounds, PageRank.initR)).foreach { case (iters, scale) =>
+      val got = StarComponents.pageRankInt(pairs, iters, scale)
+        .collect()
+        .map(r => r.getAs[Long]("node") -> (r.getAs[Long]("deg"), r.getAs[Long]("r")))
+        .toMap
+
+      // independent reference: the same integer recurrence, in Scala
+      val base = 15L * scale / 100L
+      var r = deg.keys.map(_ -> scale).toMap
+      (1 to iters).foreach { _ =>
+        r = edges.groupBy(_._2).view.mapValues(_.map { case (u, _) =>
+          r(u) / deg(u)
+        }.sum).toMap.map { case (n, s) => n -> (base + 85L * s / 100L) }
       }
+      assert(got.keySet === deg.keySet, s"scale $scale: node set")
+      got.foreach { case (n, (d, rank)) =>
+        assert(d === deg(n))
+        assert(rank === r(n), s"scale $scale node $n: query $rank != reference ${r(n)}")
+      }
+      // the hub dominates every leaf; the detached pair sits between
+      assert(got(0L)._2 > got(8L)._2 && got(8L)._2 > got(1L)._2,
+        s"authority ordering violated at scale $scale: ${got.toSeq.sortBy(_._1)}")
     }
-    got.foreach { case (n, (d, rank)) =>
-      assert(d === deg(n))
-      assert(rank === r(n), s"node $n: query $rank != reference ${r(n)}")
-    }
-    // the hub dominates every leaf; the detached pair sits between
-    assert(got(0L)._2 > got(8L)._2 && got(8L)._2 > got(1L)._2,
-      s"authority ordering violated: ${got.toSeq.sortBy(_._1)}")
   }
 
   test("q200 census: clique / path / star shapes produce the textbook motifs") {
