@@ -66,45 +66,20 @@ object GraphCore {
   /** Stable k-core edge set of symmetric `edges`, by batched peeling.
     * Throws after `maxIters` rounds without convergence.
     *
-    * Loop discipline (the q180 pattern): shuffles are sized to the
-    * edge relation, not the core count, and convergence is read off
-    * the materialized round's row count — bad nodes have degree ≥ 1
-    * by construction (deg comes from the current edge set), so "no
-    * node below k" ⇔ "no edge row removed". That folds the old
-    * separate `bad.limit(1).count()` probe job (which re-ran the
-    * degree aggregate the checkpoint then re-ran again) into the
-    * round's one materialization. */
-  def peel(edges: DataFrame, k: Int, maxIters: Int = peelRounds): DataFrame = {
-    val release = org.apache.spark.sql.graftshim.Checkpoints.release _
-    var cur = edges.localCheckpoint()
-    var curN = cur.count()
-    graft.spark.Sessions.withLoopPartitions(edges.sparkSession, curN) {
-      var rounds = 0
-      var stable = false
-      while (!stable) {
-        if (rounds >= maxIters)
-          throw new IllegalStateException(
-            s"k-core peel (k=$k) did not converge in $maxIters rounds")
-        val deg = cur.groupBy("u").agg(count(lit(1)).as("deg"))
-        val bad = deg.where(col("deg") < k).select(col("u").as("node"))
-        val next = cur
-          .join(bad, cur("u") === bad("node"), "left_anti")
-          .join(bad, cur("v") === bad("node"), "left_anti")
-          .localCheckpoint()
-        val nextN = next.count()
-        if (nextN == curN) {
-          release(next)
-          stable = true
-        } else {
-          release(cur)
-          cur = next
-          curN = nextN
-          rounds += 1
-        }
-      }
+    * Convergence is read off each round's checkpointed row count: bad
+    * nodes have degree ≥ 1 by construction (deg comes from the current
+    * edge set), so "no node below k" ⇔ "no edge row removed". */
+  def peel(edges: DataFrame, k: Int, maxIters: Int = peelRounds): DataFrame =
+    graft.spark.Generations.run(s"k-core peel (k=$k)", edges, basis = None,
+        every = 1, rounds = maxIters, stable = Some((a, b) => a.rows == b.rows),
+        keep = false) { (live, _) =>
+      val cur = live.last
+      val deg = cur.groupBy("u").agg(count(lit(1)).as("deg"))
+      val bad = deg.where(col("deg") < k).select(col("u").as("node"))
       cur
-    }
-  }
+        .join(bad, cur("u") === bad("node"), "left_anti")
+        .join(bad, cur("v") === bad("node"), "left_anti")
+    }(_.last)._1
 
   /** One unrolled SQL peel round: keep edges whose BOTH endpoints
     * have degree ≥ k in the previous round's edge set. MATERIALIZED
@@ -166,44 +141,23 @@ object GraphCore {
 
   /** Min-hop distances from seed nodes over symmetric `edges`:
     * iterative frontier BFS, lineage-truncated per hop. Returns
-    * (node, hops). Seeds carry hops = 0. */
-  def bfsHops(edges: DataFrame, seeds: DataFrame, cap: Int = maxHops): DataFrame = {
-    val release = org.apache.spark.sql.graftshim.Checkpoints.release _
-    // loop discipline (the q180 pattern): shuffles sized to the graph;
-    // only each hop's FRESH frontier is checkpointed (the accumulated
-    // dist is a shallow union of ≤ cap checkpointed generations — no
-    // per-hop re-materialization of the whole distance relation), and
-    // the loop condition reads the frontier count the checkpoint
-    // already computed instead of a separate limit(1) probe job
-    graft.spark.Sessions.withLoopPartitions(edges.sparkSession, edges.count()) {
-      val gens = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      var dist = seeds.select(col("node"), lit(0L).as("hops")).localCheckpoint()
-      gens += dist
-      var frontier = dist
-      var frontierN = frontier.count()
-      var hop = 0
-      while (frontierN > 0) {
-        if (hop >= cap)
-          throw new IllegalStateException(s"BFS exceeded $cap hops")
-        hop += 1
-        val expanded = frontier
-          .join(edges, frontier("node") === edges("u"))
-          .select(col("v").as("node"), lit(hop.toLong).as("hops"))
-          .distinct()
-        val fresh = expanded
-          .join(dist.select(col("node").as("seen")),
-            expanded("node") === col("seen"), "left_anti")
-          .localCheckpoint()
-        gens += fresh
-        dist = dist.unionByName(fresh)
-        frontier = fresh
-        frontierN = fresh.count()
-      }
-      val out = dist.localCheckpoint()
-      gens.foreach(release)
-      out
-    }
-  }
+    * (node, hops). Seeds carry hops = 0. Only each hop's FRESH frontier
+    * is checkpointed: the loop keeps every frontier generation, and the
+    * distances so far are their shallow union, so no hop re-materializes
+    * the whole distance relation. */
+  def bfsHops(edges: DataFrame, seeds: DataFrame, cap: Int = maxHops): DataFrame =
+    graft.spark.Generations.run("BFS", seeds.select(col("node"), lit(0L).as("hops")),
+        basis = Some(edges.count()), every = 1, rounds = cap,
+        stable = Some((_, b) => b.rows == 0), keep = true) { (live, hop) =>
+      val frontier = live.last
+      val expanded = frontier
+        .join(edges, frontier("node") === edges("u"))
+        .select(col("v").as("node"), lit(hop.toLong).as("hops"))
+        .distinct()
+      expanded
+        .join(live.reduce(_ unionByName _).select(col("node").as("seen")),
+          expanded("node") === col("seen"), "left_anti")
+    }(_.reduce(_ unionByName _).localCheckpoint())._1
 
   /** q220: copy-provenance depth — BFS hops from each component's
     * canonical (the q77 component label = min doc_id of the
@@ -268,25 +222,14 @@ object GraphCore {
   /** `rounds` synchronous [[lpaRound]]s over symmetric `edges`, every
     * node starting with its own id. Returns (node, lbl). Each round
     * references its predecessor exactly once (one join), so lineage
-    * grows linearly: a barrier every SECOND round (and after the last)
-    * is enough, and each barrier releases the one it supersedes — the
-    * last stays under the returned plan. */
+    * grows linearly: a barrier every SECOND round is enough. */
   private[graft] def lpa(edges: DataFrame, rounds: Int): DataFrame =
-    graft.spark.Sessions.withLoopPartitions(edges.sparkSession, edges.count()) {
-      val release = org.apache.spark.sql.graftshim.Checkpoints.release _
-      var labels = edges.select(col("u").as("node")).distinct()
-        .select(col("node"), col("node").as("lbl"))
-      var lastCkpt: Option[DataFrame] = None
-      for (r <- 1 to rounds) {
-        labels = lpaRound(edges, labels)
-        if (r % 2 == 0 || r == rounds) {
-          labels = labels.localCheckpoint()
-          lastCkpt.foreach(release)
-          lastCkpt = Some(labels)
-        }
-      }
-      labels
-    }
+    graft.spark.Generations.run("label propagation",
+        edges.select(col("u").as("node")).distinct()
+          .select(col("node"), col("node").as("lbl")),
+        basis = Some(edges.count()), every = 2, rounds = rounds, stable = None,
+        keep = false)(
+        (live, _) => lpaRound(edges, live.last))(_.last)._1
 
   private def lpaRoundSql(prev: String, cur: String): String =
     s"""${cur}_cnt AS MATERIALIZED (

@@ -62,64 +62,33 @@ object StarComponents {
   /** Labels every node of `pairs` (cols doc_a, doc_b) with its
     * component's minimum id. Returns (labels(node, label), rounds);
     * the labels relation is persisted and OWNED BY THE CALLER
-    * (unpersist when done). */
-  def connectedComponentsStar(pairs: DataFrame, maxIters: Int = 25): (DataFrame, Int) = {
-    // localCheckpoint (not persist): each round's plan embeds ~10
-    // copies of the previous round's (sym unions + two joins + the
-    // except), so lineage grows EXPONENTIALLY in rounds — truncate it
-    // every round, exactly the Bpe trainer's pattern. Eager, so the
-    // old generation's blocks can be released immediately after.
-    // release via Checkpoints (a checkpointed frame's unpersist() is a
-    // CacheManager no-op; blocks would otherwise wait on GC timing)
-    val release = org.apache.spark.sql.graftshim.Checkpoints.release _
-    var cur = canon(pairs).localCheckpoint()
-    var n = cur.count()
-    graft.spark.Sessions.withLoopPartitions(pairs.sparkSession, n) {
-      var rounds = 0
-      var converged = false
-      try {
-        while (!converged && rounds < maxIters) {
-          val next = canon(smallStar(largeStar(cur))).localCheckpoint()
-          try {
-            val n2 = next.count()
-            // set equality: same cardinality + empty difference (both
-            // sides canonical-distinct, so one-sided except suffices)
-            converged = n2 == n && next.except(cur).limit(1).count() == 0
-            n = n2
-          } catch {
-            case t: Throwable => release(next); throw t
-          }
-          release(cur)
-          cur = next
-          rounds += 1
-        }
-      } catch {
-        case t: Throwable => release(cur); throw t
-      }
-      if (!converged) {
-        release(cur)
-        throw new IllegalStateException(
-          s"star contraction did not converge in $maxIters rounds")
-      }
+    * (unpersist when done). Every round is checkpointed: each round's
+    * plan embeds ~10 copies of the previous round's (sym unions, two
+    * joins, the except), so lineage grows EXPONENTIALLY in rounds. */
+  def connectedComponentsStar(pairs: DataFrame, maxIters: Int = 25): (DataFrame, Int) =
+    graft.spark.Generations.run("star contraction", canon(pairs), basis = None,
+        every = 1, rounds = maxIters,
+        // set equality: same cardinality + empty difference (both sides
+        // canonical-distinct, so one-sided except suffices)
+        stable = Some((a, b) => b.rows == a.rows && b.df.except(a.df).limit(1).count() == 0),
+        keep = false)((live, _) => canon(smallStar(largeStar(live.last)))) { live =>
       // fixpoint is a star forest: every node's closed-neighborhood min
       // IS its component min. Checkpoint before persisting: adaptive
       // execution coalesces the checkpointed aggregate to a data-sized
       // partition count, where a persisted plan keeps the loop width
       // (8 tiny partitions made every warm read of the labels slower)
-      val labels = GraphCore.sym(cur).groupBy("u").agg(min("v").as("mn"))
+      val labels = GraphCore.sym(live.last).groupBy("u").agg(min("v").as("mn"))
         .select(col("u").as("node"), least(col("mn"), col("u")).as("label"))
         .localCheckpoint()
         .persist()
-      labels.count() // pin before releasing the blocks it was built from
+      labels.count() // pin before the blocks it was built from are released
       // Cluster-mode tradeoff: the released checkpoint blocks were
       // labels' only recompute source — an executor loss now fails the
       // job instead of recomputing. Local mode: fine. Multi-executor:
       // keep the blocks or checkpoint() to reliable storage.
-      release(cur)
       org.apache.spark.sql.graftshim.Checkpoints.releaseUnderlying(labels)
-      (labels, rounds)
+      labels
     }
-  }
 
   /** q77's near-dup clusters under the star-contraction catalog name:
     * the same labels ([[Dedup.indexedComponents]], one memo per
@@ -200,38 +169,21 @@ object StarComponents {
     val edges = GraphCore.sym(pairs)
     val deg = edges.groupBy("u").agg(count(lit(1)).as("deg"))
     val edgesDeg = edges.join(deg, "u").persist()
-    try {
-      graft.spark.Sessions.withLoopPartitions(pairs.sparkSession, edgesDeg.count()) {
-        val release = org.apache.spark.sql.graftshim.Checkpoints.release _
-        // Checkpoint every FOURTH generation, not every one: unlike star
-        // contraction (whose round plan embeds ~10 copies of the previous
-        // round — exponential lineage), each rank generation references
-        // its predecessor exactly ONCE (one join), so lineage grows
-        // linearly and an eager materialization barrier per round just
-        // pays a job launch for a 10^2-node relation.
-        val ckptEvery = 4
-        var ranks = deg.select(col("u").as("node"), lit(scale).as("r"))
-          .localCheckpoint()
-        var lastCkpt = ranks
-        (1 to iters).foreach { i =>
-          var next = edgesDeg.join(ranks, col("u") === col("node"))
-            .select(col("v"), expr("r div deg").as("contrib"))
-            .groupBy("v")
-            .agg(sum("contrib").as("s"))
-            .select(col("v").as("node"), (lit(base) + expr("85 * s div 100")).as("r"))
-          if (i % ckptEvery == 0 || i == iters) {
-            next = next.localCheckpoint()
-            release(lastCkpt)
-            lastCkpt = next
-          }
-          ranks = next
-        }
-        // the final checkpointed generation rides into the caller's plan
-        // (blocks bounded by the node set, freed with the session); the
-        // intermediate generations were released eagerly above
-        ranks.join(deg.select(col("u").as("node"), col("deg")), "node")
-      }
-    } finally edgesDeg.unpersist(): Unit
+    // a barrier every FOURTH round: unlike star contraction, each rank
+    // generation references its predecessor exactly ONCE (one join), so
+    // lineage grows linearly and a barrier per round would only pay a
+    // job launch for a 10^2-node relation
+    try graft.spark.Generations.run("integer PageRank",
+        deg.select(col("u").as("node"), lit(scale).as("r")),
+        basis = Some(edgesDeg.count()), every = 4, rounds = iters, stable = None,
+        keep = false) { (live, _) =>
+      edgesDeg.join(live.last, col("u") === col("node"))
+        .select(col("v"), expr("r div deg").as("contrib"))
+        .groupBy("v")
+        .agg(sum("contrib").as("s"))
+        .select(col("v").as("node"), (lit(base) + expr("85 * s div 100")).as("r"))
+    }(_.last.join(deg.select(col("u").as("node"), col("deg")), "node"))._1
+    finally edgesDeg.unpersist(): Unit
   }
 
   /** GRAPH MOTIF CENSUS over the verified near-dup graph: per node,

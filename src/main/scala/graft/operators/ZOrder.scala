@@ -236,10 +236,9 @@ object ZOrder {
   }
 
   /** The maintain job's merge input (touched tiles ∪ batch) plus the
-    * touched-cell count — factored so PlanSnap can dump the pruned
-    * scan stage (the plans/r13 evidence) and the maintain executes the
-    * identical plan. */
-  private[graft] def maintainMergeInputCounted(spark: SparkSession,
+    * touched-cell count. Its pruned scan stage is the plans/r13
+    * evidence. */
+  private def maintainMergeInputCounted(spark: SparkSession,
       path: String, batchCoded: DataFrame): (DataFrame, Long) = {
     val touchedCells = batchCoded.select("cell").distinct()
       .collect().map(_.getLong(0)).sorted
@@ -260,10 +259,6 @@ object ZOrder {
         .unionByName(batchCoded)
     (merged0, touchedCells.length.toLong)
   }
-
-  private[graft] def maintainMergeInput(spark: SparkSession, path: String,
-      batchCoded: DataFrame): DataFrame =
-    maintainMergeInputCounted(spark, path, batchCoded)._1
 
   /** ZONE-MAP PRUNING AUDIT: the data-skipping effectiveness report a
     * lakehouse reads off its file manifest. Two layouts of the same

@@ -15,7 +15,9 @@ import scala.jdk.CollectionConverters._
   * harness never needs this — its sessions die with the JVM — but a
   * long-lived multi-tenant service would otherwise accumulate one
   * index set per session forever; eviction is its session-teardown
-  * hook. Entries are keyed by the session's identity hash: eviction
+  * hook. Entries are keyed by the session itself, which compares by
+  * reference (an identity hash is not unique among live objects, so
+  * two sessions keyed by it could serve each other's entries): eviction
   * of one session never touches another's entries.
   *
   * Concurrency: TrieMap.getOrElseUpdate may race two builders for the
@@ -24,17 +26,17 @@ import scala.jdk.CollectionConverters._
   * can strand one freshly-built value's storage until the next evict,
   * which is the same bound the caller had without eviction at all. */
 final class SessionMemo[K, V](val name: String)(release: V => Unit) {
-  private val map = TrieMap.empty[(Int, K), V]
+  private val map = TrieMap.empty[(SparkSession, K), V]
   SessionMemo.registry.add(this)
 
   def getOrElseUpdate(spark: SparkSession, key: K)(build: => V): V =
-    map.getOrElseUpdate((System.identityHashCode(spark), key), build)
+    map.getOrElseUpdate((spark, key), build)
 
   /** Entries currently held (all sessions) — spec observability. */
   def size: Int = map.size
 
-  private[spark] def evict(sessionHash: Int): Int = {
-    val ks = map.keys.filter(_._1 == sessionHash).toList
+  private[spark] def evict(spark: SparkSession): Int = {
+    val ks = map.keys.filter(_._1 == spark).toList
     ks.count(k => map.remove(k).exists { v => release(v); true })
   }
 }
@@ -46,8 +48,6 @@ object SessionMemo {
   /** Drop every memoized artifact belonging to `spark` across all
     * operator families, releasing each one's storage. Returns the
     * number of entries evicted. */
-  def evictAll(spark: SparkSession): Int = {
-    val h = System.identityHashCode(spark)
-    registry.asScala.map(_.evict(h)).sum
-  }
+  def evictAll(spark: SparkSession): Int =
+    registry.asScala.map(_.evict(spark)).sum
 }

@@ -85,8 +85,8 @@ object Sessions {
 
   /** Run `body` (an iterative loop over a tiny relation) with
     * `spark.sql.shuffle.partitions` sized to the LOOP's data rather
-    * than the core count — the q180 discipline, shared by every graph
-    * loop. The width derives from the relation's row count (~64k rows
+    * than the core count — every graph loop runs through it, by way of
+    * [[Generations.run]]. The width derives from the relation's row count (~64k rows
     * per partition, floor 8, capped at 16× the session parallelism),
     * never a local constant, and the previous value is restored on
     * exit. Only the jobs launched INSIDE `body` (the per-round

@@ -29,7 +29,15 @@ object Checkpoints {
     * CacheManager cache built FROM it intact (InMemoryRelation holds
     * its own buffers once materialized). */
   def releaseUnderlying(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case lr: LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
+    storage(df).foreach(_.unpersist(blocking = false))
+
+  /** Whether `df`'s plan reads the localCheckpoint storage behind
+    * `ckpt`: releasing `ckpt` would then break `df`. */
+  def reads(df: DataFrame, ckpt: DataFrame): Boolean = {
+    val read = storage(df).map(_.id).toSet
+    storage(ckpt).exists(r => read(r.id))
+  }
+
+  private def storage(df: DataFrame) =
+    df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }
 }

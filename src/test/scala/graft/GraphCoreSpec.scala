@@ -17,6 +17,17 @@ class GraphCoreSpec extends SparkSpecBase {
     df.select(col("doc_a").as("u"), col("doc_b").as("v"))
       .unionByName(df.select(col("doc_b").as("u"), col("doc_a").as("v")))
 
+  /** Asserts that `f` throws an IllegalStateException and leaves no
+    * persisted RDD behind: a loop that gives up must release every
+    * generation it still holds. */
+  private def throwsWithoutLeak(f: => Any): Unit = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    assertThrows[IllegalStateException](f)
+    val leaked = sc.getPersistentRDDs.keySet.diff(before)
+    assert(leaked.isEmpty, s"the loop leaked persisted RDDs: ${leaked.mkString(", ")}")
+  }
+
   test("peel: clique survives 3-core, cycle survives only 2-core, path peels away") {
     // 4-clique on 1..4, 5-cycle on 10..14, 4-path on 20..23
     val clique = for (a <- 1L to 4L; b <- (a + 1) to 4L) yield (a, b)
@@ -38,7 +49,7 @@ class GraphCoreSpec extends SparkSpecBase {
     // a 20-path needs ~9 endpoint-stripping rounds > the 6-round cap
     val longPath = (0L until 19L).map(i => (i + 100, i + 101))
     val e = sym(edges(longPath: _*))
-    assertThrows[IllegalStateException](GraphCore.peel(e, 2, maxIters = 3))
+    throwsWithoutLeak(GraphCore.peel(e, 2, maxIters = 3))
   }
 
   test("bfsHops: exact hop counts on a planted path + branch") {
@@ -52,7 +63,6 @@ class GraphCoreSpec extends SparkSpecBase {
 
   test("bfsHops throws past the hop cap instead of truncating depths") {
     val e = sym(edges((0L, 1L), (1L, 2L), (2L, 3L)))
-    assertThrows[IllegalStateException](
-      GraphCore.bfsHops(e, Seq(0L).toDF("node"), cap = 2).count())
+    throwsWithoutLeak(GraphCore.bfsHops(e, Seq(0L).toDF("node"), cap = 2).count())
   }
 }

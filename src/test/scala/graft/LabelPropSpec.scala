@@ -38,18 +38,4 @@ class LabelPropSpec extends SparkSpecBase {
     assert(lpa(e, 2) == Map(7L -> 7L, 9L -> 9L))
     assert(lpa(e, 1) == Map(7L -> 9L, 9L -> 7L))
   }
-
-  test("the LPA loop releases every superseded checkpoint generation") {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val clique = for (a <- 1L to 6L; b <- (a + 1) to 6L) yield (a, b)
-    val labels = GraphCore.lpa(sym(clique :+ ((6L, 20L))), 4)
-    labels.count()
-    org.apache.spark.sql.graftshim.Checkpoints.release(labels)
-    // the returned generation was just released; every barrier the
-    // loop superseded must already be gone
-    val leaked = sc.getPersistentRDDs.keySet.diff(before)
-    assert(leaked.isEmpty,
-      s"loop leaked persisted RDDs: ${leaked.mkString(", ")}")
-  }
 }

@@ -45,6 +45,23 @@ class SessionMemoSpec extends SparkSpecBase {
     SessionMemo.evictAll(other)
   }
 
+  test("one key built in two sessions holds two entries; evicting one session keeps the other's") {
+    val memo = new SessionMemo[String, org.apache.spark.sql.SparkSession]("spec.sessions")(_ => ())
+    val other = spark.newSession()
+    var builds = 0
+    def build(s: org.apache.spark.sql.SparkSession) = { builds += 1; s }
+    assert(memo.getOrElseUpdate(spark, "corpus")(build(spark)) eq spark)
+    assert(memo.getOrElseUpdate(other, "corpus")(build(other)) eq other)
+    assert(builds == 2 && memo.size == 2, "each session builds its own entry")
+    SessionMemo.evictAll(other)
+    assert(memo.size == 1)
+    // this session's entry is still served without a rebuild
+    assert(memo.getOrElseUpdate(spark, "corpus")(build(spark)) eq spark)
+    assert(builds == 2)
+    SessionMemo.evictAll(spark)
+    assert(memo.size == 0)
+  }
+
   test("eviction runs the custom release action (scratch-dir wipe)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_memo_spec").toFile
     val marker = new java.io.File(dir, "seg/part-0")
