@@ -620,15 +620,15 @@ object ScaleBench {
         // among ~200 near-identical replicas re-orders freely, so the
         // exact tier must see enough candidates to absorb it (1000 ≈ 1%
         // of corpus; 400 measured 0.86 recall, 1000 measures 0.95).
-        // PqAdcDist is the fused codegen ADC (bit-parity-spec'd vs the
-        // reconstruct+zip_with composed form it replaced, which
-        // allocated per row, evaluated interpreted lambdas, and
-        // dominated this stage ~8x)
+        // PqAdcDistLut is the fused codegen ADC q303 serves with
+        // (bit-parity-spec'd vs the materialized-LUT composed form; the
+        // reconstruct+zip_with form before it allocated per row,
+        // evaluated interpreted lambdas, and dominated this stage ~8x)
         def adcPipeline(cands: DataFrame): Set[(Long, Long)] = topkOf(
           cands.where(col("vec_id") =!= col("query_id"))
             .groupBy("query_id")
             .agg(org.apache.spark.sql.graftshim.TopKByScore(
-              -org.apache.spark.sql.graftshim.PqAdcDist(
+              -org.apache.spark.sql.graftshim.PqAdcDistLut(
                 col("codes"), col("q_emb"), cb), col("vec_id"), 1000).as("top"))
             .select(col("query_id"), explode(col("top.id")).as("cand_id"))
             .join(vecs.select(col("vec_id").as("cand_id"),
@@ -1426,9 +1426,9 @@ object ScaleBench {
         synthCodes.write.partitionBy("cell").mode("overwrite").parquet(partAbPath))
       val schema = "vec_id BIGINT, codes ARRAY<INT>, cell BIGINT"
       // the SAME scoring pipeline on both sides, by construction:
-      // one shared definition (IvfPq.fixedLutAdcDist), not a copy
+      // one shared definition (PqAnn.fixedLutAdcDist), not a copy
       def top50(df: DataFrame): Long =
-        df.withColumn("adc_dist", IvfPq.fixedLutAdcDist)
+        df.withColumn("adc_dist", PqAnn.fixedLutAdcDist)
           .orderBy(col("adc_dist"), col("vec_id")).limit(50)
           .collect().length.toLong
       import spark.implicits._
@@ -1513,7 +1513,7 @@ object ScaleBench {
       def prunedSearch(): Long =
         IvfPq.probedScan(spark, partPath, probes)
           .getOrElse(sys.error("no probed cell dir exists"))
-          .withColumn("adc_dist", IvfPq.fixedLutAdcDist)
+          .withColumn("adc_dist", PqAnn.fixedLutAdcDist)
           .orderBy(col("adc_dist"), col("vec_id")).limit(50)
           .collect().length.toLong
       def median5(f: () => Long): Double = {
@@ -1974,29 +1974,5 @@ object ScaleBench {
       "gram_join_sec" -> tJoin,
       "gram_agg_sec" -> tAgg,
       "gram_checksums_equal" -> (if (c1 == c2) 1.0 else 0.0))
-  }
-
-  /** Standalone entry for local iteration; Bench embeds run() output.
-    * `zorder`/`rank` as the first arg runs only that probe (dev loop). */
-  def main(args: Array[String]): Unit = {
-    val mode = args.headOption.filter(Set("zorder", "rank", "grouping", "sweep", "gram", "serve")).getOrElse("full")
-    val rest = if (mode != "full") args.drop(1) else args
-    val sfDir = if (rest.nonEmpty) rest(0) else "/root/testdata/sf0.1"
-    val tDocs = if (rest.length > 1) rest(1).toInt else 100000
-    val tVecs = if (rest.length > 2) rest(2).toInt else 100000
-    val spark = graft.spark.Sessions.local("graft-scalebench",
-      graft.spark.Sessions.defaultCores)
-    val metrics = mode match {
-      case "zorder" => zorderProbe(spark, sfDir, 4000000, 256)
-      case "rank" => rankProbe(spark, sys.env.get("SPARK_GRAFT_RANK_N").map(_.toInt).getOrElse(2000000))
-      case "grouping" => groupingProbe(spark, sys.env.get("SPARK_GRAFT_GROUPING_N").map(_.toInt).getOrElse(8000000))
-      case "sweep" => sweepProbe(spark, sys.env.get("SPARK_GRAFT_SWEEP_N").map(_.toInt).getOrElse(4000000))
-      case "gram" => gramProbe(spark, sys.env.get("SPARK_GRAFT_GRAM_N").map(_.toInt).getOrElse(200000))
-      case "serve" => ivfServeProbe(spark, sfDir, tVecs)
-      case _ => run(spark, sfDir, tDocs, tVecs)
-    }
-    println(metrics.map { case (k, v) => s""""$k":$v""" }
-      .mkString("SCALE {", ",", "}"))
-    spark.stop()
   }
 }

@@ -129,6 +129,29 @@ object EventFlow {
       .orderBy("event_type")
   }
 
+  /** The distinct-delay census of first-view → first-purchase delays
+    * with its cumulative window, `(delay_us, cum, total)` — shared by
+    * q234 (percentile_disc) and q272 (percentile_cont). The census
+    * holds unique keys, so the window's RANGE frame equals ROWS and
+    * the sum is unambiguous. */
+  private def delayCdf(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame = {
+    val ev = Tables.events(s, d).select(col("user_id"),
+      col("event_type"), unix_micros(col("ts")).as("ts_us"))
+    val v = ev.where(col("event_type") === "view")
+      .groupBy("user_id").agg(min("ts_us").as("first_view_us"))
+    val p = ev.where(col("event_type") === "purchase")
+      .join(v, Seq("user_id"))
+      .where(col("ts_us") >= col("first_view_us"))
+      .groupBy("user_id").agg(min("ts_us").as("first_purchase_us"))
+    val delays = v.join(p, "user_id")
+      .select((col("first_purchase_us") - col("first_view_us")).as("delay_us"))
+    delays.groupBy("delay_us").agg(count(lit(1)).as("n"))
+      .select(col("delay_us"),
+        sum("n").over(Window.orderBy("delay_us")).as("cum"),
+        sum("n").over(Window.partitionBy()).as("total"))
+  }
+
   /** CONVERSION-DELAY QUANTILES: how long users take from their first
     * `view` to their first subsequent `purchase` — the time-to-convert
     * distribution behind funnel SLAs and attribution windows (q175
@@ -175,23 +198,7 @@ object EventFlow {
       |  MIN(CASE WHEN cum * 10 >= total * 9 THEN delay_us END) AS p90_us,
       |  MIN(CASE WHEN cum * 100 >= total * 99 THEN delay_us END) AS p99_us
       |FROM c""".stripMargin) { (s, d) =>
-    val ev = Tables.events(s, d).select(col("user_id"),
-      col("event_type"), unix_micros(col("ts")).as("ts_us"))
-    val v = ev.where(col("event_type") === "view")
-      .groupBy("user_id").agg(min("ts_us").as("first_view_us"))
-    val p = ev.where(col("event_type") === "purchase")
-      .join(v, Seq("user_id"))
-      .where(col("ts_us") >= col("first_view_us"))
-      .groupBy("user_id").agg(min("ts_us").as("first_purchase_us"))
-    val delays = v.join(p, "user_id")
-      .select((col("first_purchase_us") - col("first_view_us")).as("delay_us"))
-    val hist = delays.groupBy("delay_us").agg(count(lit(1)).as("n"))
-    // distinct-delay census: the cumulative window's RANGE frame sees
-    // unique keys, so RANGE == ROWS and the sum is unambiguous
-    val cum = hist.select(col("delay_us"),
-      sum("n").over(Window.orderBy("delay_us")).as("cum"),
-      sum("n").over(Window.partitionBy()).as("total"))
-    cum.agg(max("total").as("n_converted"),
+    delayCdf(s, d).agg(max("total").as("n_converted"),
       min(when(col("cum") * 2 >= col("total"), col("delay_us"))).as("p50_us"),
       min(when(col("cum") * 10 >= col("total") * 9, col("delay_us"))).as("p90_us"),
       min(when(col("cum") * 100 >= col("total") * 99, col("delay_us"))).as("p99_us"))
@@ -422,21 +429,7 @@ object EventFlow {
       |    + (CAST(v_hi AS DOUBLE) - CAST(v_lo AS DOUBLE)) * frac_pct / 100.0
       |    AS p_interp_us
       |FROM picked ORDER BY qk""".stripMargin) { (s, d) =>
-    val ev = Tables.events(s, d).select(col("user_id"),
-      col("event_type"), unix_micros(col("ts")).as("ts_us"))
-    val v = ev.where(col("event_type") === "view")
-      .groupBy("user_id").agg(min("ts_us").as("first_view_us"))
-    val p = ev.where(col("event_type") === "purchase")
-      .join(v, Seq("user_id"))
-      .where(col("ts_us") >= col("first_view_us"))
-      .groupBy("user_id").agg(min("ts_us").as("first_purchase_us"))
-    val delays = v.join(p, "user_id")
-      .select((col("first_purchase_us") - col("first_view_us")).as("delay_us"))
-    val hist = delays.groupBy("delay_us").agg(count(lit(1)).as("n"))
-    val cum = hist.select(col("delay_us"),
-      sum("n").over(Window.orderBy("delay_us")).as("cum"),
-      sum("n").over(Window.partitionBy()).as("total"))
-    val expanded = cum
+    val expanded = delayCdf(s, d)
       .withColumn("qk", explode(array(lit(50L), lit(90L))))
       .withColumn("pos_num", (col("total") - 1) * col("qk"))
     val picked = expanded.groupBy(col("qk").cast("int").as("qk")).agg(

@@ -482,10 +482,16 @@ object Extras {
       |FROM wt
       |GROUP BY event_type
       |ORDER BY event_type""".stripMargin) { (s, d) =>
-    import org.apache.spark.sql.expressions.Window
-    val perDay = Tables.events(s, d)
+    decayedQ30(Tables.events(s, d)
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("n"))
+      .agg(count(lit(1)).as("n")))
+  }
+
+  /** q186's tail over a per-(event_type, day) count census `n`: the
+    * Q30 fixed-point decay weighting — shared with q188, which serves
+    * it over the streamed daily partials. */
+  private[graft] def decayedQ30(perDay: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     perDay
       .withColumn("max_day", max("day").over(Window.partitionBy()))
       .withColumn("age", datediff(col("max_day"), col("day")).cast("long"))
@@ -641,6 +647,31 @@ object Extras {
       .orderBy("chk")
   }
 
+  /** q208's histogram sketch: per (event_type, unit-width integer
+    * bin) counts over a batch or streaming events relation. */
+  private[graft] def sketchBins(events: DataFrame): DataFrame =
+    events.groupBy(col("event_type"), floor(col("value")).cast("long").as("bin"))
+      .agg(count(lit(1)).as("n"))
+
+  /** The sketch read as a CDF: per event_type the occupied bins, the
+    * event count and the p50/p90/p99 bin estimates — shared by q208
+    * and q210, which reads them off the streamed state. */
+  private[graft] def sketchEstimates(bins: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val wCum = Window.partitionBy("event_type").orderBy("bin")
+    val wTot = Window.partitionBy("event_type")
+    bins
+      .withColumn("cum", sum("n").over(wCum))
+      .withColumn("total", sum("n").over(wTot))
+      .groupBy("event_type")
+      .agg(
+        count(lit(1)).as("n_bins"),
+        max("total").as("n_events"),
+        min(when(col("cum") * 100 >= col("total") * 50, col("bin"))).as("p50_est"),
+        min(when(col("cum") * 100 >= col("total") * 90, col("bin"))).as("p90_est"),
+        min(when(col("cum") * 100 >= col("total") * 99, col("bin"))).as("p99_est"))
+  }
+
   /** HISTOGRAM-SKETCH QUANTILES WITH A PROVEN ERROR BOUND — the
     * bounded-state substitute for exact order statistics at 100 TB:
     * per event_type, values collapse to unit-width integer bins
@@ -695,18 +726,7 @@ object Extras {
       |FROM est e JOIN exact x USING (event_type)
       |ORDER BY event_type""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    val bins = Tables.events(s, d)
-      .groupBy(col("event_type"), floor(col("value")).cast("long").as("bin"))
-      .agg(count(lit(1)).as("n"))
-    val wCum = Window.partitionBy("event_type").orderBy("bin")
-    val wTot = Window.partitionBy("event_type")
-    val cdf = bins
-      .withColumn("cum", sum("n").over(wCum))
-      .withColumn("total", sum("n").over(wTot))
-    val est = cdf.groupBy("event_type").agg(
-      min(when(col("cum") * 100 >= col("total") * 50, col("bin"))).as("p50_est"),
-      min(when(col("cum") * 100 >= col("total") * 90, col("bin"))).as("p90_est"),
-      min(when(col("cum") * 100 >= col("total") * 99, col("bin"))).as("p99_est"))
+    val est = sketchEstimates(sketchBins(Tables.events(s, d)))
     val wCd = Window.partitionBy("event_type").orderBy("value")
     val exact = Tables.events(s, d)
       .select(col("event_type"), col("value"), cume_dist().over(wCd).as("cd"))

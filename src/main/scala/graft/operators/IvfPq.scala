@@ -101,12 +101,8 @@ object IvfPq {
         .select(col("vec_id"), col("embedding"), col("cell"),
           org.apache.spark.sql.graftshim.PqEncode(col("embedding"), PqAnn.codebook)
             .as("codes"))
-      val adcDist = (0 until PqAnn.subspaces).map { i =>
-        element_at(array(PqAnn.lut(i).map(lit): _*),
-          element_at(col("codes"), i + 1) + 1)
-      }.reduceLeft(_ + _)
       val cand = coded
-        .withColumn("adc_dist", adcDist)
+        .withColumn("adc_dist", PqAnn.fixedLutAdcDist)
         .orderBy(col("adc_dist"), col("vec_id"))
         .limit(adcCand)
       cand
@@ -214,24 +210,12 @@ object IvfPq {
     * probed-cell-pruned scans, unioned, ADC-scored, bounded
     * top-adcCand. Exposed for PlanAuditSpec: the physical property
     * q139/q140 exist to demonstrate lives in THIS plan. */
-  /** The fixed-query LUT ADC distance over a `codes` column — ONE
-    * definition shared by the single-query candidate stage and
-    * ScaleBench's layout A/B (both sides of which must stay the SAME
-    * scoring pipeline by construction; duplicated copies drifting
-    * apart would silently void the A/B). */
-  private[graft] def fixedLutAdcDist: org.apache.spark.sql.Column =
-    (0 until PqAnn.subspaces).map { i =>
-      element_at(array(PqAnn.lut(i).map(lit): _*),
-        element_at(col("codes"), i + 1) + 1)
-    }.reduceLeft(_ + _)
-
   private[graft] def adcCandidates(s: org.apache.spark.sql.SparkSession,
       paths: Seq[String], probes: Seq[Long]): org.apache.spark.sql.DataFrame = {
-    val adcDist = fixedLutAdcDist
     val scans = paths.flatMap(p => probedScan(s, p, probes))
     require(scans.nonEmpty, s"no probed cell has data in any segment: $paths")
     scans.reduce(_ union _)
-      .withColumn("adc_dist", adcDist)
+      .withColumn("adc_dist", PqAnn.fixedLutAdcDist)
       .orderBy(col("adc_dist"), col("vec_id"))
       .limit(adcCand)
   }
@@ -850,15 +834,11 @@ object IvfPq {
         .where(pmod(col("vec_id"), lit(vecDeleteModulus)) === 0)
         .select("vec_id")
       val probes = probeCells(centroids)
-      val adcDist = (0 until PqAnn.subspaces).map { i =>
-        element_at(array(PqAnn.lut(i).map(lit): _*),
-          element_at(col("codes"), i + 1) + 1)
-      }.reduceLeft(_ + _)
       val scan = probedScan(s, path, probes)
         .getOrElse(sys.error("no probed cell has data"))
       val cand = scan
         .join(broadcast(tombstones), Seq("vec_id"), "left_anti")
-        .withColumn("adc_dist", adcDist)
+        .withColumn("adc_dist", PqAnn.fixedLutAdcDist)
         .orderBy(col("adc_dist"), col("vec_id"))
         .limit(adcCand)
         .collect()

@@ -378,10 +378,16 @@ object ModelQueries {
       |WHERE f_a <> f_b OR n_a <> n_b
       |ORDER BY bucket""".stripMargin) { (s, d) =>
     val docs = graft.sources.Tables.documents(s, d)
-    val v1 = docs.select(col("doc_id"), md5(col("text")).as("fp"))
-    val v2 = merkleV2(docs)
-    merkleLeaf(v1, "n_a", "f_a").join(merkleLeaf(v2, "n_b", "f_b"),
-        Seq("bucket"), "full_outer")
+    merkleDiff(
+      merkleLeaf(docs.select(col("doc_id"), md5(col("text")).as("fp")), "n_a", "f_a"),
+      docs)
+  }
+
+  /** q266's diff of a v1 bucket summary `(bucket, n_a, f_a)` against
+    * the deterministic v2 re-crawl of `docs` — shared with q288, which
+    * folds its v1 summary from the streamed partials. */
+  private[graft] def merkleDiff(leafA: DataFrame, docs: DataFrame): DataFrame =
+    leafA.join(merkleLeaf(merkleV2(docs), "n_b", "f_b"), Seq("bucket"), "full_outer")
       .select(col("bucket"),
         coalesce(col("n_a"), lit(0L)).as("n_a"),
         coalesce(col("n_b"), lit(0L)).as("n_b"),
@@ -392,7 +398,6 @@ object ModelQueries {
         col("n_a"), col("n_b"),
         merkleHex(col("f_a")).as("f_a"), merkleHex(col("f_b")).as("f_b"))
       .orderBy("bucket")
-  }
 
   /** Driver-stable fingerprint surface: the exact DECIMAL(38,0) sum
     * reduced mod 2⁶² (fits BIGINT with headroom) and rendered as a

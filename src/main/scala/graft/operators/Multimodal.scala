@@ -2,9 +2,10 @@ package graft.operators
 
 import graft.GraftQuery
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Multimodal columns (north-star): media as opaque `binary` payloads
   * alongside a typed metadata struct, with a partition-batched
@@ -35,12 +36,12 @@ import org.apache.spark.sql.types._
   *    schema/batch/partition shape with an oracle-reproducible
   *    derivation independent of any codec.
   *
-  * Scale design: payloads never shuffle. Featurization is
-  * mapPartitions (one decoder init per partition, the Scala analog of
-  * a Pandas-UDF batch; `javax.imageio.ImageReader` instances are
-  * non-thread-safe and reusable, exactly the resource shape that
-  * needs per-partition init), metadata-only queries prune the binary
-  * column at the parquet scan, and derived features are small
+  * Scale design: payloads never shuffle. Every codec featurize is one
+  * mapPartitions stage, [[DecoderPool.featurize]], that borrows a
+  * decoder from a JVM-wide pool for the task (`javax.imageio.
+  * ImageReader` instances are non-thread-safe and reusable, exactly
+  * the resource shape a pool serves); metadata-only queries prune the
+  * binary column at the parquet scan, and derived features are small
   * fixed-width columns safe to aggregate/join downstream.
   */
 object Multimodal {
@@ -82,12 +83,6 @@ object Multimodal {
       val norm = be32(h, 12).toDouble / 4294967296.0
       MediaFeatures(meta.sourceId, meta.mediaType, w.toInt, ht.toInt, frames.toInt, norm)
     }
-
-    /** Batch entry point (one call per Arrow-style batch): a real
-      * vectorized decoder would run the whole batch through the codec/
-      * model at once; the stub maps row-wise. */
-    def decodeBatch(batch: Seq[MediaRow]): Seq[MediaFeatures] =
-      batch.map(r => decode(r.meta, r.payload))
   }
 
   /** Build a media table from `documents`: payload = UTF-8 bytes of the
@@ -114,18 +109,6 @@ object Multimodal {
     media.mapPartitions { rows =>
       // decoder init happens once per partition here (stubbed: no-op)
       rows.map(r => FakeDecoder.decode(r.meta, r.payload))
-    }
-  }
-
-  /** Batch-shaped featurize — the Scala analog of `mapInPandas`: the
-    * decoder sees fixed-size BATCHES of rows (the Arrow-batch calling
-    * convention a vectorized/NN decoder wants), not single rows. Same
-    * output as [[featurize]]; batch size bounds peak payload memory
-    * per task at batchSize × max payload. */
-  def featurizeBatched(media: Dataset[MediaRow], batchSize: Int = 64): Dataset[MediaFeatures] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap(FakeDecoder.decodeBatch)
     }
   }
 
@@ -189,15 +172,15 @@ object Multimodal {
   }
 
   object PngDecoder {
-    /** Constructions observed JVM-wide — local-mode specs assert
-      * decoder-init-per-PARTITION (not per row) through this. */
+    /** Constructions observed JVM-wide — local-mode specs assert the
+      * pool bounds them by task concurrency through this. */
     val inits = new java.util.concurrent.atomic.AtomicLong(0L)
   }
 
   /** A real, stateful image decoder: holds one reusable (non-thread-
-    * safe) `javax.imageio.ImageReader`, the resource shape that makes
-    * per-partition init mandatory. Disk caching is disabled so decode
-    * never touches local tmp. */
+    * safe) `javax.imageio.ImageReader`, the resource shape that
+    * [[PngDecoderPool]] lends to one task at a time. Disk caching is
+    * disabled so decode never touches local tmp. */
   final class PngDecoder {
     PngDecoder.inits.incrementAndGet()
     private val reader =
@@ -224,9 +207,6 @@ object Multimodal {
       }
       ImageFeatures(docId, w, h, bands, sr, sg, sb)
     }
-
-    def decodeBatch(batch: Seq[ImageRow]): Seq[ImageFeatures] =
-      batch.map(r => decode(r.doc_id, r.png))
 
     /** Decode + RESIZE: 2×2 box downsample with floor-average per
       * channel (odd edges cropped) — integer-exact semantics, unlike
@@ -310,8 +290,6 @@ object Multimodal {
       }
       AHashRow(docId, w, h, hi, lo)
     }
-
-    def close(): Unit = reader.dispose()
   }
 
   /** Features of the 2×-downsampled image (q107). */
@@ -319,14 +297,8 @@ object Multimodal {
       rsum_r: Long, rsum_g: Long, rsum_b: Long)
 
   /** Decode-and-resize featurize over the PNG fixture table. */
-  def resizeImages(images: Dataset[ImageRow]): Dataset[ResizedFeatures] = {
-    import images.sparkSession.implicits._
-    images.mapPartitions { rows =>
-      val dec = new PngDecoder
-      closeOnTaskEnd(() => dec.close())
-      rows.map(r => dec.decodeResized(r.doc_id, r.png))
-    }
-  }
+  def resizeImages(images: Dataset[ImageRow]): Dataset[ResizedFeatures] =
+    PngDecoderPool.featurize(images)((dec, r) => dec.decodeResized(r.doc_id, r.png))
 
   /** Spread the compute-bound codec stages across the cluster: the
     * fixture tables read ONLY doc_id (8 B/row), so without this the
@@ -339,34 +311,23 @@ object Multimodal {
     ids.repartition(math.min(4096,
       ids.sparkSession.sparkContext.defaultParallelism * 4))
 
-  /** Distributed fixture table: one real PNG payload per document.
-    * Synthesis runs inside the partition (encoder is also per-
-    * partition state); only doc_id crosses from the scan. */
-  def imageTable(spark: SparkSession, sfDir: String): Dataset[ImageRow] = {
-    import spark.implicits._
-    spreadIds(Tables.documents(spark, sfDir).select(col("doc_id")).as[Long])
-      .mapPartitions(ids => ids.map(id => ImageRow(id, synthPng(id))))
-  }
+  /** Distributed fixture table: one real PNG payload per document,
+    * ids fanned out by [[spreadIds]] before synthesis. */
+  def imageTable(spark: SparkSession, sfDir: String): Dataset[ImageRow] =
+    pngRows(spreadIds(Tables.documents(spark, sfDir).select(col("doc_id"))))
 
-  /** Dispose the decoder when the TASK completes — reliable even when
-    * a consumer terminates the partition iterator early (limit, take),
-    * where an exhaustion-triggered close would never run. Null context
-    * (driver-local eval in tests) falls back to GC. */
-  private def closeOnTaskEnd(close: () => Unit): Unit =
-    Option(org.apache.spark.TaskContext.get())
-      .foreach(_.addTaskCompletionListener[Unit](_ => close()))
+  /** doc_id relation → one real PNG payload per document. Synthesis
+    * runs inside the partition; only doc_id crosses from the scan. */
+  private[graft] def pngRows(docs: DataFrame): Dataset[ImageRow] =
+    docs.select(col("doc_id")).as(Encoders.scalaLong)
+      .mapPartitions(ids => ids.map(id => ImageRow(id, synthPng(id))))(
+        Encoders.product[ImageRow])
 
-  /** The real-codec featurize: one [[PngDecoder]] per partition,
-    * payloads consumed locally, only fixed-width integer features
-    * survive. The decoder is disposed on task completion. */
-  def decodeImages(images: Dataset[ImageRow]): Dataset[ImageFeatures] = {
-    import images.sparkSession.implicits._
-    images.mapPartitions { rows =>
-      val dec = new PngDecoder
-      closeOnTaskEnd(() => dec.close())
-      rows.map(r => dec.decode(r.doc_id, r.png))
-    }
-  }
+  /** The real-codec featurize: payloads consumed locally, only
+    * fixed-width integer features survive. Also the document drain's
+    * image partial (q131). */
+  def decodeImages(images: Dataset[ImageRow]): Dataset[ImageFeatures] =
+    PngDecoderPool.featurize(images)((dec, r) => dec.decode(r.doc_id, r.png))
 
   /** 64-bit average-hash of a decoded raster, split into two unsigned
     * 32-bit halves (a single BIGINT would put bit 63 into the sign —
@@ -374,94 +335,45 @@ object Multimodal {
   case class AHashRow(doc_id: Long, width: Int, height: Int,
       ahash_hi: Long, ahash_lo: Long)
 
-  def decodeAHashes(images: Dataset[ImageRow]): Dataset[AHashRow] = {
-    import images.sparkSession.implicits._
-    images.mapPartitions { rows =>
-      val dec = new PngDecoder
-      closeOnTaskEnd(() => dec.close())
-      rows.map(r => dec.decodeAHash(r.doc_id, r.png))
-    }
-  }
+  def decodeAHashes(images: Dataset[ImageRow]): Dataset[AHashRow] =
+    PngDecoderPool.featurize(images)((dec, r) => dec.decodeAHash(r.doc_id, r.png))
 
-  /** [[decodeAHashes]] through the executor-global decoder pool — the
-    * streaming form (q355): decoder constructions stay bounded by
-    * peak task concurrency for the session lifetime, not by trigger
-    * count (the q177 discipline). */
-  def decodeAHashesPooled(images: Dataset[ImageRow]): Dataset[AHashRow] = {
-    import images.sparkSession.implicits._
-    images.mapPartitions { rows =>
-      val dec = borrowForTask(PngDecoderPool.borrow(), PngDecoderPool.ret)
-      rows.map(r => dec.decodeAHash(r.doc_id, r.png))
-    }
-  }
-
-  /** Executor-global decoder pool for STREAMING featurize: a micro-
-    * batch pipeline runs the same mapPartitions stage every trigger,
-    * and per-task construction would re-pay decoder init (codec
-    * lookup, native buffers, for an NN featurizer the model load —
-    * the expensive part this machinery models) once per micro-batch ×
-    * partition, forever. Borrow/return against a JVM-wide queue makes
-    * constructions bounded by PEAK TASK CONCURRENCY for the session
-    * lifetime, independent of trigger count — MultimodalSpec drives
-    * multiple micro-batches through [[decodeImagesPooled]] and asserts
-    * the init counter stays put after the first batch. Decoders live
-    * until JVM exit (the executor-singleton convention; a bounded pool
-    * of heavyweight models would add an eviction cap here).
+  /** A JVM-wide pool of one decoder family, and the ONE featurize
+    * stage that touches a decoder. Every query runs its featurize once
+    * per partition and every streaming trigger runs it again; building
+    * a decoder per task would re-pay decoder init (codec lookup,
+    * native buffers, for an NN featurizer the model load — the
+    * expensive part this machinery models) each time. [[featurize]]
+    * borrows a decoder for the task and returns it on task COMPLETION
+    * (not iterator exhaustion: limit/take may abandon the iterator
+    * early), so constructions stay bounded by PEAK TASK CONCURRENCY
+    * for the JVM's lifetime, independent of query and trigger count —
+    * MultimodalSpec pins the init counters across passes and
+    * micro-batches. Without a task context (driver-local eval in
+    * tests) the decoder is simply not returned, keeping the iterator
+    * lazy. Decoders live until JVM exit (the executor-singleton
+    * convention; a bounded pool of heavyweight models would add an
+    * eviction cap here).
     *
-    * [[DecoderPool]] is the ONE pool shape behind every decoder
-    * family — borrow/offer in one place, so a future pool-discipline
-    * change (size cap, eviction-time disposal) lands once. Task
-    * closures reference the pools through the module (static access
-    * at executor runtime), so instances never serialize; the
-    * transient lazy queue is belt-and-braces. */
-  final class DecoderPool[D](mk: () => D) extends Serializable {
-    @transient private lazy val pool =
-      new java.util.concurrent.ConcurrentLinkedQueue[D]()
-    def borrow(): D = Option(pool.poll()).getOrElse(mk())
-    def ret(d: D): Unit = pool.offer(d)
+    * Each pool is an `object`, so a task closure that captures it
+    * deserializes to the JVM's one instance, never to a copy with an
+    * empty queue. */
+  abstract class DecoderPool[D](mk: () => D) extends Serializable {
+    private val pool = new java.util.concurrent.ConcurrentLinkedQueue[D]()
+
+    def featurize[T, U <: Product : TypeTag](rows: Dataset[T])(
+        f: (D, T) => U): Dataset[U] =
+      rows.mapPartitions { it =>
+        val dec = Option(pool.poll()).getOrElse(mk())
+        Option(org.apache.spark.TaskContext.get())
+          .foreach(_.addTaskCompletionListener[Unit](_ => pool.offer(dec)))
+        it.map(f(dec, _))
+      }(Encoders.product[U])
   }
 
-  val PngDecoderPool = new DecoderPool(() => new PngDecoder)
-  val WavDecoderPool = new DecoderPool(() => new WavDecoder)
-  val GifDecoderPool = new DecoderPool(() => new GifDecoder)
-
-  /** Borrow a pooled resource and return it on task COMPLETION — the
-    * ONE place the pool discipline (borrow, completion listener,
-    * return) lives: a hand-rolled copy that forgets the listener
-    * would silently leak pool entries. Null TaskContext (driver-local
-    * eval in tests) leaves the entry out of the pool — bounded by
-    * test count, reclaimed by GC. */
-  private def borrowForTask[D](borrow: => D, ret: D => Unit): D = {
-    val d = borrow
-    Option(org.apache.spark.TaskContext.get())
-      .foreach(_.addTaskCompletionListener[Unit](_ => ret(d)))
-    d
-  }
-
-  /** [[decodeImages]] with pooled decoders — the streaming form. The
-    * borrowed decoder is returned on task COMPLETION (not iterator
-    * exhaustion: limit/take may abandon the iterator early); without a
-    * task context (driver-local eval in tests) the decoder is simply
-    * not pooled, keeping the iterator lazy. */
-  def decodeImagesPooled(images: Dataset[ImageRow]): Dataset[ImageFeatures] = {
-    import images.sparkSession.implicits._
-    images.mapPartitions { rows =>
-      val dec = borrowForTask(PngDecoderPool.borrow(), PngDecoderPool.ret)
-      rows.map(r => dec.decode(r.doc_id, r.png))
-    }
-  }
-
-  /** Batch-shaped real-codec featurize (the `mapInPandas` calling
-    * convention): the decoder sees fixed-size batches; batch size
-    * bounds peak payload memory per task. */
-  def decodeImagesBatched(images: Dataset[ImageRow], batchSize: Int = 64): Dataset[ImageFeatures] = {
-    import images.sparkSession.implicits._
-    images.mapPartitions { rows =>
-      val dec = new PngDecoder
-      closeOnTaskEnd(() => dec.close())
-      rows.grouped(batchSize).flatMap(dec.decodeBatch)
-    }
-  }
+  object PngDecoderPool extends DecoderPool(() => new PngDecoder)
+  object WavDecoderPool extends DecoderPool(() => new WavDecoder)
+  object GifDecoderPool extends DecoderPool(() => new GifDecoder)
 
   /** SQL recompute of one channel's RESIZED sum: floor-average of each
     * 2×2 block of the analytic pixel pattern. */
@@ -710,8 +622,6 @@ object Multimodal {
           his(0), los(0), his(1), los(1), his(2), los(2))
       } finally iis.close()
     }
-
-    def close(): Unit = reader.dispose()
   }
 
   /** Distributed GIF fixture table. */
@@ -721,15 +631,9 @@ object Multimodal {
       .mapPartitions(ids => ids.map(id => VideoRow(id, synthGif(id))))
   }
 
-  /** Frame-sampled featurize: one [[GifDecoder]] per partition. */
-  def decodeVideo(video: Dataset[VideoRow]): Dataset[VideoFeatures] = {
-    import video.sparkSession.implicits._
-    video.mapPartitions { rows =>
-      val dec = new GifDecoder
-      closeOnTaskEnd(() => dec.close())
-      rows.map(r => dec.decode(r.doc_id, r.gif))
-    }
-  }
+  /** Frame-sampled featurize. */
+  def decodeVideo(video: Dataset[VideoRow]): Dataset[VideoFeatures] =
+    GifDecoderPool.featurize(video)((dec, r) => dec.decode(r.doc_id, r.gif))
 
   /** Multi-frame round trip with frame sampling, oracle-checked end to
     * end: real animated-GIF bytes through the JDK sequence writer and
@@ -812,8 +716,8 @@ object Multimodal {
   /** Real audio decoder: parses the RIFF/WAVE container through
     * `AudioSystem.getAudioInputStream` (format negotiation, header
     * validation), then reads the PCM frames back out. Stateless apart
-    * from its reusable frame buffer — still one instance per
-    * partition, the same resource shape as [[PngDecoder]]. */
+    * from its reusable frame buffer — still pooled, the same resource
+    * shape as [[PngDecoder]]. */
   final class WavDecoder {
     WavDecoder.inits.incrementAndGet()
     private var buf = new Array[Byte](1 << 12)
@@ -896,14 +800,6 @@ object Multimodal {
     * BIGINT — always non-negative. */
   case class AudioFpRow(doc_id: Long, n_frames: Long, fingerprint: Long)
 
-  def audioFingerprints(audio: Dataset[AudioRow]): Dataset[AudioFpRow] = {
-    import audio.sparkSession.implicits._
-    audio.mapPartitions { rows =>
-      val dec = new WavDecoder
-      rows.map(r => dec.decodeFingerprint(r.doc_id, r.wav))
-    }
-  }
-
   /** Distributed WAV fixture table — one real RIFF/WAVE payload per
     * document, synthesized inside the partition. */
   def audioTable(spark: SparkSession, sfDir: String): Dataset[AudioRow] = {
@@ -912,14 +808,9 @@ object Multimodal {
       .mapPartitions(ids => ids.map(id => AudioRow(id, synthWav(id))))
   }
 
-  /** Real-codec audio featurize: one [[WavDecoder]] per partition. */
-  def decodeAudio(audio: Dataset[AudioRow]): Dataset[AudioFeatures] = {
-    import audio.sparkSession.implicits._
-    audio.mapPartitions { rows =>
-      val dec = new WavDecoder
-      rows.map(r => dec.decode(r.doc_id, r.wav))
-    }
-  }
+  /** Real-codec audio featurize. */
+  def decodeAudio(audio: Dataset[AudioRow]): Dataset[AudioFeatures] =
+    WavDecoderPool.featurize(audio)((dec, r) => dec.decode(r.doc_id, r.wav))
 
   /** Audio round trip, oracle-checked end to end: Spark writes genuine
     * RIFF/WAVE bytes through the JDK codec and decodes them back;
@@ -1153,7 +1044,7 @@ object Multimodal {
       |FROM fp f JOIN dims d ON f.doc_id = d.doc_id
       |ORDER BY f.doc_id""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    audioFingerprints(audioTable(s, d)).toDF()
+    audioFingerprintsFromDocs(Tables.documents(s, d))
       .withColumn("n_same",
         count(lit(1)).over(Window.partitionBy("fingerprint")))
       .orderBy("doc_id")
@@ -1281,17 +1172,10 @@ object Multimodal {
     baos.toByteArray
   }
 
-  /** Distributed fingerprint featurize: one [[GifDecoder]] per
-    * partition; payloads never shuffle — 8 fingerprint bytes plus two
-    * ints per clip leave the partition. */
-  def videoFingerprints(video: Dataset[VideoRow]): Dataset[VideoFpRow] = {
-    import video.sparkSession.implicits._
-    video.mapPartitions { rows =>
-      val dec = new GifDecoder
-      closeOnTaskEnd(() => dec.close())
-      rows.map(r => dec.decodeFingerprint(r.doc_id, r.gif))
-    }
-  }
+  /** Distributed fingerprint featurize; payloads never shuffle — 8
+    * fingerprint bytes plus two ints per clip leave the partition. */
+  def videoFingerprints(video: Dataset[VideoRow]): Dataset[VideoFpRow] =
+    GifDecoderPool.featurize(video)((dec, r) => dec.decodeFingerprint(r.doc_id, r.gif))
 
   /** VIDEO NEAR-DUP via a per-sampled-frame aHash SEQUENCE — the third
     * leg of the perceptual family (q192 images, q193 audio): each
@@ -1646,20 +1530,12 @@ object Multimodal {
        |ORDER BY fingerprint""".stripMargin
 
   /** doc_id relation → audio fingerprints (synthesize + decode inside
-    * the partition, POOLED decoder — constructions bounded by task
-    * concurrency, not trigger count) — the featurize half of the
+    * the partition) — q193's featurize and the featurize half of the
     * audio census, shared by the batch splits and the streaming
     * maintainer. */
-  private[graft] def audioFingerprintsFromDocs(
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import docs.sparkSession.implicits._
-    docs.select(col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        val dec = borrowForTask(WavDecoderPool.borrow(), WavDecoderPool.ret)
-        ids.map(id => dec.decodeFingerprint(id, synthWav(id)))
-      }
-      .toDF()
-  }
+  private[graft] def audioFingerprintsFromDocs(docs: DataFrame): DataFrame =
+    WavDecoderPool.featurize(docs.select(col("doc_id")).as(Encoders.scalaLong))(
+      (dec, id) => dec.decodeFingerprint(id, synthWav(id))).toDF()
 
   /** AUDIO NEAR-MISS CLUSTERS AT THE VALUE GRAIN — the q343
     * composition on q335's output, completing the audio progression
@@ -1971,19 +1847,11 @@ object Multimodal {
        |ORDER BY n_sampled, ${wideFpCols.mkString(", ")}""".stripMargin
 
   /** doc_id relation → wide video fingerprints (synthesize + decode
-    * inside the partition, POOLED decoder) — the featurize half of
-    * the wide-video census, shared by the batch splits and the
-    * streaming maintainer. */
-  private[graft] def videoWideFromDocs(
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import docs.sparkSession.implicits._
-    docs.select(col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        val dec = borrowForTask(GifDecoderPool.borrow(), GifDecoderPool.ret)
-        ids.map(id => dec.decodeFingerprintWide(id, synthGif(id)))
-      }
-      .toDF()
-  }
+    * inside the partition) — the featurize half of the wide-video
+    * census, shared by the batch splits and the streaming maintainer. */
+  private[graft] def videoWideFromDocs(docs: DataFrame): DataFrame =
+    GifDecoderPool.featurize(docs.select(col("doc_id")).as(Encoders.scalaLong))(
+      (dec, id) => dec.decodeFingerprintWide(id, synthGif(id))).toDF()
 
   /** IMAGE NEAR-MISS CLUSTERS AT THE VALUE GRAIN — q343's composition
     * on q334's output, closing the perceptual progression for images
@@ -2093,16 +1961,10 @@ object Multimodal {
         col("n_docs_b").as("n_docs_corpus"))
       .orderBy("hi_batch", "lo_batch", "hi_corpus", "lo_corpus")
 
-  /** doc_id relation → aHash rows through the pooled decoder (the
-    * streaming featurize half of the image census). */
-  private[graft] def imageAHashesFromDocs(
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import docs.sparkSession.implicits._
-    decodeAHashesPooled(
-      docs.select(col("doc_id")).as[Long]
-        .mapPartitions(ids => ids.map(id => ImageRow(id, synthPng(id)))))
-      .toDF()
-  }
+  /** doc_id relation → aHash rows — the featurize half of the image
+    * census, shared by the batch splits and the streaming maintainer. */
+  private[graft] def imageAHashesFromDocs(docs: DataFrame): DataFrame =
+    decodeAHashes(pngRows(docs)).toDF()
 
   /** Oracle SQL for the corpus half of the q349 split — also the
     * oracle of the STREAMING census maintenance (q355), which must

@@ -157,6 +157,16 @@ object PqAnn {
       val d = emb(j) - lit(query(j)); d * d
     }.reduceLeft(_ + _)
 
+  /** The fixed-query literal-LUT ADC distance over a `codes` column,
+    * Σ_s lut(s)(code_s) left-assoc — ONE definition for q114, q127,
+    * q139/q140, q316 and ScaleBench's layout A/B (both sides of which
+    * must stay the SAME scoring pipeline). Every LUT entry is a
+    * multiple of 0.25, so the sum is exact. */
+  private[graft] def fixedLutAdcDist: Column =
+    (0 until subspaces).map { i =>
+      element_at(array(lut(i).map(lit): _*), element_at(col("codes"), i + 1) + 1)
+    }.reduceLeft(_ + _)
+
   /** PQ encode + ADC scan + exact re-rank: top-10 by exact distance
     * out of the top-50 ADC candidates. */
   val qPqAdcTopK: GraftQuery = {
@@ -185,18 +195,13 @@ object PqAnn {
          |FROM cand
          |ORDER BY exact_dist, vec_id
          |LIMIT 10""".stripMargin) { (s, d) =>
-      val coded = Tables.embeddings(s, d)
+      val cand = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"),
           org.apache.spark.sql.graftshim.PqEncode(col("embedding"), codebook).as("codes"))
         .select(
           col("vec_id") +: col("embedding") +:
-            (0 until subspaces).map(i => element_at(col("codes"), i + 1).as(s"c$i")): _*)
-      val adcDist = (0 until subspaces).map { i =>
-        // lut lookup: literal 8-entry array indexed by the code
-        element_at(array(lut(i).map(lit): _*), col(s"c$i") + 1)
-      }.reduceLeft(_ + _)
-      val cand = coded
-        .withColumn("adc_dist", adcDist)
+            (0 until subspaces).map(i => element_at(col("codes"), i + 1).as(s"c$i")) :+
+            fixedLutAdcDist.as("adc_dist"): _*)
         .orderBy(col("adc_dist"), col("vec_id"))
         .limit(50)
       cand

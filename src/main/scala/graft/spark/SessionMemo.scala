@@ -49,5 +49,5 @@ object SessionMemo {
     * operator families, releasing each one's storage. Returns the
     * number of entries evicted. */
   def evictAll(spark: SparkSession): Int =
-    registry.asScala.map(_.evict(spark)).sum
+    registry.asScala.toSeq.map(_.evict(spark)).sum
 }

@@ -404,13 +404,12 @@ object Streams {
 
   /** Streaming multimodal featurize: the q101 decode pipeline run as a
     * micro-batch stream — the document drain's foreachBatch
-    * synthesizes the PNG payloads and decodes them through the
-    * EXECUTOR-GLOBAL decoder pool
-    * ([[graft.operators.Multimodal.decodeImagesPooled]]), appending
-    * fixed-width features to a parquet sink. foreachBatch is the right
-    * streaming shape for a featurize stage: the batch is a plain
-    * DataFrame, so the exact batch code (same typed mapPartitions, same
-    * decoder discipline) serves both modes, and the sink is a real
+    * synthesizes the PNG payloads and decodes them with q101's own
+    * featurize ([[graft.operators.Multimodal.decodeImages]], through
+    * the JVM-wide decoder pool), appending fixed-width features to a
+    * parquet sink. foreachBatch is the right streaming shape for a
+    * featurize stage: the batch is a plain DataFrame, so the exact
+    * batch code serves both modes, and the sink is a real
     * table a trainer can read mid-stream. Decoder constructions are
     * bounded by peak task concurrency for the session lifetime — NOT
     * by trigger count (MultimodalSpec drives 3 micro-batches and
@@ -1139,12 +1138,7 @@ object Streams {
               .withColumn("batch_id", lit(bid))),
           PartialLog("graft_stream_imgfeat_multi", "doc_id BIGINT, width INT, " +
             "height INT, n_channels INT, sum_r BIGINT, sum_g BIGINT, sum_b BIGINT",
-            (b, _) => Multimodal.decodeImagesPooled(b.select(col("doc_id"))
-              .as[Long](org.apache.spark.sql.Encoders.scalaLong)
-              .mapPartitions(ids => ids.map(id =>
-                Multimodal.ImageRow(id, Multimodal.synthPng(id))))(
-                org.apache.spark.sql.Encoders.product[Multimodal.ImageRow]))
-              .toDF())))
+            (b, _) => Multimodal.decodeImages(Multimodal.pngRows(b)).toDF())))
     val Seq(simhashIdx, imageIdx, audioIdx, videoWideIdx) =
       tiers.zip(Seq(simhash, image, audio, videoWide))
         .map { case (t, census) => t.scheme.indexed(census) }
@@ -1468,23 +1462,9 @@ object Streams {
 
   /** q188's serve: merge the daily partials and apply the Q30
     * fixed-point decay weighting at read time. */
-  private[graft] def decayedServe(partials: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    partials
-      .groupBy("event_type", "day").agg(sum("n").as("n")) // merge partials
-      .withColumn("max_day", max("day").over(Window.partitionBy()))
-      .withColumn("age", datediff(col("max_day"), col("day")).cast("long"))
-      .withColumn("wgt",
-        when(col("age") <= 30,
-          expr("shiftleft(CAST(1 AS BIGINT), CAST(30 - age AS INT))"))
-          .otherwise(lit(0L)))
-      .groupBy("event_type")
-      .agg(sum("n").as("n_total"),
-        sum(col("n") * col("wgt")).as("decayed_q30"),
-        min("age").cast("int").as("newest_age"),
-        max("age").cast("int").as("oldest_age"))
-      .orderBy("event_type")
-  }
+  private[graft] def decayedServe(partials: DataFrame): DataFrame =
+    graft.operators.Extras.decayedQ30(
+      partials.groupBy("event_type", "day").agg(sum("n").as("n")))
 
   // ---- q203: watermark late-data accounting ----
 
@@ -1619,26 +1599,11 @@ object Streams {
     * n_bins/n_events are emitted as the bounded-state evidence: a
     * production dashboard alerts when n_bins grows toward its cap
     * (someone started logging unbounded values). */
-  def streamQuantileSketch(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val bins = drainToMemory(spark, "graft_stream_qsketch", "complete")(
-      readEventsStream(spark, sfDir)
-        .groupBy(col("event_type"), floor(col("value")).cast("long").as("bin"))
-        .agg(count(lit(1)).as("n")))
-    val wCum = Window.partitionBy("event_type").orderBy("bin")
-    val wTot = Window.partitionBy("event_type")
-    bins
-      .withColumn("cum", sum("n").over(wCum))
-      .withColumn("total", sum("n").over(wTot))
-      .groupBy("event_type")
-      .agg(
-        count(lit(1)).as("n_bins"),
-        max("total").as("n_events"),
-        min(when(col("cum") * 100 >= col("total") * 50, col("bin"))).as("p50_est"),
-        min(when(col("cum") * 100 >= col("total") * 90, col("bin"))).as("p90_est"),
-        min(when(col("cum") * 100 >= col("total") * 99, col("bin"))).as("p99_est"))
+  def streamQuantileSketch(spark: SparkSession, sfDir: String): DataFrame =
+    graft.operators.Extras.sketchEstimates(
+      drainToMemory(spark, "graft_stream_qsketch", "complete")(
+        graft.operators.Extras.sketchBins(readEventsStream(spark, sfDir))))
       .orderBy("event_type")
-  }
 
   val qStreamQuantileSketch: GraftQuery = GraftQuery(
     "q210_stream_quantile_sketch",
@@ -2125,26 +2090,11 @@ object Streams {
     * diff against the deterministic v2 re-crawl (recomputed per call —
     * the audit side never comes from the maintained log). */
   private[graft] def merkleServe(spark: SparkSession, sfDir: String,
-      partials: DataFrame): DataFrame = {
-    val a = partials.groupBy("bucket")
-      .agg(sum("n_a").cast("long").as("n_a"),
-        sum("f_a").cast("decimal(38,0)").as("f_a"))
-    val b = graft.operators.ModelQueries.merkleLeaf(
-      graft.operators.ModelQueries.merkleV2(
-        graft.sources.Tables.documents(spark, sfDir)), "n_b", "f_b")
-    a.join(b, Seq("bucket"), "full_outer")
-      .select(col("bucket"),
-        coalesce(col("n_a"), lit(0L)).as("n_a"),
-        coalesce(col("n_b"), lit(0L)).as("n_b"),
-        coalesce(col("f_a"), lit(0L).cast("decimal(38,0)")).as("f_a"),
-        coalesce(col("f_b"), lit(0L).cast("decimal(38,0)")).as("f_b"))
-      .where(col("f_a") =!= col("f_b") || col("n_a") =!= col("n_b"))
-      .select(expr("bucket div 16").as("node1"), col("bucket"),
-        col("n_a"), col("n_b"),
-        graft.operators.ModelQueries.merkleHex(col("f_a")).as("f_a"),
-        graft.operators.ModelQueries.merkleHex(col("f_b")).as("f_b"))
-      .orderBy("bucket")
-  }
+      partials: DataFrame): DataFrame =
+    graft.operators.ModelQueries.merkleDiff(
+      partials.groupBy("bucket").agg(sum("n_a").cast("long").as("n_a"),
+        sum("f_a").cast("decimal(38,0)").as("f_a")),
+      graft.sources.Tables.documents(spark, sfDir))
 
   /** STREAMING MERKLE MAINTENANCE: q266's additive bucket
     * fingerprints kept current as documents arrive. The per-bucket

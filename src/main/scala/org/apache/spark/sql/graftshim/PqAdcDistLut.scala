@@ -12,11 +12,8 @@ import org.apache.spark.sql.types._
   * query and the codebook reconstruction of the codes, accumulated as
   * PER-SUBSPACE PARTIAL SUMS that are then summed across subspaces.
   *
-  * This differs from [[PqAdcDist]] ONLY in floating-point accumulation
-  * order: PqAdcDist streams one global accumulator across all 64 dims
-  * (matching the zip_with/aggregate form it replaced); this expression
-  * finishes each subspace's 8-term sum before adding it to the total —
-  * EXACTLY the arithmetic of a materialized lookup-table ADC
+  * It finishes each subspace's 8-term sum before adding it to the
+  * total — EXACTLY the arithmetic of a materialized lookup-table ADC
   * (lut[s][c] = Σ_j (q−c)², then Σ_s lut[s][code_s], both left-assoc),
   * which is what the q303/q309/q314 DuckDB oracles spell out
   * (`IvfPq.adcPairSql`). Swapping the engine's serve path onto this

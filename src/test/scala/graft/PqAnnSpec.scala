@@ -48,49 +48,6 @@ class PqAnnSpec extends SparkSpecBase {
     assert(rows.map(_.getSeq[Int](2)).toSeq == interp)
   }
 
-  test("PqAdcDist == reconstruct+zip_with composed form bit-for-bit, codegen == interpreted") {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.graftshim.{PqAdcDist, PqEncode}
-    val cb = PqAnn.codebook
-    // query = another embedding column, so codes AND query both vary
-    val emb = graft.sources.Tables.embeddings(spark, sf001).limit(200)
-    val pairs = emb.select(col("vec_id"), col("embedding"),
-        PqEncode(col("embedding"), cb).as("codes"))
-      .withColumn("q_emb", reverse(col("embedding")))
-    // composed reference: codebook literals -> element_at reconstruction
-    // -> zip_with/aggregate squared-L2 (the exact form PqAdcDist fuses)
-    val cbLit = (0 until PqAnn.subspaces).map(s =>
-      array(cb(s).map(c => array(c.map(lit): _*)): _*))
-    val recon = concat((0 until PqAnn.subspaces).map(s =>
-      element_at(cbLit(s), element_at(col("codes"), s + 1) + 1)): _*)
-    val composed = aggregate(zip_with(recon, col("q_emb"), (x, y) => {
-      val d = x.cast("double") - y.cast("double"); d * d
-    }), lit(0.0), _ + _)
-    val df = pairs.select(col("vec_id"),
-      PqAdcDist(col("codes"), col("q_emb"), cb).as("fused"),
-      composed.as("composed"))
-    val rows = df.collect()
-    assert(rows.nonEmpty)
-    rows.foreach(r => assert(r.getDouble(1) == r.getDouble(2),
-      s"vec ${r.getLong(0)}: fused ${r.getDouble(1)} != composed ${r.getDouble(2)}"))
-    val interp = {
-      val prev = spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      try df.collect().map(_.getDouble(1)).toSeq
-      finally {
-        spark.conf.set("spark.sql.codegen.wholeStage", "true")
-        spark.conf.set("spark.sql.codegen.factoryMode", prev)
-      }
-    }
-    assert(rows.map(_.getDouble(1)).toSeq == interp)
-    // null/short guards: short code array and out-of-range code -> NULL
-    val bad = spark.sql(
-      "SELECT 1").select(
-      PqAdcDist(array(lit(0), lit(1)), lit(null).cast("array<float>"), cb).as("n"))
-    assert(bad.head().isNullAt(0))
-  }
-
   test("PqAdcDistLut == materialized per-query LUT composed form bit-for-bit, codegen == interpreted") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.graftshim.{PqAdcDistLut, PqEncode}

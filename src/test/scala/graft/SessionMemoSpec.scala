@@ -62,6 +62,17 @@ class SessionMemoSpec extends SparkSpecBase {
     assert(memo.size == 0)
   }
 
+  test("evictAll counts every evicted entry, also when two memos evict one each") {
+    // a fresh session, so no other memo holds an entry for it
+    val s = spark.newSession()
+    val m1 = new SessionMemo[String, Int]("spec.count.a")(_ => ())
+    val m2 = new SessionMemo[String, Int]("spec.count.b")(_ => ())
+    m1.getOrElseUpdate(s, "corpus")(1)
+    m2.getOrElseUpdate(s, "corpus")(2)
+    assert(SessionMemo.evictAll(s) == 2)
+    assert(m1.size == 0 && m2.size == 0)
+  }
+
   test("eviction runs the custom release action (scratch-dir wipe)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_memo_spec").toFile
     val marker = new java.io.File(dir, "seg/part-0")
