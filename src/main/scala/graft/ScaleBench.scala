@@ -1125,49 +1125,6 @@ object ScaleBench {
       "rank_twolevel_sec" -> tTwo) ++ naiveKvs
   }
 
-  /** Grouping-set rewrite A/B (the q243/q244/q246 claim, measured):
-    * CUBE planned directly over the fact (Expand replicates EVERY row
-    * once per grouping set — 4x the bytes into the first aggregate)
-    * vs the two-level form (hash-agg to the 6-cell fine grain, Expand
-    * only the grain). Decimal sum-of-sums is exact, so both forms must
-    * produce byte-identical results — asserted via checksum. Dims are
-    * mixed deterministically from the row id (no rand — resumable). */
-  private[graft] def groupingProbe(spark: SparkSession, n: Int): Seq[(String, Double)] = {
-    val rows = spark.range(n.toLong).select(
-      col("id"),
-      concat(lit("f"), pmod(col("id") * 2654435761L + 7L, lit(3L))).as("flag"),
-      concat(lit("s"), pmod(col("id") * 40503L + 13L, lit(2L))).as("status"),
-      (pmod(col("id") * 69069L + 1L, lit(10000L)).cast("decimal(12,2)") / 100)
-        .cast("decimal(12,2)").as("price"))
-      .persist()
-    rows.count()
-    def checksum(df: DataFrame): String = df.collect()
-      .map(r => (0 until r.length).map(i => String.valueOf(r.get(i))).mkString("|"))
-      .sorted.mkString(";")
-    def direct(): String = checksum(
-      rows.cube("flag", "status").agg(
-        count(lit(1)).as("n"),
-        sum(col("price")).as("rev")))
-    def twoLevel(): String = {
-      val grain = rows.groupBy("flag", "status")
-        .agg(count(lit(1)).as("n_g"), sum(col("price")).as("rev_g"))
-        .as("g")
-      checksum(grain.cube(col("g.flag"), col("g.status")).agg(
-        sum(col("n_g")).as("n"),
-        sum(col("rev_g")).as("rev")))
-    }
-    val c1 = direct()
-    val tDirect = time(direct())._2
-    val c2 = twoLevel()
-    val tTwo = time(twoLevel())._2
-    rows.unpersist()
-    Seq(
-      "grouping_rows" -> n.toDouble,
-      "grouping_direct_sec" -> tDirect,
-      "grouping_twolevel_sec" -> tTwo,
-      "grouping_checksums_equal" -> (if (c1 == c2) 1.0 else 0.0))
-  }
-
   /** Z-order layout A/B: the same synthetic (user, minute) event rows
     * written time-sorted vs Morton-sorted, then three predicate shapes
     * against each layout, measuring rows SURVIVING the parquet scan
@@ -1874,105 +1831,5 @@ object ScaleBench {
     }
     vecs.unpersist()
     out.toSeq
-  }
-
-  /** Sweep-line A/B (the q256 claim, measured): per-day peak
-    * concurrency over n synthetic sessions via the textbook GLOBAL
-    * running-sum window (one task sorts the whole boundary census)
-    * vs the two-level form (per-day parallel prefix sums + an
-    * O(days) carry). Prefix sums compose, so both forms must produce
-    * identical per-day peaks — asserted via checksum. Sessions are
-    * mixed deterministically from the row id (no rand — resumable). */
-  private[graft] def sweepProbe(spark: SparkSession, n: Int): Seq[(String, Double)] = {
-    import org.apache.spark.sql.expressions.Window
-    val dayUs = 86400000000L
-    val days = 365L
-    val sessions = spark.range(n.toLong).select(
-      pmod(col("id") * 2654435761L + 17L, lit(days * dayUs)).as("start_us"),
-      (pmod(col("id") * 40503L + 101L, lit(3L * 3600L * 1000000L)) + 1L).as("dur_us"))
-      .select(col("start_us"), (col("start_us") + col("dur_us")).as("end_us"))
-    val census = sessions.select(col("start_us").as("b_us"), lit(1).as("d"))
-      .unionByName(sessions.select((col("end_us") + 1).as("b_us"), lit(-1).as("d")))
-      .groupBy("b_us").agg(sum("d").as("d"))
-      .withColumn("day_idx", expr("b_us div 86400000000"))
-      .persist()
-    census.count()
-    def checksum(peaks: DataFrame): String =
-      peaks.agg(sum(col("peak").cast("decimal(38,0)") *
-          pmod(col("day_idx"), lit(1000003L)).cast("decimal(38,0)")))
-        .first().getDecimal(0).toPlainString
-    def global(): String = {
-      val run = census.withColumn("active",
-        sum("d").over(Window.orderBy("b_us")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      checksum(run.groupBy("day_idx").agg(max("active").as("peak")))
-    }
-    def twoLevel(): String = {
-      val wDay = Window.partitionBy("day_idx").orderBy("b_us")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val intra = census.withColumn("prefix", sum("d").over(wDay))
-      val carry = census.groupBy("day_idx").agg(sum("d").as("day_delta"))
-        .withColumn("carry", coalesce(sum("day_delta").over(
-          Window.orderBy("day_idx").rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-        .select("day_idx", "carry")
-      checksum(intra.groupBy("day_idx").agg(max("prefix").as("max_prefix"))
-        .join(broadcast(carry), "day_idx")
-        .withColumn("peak", col("carry") + col("max_prefix")))
-    }
-    val c1 = global()
-    val tGlobal = time(global())._2
-    val c2 = twoLevel()
-    val tTwo = time(twoLevel())._2
-    census.unpersist()
-    Seq(
-      "sweep_sessions" -> n.toDouble,
-      "sweep_global_sec" -> tGlobal,
-      "sweep_twolevel_sec" -> tTwo,
-      "sweep_checksums_equal" -> (if (c1 == c2) 1.0 else 0.0))
-  }
-
-  /** Gram-matrix A/B (the q275 corpus-pass claim, measured): the
-    * declarative coordinate SELF-JOIN (d² intermediate rows per
-    * vector) vs the one-pass graftshim.GramMatrix upper-triangle
-    * aggregate. Same integer sums — checksum-asserted. Vectors are
-    * mixed deterministically from the row id (no rand). */
-  private[graft] def gramProbe(spark: SparkSession, n: Int): Seq[(String, Double)] = {
-    val d = 64
-    val vecs = spark.range(n.toLong).select(col("id").as("vec_id"),
-      expr(s"transform(sequence(1, $d), " +
-        "i -> pmod(id * 2654435761 + i * 40503, 2097152) - 1048576)").as("qv"))
-      .persist()
-    vecs.count()
-    def checksum(g: DataFrame): String =
-      g.agg(sum(col("g").cast("decimal(38,0)") *
-          pmod(col("i") * 67L + col("j"), lit(1000003L)).cast("decimal(38,0)")))
-        .first().getDecimal(0).toPlainString
-    def joinForm(): String = {
-      val flat = vecs.select(col("vec_id"),
-        posexplode(col("qv")).as(Seq("p", "q")))
-        .select(col("vec_id"), (col("p") + 1).as("i"), col("q"))
-      checksum(flat.as("a")
-        .join(flat.as("b").select(col("vec_id"), col("i").as("j"), col("q").as("qb")),
-          "vec_id")
-        .where(col("i") <= col("j"))
-        .groupBy("i", "j")
-        .agg(sum((col("q") * col("qb")).cast("decimal(38,0)")).as("g")))
-    }
-    def aggForm(): String =
-      checksum(vecs
-        .agg(org.apache.spark.sql.graftshim.GramMatrix(col("qv"), d).as("t"))
-        .select(explode(col("t")).as("e"))
-        .select(col("e.i").as("i"), col("e.j").as("j"), col("e.g").as("g")))
-    val c1 = joinForm()
-    val tJoin = time(joinForm())._2
-    val c2 = aggForm()
-    val tAgg = time(aggForm())._2
-    vecs.unpersist()
-    Seq(
-      "gram_vectors" -> n.toDouble,
-      "gram_join_sec" -> tJoin,
-      "gram_agg_sec" -> tAgg,
-      "gram_checksums_equal" -> (if (c1 == c2) 1.0 else 0.0))
   }
 }

@@ -121,10 +121,7 @@ object GraphCore {
        |LEFT JOIN in2 i2 ON i2.node = d.node
        |LEFT JOIN in3 i3 ON i3.node = d.node
        |ORDER BY doc_id""".stripMargin) { (s, d) =>
-    // materialize the verified pairs once: the symmetric union puts
-    // TWO copies of the candidate-join + Jaccard-verify pipeline in
-    // the plan, and e0 feeds both the degree census and the peel
-    val e0 = sym(Dedup.verifiedPairs(s, d).localCheckpoint())
+    val e0 = sym(Dedup.verifiedPairs(s, d))
     val deg0 = e0.groupBy("u").agg(count(lit(1)).as("deg"))
     val e2 = peel(e0, 2)
     val e3 = peel(e2, 3)
@@ -191,7 +188,7 @@ object GraphCore {
     val labels = Dedup.indexedComponents(s, d)
     // bfsHops counts the edges to size its loop; that count
     // materializes the persist
-    val e0 = sym(Dedup.verifiedPairs(s, d).localCheckpoint()).persist()
+    val e0 = sym(Dedup.verifiedPairs(s, d)).persist()
     try {
       val seeds = labels.select(col("label").as("node")).distinct()
       bfsHops(e0, seeds)
@@ -273,7 +270,7 @@ object GraphCore {
        |SELECT l.node AS doc_id, l.lbl AS community, s.community_size
        |FROM lp$lpaRounds l JOIN sizes s ON s.lbl = l.lbl
        |ORDER BY doc_id""".stripMargin) { (s, d) =>
-    val labels = lpa(sym(Dedup.verifiedPairs(s, d).localCheckpoint()), lpaRounds)
+    val labels = lpa(sym(Dedup.verifiedPairs(s, d)), lpaRounds)
     val sizes = labels.groupBy("lbl").agg(count(lit(1)).as("community_size"))
     labels.join(sizes, "lbl")
       .select(col("node").as("doc_id"), col("lbl").as("community"),

@@ -69,10 +69,7 @@ object PageRank {
        |SELECT d.node AS doc_id, CAST(d.deg AS BIGINT) AS deg, p.r AS pagerank
        |FROM deg d JOIN pr$rounds p ON p.node = d.node
        |ORDER BY doc_id""".stripMargin) { (s, d) =>
-    // checkpoint the pairs BEFORE the symmetric union: it puts two
-    // copies of the candidate-join + Jaccard-verify pipeline in the plan
-    StarComponents.pageRankInt(
-        Dedup.verifiedPairs(s, d).localCheckpoint(), rounds, initR)
+    StarComponents.pageRankInt(Dedup.verifiedPairs(s, d), rounds, initR)
       .select(col("node").as("doc_id"), col("deg"), col("r").as("pagerank"))
       .orderBy("doc_id")
   }

@@ -151,9 +151,7 @@ object StarComponents {
          |FROM it$prIters i JOIN deg d ON d.node = i.node
          |ORDER BY doc_id""".stripMargin
     }) { (s, d) =>
-    // checkpoint before pageRankInt's symmetric union doubles the
-    // verify pipeline in the persisted edge plan
-    pageRankInt(Dedup.verifiedPairs(s, d).localCheckpoint(), prIters, prScale)
+    pageRankInt(Dedup.verifiedPairs(s, d), prIters, prScale)
       .select(col("node").as("doc_id"), col("deg"), col("r").as("rank_q20"))
       .orderBy("doc_id")
   }
@@ -248,10 +246,9 @@ object StarComponents {
        |FROM deg d LEFT JOIN tri_nodes t ON d.n = t.n
        |ORDER BY doc_id""".stripMargin) { (s, d) =>
     // the census plan references the pair relation ~5 times (degree
-    // union, orientation join, both wedge sides, closure); materialize
-    // the verified pairs once instead of re-running the candidate-join
-    // + Jaccard-verify pipeline per reference
-    graphCensus(Dedup.verifiedPairs(s, d).localCheckpoint())
+    // union, orientation join, both wedge sides, closure): all of them
+    // read the one checkpointed copy
+    graphCensus(Dedup.verifiedPairs(s, d))
       .orderBy("doc_id")
   }
 

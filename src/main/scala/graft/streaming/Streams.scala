@@ -7,8 +7,14 @@ import org.apache.spark.sql.types._
 
 /** Structured Streaming surface (north-star; the reference has no
   * streaming — SURVEY §2.12). The `events` table doubles as a file
-  * stream source: readStream → windowed aggregation → memory sink,
+  * stream source: file stream → windowed aggregation → memory sink,
   * driven synchronously for verification via processAllAvailable().
+  *
+  * One arrival path: every file stream is opened by [[readArrivals]],
+  * which reads ONE arrival file per trigger — the reference's bounded
+  * ingest chunk. A table's arrivals are its symlink-staged testdata
+  * file (one trigger), a caller's multi-file staging (one trigger per
+  * file) or the ordered arrival files of [[stageArrivals]].
   *
   * Scale design: the same plan deployed against a real source (Kafka,
   * incoming parquet drops) runs unchanged; watermarking bounds state,
@@ -151,7 +157,7 @@ object Streams {
     * DataFrame once all available input is processed. */
   def hourlyCounts(spark: SparkSession, sfDir: String): DataFrame = {
     drainToMemory(spark, "graft_stream_hourly", "complete")(
-      readEventsStream(spark, sfDir)
+      readEventArrivals(spark, sfDir, None)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour").as("win"), col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -181,7 +187,7 @@ object Streams {
     * though WHICH row survives isn't — so the query emits keys only. */
   def streamDedupKeys(spark: SparkSession, sfDir: String): DataFrame =
     drainToMemory(spark, "graft_stream_dedup", "append")(
-      readEventsStream(spark, sfDir)
+      readEventArrivals(spark, sfDir, None)
         .select(col("user_id"), col("event_type"))
         .dropDuplicates("user_id", "event_type"))
       .orderBy("user_id", "event_type")
@@ -199,7 +205,7 @@ object Streams {
     * semantics are pinned by StreamsSpec. */
   def streamDedupWithinWatermarkKeys(spark: SparkSession, sfDir: String): DataFrame =
     drainToMemory(spark, "graft_stream_wm_dedup", "append")(
-      readEventsStream(spark, sfDir)
+      readEventArrivals(spark, sfDir, None)
         .select(col("user_id"), col("event_type"), col("ts"))
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
@@ -213,7 +219,7 @@ object Streams {
   def sessionCounts(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val stream = readEventsStream(spark, sfDir)
+    val stream = readEventArrivals(spark, sfDir, None)
       .select(col("user_id"), unix_timestamp(col("ts")).as("ts_sec"))
       .as[(Long, Long)]
     def update(userId: Long, rows: Iterator[(Long, Long)],
@@ -248,8 +254,8 @@ object Streams {
     * the existence check: a dangling leftover link (testdata moved)
     * reports non-existent through follow semantics but still blocks
     * createSymbolicLink — recreate it unconditionally. ONE copy of
-    * this subtle filesystem logic, shared by the events and documents
-    * streams. */
+    * this subtle filesystem logic, behind every table's arrivals
+    * ([[readArrivals]]). */
   private def stageAsStreamDir(prefix: String, sfDir: String,
       fileName: String): String = {
     val streamDir = java.nio.file.Paths.get(
@@ -265,31 +271,30 @@ object Streams {
     streamDir.toString
   }
 
-  /** `table`'s arrivals as a file stream: the staged copy `srcDir`
-    * (possibly re-chunked for multi-trigger runs) or else the table's
-    * symlink-staged file, read `maxFilesPerTrigger` files at a time with
-    * the declared `schema`, or else with the files' own (a footer-only
+  /** THE file stream of the engine: `table`'s arrivals, ONE arrival
+    * file per trigger, so a micro-batch is exactly one file. The
+    * arrivals are the staged dir `srcDir` (several files for a
+    * multi-trigger run, or the ordered arrivals of [[stageArrivals]])
+    * or else the table's symlink-staged file. They are read with the
+    * declared `schema`, or else with the files' own (a footer-only
     * probe, no data read). */
   private def readArrivals(spark: SparkSession, sfDir: String, table: String,
-      prefix: String, srcDir: Option[String], maxFilesPerTrigger: Option[Int],
-      schema: Option[String] = None): DataFrame = {
-    val dir = srcDir.getOrElse(stageAsStreamDir(prefix, sfDir, s"$table.parquet"))
-    val reader = spark.readStream.schema(
-      schema.fold(spark.read.parquet(dir).schema)(StructType.fromDDL))
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(dir)
+      srcDir: Option[String], schema: Option[String] = None): DataFrame = {
+    val dir = srcDir.getOrElse(
+      stageAsStreamDir(s"graft_stream_$table", sfDir, s"$table.parquet"))
+    spark.readStream
+      .schema(schema.fold(spark.read.parquet(dir).schema)(StructType.fromDDL))
+      .option("maxFilesPerTrigger", 1)
+      .parquet(dir)
   }
-
-  private def readEventsStream(spark: SparkSession, sfDir: String): DataFrame =
-    readEventArrivals(spark, sfDir, None, None)
 
   /** The events arrivals with ts normalized to µs TimestampType (the
     * probed file schema carries the generation's ts type). */
   private def readEventArrivals(spark: SparkSession, sfDir: String,
-      srcDir: Option[String], maxFilesPerTrigger: Option[Int]): DataFrame = {
+      srcDir: Option[String]): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    graft.sources.Tables.normalizeEventsTs(readArrivals(spark, sfDir, "events",
-      "graft_stream", srcDir, maxFilesPerTrigger))
+    graft.sources.Tables.normalizeEventsTs(
+      readArrivals(spark, sfDir, "events", srcDir))
   }
 
   /** Stream-static join: the event stream enriched against a static
@@ -299,7 +304,7 @@ object Streams {
     val cust = graft.sources.Tables.customer(spark, sfDir)
       .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
     drainToMemory(spark, "graft_stream_static", "complete")(
-      readEventsStream(spark, sfDir)
+      readEventArrivals(spark, sfDir, None)
         .join(cust, "user_id")
         .groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n"),
@@ -313,11 +318,11 @@ object Streams {
     * outer joins), while the watermark + time-range condition bounds
     * the join state to one hour of events per side. */
   def streamStreamJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val views = readEventsStream(spark, sfDir)
+    val views = readEventArrivals(spark, sfDir, None)
       .where(col("event_type") === "view")
       .select(col("user_id"), col("event_id").as("view_id"), col("ts").as("view_ts"))
       .withWatermark("view_ts", "1 hour")
-    val clicks = readEventsStream(spark, sfDir)
+    val clicks = readEventArrivals(spark, sfDir, None)
       .where(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
         col("ts").as("click_ts"))
@@ -392,14 +397,11 @@ object Streams {
     sessionCounts(s, d)
   }
 
-  /** Documents table as a file stream (same symlink staging as the
-    * events stream). `srcDir` overrides the staged directory — the
-    * spec stages a MULTI-FILE copy to force multiple micro-batches. */
+  /** The documents arrivals ([[readArrivals]]) with their declared
+    * schema; a multi-file `srcDir` arrives as several micro-batches. */
   private[graft] def readDocsStream(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame =
-    readArrivals(spark, sfDir, "documents", "graft_stream_docs", srcDir,
-      maxFilesPerTrigger,
+      srcDir: Option[String]): DataFrame =
+    readArrivals(spark, sfDir, "documents", srcDir,
       Some("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"))
 
   /** Streaming multimodal featurize: the q101 decode pipeline run as a
@@ -449,7 +451,7 @@ object Streams {
     * production posture for an unbounded user domain. */
   def sessionWindows(spark: SparkSession, sfDir: String): DataFrame =
     drainToMemory(spark, "graft_stream_session_win", "complete")(
-      readEventsStream(spark, sfDir)
+      readEventArrivals(spark, sfDir, None)
         .withWatermark("ts", "1 hour")
         .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
         .agg(count(lit(1)).as("n_events")))
@@ -498,9 +500,10 @@ object Streams {
     *
     * With the whole batch in one trigger (the staged single-file
     * default) the streamed decisions are BYTE-IDENTICAL to q130's —
-    * q145's oracle is q130's SQL verbatim. Under maxFilesPerTrigger
-    * the stream becomes several smaller arriving batches; each batch's
-    * decisions then equal curateBatch run on exactly that slice
+    * q145's oracle is q130's SQL verbatim. Staged as several arrival
+    * files, the stream becomes several smaller arriving batches (one
+    * per file); each batch's decisions then equal curateBatch run on
+    * exactly that slice
     * (StreamsSpec), the honest semantics of batch-at-a-time arrival
     * (batch-internal effects — the exact gate's batch min — are per
     * arrival, as in q130 itself). */
@@ -512,14 +515,13 @@ object Streams {
       .orderBy("doc_id")
   }
 
-  /** Embeddings table as a file stream (same symlink staging as the
-    * events/documents streams); `srcDir` lets the spec stage a
-    * multi-file copy to force several micro-batches. */
-  private[graft] def readEmbeddingsStream(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame =
-    readArrivals(spark, sfDir, "embeddings", "graft_stream_emb", srcDir,
-      maxFilesPerTrigger, Some(graft.sources.Tables.embeddingsSchema))
+  /** The embeddings arrivals ([[readArrivals]]) with the table's
+    * declared schema; a multi-file `srcDir` arrives as several
+    * micro-batches. */
+  private def readEmbeddingsStream(spark: SparkSession, sfDir: String,
+      srcDir: Option[String]): DataFrame =
+    readArrivals(spark, sfDir, "embeddings", srcDir,
+      Some(graft.sources.Tables.embeddingsSchema))
 
   /** STREAMING ANN index ingest: q140's append path run inside
     * foreachBatch — the live counterpart of batch index maintenance,
@@ -540,19 +542,17 @@ object Streams {
     * every search serves from them. Paths only; the segment bytes are
     * session-scoped scratch wiped at JVM exit. */
   private val annDeltaSegments =
-    new graft.spark.SessionMemo[(String, Option[String], Option[Int]),
+    new graft.spark.SessionMemo[(String, Option[String]),
       Seq[String]]("streams.annDeltaSegments")(_ => ())
 
   def streamAnnIngest(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val segments = annDeltaSegments.getOrElseUpdate(
-      spark, (sfDir, srcDir, maxFilesPerTrigger)) {
+      srcDir: Option[String] = None): DataFrame = {
+    val segments = annDeltaSegments.getOrElseUpdate(spark, (sfDir, srcDir)) {
       val basePath = graft.operators.IvfPq.baseSegment(spark, sfDir)
       val deltaDir = graft.operators.Formats.scratchDir(
         "graft_ivfpq_streamdelta", srcDir.getOrElse(sfDir))
       graft.operators.Formats.wipe(deltaDir)
-      drainEach(spark, readEmbeddingsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
+      drainEach(spark, readEmbeddingsStream(spark, sfDir, srcDir)
           .where(graft.operators.IvfPq.isDeltaVec)) { (batch, bid) =>
         graft.operators.IvfPq.appendBatch(spark, sfDir, batch, deltaDir, bid)
         ()
@@ -585,9 +585,8 @@ object Streams {
     * inference tier actually pays, with zero per-query driver
     * round-trips inside each batch. */
   def streamBatchServe(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame =
-    drainServe(spark, sfDir, srcDir, maxFilesPerTrigger,
+      srcDir: Option[String] = None): DataFrame =
+    drainServe(spark, sfDir, srcDir,
       "graft_stream_serve", graft.operators.IvfPq.nProbe)
 
   /** The one query-stream serve drain: one partial log, each arriving
@@ -595,14 +594,13 @@ object Streams {
     * q303 plan. A trigger whose arrivals hold no query serves no row
     * (`IvfPq.batchServe` over an empty query batch). */
   private def drainServe(spark: SparkSession, sfDir: String,
-      srcDir: Option[String], maxFilesPerTrigger: Option[Int],
-      scratch: String, probes: Int): DataFrame = {
+      srcDir: Option[String], scratch: String, probes: Int): DataFrame = {
     import graft.operators.{IvfAnn, IvfPq}
     val emb = graft.sources.Tables.embeddings(spark, sfDir)
     val centroids = IvfAnn.fixedCentroids(emb, IvfAnn.fixedStride)
     val fullPath = IvfPq.codesSegment(spark, sfDir, "full",
       IvfAnn.assign(emb, centroids))
-    val queries = readEmbeddingsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
+    val queries = readEmbeddingsStream(spark, sfDir, srcDir)
       .where(pmod(col("vec_id"), lit(IvfPq.batchQueryMod)) === 0)
     val Seq(served) = drainPartialLogs(spark, srcDir.getOrElse(sfDir), queries,
       Seq(PartialLog(scratch,
@@ -636,10 +634,9 @@ object Streams {
     * the q340 hash sample at query-log scale); per trigger the work
     * is O(batch queries × planned probed cells). */
   def streamPlannedServe(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+      srcDir: Option[String] = None): DataFrame = {
     import graft.operators.IvfPq
-    drainServe(spark, sfDir, srcDir, maxFilesPerTrigger,
+    drainServe(spark, sfDir, srcDir,
       "graft_stream_planned_serve",
       IvfPq.nProbeForRecall(spark, sfDir, IvfPq.plannedTargetPct))
   }
@@ -672,23 +669,19 @@ object Streams {
     * [[refreshPolicyIndex]] (this maintainer predates the discipline;
     * round 11 retrofits it). */
   private val compactionPolicyIndex =
-    new graft.spark.SessionMemo[(String, Option[String], Option[Int]), DataFrame](
+    new graft.spark.SessionMemo[(String, Option[String]), DataFrame](
       "streams.compactionPolicy")(
       org.apache.spark.sql.graftshim.Checkpoints.release(_))
 
   def streamCompactionPolicy(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame =
-    compactionPolicyIndex.getOrElseUpdate(
-      spark, (sfDir, srcDir, maxFilesPerTrigger))(
-      drainCompactionPolicy(spark, sfDir, srcDir, maxFilesPerTrigger)
-        .localCheckpoint())
+      srcDir: Option[String] = None): DataFrame =
+    compactionPolicyIndex.getOrElseUpdate(spark, (sfDir, srcDir))(
+      drainCompactionPolicy(spark, sfDir, srcDir).localCheckpoint())
 
   private def drainCompactionPolicy(spark: SparkSession, sfDir: String,
-      srcDir: Option[String],
-      maxFilesPerTrigger: Option[Int]): DataFrame =
+      srcDir: Option[String]): DataFrame =
     graft.operators.Compaction.policyFromCensus(
-      streamEmbPartials(spark, sfDir, srcDir, maxFilesPerTrigger)
+      streamEmbPartials(spark, sfDir, srcDir)
         .compactCensus.coalesce(1))
 
   /** Everything the ONE-PASS embeddings-ingest drain maintains: the
@@ -740,7 +733,7 @@ object Streams {
     * artifact against its batch definition under multi-trigger
     * arrivals and gates the refresh's job count. */
   private val embPartialsMemo =
-    new graft.spark.SessionMemo[(String, Option[String], Option[Int]),
+    new graft.spark.SessionMemo[(String, Option[String]),
       EmbIndexes]("streams.embPartials")(m => {
       val release = org.apache.spark.sql.graftshim.Checkpoints.release _
       Seq(m.gramPartials, m.hardnegPartials, m.compactCensus, m.driftCensus)
@@ -748,10 +741,8 @@ object Streams {
     })
 
   private[graft] def streamEmbPartials(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): EmbIndexes =
-    embPartialsMemo.getOrElseUpdate(
-      spark, (sfDir, srcDir, maxFilesPerTrigger)) {
+      srcDir: Option[String] = None): EmbIndexes =
+    embPartialsMemo.getOrElseUpdate(spark, (sfDir, srcDir)) {
       import graft.operators.{Compaction, IvfAnn, IvfPq, Similarity}
       import org.apache.spark.sql.graftshim.TopKByScore
       val corpus = org.apache.spark.sql.Observation()
@@ -773,7 +764,7 @@ object Streams {
       val census = org.apache.spark.sql.Observation()
       val Seq(gram, hardneg, compact, drift) = drainPartialLogs(spark,
         srcDir.getOrElse(sfDir),
-        readEmbeddingsStream(spark, sfDir, srcDir, maxFilesPerTrigger), Seq(
+        readEmbeddingsStream(spark, sfDir, srcDir), Seq(
           PartialLog("graft_stream_pca_multi", gramPartialSchema,
             (b, _) => graft.operators.Pca.gramPartial(b)),
           PartialLog("graft_stream_hardneg_multi", hardnegPartialSchema,
@@ -1000,7 +991,7 @@ object Streams {
       val logs = Seq(bandLog(
         "graft_stream_minhash_bands", "graft_stream_minhash_band_counts"))
       val dirs = drainLogs(spark, stage,
-        readDocsStream(spark, sfDir, Some(stage), Some(1)), logs)
+        readDocsStream(spark, sfDir, Some(stage)), logs)
       val Seq(outDir, cntDir) = dirs
       val folds = compactBandPartials(spark, outDir, cntDir)
       require(folds >= 1,
@@ -1047,7 +1038,7 @@ object Streams {
       imageFeatures: DataFrame)
 
   private val multiIndexMemo =
-    new graft.spark.SessionMemo[(String, Option[String], Option[Int]),
+    new graft.spark.SessionMemo[(String, Option[String]),
       DocIndexes]("streams.multiIndex")(m => {
       val release = org.apache.spark.sql.graftshim.Checkpoints.release _
       Seq(m.simhash.rows, m.image.rows, m.audio.rows, m.videoWide.rows,
@@ -1057,11 +1048,9 @@ object Streams {
     })
 
   def streamMultiIndexes(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DocIndexes =
-    multiIndexMemo.getOrElseUpdate(
-      spark, (sfDir, srcDir, maxFilesPerTrigger))(
-      drainMultiIndexes(spark, sfDir, srcDir, maxFilesPerTrigger))
+      srcDir: Option[String] = None): DocIndexes =
+    multiIndexMemo.getOrElseUpdate(spark, (sfDir, srcDir))(
+      drainMultiIndexes(spark, sfDir, srcDir))
 
   /** SINGLE-PASS MULTI-INDEX MAINTENANCE (r12 verdict #5, widened to
     * the whole document family in r14 per the r13 verdict's #1): one
@@ -1089,8 +1078,7 @@ object Streams {
     * the summed census, never from per-trigger partials — which keeps
     * the probes corpus-aggregate-free. */
   private def drainMultiIndexes(spark: SparkSession, sfDir: String,
-      srcDir: Option[String],
-      maxFilesPerTrigger: Option[Int]): DocIndexes = {
+      srcDir: Option[String]): DocIndexes = {
     import graft.operators.{CdcChunking, CurationFunnel, Dedup, KmvSketch,
       ModelQueries, Multimodal, Selection, TrendStats, ValueTier}
     val tiers = Seq(Dedup.simhashTier, Multimodal.imageTier,
@@ -1098,7 +1086,7 @@ object Streams {
     val Seq(simhash, image, audio, videoWide, bandRows, bandCounts, cms, drift,
         kmv, psi, cdc, merkle, chunks, curated, imageFeatures) =
       drainPartialLogs(spark, srcDir.getOrElse(sfDir),
-        readDocsStream(spark, sfDir, srcDir, maxFilesPerTrigger),
+        readDocsStream(spark, sfDir, srcDir),
         tiers.map(t => PartialLog(s"graft_stream_${t.name}_census_multi",
           t.partialSchema,
           (b, _) => t.partial(b.where(ValueTier.fixtureCorpusFilter)),
@@ -1225,22 +1213,18 @@ object Streams {
     * re-invocations must not re-pay the stream drain. Released on
     * eviction. */
   private val refreshPolicyIndex =
-    new graft.spark.SessionMemo[(String, Option[String], Option[Int]), DataFrame](
+    new graft.spark.SessionMemo[(String, Option[String]), DataFrame](
       "streams.refreshPolicy")(
       org.apache.spark.sql.graftshim.Checkpoints.release(_))
 
   def streamRefreshPolicy(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame =
-    refreshPolicyIndex.getOrElseUpdate(
-      spark, (sfDir, srcDir, maxFilesPerTrigger))(
-      drainRefreshPolicy(spark, sfDir, srcDir, maxFilesPerTrigger)
-        .localCheckpoint())
+      srcDir: Option[String] = None): DataFrame =
+    refreshPolicyIndex.getOrElseUpdate(spark, (sfDir, srcDir))(
+      drainRefreshPolicy(spark, sfDir, srcDir).localCheckpoint())
 
   private def drainRefreshPolicy(spark: SparkSession, sfDir: String,
-      srcDir: Option[String],
-      maxFilesPerTrigger: Option[Int]): DataFrame = {
-    val drained = streamEmbPartials(spark, sfDir, srcDir, maxFilesPerTrigger)
+      srcDir: Option[String]): DataFrame = {
+    val drained = streamEmbPartials(spark, sfDir, srcDir)
     // the centroid literals (persisted + re-fit) derive from the sfDir
     // embeddings; a srcDir that does not RE-STAGE that same corpus
     // would drift-census one population against another's centroids —
@@ -1370,15 +1354,13 @@ object Streams {
     * tree instead of rebuilding base + replaying the drain. Eviction
     * wipes the tree (session-scoped scratch). */
   private val zorderTreeIndex =
-    new graft.spark.SessionMemo[(String, Option[String], Option[Int]), String](
+    new graft.spark.SessionMemo[(String, Option[String]), String](
       "streams.zorderTree")(graft.operators.Formats.wipe(_))
 
   def streamZorderIngest(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val basePath = zorderTreeIndex.getOrElseUpdate(
-      spark, (sfDir, srcDir, maxFilesPerTrigger))(
-      drainZorderIngest(spark, sfDir, srcDir, maxFilesPerTrigger))
+      srcDir: Option[String] = None): DataFrame = {
+    val basePath = zorderTreeIndex.getOrElseUpdate(spark, (sfDir, srcDir))(
+      drainZorderIngest(spark, sfDir, srcDir))
     val schema = "event_id BIGINT, user_id BIGINT, ub BIGINT, tb BIGINT, " +
       "morton BIGINT, cell BIGINT"
     spark.read.schema(schema).parquet(basePath)
@@ -1393,8 +1375,7 @@ object Streams {
   /** Build the base layout and replay the arriving batches into it;
     * returns the maintained tree's path. */
   private def drainZorderIngest(spark: SparkSession, sfDir: String,
-      srcDir: Option[String],
-      maxFilesPerTrigger: Option[Int]): String = {
+      srcDir: Option[String]): String = {
     import graft.operators.ZOrder
     val basePath = graft.operators.Formats.scratchDir(
       "graft_zorder_streambase", srcDir.getOrElse(sfDir))
@@ -1402,7 +1383,7 @@ object Streams {
     val corpus = ZOrder.eventCells(graft.sources.Tables.events(spark, sfDir))
       .where(pmod(col("event_id"), lit(5L)) =!= 4L)
     ZOrder.writeLayout(corpus, basePath)
-    drainEach(spark, readEventArrivals(spark, sfDir, srcDir, maxFilesPerTrigger)
+    drainEach(spark, readEventArrivals(spark, sfDir, srcDir)
         .where(pmod(col("event_id"), lit(5L)) === 4L)) { (batch, _) =>
       ZOrder.incrementalMaintain(spark, basePath, ZOrder.eventCells(batch))
       ()
@@ -1437,7 +1418,7 @@ object Streams {
     * instead of one per maintainer. Both serving queries keep their
     * batch oracles. */
   private val eventsPartialsMemo =
-    new graft.spark.SessionMemo[(String, Option[String], Option[Int]),
+    new graft.spark.SessionMemo[(String, Option[String]),
       (DataFrame, DataFrame)]("streams.eventsPartials")(p => {
       org.apache.spark.sql.graftshim.Checkpoints.release(p._1)
       org.apache.spark.sql.graftshim.Checkpoints.release(p._2)
@@ -1445,12 +1426,10 @@ object Streams {
 
   /** (decay partials, OLS daily census partials). */
   private[graft] def streamEventsPartials(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): (DataFrame, DataFrame) =
-    eventsPartialsMemo.getOrElseUpdate(
-      spark, (sfDir, srcDir, maxFilesPerTrigger)) {
+      srcDir: Option[String] = None): (DataFrame, DataFrame) =
+    eventsPartialsMemo.getOrElseUpdate(spark, (sfDir, srcDir)) {
       val Seq(decay, ols) = drainPartialLogs(spark, srcDir.getOrElse(sfDir),
-        readEventArrivals(spark, sfDir, srcDir, maxFilesPerTrigger), Seq(
+        readEventArrivals(spark, sfDir, srcDir), Seq(
           PartialLog("graft_stream_decay_multi",
             "event_type STRING, day DATE, n BIGINT",
             (b, _) => b.groupBy(col("event_type"), to_date(col("ts")).as("day"))
@@ -1472,26 +1451,21 @@ object Streams {
   private[graft] val lateArrivalFiles = 4
   private val lateDelayMicros = 3600L * 1000000L // 1 hour
 
-  /** Stage the events table as [[lateArrivalFiles]] ARRIVAL files with
-    * strictly increasing modification times (file i = `event_id % k =
-    * i`, named arr00i): FileStreamSource picks new files oldest-mtime-
-    * first (ties by path — both orders agree here by construction), so
-    * with maxFilesPerTrigger=1 micro-batch i is EXACTLY file i. That
-    * pins an arrival order the oracle can reconstruct — the piece
-    * plain single-file staging can't give an order-DEPENDENT audit.
-    * Timestamps are normalized to µs at staging so the stream schema
-    * is stable across testdata generations. */
-  private def stageOrderedEventArrivals(spark: SparkSession,
-      sfDir: String): String = {
-    val k = lateArrivalFiles
-    val dir = graft.operators.Formats.scratchDir("graft_stream_late", sfDir)
+  /** THE stager of ordered arrivals: `files` written in order as
+    * arrival files 0, 1, … ([[writeArrivalFile]]) into the scratch dir
+    * `scratch` of `sfDir`, once per JVM — a `_staged` marker (hidden
+    * from the file source) makes a later call reuse them. Read through
+    * [[readArrivals]], micro-batch i is EXACTLY file i: that pins an
+    * arrival order an oracle can reconstruct, which plain single-file
+    * staging can't give an order-DEPENDENT stream. */
+  private def stageArrivals(scratch: String, sfDir: String)(
+      files: => Seq[DataFrame]): String = {
+    val dir = graft.operators.Formats.scratchDir(scratch, sfDir)
     val marker = new java.io.File(dir, "_staged")
     if (!marker.exists()) {
       graft.operators.Formats.wipe(dir)
       new java.io.File(dir).mkdirs()
-      val ev = graft.sources.Tables.events(spark, sfDir).select("event_id", "ts")
-      (0 until k).foreach(i =>
-        writeArrivalFile(ev.where(pmod(col("event_id"), lit(k)) === i), dir, i))
+      files.zipWithIndex.foreach { case (df, i) => writeArrivalFile(df, dir, i) }
       assert(marker.createNewFile())
     }
     dir
@@ -1499,8 +1473,8 @@ object Streams {
 
   /** Write `df` as ONE parquet arrival file `arr00i` in `dir` with
     * modification time base + i minutes: FileStreamSource picks new
-    * files oldest-mtime-first, so with maxFilesPerTrigger=1 the
-    * micro-batches follow i. */
+    * files oldest-mtime-first (ties by path — both orders agree by
+    * construction), so one file per trigger follows i. */
   private[graft] def writeArrivalFile(df: DataFrame, dir: String, i: Int): Unit = {
     val tmp = new java.io.File(dir, s"_tmp$i")
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
@@ -1539,12 +1513,19 @@ object Streams {
     * (the watermark's one-batch lag), and tags each row with the same
     * strict µs comparison. */
   def streamLateAudit(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = stageOrderedEventArrivals(spark, sfDir)
+    // the events as `lateArrivalFiles` arrival files, file i =
+    // `event_id % k = i`; timestamps normalized to µs at staging, so
+    // the stream schema is stable across testdata generations
+    val k = lateArrivalFiles
+    val dir = stageArrivals("graft_stream_late", sfDir) {
+      val ev = graft.sources.Tables.events(spark, sfDir).select("event_id", "ts")
+      (0 until k).map(i => ev.where(pmod(col("event_id"), lit(k)) === i))
+    }
     val sink = graft.operators.Formats.scratchDir("graft_late_sink", sfDir)
     graft.operators.Formats.wipe(sink)
     val runningMax = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    drainEach(spark, spark.readStream.schema("event_id BIGINT, ts TIMESTAMP")
-        .option("maxFilesPerTrigger", 1).parquet(dir)) { (batch, bid) =>
+    drainEach(spark, readArrivals(spark, sfDir, "events", Some(dir),
+        Some("event_id BIGINT, ts TIMESTAMP"))) { (batch, bid) =>
       val priorMax = runningMax.get()
       val isLate =
         if (priorMax == Long.MinValue) lit(false)
@@ -1602,7 +1583,7 @@ object Streams {
   def streamQuantileSketch(spark: SparkSession, sfDir: String): DataFrame =
     graft.operators.Extras.sketchEstimates(
       drainToMemory(spark, "graft_stream_qsketch", "complete")(
-        graft.operators.Extras.sketchBins(readEventsStream(spark, sfDir))))
+        graft.operators.Extras.sketchBins(readEventArrivals(spark, sfDir, None))))
       .orderBy("event_type")
 
   val qStreamQuantileSketch: GraftQuery = GraftQuery(
@@ -1794,26 +1775,22 @@ object Streams {
     * machines' states — and ONE shuffle of the arriving rows replaces
     * four. */
   private val behaviorMemo =
-    new graft.spark.SessionMemo[(String, Option[String], Option[Int]),
+    new graft.spark.SessionMemo[(String, Option[String]),
       DataFrame]("streams.behavior")(
       org.apache.spark.sql.graftshim.Checkpoints.release(_))
 
   def streamBehavior(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame =
-    behaviorMemo.getOrElseUpdate(
-      spark, (sfDir, srcDir, maxFilesPerTrigger))(
-      drainBehavior(spark, sfDir, srcDir, maxFilesPerTrigger)
-        .localCheckpoint())
+      srcDir: Option[String] = None): DataFrame =
+    behaviorMemo.getOrElseUpdate(spark, (sfDir, srcDir))(
+      drainBehavior(spark, sfDir, srcDir).localCheckpoint())
 
   private def drainBehavior(spark: SparkSession, sfDir: String,
-      srcDir: Option[String],
-      maxFilesPerTrigger: Option[Int]): DataFrame = {
+      srcDir: Option[String]): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val unset = Long.MinValue
     val gapUs = 1800000000L
-    val stream = readEventArrivals(spark, sfDir, srcDir, maxFilesPerTrigger)
+    val stream = readEventArrivals(spark, sfDir, srcDir)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("event_type"))
       .as[(Long, Long, Long, String)]
@@ -1962,18 +1939,15 @@ object Streams {
     * tier keeps warm; the quintile serve recomputes per call (its
     * boundaries are data-dependent, never frozen). */
   private val rfmPartialsMemo =
-    new graft.spark.SessionMemo[(String, Option[String], Option[Int]),
+    new graft.spark.SessionMemo[(String, Option[String]),
       DataFrame]("streams.rfmPartials")(
       org.apache.spark.sql.graftshim.Checkpoints.release(_))
 
   def streamRfm(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val partials = rfmPartialsMemo.getOrElseUpdate(
-      spark, (sfDir, srcDir, maxFilesPerTrigger)) {
+      srcDir: Option[String] = None): DataFrame = {
+    val partials = rfmPartialsMemo.getOrElseUpdate(spark, (sfDir, srcDir)) {
       val Seq(metrics) = drainPartialLogs(spark, srcDir.getOrElse(sfDir),
-        readArrivals(spark, sfDir, "orders", "graft_stream_orders", srcDir,
-          maxFilesPerTrigger),
+        readArrivals(spark, sfDir, "orders", srcDir),
         Seq(PartialLog("graft_stream_rfm",
           "o_custkey BIGINT, last_d DATE, f BIGINT, m BIGINT",
           (b, _) => graft.operators.Behavior.rfmMetrics(b))))
@@ -2025,7 +1999,7 @@ object Streams {
     * zone-map manifests (q301's): the doc multi-drain discipline on
     * the lineitem source. */
   private val lineitemPartialsMemo =
-    new graft.spark.SessionMemo[(String, Option[String], Option[Int]),
+    new graft.spark.SessionMemo[(String, Option[String]),
       (DataFrame, DataFrame)]("streams.lineitemPartials")(p => {
       org.apache.spark.sql.graftshim.Checkpoints.release(p._1)
       org.apache.spark.sql.graftshim.Checkpoints.release(p._2)
@@ -2033,12 +2007,9 @@ object Streams {
 
   /** (MV partials, zone-map partials). */
   private[graft] def streamLineitemPartials(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): (DataFrame, DataFrame) =
-    lineitemPartialsMemo.getOrElseUpdate(
-      spark, (sfDir, srcDir, maxFilesPerTrigger)) {
-      val arrivals = readArrivals(spark, sfDir, "lineitem", "graft_stream_li",
-        srcDir, maxFilesPerTrigger)
+      srcDir: Option[String] = None): (DataFrame, DataFrame) =
+    lineitemPartialsMemo.getOrElseUpdate(spark, (sfDir, srcDir)) {
+      val arrivals = readArrivals(spark, sfDir, "lineitem", srcDir)
       // the ship-date extremes keep the arrivals' timestamp type
       val ship = arrivals.schema("l_shipdate").dataType.sql
       val Seq(mv, zones) = drainPartialLogs(spark, srcDir.getOrElse(sfDir),
@@ -2208,9 +2179,9 @@ object Streams {
 
   /** Stage the full events table PLUS a far-future sentinel pair
     * (user_id = −1, one view + one click, +30 days) as arrival file 0,
-    * followed by a second sentinel pair (+60 days) as arrival file 1,
-    * with strictly increasing mtimes — the q203 ordered-arrival
-    * technique. The sentinels drive the WATERMARK past every real
+    * followed by a second sentinel pair (+60 days) as arrival file 1
+    * ([[stageArrivals]], the q203 ordered-arrival technique). The
+    * sentinels drive the WATERMARK past every real
     * event: the watermark updates from the batch MAX at END of batch
     * (so sentinel 1 riding WITH the events advances it past all real
     * rows when batch 0 closes), and batch 1 (sentinel 2) is the
@@ -2224,12 +2195,8 @@ object Streams {
     * happens after the batch's join anyway. q242 measured 6.2 s → see
     * OPTIMIZATION_r13.md.) */
   private def stageEventsWithSentinels(spark: SparkSession,
-      sfDir: String): String = {
-    val dir = graft.operators.Formats.scratchDir("graft_stream_outer2", sfDir)
-    val marker = new java.io.File(dir, "_staged")
-    if (!marker.exists()) {
-      graft.operators.Formats.wipe(dir)
-      new java.io.File(dir).mkdirs()
+      sfDir: String): String =
+    stageArrivals("graft_stream_outer2", sfDir) {
       import spark.implicits._
       val ev = graft.sources.Tables.events(spark, sfDir)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
@@ -2241,12 +2208,8 @@ object Streams {
           .select(col("event_id"), timestamp_micros(col("ts_us")).as("ts"),
             col("user_id"), col("event_type"))
       }
-      writeArrivalFile(ev.unionByName(sentinels(1)), dir, 0)
-      writeArrivalFile(sentinels(2), dir, 1)
-      assert(marker.createNewFile())
+      Seq(ev.unionByName(sentinels(1)), sentinels(2))
     }
-    dir
-  }
 
   /** STREAM-STREAM LEFT OUTER JOIN with watermark-bounded state: q67's
     * view⋈click interval join, keeping every view — matched rows emit
@@ -2263,9 +2226,8 @@ object Streams {
     * it is the eviction path itself. */
   def streamStreamLeftJoin(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = stageEventsWithSentinels(spark, sfDir)
-    def src(): DataFrame = spark.readStream
-      .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING")
-      .option("maxFilesPerTrigger", 1).parquet(dir)
+    def src(): DataFrame = readArrivals(spark, sfDir, "events", Some(dir),
+      Some("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING"))
     val views = src().where(col("event_type") === "view")
       .select(col("user_id"), col("event_id").as("view_id"),
         col("ts").as("view_ts"))

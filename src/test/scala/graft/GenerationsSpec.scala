@@ -1,17 +1,21 @@
 package graft
 
 import graft.operators.{GraphCore, StarComponents}
+import graft.spark.SessionMemo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graftshim.{Checkpoints, ListenerSync}
 
 /** The five graph loops that run over checkpointed generations
   * (`graft.spark.Generations`): star contraction, integer PageRank,
   * k-core peeling, BFS and label propagation. Each gives back every
-  * generation it supersedes, and the graph queries built on them keep
-  * their warm Spark-job counts. */
+  * generation it supersedes but never the verified-pair relation the
+  * graph queries share, and those queries keep their warm Spark-job
+  * counts. */
 class GenerationsSpec extends SparkSpecBase {
 
   import spark.implicits._
+
+  private val sf = "/root/testdata/sf0.01"
 
   // a 6-clique with a 4-node tail: several rounds in every loop
   private val pairs: Seq[(Long, Long)] =
@@ -43,16 +47,46 @@ class GenerationsSpec extends SparkSpecBase {
     }
   }
 
+  test("the graph queries share one checkpointed verified-pair relation that only eviction releases") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    val memo = graft.operators.Dedup.verifiedPairIndex
+    val sc = spark.sparkContext
+    // a fresh session: its entries are this test's alone
+    val s = spark.newSession()
+    val before = memo.size
+    val graphQueries = Seq("q180_pagerank", "q200_graph_census",
+      "q219_kcore_membership", "q220_canonical_depth", "q248_pagerank",
+      "q268_label_propagation")
+    try {
+      for (_ <- 1 to 2; q <- graphQueries) SparkEntry.queries(q)(s, sf).count()
+      assert(memo.size === before + 1, "one verified-pair entry per (session, corpus)")
+      val pairs = memo.getOrElseUpdate(s, sf)(fail("the entry must be memoized"))
+      val blocks = pairs.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id }
+      def cached(id: Int) =
+        sc.getRDDStorageInfo.exists(i => i.id == id && i.numCachedPartitions > 0)
+      // no graph loop released the shared relation
+      assert(blocks.nonEmpty && blocks.forall(cached),
+        s"the memoized pairs' checkpoint blocks $blocks must still be held")
+      SessionMemo.evictAll(s)
+      assert(memo.size === before)
+      // checkpoint blocks are released without blocking
+      eventually(timeout(Span(60, Seconds))) {
+        assert(!blocks.exists(cached), s"blocks $blocks still held after eviction")
+      }
+    } finally SessionMemo.evictAll(s)
+  }
+
   test("warm graph queries launch no more Spark jobs than their pinned counts (sf0.01)") {
-    val sf = "/root/testdata/sf0.01"
     // warm: the verified pairs and component labels are memoized by a
     // first run; a drained count of a second run is what is gated
     val pinned = Seq(
-      "q180_pagerank" -> 37,
-      "q219_kcore_membership" -> 26,
-      "q220_canonical_depth" -> 25,
-      "q248_pagerank" -> 31,
-      "q268_label_propagation" -> 30)
+      "q180_pagerank" -> 30,
+      "q219_kcore_membership" -> 19,
+      "q220_canonical_depth" -> 18,
+      "q248_pagerank" -> 24,
+      "q268_label_propagation" -> 23)
     pinned.foreach { case (q, most) =>
       SparkEntry.queries(q)(spark, sf).count()
       val (_, jobs) = ListenerSync.countJobs(spark.sparkContext) {

@@ -61,7 +61,7 @@ class MultimodalSpec extends SparkSpecBase {
 
   test("streaming featurize reuses pooled decoders ACROSS micro-batches") {
     import org.apache.spark.sql.functions.col
-    // stage the documents as 3 parquet files + maxFilesPerTrigger=1 →
+    // stage the documents as 3 parquet files, one file per trigger →
     // 3 micro-batches through the document drain's decode stage (a
     // fresh dir, so the memoized drain genuinely runs under the counter)
     val src = java.nio.file.Files.createTempDirectory("graft_mb_docs").toString
@@ -72,7 +72,7 @@ class MultimodalSpec extends SparkSpecBase {
     assert(nFiles >= 3, s"fixture must span ≥3 files, got $nFiles")
     Multimodal.PngDecoder.inits.set(0L)
     val out = graft.streaming.Streams.streamMultiIndexes(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+      spark, sf001, srcDir = Some(src))
       .imageFeatures
     assert(out.count() === graft.sources.Tables.documents(spark, sf001).count())
     val inits = Multimodal.PngDecoder.inits.get()

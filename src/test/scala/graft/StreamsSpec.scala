@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
 class StreamsSpec extends SparkSpecBase {
 
   /** `df` staged as `nFiles` parquet arrival files in a fresh dir —
-    * with maxFilesPerTrigger=1 each file is one micro-batch. */
+    * every file stream reads one file per trigger, so each file is one
+    * micro-batch. */
   private def staged(prefix: String, df: DataFrame, nFiles: Int = 3): String = {
     val dir = java.nio.file.Files.createTempDirectory(prefix).toString
     df.repartition(nFiles).write.mode("overwrite").parquet(dir)
@@ -16,8 +17,8 @@ class StreamsSpec extends SparkSpecBase {
   }
 
   /** The events staged as 4 TIME-ORDERED arrival files (global (ts,
-    * event_id) rank quartiles) with increasing mtimes, so
-    * maxFilesPerTrigger=1 delivers micro-batches that respect the
+    * event_id) rank quartiles) with increasing mtimes, so the
+    * one-file triggers deliver micro-batches that respect the
     * per-user event-time contract the stateful behavioral drain
     * relies on. */
   private def stageTimeOrderedEvents(): String = {
@@ -62,7 +63,7 @@ class StreamsSpec extends SparkSpecBase {
   // Shared multi-file arrival fixtures: specs that stage a table the
   // same way read one staged dir, so each memoized production drain
   // over it is built once for all of them (fresh dirs, so the first
-  // use genuinely drains under maxFilesPerTrigger=1).
+  // use genuinely drains, one trigger per staged file).
   private lazy val docs3 = staged("graft_mb_docs", Tables.documents(spark, sf001))
   private lazy val emb3 = staged("graft_mb_emb", Tables.embeddings(spark, sf001))
   private lazy val events3 = staged("graft_mb_events", Tables.events(spark, sf001))
@@ -72,17 +73,17 @@ class StreamsSpec extends SparkSpecBase {
   /** The document multi-drain over [[docs3]] and the number of
     * streaming queries its build started. */
   private lazy val docDrain: (Streams.DocIndexes, Int) = countingStreams(
-    Streams.streamMultiIndexes(spark, sf001, Some(docs3), Some(1)))
+    Streams.streamMultiIndexes(spark, sf001, Some(docs3)))
 
   /** The behavioral drain over [[orderedEvents]] and the number of
     * streaming queries its build started. */
   private lazy val behaviorDrain: (DataFrame, Int) = countingStreams(
-    Streams.streamBehavior(spark, sf001, Some(orderedEvents), Some(1)))
+    Streams.streamBehavior(spark, sf001, Some(orderedEvents)))
 
-  private def embDrain = Streams.streamEmbPartials(spark, sf001, Some(emb3), Some(1))
-  private def eventsDrain = Streams.streamEventsPartials(spark, sf001, Some(events3), Some(1))
+  private def embDrain = Streams.streamEmbPartials(spark, sf001, Some(emb3))
+  private def eventsDrain = Streams.streamEventsPartials(spark, sf001, Some(events3))
   private def lineitemDrain =
-    Streams.streamLineitemPartials(spark, sf001, Some(lineitem3), Some(1))
+    Streams.streamLineitemPartials(spark, sf001, Some(lineitem3))
 
   private def rows(df: DataFrame): Seq[Seq[Any]] = df.collect().map(_.toSeq).toSeq
 
@@ -340,7 +341,7 @@ class StreamsSpec extends SparkSpecBase {
   }
 
   test("q145: streamed curation equals q130 batch decisions; corpus indexes build once") {
-    // multi-file staging + maxFilesPerTrigger=1 → several micro-batches
+    // multi-file staging, one file per trigger → several micro-batches
     // through the document drain's curation gate stage
     graft.operators.CurationFunnel.corpusStatsBuilds.set(0)
     val out = docDrain._1.curated
@@ -379,12 +380,12 @@ class StreamsSpec extends SparkSpecBase {
   }
 
   test("q147: streamed ANN ingest equals batch append; centroid set builds once") {
-    // multi-file staging + maxFilesPerTrigger=1 → the batch vectors
+    // multi-file staging, one file per trigger → the batch vectors
     // arrive across several micro-batches, each appended through the
     // SAME foreachBatch encode stage
     graft.operators.IvfPq.centroidBuilds.set(0)
     val multi = graft.streaming.Streams.streamAnnIngest(
-      spark, sf001, srcDir = Some(emb3), maxFilesPerTrigger = Some(1))
+      spark, sf001, srcDir = Some(emb3))
       .collect().map(_.toSeq).toSeq
     // the collected centroid set is session state, built at most once
     // across all micro-batches (0 if an earlier test already built it)
@@ -398,7 +399,7 @@ class StreamsSpec extends SparkSpecBase {
   }
 
   test("q341: multi-trigger planner-driven serve equals q328's batch answer") {
-    // 3 staged files + maxFilesPerTrigger=1 → the query log arrives
+    // 3 staged files, one file per trigger → the query log arrives
     // across several micro-batches, each served at the SAME planned
     // nProbe (policy read once at service start); q314 serves the same
     // arrivals through the same drain at the fixed nProbe and must
@@ -406,7 +407,7 @@ class StreamsSpec extends SparkSpecBase {
     for ((drain, batchQuery) <- Seq(
         (graft.streaming.Streams.streamPlannedServe _, "q328_planned_batch_serve"),
         (graft.streaming.Streams.streamBatchServe _, "q303_ivfpq_batch_serve"))) {
-      val streamed = drain(spark, sf001, Some(emb3), Some(1))
+      val streamed = drain(spark, sf001, Some(emb3))
         .collect().map(_.toSeq).toSeq
       val batch = SparkEntry.queries(batchQuery)(spark, sf001)
         .collect().map(_.toSeq).toSeq
@@ -417,12 +418,12 @@ class StreamsSpec extends SparkSpecBase {
   }
 
   test("q344: multi-trigger census partials drain to q342's batch decision") {
-    // 3 staged files + maxFilesPerTrigger=1 → the delta population
+    // 3 staged files, one file per trigger → the delta population
     // arrives across several triggers, each appending one bounded
     // partial census; the summed census must make the SAME fold/keep
     // decision as the batch policy over the persisted segments
     val streamed = graft.streaming.Streams.streamCompactionPolicy(
-      spark, sf001, srcDir = Some(emb3), maxFilesPerTrigger = Some(1))
+      spark, sf001, srcDir = Some(emb3))
       .collect().map(_.toSeq).toSeq
     val batch = SparkEntry.queries("q342_compaction_policy")(spark, sf001)
       .collect().map(_.toSeq).toSeq
@@ -431,7 +432,7 @@ class StreamsSpec extends SparkSpecBase {
   }
 
   test("q350/q351: multi-trigger simhash census drains to the batch corpus index and serves the q345 probe") {
-    // 3 staged files + maxFilesPerTrigger=1 → the corpus arrives
+    // 3 staged files, one file per trigger → the corpus arrives
     // across several triggers, each overwriting one batchId-keyed
     // partial census; the re-summed census must equal the batch-built
     // corpus index value for value
@@ -506,7 +507,7 @@ class StreamsSpec extends SparkSpecBase {
 
   test("q357: multi-trigger drift census drains to q352's batch refresh decision") {
     val streamed = graft.streaming.Streams.streamRefreshPolicy(
-      spark, sf001, srcDir = Some(emb3), maxFilesPerTrigger = Some(1))
+      spark, sf001, srcDir = Some(emb3))
       .collect().map(_.toSeq).toSeq
     val batch = SparkEntry.queries("q352_centroid_refresh_policy")(spark, sf001)
       .collect().map(_.toSeq).toSeq
@@ -538,7 +539,7 @@ class StreamsSpec extends SparkSpecBase {
     val dir = staged("graft_mb_docs_jobs", Tables.documents(spark, sf001))
     val (_, jobs) = org.apache.spark.sql.graftshim.ListenerSync
       .countJobs(spark.sparkContext) {
-        Streams.streamMultiIndexes(spark, sf001, Some(dir), Some(1))
+        Streams.streamMultiIndexes(spark, sf001, Some(dir))
       }
     info(s"multi-drain jobs: $jobs")
     assert(jobs <= 236, s"the document multi-drain launched $jobs Spark jobs")
@@ -551,11 +552,12 @@ class StreamsSpec extends SparkSpecBase {
     val dir = java.nio.file.Files.createTempDirectory("graft_serve_noquery").toString
     emb.where(noQuery).coalesce(1).write.mode("append").parquet(dir)
     emb.where(!noQuery).coalesce(1).write.mode("append").parquet(dir)
-    val streamed = rows(Streams.streamBatchServe(spark, sf001, Some(dir), Some(1)))
+    val streamed = rows(Streams.streamBatchServe(spark, sf001, Some(dir)))
     val batch = rows(SparkEntry.queries("q303_ivfpq_batch_serve")(spark, sf001))
     assert(streamed.nonEmpty && streamed === batch,
       "a trigger with no query must not break the per-trigger serve")
-    // both triggers wrote their partial; the query-free one is empty
+    // the default trigger reads one arrival file: both triggers wrote
+    // their partial, and the query-free one is empty
     val served = Option(new java.io.File(graft.operators.Formats.scratchDir(
         "graft_stream_serve", dir)).listFiles()).toSeq.flatten
       .filter(_.getName.startsWith("batch="))
@@ -608,7 +610,7 @@ class StreamsSpec extends SparkSpecBase {
   }
 
   test("q153: sketch merged across micro-batches equals the batch sketch") {
-    // multi-file staging + maxFilesPerTrigger=1 → the corpus arrives
+    // multi-file staging, one file per trigger → the corpus arrives
     // as several partial sketches; counter addition must reconstruct
     // the exact whole-corpus estimates
     val streamed = rows(Streams.cmsServe(spark, sf001, docDrain._1.cmsPartials))
@@ -623,7 +625,7 @@ class StreamsSpec extends SparkSpecBase {
   }
 
   test("q173: multi-trigger z-order ingest equals the full-corpus census") {
-    // stage the batch slice as 3 files + maxFilesPerTrigger=1 → the
+    // stage the batch slice as 3 files, one file per trigger → the
     // arrivals hit incrementalMaintain across SEVERAL triggers, with
     // later triggers re-touching tiles earlier ones rewrote
     val src = java.nio.file.Files.createTempDirectory("graft_mb_zorder").toString
@@ -631,7 +633,7 @@ class StreamsSpec extends SparkSpecBase {
       .where(pmod(col("event_id"), lit(5L)) === 4L).repartition(3)
       .write.mode("overwrite").parquet(src)
     val streamed = graft.streaming.Streams.streamZorderIngest(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+      spark, sf001, srcDir = Some(src))
       .collect().map(_.toSeq).toSeq
     val full = SparkEntry.queries("q169_zorder_cells")(spark, sf001)
       .collect().map(_.toSeq).toSeq
@@ -647,7 +649,7 @@ class StreamsSpec extends SparkSpecBase {
   }
 
   test("q233: multi-trigger MV maintenance equals the full recompute") {
-    // 3 staged files + maxFilesPerTrigger=1 → the fact table arrives
+    // 3 staged files, one file per trigger → the fact table arrives
     // across several triggers, each appending its own partial rows
     val streamed = rows(graft.plans.MvRewrite.mvServe(lineitemDrain._1))
     val batch = rows(SparkEntry.queries("q226_mv_increment")(spark, sf001))
@@ -788,7 +790,7 @@ class StreamsSpec extends SparkSpecBase {
     Tables.orders(spark, sf001).repartition(3)
       .write.mode("overwrite").parquet(src)
     val streamed = Streams.streamRfm(
-        spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+        spark, sf001, srcDir = Some(src))
       .collect().map(_.toString).toSeq
     val batch = SparkEntry.queries("q290_rfm_segments")(spark, sf001)
       .collect().map(_.toString).toSeq
@@ -885,7 +887,7 @@ class StreamsSpec extends SparkSpecBase {
         .coalesce(1).write.mode("append").parquet(src)
     }
     val streamed = Streams.kmvServe(Streams.streamMultiIndexes(
-        spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1)).kmvPartials)
+        spark, sf001, srcDir = Some(src)).kmvPartials)
       .collect().map(_.toString).toSeq
     val batch = graft.operators.KmvSketch.summarize(
         graft.operators.KmvSketch.sketches(spark, sf001))
@@ -895,7 +897,7 @@ class StreamsSpec extends SparkSpecBase {
   }
 
   test("q363/q364: multi-trigger minhash band index drains to the batch index and serves the q94 probe") {
-    // 3 staged files + maxFilesPerTrigger=1 → the corpus arrives
+    // 3 staged files, one file per trigger → the corpus arrives
     // across several triggers, each appending its own docs' band rows
     // (batchId-keyed overwrite); the drained union must equal the
     // batch-built even-id band index row for row
@@ -990,7 +992,7 @@ class StreamsSpec extends SparkSpecBase {
     val results = scala.collection.mutable.ArrayBuffer
       .empty[(Int, Seq[Seq[Any]], Seq[Seq[Any]])]
     var prefixIds = Seq.empty[Long]
-    val q = Streams.readDocsStream(spark, sf001, Some(src), Some(1))
+    val q = Streams.readDocsStream(spark, sf001, Some(src))
       .where(graft.operators.ValueTier.fixtureCorpusFilter)
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
